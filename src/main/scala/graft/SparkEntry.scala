@@ -3733,14 +3733,13 @@ object SparkEntry {
     // opt-in id-frame spread before the encode mapPartitions: the
     // fixture synthesizes a PNG per id (192 md5 calls each) and inherits
     // the 1-row-group scan's single working task — repartitioning 8-byte
-    // id rows is free next to the encode it parallelizes, with the
-    // Tables.spread adaptive guard (no-op when the upstream already has
-    // enough partitions). OPT-IN like tSpread: the map-only consumers
-    // (m_image_dhash -0.17 s, m_image_quality -0.20 s same-JVM A/B) win;
-    // the checkpoint+join pipelines (m_image_dedup +0.51, m_image_ingest
-    // +0.76) LOSE — their downstream banded joins pay more for the
-    // scattered partitioning than the encode saves. Honors the
-    // spark.graft.scan.spread kill switch.
+    // id rows is free next to the encode it parallelizes. There is no
+    // partition-count guard: under the flag the repartition to the
+    // session's default parallelism ALWAYS runs. OPT-IN like tSpread: the
+    // map-only consumers (m_image_dhash -0.17 s, m_image_quality -0.20 s
+    // same-JVM A/B) win; the checkpoint+join pipelines (m_image_dedup
+    // +0.51, m_image_ingest +0.76) LOSE — their downstream banded joins
+    // pay more for the scattered partitioning than the encode saves.
     val idsOnly = ids.select(col(ids.columns.head))
     // mode via the ONE shared gate (Tables.spreadEnabled — ADVICE r15:
     // this site duplicated the conf parse AND probed .rdd.getNumPartitions,
@@ -3748,7 +3747,7 @@ object SparkEntry {
     // per Tables' own docstring, does not reflect effective parallelism
     // for few-row-group files anyway). Opt-in callers pass fixture-scale
     // id frames by construction, so repartition unconditionally under the
-    // flag; the kill switch still applies.
+    // flag; the spark.graft.scan.spread=off kill switch still applies.
     val spId =
       if (spreadIds && Tables.spreadEnabled(s))
         idsOnly.repartition(s.sparkContext.defaultParallelism)

@@ -19,10 +19,17 @@ object Tables {
   private val footerCache =
     scala.collection.concurrent.TrieMap.empty[String, (Int, Long)]
 
+  /** Set once an unexpected footer-read failure has been reported. */
+  private val footerFailureLogged =
+    new java.util.concurrent.atomic.AtomicBoolean(false)
+
   /** None when the path is not a single readable parquet FILE (a
     * multi-file parquet DIRECTORY is valid spark.read input but has no
     * one footer) — the spread below must degrade to a no-op there, not
-    * throw at plan time (ADVICE r15).
+    * throw at plan time (ADVICE r15). The expected cases (a directory, a
+    * missing path, a file that is not parquet) fall back silently; any
+    * other failure also falls back to no spread, but is reported once per
+    * process so a broken filesystem does not pass as a missing speed-up.
     */
   private def footerOf(spark: SparkSession, file: String): Option[(Int, Long)] =
     try {
@@ -36,7 +43,17 @@ object Tables {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try (r.getRowGroups.size, st.getLen) finally r.close()
       }))
-    } catch { case _: java.io.IOException | _: RuntimeException => None }
+    } catch {
+      case _: java.io.FileNotFoundException => None
+      case e: RuntimeException
+          if Option(e.getMessage).exists(_.contains("is not a Parquet file")) =>
+        None
+      case e @ (_: java.io.IOException | _: RuntimeException) =>
+        if (footerFailureLogged.compareAndSet(false, true))
+          System.err.println(s"[tables] cannot read the parquet footer of " +
+            s"$file, scanning without the spread: $e")
+        None
+    }
 
   /** The ONE spread-mode gate (shared with [[SparkEntry.imagePayloadsOf]],
     * ADVICE r15): `spark.graft.scan.spread` whitelisted to auto|off —

@@ -263,6 +263,83 @@ object Layout {
     r
   }
 
+  /** Local properties a pool thread takes over from the caller: the job
+    * group, description, interrupt flag and tags are what
+    * `cancelJobGroup`/`cancelJobsWithTag` and the UI key on.
+    */
+  private val callerProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
+
+  /** Set while a thread runs inside a SQL execution; a pool thread that
+    * carried one over would file its own queries under that execution.
+    */
+  private val executionProps =
+    Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+
+  /** Run independent driver-side steps of one store mutation at the same
+    * time, one pool thread each, and return their results in order. Each
+    * thread carries the caller's job group and interrupt flag (so
+    * cancelling the caller's group reaches every step's jobs) and never a
+    * SQL execution id. Every step is waited for, also after one fails, and
+    * the pool is shut down before this returns or throws: no job started
+    * here outlives the call, which is what lets a caller delete or keep its
+    * pending marker knowing nothing is still writing. The first failure is
+    * rethrown with the others attached as suppressed.
+    */
+  private def concurrently(spark: org.apache.spark.sql.SparkSession)(
+      steps: (() => Any)*): Seq[Any] = {
+    val sc = spark.sparkContext
+    val props = callerProps.map(k => k -> sc.getLocalProperty(k))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(steps.size,
+      { (r: Runnable) =>
+        val t = new Thread(r, "graft-store-step")
+        t.setDaemon(true)
+        t
+      })
+    try {
+      val running = steps.map { step =>
+        pool.submit(new java.util.concurrent.Callable[Any] {
+          def call(): Any = {
+            org.apache.spark.sql.SparkSession.setActiveSession(spark)
+            props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+            executionProps.foreach(sc.setLocalProperty(_, null))
+            step()
+          }
+        })
+      }
+      val outcomes = running.map { f =>
+        try Right(f.get())
+        catch {
+          case e: java.util.concurrent.ExecutionException => Left(e.getCause)
+        }
+      }
+      outcomes.collect { case Left(e) => e } match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.collect { case Right(v) => v }
+      }
+    } finally {
+      pool.shutdown()
+      while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)) ()
+    }
+  }
+
+  /** [[concurrently]] for two steps. */
+  def concurrently2[A, B](spark: org.apache.spark.sql.SparkSession)(
+      a: => A, b: => B): (A, B) =
+    concurrently(spark)(() => a, () => b) match {
+      case Seq(x, y) => (x.asInstanceOf[A], y.asInstanceOf[B])
+    }
+
+  /** [[concurrently]] for three steps. */
+  def concurrently3[A, B, C](spark: org.apache.spark.sql.SparkSession)(
+      a: => A, b: => B, c: => C): (A, B, C) =
+    concurrently(spark)(() => a, () => b, () => c) match {
+      case Seq(x, y, z) =>
+        (x.asInstanceOf[A], y.asInstanceOf[B], z.asInstanceOf[C])
+    }
+
   /** Morton (Z-order) interleave of two `bits`-bit non-negative dims into
     * one sort key: x in the even bit positions, y in the odd. Data sorted
     * by this key clusters rows that are close in BOTH dims into the same

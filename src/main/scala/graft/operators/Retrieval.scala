@@ -5,6 +5,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Sparse lexical retrieval — Okapi BM25 top-k, the term-match sibling of
   * the dense ANN family in [[Similarity]].
@@ -536,8 +537,22 @@ object Retrieval {
     val p = new org.apache.hadoop.fs.Path(s"$path/_graft_layout")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       None
-    else Some(spark.read.parquet(s"$path/_graft_layout").head().getInt(0))
+    else Some(spark.read.schema(LayoutSchema).parquet(s"$path/_graft_layout")
+      .head().getInt(0))
   }
+
+  /** The fixed schemas of the store's small tables. Reading with them
+    * skips the footer-sampling job a schema inference launches; the stats
+    * schema is also the one a merge writes its driver-built row with,
+    * which is the one [[corpusStats]] gives a build (non-null longs).
+    */
+  private val LayoutSchema = StructType(Seq(
+    StructField("buckets", IntegerType, nullable = false)))
+  private val DfreqSchema = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType)))
+  private val StatsSchema = StructType(Seq(
+    StructField("n_docs", LongType, nullable = false),
+    StructField("tot", LongType, nullable = false)))
 
   /** Directory key of a term's posting rows: `bucket = pmod(xxhash64(
     * term), buckets)`. Making the term-hash bucket a PARTITION COLUMN
@@ -572,9 +587,8 @@ object Retrieval {
     * missing postings half). Zero-token docs carry an empty list. Rows
     * sort by id within files so the tombstone semi-join row-group-prunes.
     */
-  private def writeDocsSidecar(ids: DataFrame, idCol: String, path: String,
-                               buckets: Int, mode: String,
-                               postings: DataFrame): Unit = {
+  private def docsSidecarRows(ids: DataFrame, idCol: String, buckets: Int,
+                              postings: DataFrame): DataFrame = {
     val tb = postings
       .select(col(idCol), termBucket(buckets).as("__tb"))
       .groupBy(col(idCol))
@@ -587,8 +601,17 @@ object Retrieval {
       .withColumn("dbucket", idBucket(idCol, buckets))
       .repartition(math.min(buckets, 4), col("dbucket"))
       .sortWithinPartitions(col("dbucket"), col(idCol))
-      .write.mode(mode).partitionBy("dbucket").parquet(path)
   }
+
+  private def writeDocsSidecar(ids: DataFrame, idCol: String, path: String,
+                               buckets: Int, mode: String,
+                               postings: DataFrame): Unit =
+    writeSidecarRows(docsSidecarRows(ids, idCol, buckets, postings), path,
+      mode)
+
+  private def writeSidecarRows(rows: DataFrame, path: String,
+                               mode: String): Unit =
+    rows.write.mode(mode).partitionBy("dbucket").parquet(path)
 
   /** Write-once BM25 index: `path/postings` ((doc, term, tf, dl) rows in
     * term-hash bucket DIRECTORIES so any term's posting list stays in one
@@ -638,8 +661,8 @@ object Retrieval {
     val b = readLayoutMeta(spark, path)
       .filter(_ => raw.columns.contains("bucket"))
     Bm25Store(raw.drop("bucket"),
-      spark.read.parquet(s"$path/dfreq"),
-      spark.read.parquet(s"$path/stats"),
+      spark.read.schema(DfreqSchema).parquet(s"$path/dfreq"),
+      spark.read.schema(StatsSchema).parquet(s"$path/stats"),
       bucketed = b.map(_ => raw), buckets = b)
   }
 
@@ -694,52 +717,97 @@ object Retrieval {
     * per merged batch, the price of append-only ingest), while the two
     * SMALL components whose values change for existing keys — the
     * |V|-row df table and the 1-row stats — are recomputed by integer
-    * adds and replaced. Both replacements materialize (localCheckpoint)
-    * BEFORE the overwrite so the write never consumes the directory it
-    * is replacing. Same arriving-batch contract (ids disjoint from the
-    * store) and SINGLE-WRITER contract as every stored index gate
+    * adds and replaced. Returns the batch's document count, taken from
+    * the merge's own stats aggregate: the caller needs no count job.
+    *
+    * The batch is read twice (tokenize, sidecar ids): pass a materialized
+    * frame, as the `bm25-index` sink does. The stored postings are never
+    * read.
+    *
+    * Work runs in two phases under the staged pending marker
+    * ([[Layout.withPendingMarkerStaged]]). PREPARE materializes
+    * everything: the `_graft_layout` and `stats` reads (known schemas, no
+    * inference job) run beside the batch tokenize; then the merged df
+    * table runs beside the sidecar rows and the one aggregate that gives
+    * the batch's (n_docs, tot), from which the new stats row is built on
+    * the driver. MUTATE only writes: the postings append, the sidecar
+    * append and the df replacement run at the same time, and `stats` is
+    * replaced LAST, after all three succeeded — it stays the store's
+    * commit signal. Parallel steps share the caller's job group
+    * ([[Layout.concurrently]]) and all finish before a phase ends, so a
+    * failed phase never leaves a write running behind the marker.
+    *
+    * Same arriving-batch contract (ids disjoint from the store) and
+    * SINGLE-WRITER contract as every stored index gate
     * ([[graft.processors.CurationProcessors.DedupGate]]): parquet has no
     * atomic read-merge-replace, so run one ingest per index; readers are
     * safe at any point except mid-overwrite of the two small tables.
-    * Merged-on-disk ≡ rebuild-from-scratch is pinned in RetrievalSpec.
+    * Merged-on-disk ≡ rebuild-from-scratch is pinned in RetrievalSpec,
+    * and its Spark job count and failure behaviour in Bm25MergeSpec.
     */
   def mergeBm25StoreAt(spark: SparkSession, path: String, batch: DataFrame,
                        idCol: String, textCol: String,
-                       buckets: Int = 16): Unit = {
+                       buckets: Int = 16): Long = {
     requireErasableLayout(spark, path)
     // the pending marker is acquired HERE, not by callers: a direct
     // library merge into a store left marked by a crashed mutation must
     // refuse exactly like the sink path does, and a crashed library merge
-    // must leave a marker for the next writer to find. Staged: the
-    // read/compute phase (all three components materialize) runs before
-    // the first write, so a plan-time failure deletes the marker and
-    // leaves the store mutable.
+    // must leave a marker for the next writer to find. Staged: a failure
+    // before the first write deletes the marker and leaves the store
+    // mutable.
     Layout.withPendingMarkerStaged(spark, path)({
-      val store = readBm25Store(spark, path)
       // the bucket modulus is FROZEN in the store (the pruned query join
       // recomputes it per term) — appending under a different caller
       // modulus would land rows the pruned scan can never match, so the
       // persisted layout wins over the parameter whenever it exists
-      val b = store.buckets.getOrElse(buckets)
-      val addP = postingsRaw(batch, idCol, textCol).localCheckpoint()
-      val newDfreq = mergedDfreq(store.dfreq, addP).localCheckpoint()
-      val newStats = mergedStats(store.stats, batch, addP).localCheckpoint()
-      (b, addP, newDfreq, newStats)
-    }) { case (b, addP, newDfreq, newStats) =>
-      addP.withColumn("bucket", termBucket(b))
-        .repartition(b, col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("term"))
-        .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
-      writeDocsSidecar(batch, idCol, s"$path/docs", b, "append", addP)
+      val (b, stored, addP) = Layout.concurrently3(spark)(
+        readLayoutMeta(spark, path).getOrElse(buckets),
+        spark.read.schema(StatsSchema).parquet(s"$path/stats").head(),
+        postingsRaw(batch, idCol, textCol).localCheckpoint())
+      val (newDfreq, (side, (n, tot))) = Layout.concurrently2(spark)(
+        mergedDfreq(spark.read.schema(DfreqSchema).parquet(s"$path/dfreq"),
+          addP).repartition(math.min(buckets, 4), col("term"))
+          .localCheckpoint(), {
+          val side = docsSidecarRows(batch, idCol, b, addP).localCheckpoint()
+          (side, batchCounts(side, addP))
+        })
+      val newStats = spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row(
+          stored.getLong(0) + n, stored.getLong(1) + tot)),
+        StatsSchema)
+      (b, addP, newDfreq, side, newStats, n)
+    }) { case (b, addP, newDfreq, side, newStats, n) =>
+      Layout.concurrently3(spark)(
+        addP.withColumn("bucket", termBucket(b))
+          .repartition(b, col("bucket"))
+          .sortWithinPartitions(col("bucket"), col("term"))
+          .write.mode("append").partitionBy("bucket")
+          .parquet(s"$path/postings"),
+        writeSidecarRows(side, s"$path/docs", "append"),
+        Layout.replaceDir(newDfreq, s"$path/dfreq"))
       // both replaced tables ride temp-write + rename ([[Layout.replaceDir]]):
       // stats is the store's COMMIT SIGNAL (its _SUCCESS keys the sink's
       // build-vs-merge dispatch), so a crash inside a plain overwrite would
       // silently flip the next ingest onto the build branch
-      Layout.replaceDir(
-        newDfreq.repartition(math.min(buckets, 4), col("term")),
-        s"$path/dfreq")
       Layout.replaceDir(newStats.coalesce(1), s"$path/stats")
+      n
     }
+  }
+
+  /** A batch's (n_docs, tot) — the [[corpusStats]] pair — in one
+    * aggregate over two materialized frames: one row per batch doc from
+    * its sidecar rows (zero-token docs included), the token count from
+    * its postings. Coalesced to one task, so the aggregate needs no
+    * exchange and runs as a single job; it only adds two longs per row.
+    */
+  private def batchCounts(side: DataFrame, addP: DataFrame): (Long, Long) = {
+    val r = side.select(lit(1L).as("doc"), lit(0L).as("tf"))
+      .unionByName(addP.select(lit(0L).as("doc"), col("tf")))
+      .coalesce(1)
+      .agg(coalesce(sum(col("doc")), lit(0L)),
+        coalesce(sum(col("tf")), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** [[bm25TopK]] against a store: identical scoring expressions over the

@@ -189,8 +189,8 @@ object CurationProcessors {
       val withFp = df.withColumn("__fp", TextAnalysis.fingerprint(col(tc)))
       val gated =
         if (indexExists(spark, path))
-          withFp.join(spark.read.parquet(path).select(col("fp").as("__fp")),
-            Seq("__fp"), "left_anti")
+          withFp.join(spark.read.schema("fp STRING").parquet(path)
+            .select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
         else withFp
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__fp")).orderBy(col(idc))
@@ -394,7 +394,11 @@ object CurationProcessors {
       val update = config.getOrElse("update_index", true).toString.toBoolean
       val survivorIds =
         if (indexExists(spark, path))
-          Dedup.lshIngest(df, spark.read.parquet(path), idc, tc, k, nBands)
+          // the two join columns with their known types (band_id is
+          // posexplode's int, band_hash an md5 string): no inference job
+          Dedup.lshIngest(df,
+            spark.read.schema("band_id INT, band_hash STRING").parquet(path),
+            idc, tc, k, nBands)
         else df.select(col(idc))
       // semi-join the id verdicts back so the full row set (all columns)
       // flows on; materialize before the append so the returned frame
