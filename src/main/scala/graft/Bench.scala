@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, expr, lit, xxhash64}
+import graft.model.JsonText.str
 
 object Bench {
   /** Projection-forcing action: every output column feeds a hash folded to
@@ -37,24 +38,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional comma-separated filter for isolating queries while profiling
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the status stores retain per-execution state (plans, job/stage
-      // rollups) even with the UI off; at 148 queries x (warmup + reps)
-      // the defaults (1000 retained each) grow the old gen all session
-      // and every later query pays the GC tax — keep only a screenful
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "64")
-      .config("spark.ui.retainedStages", "64")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the status stores retain per-execution state (plans, job/stage
+    // rollups) even with the UI off; at 148 queries x (warmup + reps)
+    // the defaults (1000 retained each) grow the old gen all session
+    // and every later query pays the GC tax — keep only a screenful
+    val spark = LocalSession(conf = Seq(
+      "spark.sql.ui.retainedExecutions" -> "8",
+      "spark.ui.retainedJobs" -> "64",
+      "spark.ui.retainedStages" -> "64",
+      "spark.ui.retainedTasks" -> "1000"))
     // steady-state warmup: run EVERY query once at the smallest SF so the
     // timed runs measure engine cost, not first-use classloading and
     // whole-stage-codegen (janino) compilation — the generated code is
@@ -116,13 +111,6 @@ object Bench {
         else best
       name -> r
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
     // ---- automatic flag-settle protocol -------------------------------
     // Sessions on this VM swing individual rows by whole seconds (clock
     // stalls, heap weather from 280 earlier queries); round-over-round
@@ -181,17 +169,17 @@ object Bench {
       (name, sessionSec, p, iso)
     }
     val settledJson = settled.map { case (name, s, p, iso) =>
-      jstr(name) + ":" + s"""{"prior":$p,"session":$s,"isolated_min5":$iso}"""
+      str(name) + ":" + s"""{"prior":$p,"session":$s,"isolated_min5":$iso}"""
     }.mkString("{", ",", "}")
-    val unsettledJson = unsettled.map(t => jstr(t._1)).mkString("[", ",", "]")
+    val unsettledJson = unsettled.map(t => str(t._1)).mkString("[", ",", "]")
     // --------------------------------------------------------------------
-    val qs = results.map { case (k, r) => jstr(k) + ":" + r.sec }.mkString("{", ",", "}")
-    val rows = results.map { case (k, r) => jstr(k) + ":" + r.rows }.mkString("{", ",", "}")
-    val failedNames = results.collect { case (k, r) if r.failed => jstr(k) }.mkString("[", ",", "]")
-    val errs = results.collect { case (k, r) if r.failed => jstr(k) + ":" + jstr(r.error) }
+    val qs = results.map { case (k, r) => str(k) + ":" + r.sec }.mkString("{", ",", "}")
+    val rows = results.map { case (k, r) => str(k) + ":" + r.rows }.mkString("{", ",", "}")
+    val failedNames = results.collect { case (k, r) if r.failed => str(k) }.mkString("[", ",", "]")
+    val errs = results.collect { case (k, r) if r.failed => str(k) + ":" + str(r.error) }
       .mkString("{", ",", "}")
     val notes = results.collect { case (k, r) if !r.failed && r.error.nonEmpty =>
-      jstr(k) + ":" + jstr(r.error) }.mkString("{", ",", "}")
+      str(k) + ":" + str(r.error) }.mkString("{", ",", "}")
     // total covers only succeeded queries — a time-to-abort is not a timing
     val ok = results.filterNot(_._2.failed)
     val total = ok.map(_._2.sec).sum
@@ -203,7 +191,7 @@ object Bench {
       SparkEntry.twinOf.contains(k) }
     val headlineSec = headline.map(_._2.sec).sum
     val auditSec = audit.map(_._2.sec).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"agg":"min","headline_sec":$headlineSec,"audit_sec":$auditSec,"n_headline":${headline.size},"n_audit":${audit.size},"queries":$qs,"rows":$rows,"failed":$failedNames,"errors":$errs,"notes":$notes,"settled":$settledJson,"settle_overflow":$unsettledJson,"prior":${priorPath.map(jstr).getOrElse("null")},"n_ok":${ok.size},"n_failed":${results.size - ok.size},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"agg":"min","headline_sec":$headlineSec,"audit_sec":$auditSec,"n_headline":${headline.size},"n_audit":${audit.size},"queries":$qs,"rows":$rows,"failed":$failedNames,"errors":$errs,"notes":$notes,"settled":$settledJson,"settle_overflow":$unsettledJson,"prior":${priorPath.map(str).getOrElse("null")},"n_ok":${ok.size},"n_failed":${results.size - ok.size},"sf":"$sfDir"}"""
     // fallback artifact FIRST (the bare line on disk survives any stdout
     // mangling — sbt's "[info] " prefix broke the harness's metric-line
     // extraction in BENCH_r03, and tail-capture truncation did in

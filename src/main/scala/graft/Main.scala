@@ -13,18 +13,8 @@ import graft.recipe.RecipeReader
   */
 object Main {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession =
+    LocalSession(conf = Seq("spark.app.name" -> "graft"))
 
   def main(args: Array[String]): Unit = args.toList match {
     case "run" :: path :: rest =>

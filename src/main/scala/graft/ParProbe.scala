@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Parallelism receipts for the rows the sf0.1 bench cannot adjudicate
@@ -26,14 +26,8 @@ object ParProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSession.cpus("32")
+    val spark = LocalSession(logLevel = "ERROR")
 
     val base = Tables(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"), col("lang"))

@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Physical-plan census over the whole graded query surface: for every
   * `SparkEntry.queries` entry, count the plan features that matter at
@@ -15,18 +14,11 @@ object PlanReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE's initial plan hides whole-stage-codegen annotation; the census
-      // wants the static shape (codegen spans, join strategy before runtime
-      // re-plan). PlanAuditSpec covers the AQE-on shapes.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE's initial plan hides whole-stage-codegen annotation; the census
+    // wants the static shape (codegen spans, join strategy before runtime
+    // re-plan). PlanAuditSpec covers the AQE-on shapes.
+    val spark = LocalSession(defaultCpus = "8", logLevel = "ERROR",
+      conf = Seq("spark.sql.adaptive.enabled" -> "false"))
 
     // same isolation knob as Bench/Verify: SPARK_GRAFT_QUERIES=a,b,c peeks
     // at a subset (subset runs print plans to stdout instead of rewriting

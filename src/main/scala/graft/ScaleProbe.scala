@@ -47,14 +47,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val base = Tables(spark, sfDir, "documents").select(col("doc_id"), col("text"))
     val n = base.count()
@@ -1394,14 +1387,7 @@ object FeederProbe {
         s"valid arms: ${validArms.toSeq.sorted.mkString("|")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     if (arms("grow")) ScaleProbe.growProbe(spark, sfDir, factor)
     ScaleProbe.feederProbe(spark, sfDir, factor, arms - "grow")
     spark.stop()
@@ -1416,14 +1402,7 @@ object ForgetProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     ScaleProbe.forgetProbes(spark, sfDir, factor)
     spark.stop()
   }

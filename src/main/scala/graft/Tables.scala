@@ -83,7 +83,8 @@ object Tables {
     * if you can; otherwise repartition after the read".
     *
     * OPT-IN per call site, not a default: a full-surface same-JVM A/B
-    * (probes/ScratchSpreadAll, receipts in OPTIMIZATION_r15.md §E2)
+    * (f5c0667:probes/ScratchSpreadAll.scala, receipts in
+    * OPTIMIZATION_r15.md §E2)
     * showed the extra exchange LOSES on broadcast-cascade plans (the
     * repartition recomputes inside every broadcast subtree), on
     * aggregations over key-clustered files (round-robin destroys the

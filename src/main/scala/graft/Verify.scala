@@ -1,19 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.model.JsonText.str
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // same isolation knob as Bench: SPARK_GRAFT_QUERIES=a,b,c runs a subset
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
@@ -34,27 +27,15 @@ object Verify {
         .foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // audit-row provenance next to the oracle dump: query -> the
     // production row it grades (SparkEntry.twinOf) — so the correctness
     // surface reads as production + audit without cross-referencing the
     // source. tools/check.py folds this into its report.
     val twins = SparkEntry.twinOf.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/twin_of.json"), twins)
     spark.stop()
   }

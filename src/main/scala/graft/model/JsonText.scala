@@ -5,6 +5,9 @@ package graft.model
   * the order given; callers sort when determinism matters.
   */
 private[graft] object JsonText {
+  /** Escapes quote, backslash and EVERY control character (< 0x20): one
+    * tab or CR left raw in builder-authored SQL would make a consumer's
+    * `json.load` of Verify's oracle dump fail outright. */
   def escape(s: String): String =
     s.flatMap {
       case '"' => "\\\""

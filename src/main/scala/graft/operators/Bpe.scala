@@ -36,7 +36,8 @@ object Bpe {
 
   /** Re-checkpoint cadence of [[train]]'s merge loop (ADVICE r15: the
     * bare `r % 8` left the replay-vs-materialize tradeoff implicit).
-    * Measured at sf0.1 (optimization round 15, probes/ScratchMiscAB):
+    * Measured at sf0.1 (optimization round 15,
+    * f5c0667:probes/ScratchMiscAB.scala):
     * replaying ≤ 8 fused map-side merge folds over the base checkpoint
     * is cheaper than materializing each round (1.67 → 1.21 s on
     * d_bpe_train at rounds = 6, where no re-checkpoint ever fires);

@@ -118,12 +118,9 @@ object Classify {
     * `_graft_layout`. Stores written before the record existed fall back
     * to the code default they were necessarily built under —
     * documented-weaker: they adopt the record on their next rebuild. */
-  def nbLayoutAt(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_layout")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return NbDocBuckets
-    spark.read.parquet(s"$path/_graft_layout").head().getInt(0)
-  }
+  def nbLayoutAt(spark: SparkSession, path: String): Int =
+    Layout.readRecord(spark, s"$path/_graft_layout", "dbuckets INT")
+      .fold(NbDocBuckets)(_.getInt(0))
 
   /** Write-once trained model: `path/model` ((label, term) integer
     * weights — tiny: |V|·|classes| rows regardless of corpus size),
@@ -152,8 +149,8 @@ object Classify {
     // freeze the sidecar modulus INSIDE the store, before the commit
     // signal — mutations read it back instead of trusting the constant
     import spark.implicits._
-    Seq(docBuckets).toDF("dbuckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_layout")
+    Layout.writeRecord(Seq(docBuckets).toDF("dbuckets"),
+      s"$path/_graft_layout")
     nbClassBase(train, idCol, textCol, labelCol)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/base")
   }
@@ -186,11 +183,7 @@ object Classify {
     // the build branch would then static-overwrite away the accumulated
     // model with one batch — the exact failure the marker exists to stop
     Layout.refuseIfPending(spark, path)
-    val basePath = new org.apache.hadoop.fs.Path(s"$path/base/_SUCCESS")
-    val hfs = basePath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = hfs.exists(basePath)
-    if (!exists) {
+    if (!Layout.exists(spark, s"$path/base/_SUCCESS")) {
       writeNbStore(batch, idCol, textCol, labelCol, path)
       return
     }
@@ -200,8 +193,7 @@ object Classify {
     // every historical train doc while the model still carries its
     // counts — a silent unlearning miss. Refuse with a rebuild
     // instruction instead (the requireErasableLayout posture).
-    require(hfs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/docs/_SUCCESS")),
+    require(Layout.exists(spark, s"$path/docs/_SUCCESS"),
       s"$path holds a trained NB model but no membership sidecar " +
         "(docs/_SUCCESS) — it predates the erasure protocol, and a merge " +
         "would leave historical train docs silently unforgettable. " +

@@ -1063,15 +1063,18 @@ object Dedup {
     */
   def winnowLayoutAt(spark: org.apache.spark.sql.SparkSession,
                      path: String): (Int, Int, Int, Int) = {
-    val df = spark.read.parquet(s"$path/_graft_layout")
-    val row = df.head()
-    if (df.columns.contains("fbuckets"))
-      (row.getInt(df.columns.indexOf("k")),
-        row.getInt(df.columns.indexOf("w")),
-        row.getInt(df.columns.indexOf("fbuckets")),
-        row.getInt(df.columns.indexOf("dbuckets")))
-    else (row.getInt(0), row.getInt(1), WinnowFpBuckets, WinnowDocBuckets)
+    val row = winnowLayoutRecord(spark, path).getOrElse(
+      throw new IllegalArgumentException(
+        s"$path holds no winnow layout record ($path/_graft_layout)"))
+    if (row.isNullAt(2))
+      (row.getInt(0), row.getInt(1), WinnowFpBuckets, WinnowDocBuckets)
+    else (row.getInt(0), row.getInt(1), row.getInt(2), row.getInt(3))
   }
+
+  private def winnowLayoutRecord(spark: org.apache.spark.sql.SparkSession,
+                                 path: String) =
+    Layout.readRecord(spark, s"$path/_graft_layout",
+      "k INT, w INT, fbuckets INT, dbuckets INT")
 
   /** The ERASABLE winnow-fingerprint store — the span-reuse (plagiarism)
     * gate's index, with the doc attribution a bare DISTINCT-fp set
@@ -1121,9 +1124,8 @@ object Dedup {
     // with no error — and a mutation recomputing buckets under a changed
     // code constant would prune the wrong directories just as silently
     import spark.implicits._
-    Seq((k, w, fpBuckets, docBuckets))
-      .toDF("k", "w", "fbuckets", "dbuckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_layout")
+    Layout.writeRecord(Seq((k, w, fpBuckets, docBuckets))
+      .toDF("k", "w", "fbuckets", "dbuckets"), s"$path/_graft_layout")
     fps.groupBy(col("fp")).agg(count(lit(1)).as("refs"))
       .withColumn("fbucket", winnowFpBucket(fpBuckets))
       .repartition(4, col("fbucket"))
@@ -1139,15 +1141,13 @@ object Dedup {
     */
   def requireWinnowLayout(spark: org.apache.spark.sql.SparkSession,
                           path: String, k: Int, w: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_layout")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return
-    val row = spark.read.parquet(s"$path/_graft_layout").head()
-    require(row.getInt(0) == k && row.getInt(1) == w,
-      s"$path was winnowed with (k=${row.getInt(0)}, w=${row.getInt(1)}) " +
-        s"but this batch is configured (k=$k, w=$w) — mixed geometries " +
-        "match nothing and silently corrupt refcounts. Align the config " +
-        "or rebuild the index.")
+    winnowLayoutRecord(spark, path).foreach { row =>
+      require(row.getInt(0) == k && row.getInt(1) == w,
+        s"$path was winnowed with (k=${row.getInt(0)}, " +
+          s"w=${row.getInt(1)}) but this batch is configured (k=$k, w=$w) " +
+          "— mixed geometries match nothing and silently corrupt " +
+          "refcounts. Align the config or rebuild the index.")
+    }
   }
 
   /** The gate-facing handle onto a written winnow store: the (fp, refs)
@@ -1161,10 +1161,8 @@ object Dedup {
     * the commit signal — it is written LAST on build and rewritten LAST
     * on merge). */
   def winnowStoreExistsAt(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/fps/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+                          path: String): Boolean =
+    Layout.exists(spark, s"$path/fps/_SUCCESS")
 
   /** Fold a batch of NEW documents into a written winnow store — the
     * steady-state ingest behind the winnow-gate: the batch's (id, fp)
@@ -1584,7 +1582,8 @@ object Dedup {
     // Order is irrelevant to every other consumer (explode feeds groupBys;
     // prefix positions come from the rarity rank, not array order).
     // Same-JVM A/B on d_setjoin_ppjoin: 4.89 s → 3.33 s min-of-6,
-    // row-identical output at sf0.001 and sf0.1 (probes/ScratchPpjoinAB).
+    // row-identical output at sf0.001 and sf0.1
+    // (f5c0667:probes/ScratchPpjoinAB.scala).
     val toks = df.select(col(idCol).as("sid"),
       portableTokens(col(textCol)).as("tk0"))
       .select(col("sid"),

@@ -42,24 +42,18 @@ object Fsck {
   final case class Finding(layout: String, check: String, ok: Boolean,
                            detail: String)
 
-  private def exists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Which persisted layout `path` holds, detected off each layout's own
     * commit signal (the same dispatch discipline as the sinks). */
   def detect(spark: SparkSession, path: String): String =
-    if (exists(spark, s"$path/_graft_pq2/subs/_graft_codebook")) "pq2-codes"
-    else if (exists(spark, s"$path/_graft_codebook")) "ivf"
-    else if (exists(spark, s"$path/fps/_SUCCESS")) "winnow"
-    else if (exists(spark, s"$path/base/_SUCCESS") &&
-      exists(spark, s"$path/model")) "nb"
-    else if (exists(spark, s"$path/postings"))
-      (if (exists(spark, s"$path/dfreq")) "bm25" else "bm25f")
-    else if (exists(spark, s"$path/_graft_layout") &&
-      spark.read.parquet(s"$path/_graft_layout").columns.contains("parts"))
-      "vector"
+    if (Layout.exists(spark, s"$path/_graft_pq2/subs/_graft_codebook"))
+      "pq2-codes"
+    else if (Layout.exists(spark, s"$path/_graft_codebook")) "ivf"
+    else if (Dedup.winnowStoreExistsAt(spark, path)) "winnow"
+    else if (Layout.exists(spark, s"$path/base/_SUCCESS") &&
+      Layout.exists(spark, s"$path/model")) "nb"
+    else if (Layout.exists(spark, s"$path/postings"))
+      (if (Retrieval.isPlainBm25StoreAt(spark, path)) "bm25" else "bm25f")
+    else if (Similarity.vectorStorePartsAt(spark, path).isDefined) "vector"
     else throw new IllegalArgumentException(
       s"$path holds no recognizable graft index layout (no pq2/codebook/" +
         "winnow/nb/postings/vector commit signal)")
@@ -67,9 +61,9 @@ object Fsck {
   /** Run every invariant check for the detected layout. Read-only. */
   def audit(spark: SparkSession, path: String): Seq[Finding] = {
     val layout = detect(spark, path)
-    val marker = Finding(layout, "pending_marker",
-      !exists(spark, s"$path/_graft_merge_pending"),
-      if (exists(spark, s"$path/_graft_merge_pending"))
+    val pending = Layout.exists(spark, s"$path/_graft_merge_pending")
+    val marker = Finding(layout, "pending_marker", !pending,
+      if (pending)
         "a mutation died mid-flight (_graft_merge_pending present) — " +
           "recover per the store's documented protocol before trusting it"
       else "no stranded mutation marker")
@@ -116,10 +110,7 @@ object Fsck {
     // stores predating the persisted layout / the tbuckets sidecar are
     // DOCUMENTED-WEAKER generations (mutations fall back to full scans),
     // not corruption — report them as legacy, never as failures
-    val buckets: Option[Int] =
-      if (exists(spark, s"$path/_graft_layout"))
-        Some(spark.read.parquet(s"$path/_graft_layout").head().getInt(0))
-      else None
+    val buckets = Retrieval.readLayoutMeta(spark, path)
     // every postings row in the directory its term hashes to, under the
     // store's FROZEN bucket count — a mis-bucketed row is invisible to
     // every pruned read and mutation
@@ -266,7 +257,7 @@ object Fsck {
   private def sidecarFindings(spark: SparkSession, path: String,
                               layout: String, store: DataFrame,
                               idCol: String): Seq[Finding] = {
-    if (!exists(spark, s"$path/_graft_ids"))
+    if (!Layout.exists(spark, s"$path/_graft_ids"))
       return Seq(Finding(layout, "erasure_sidecar", ok = false,
         "no _graft_ids sidecar — erasure would need a full-store scan"))
     val side = spark.read.parquet(s"$path/_graft_ids")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical data layout for 100 TB corpora — the ingest-time decisions that
@@ -70,6 +70,31 @@ object Layout {
     fs.delete(destPath, true)
     require(fs.rename(tmp, destPath), s"rename $tmp -> $destPath failed")
   }
+
+  /** Whether `path` exists — the one store-file probe, resolved through
+    * the Hadoop FileSystem API so an HDFS/S3 store path is probed where it
+    * lives (a `java.io.File` probe would silently miss it forever).
+    */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Read the one-row record a store freezes at `dir` (its layout knobs,
+    * its build config, its rerank linkage) with the record's known `ddl`
+    * schema: one Spark job, never a schema-inference job. None when the
+    * store carries no such record; a column that an older store's record
+    * lacks reads as null, for the caller's documented fallback.
+    */
+  def readRecord(spark: SparkSession, dir: String, ddl: String): Option[Row] =
+    if (!exists(spark, dir)) None
+    else spark.read.schema(ddl).parquet(dir).collect().headOption
+
+  /** Write a store's one-row record to `dir` through [[replaceDir]], so a
+    * write that dies before its rename leaves the previous record
+    * readable. */
+  def writeRecord(df: DataFrame, dir: String): Unit =
+    replaceDir(df.coalesce(1), dir)
 
   /** A fully-prepared per-directory rewrite: the replacement rows are
     * MATERIALIZED (localCheckpoint) at plan time, so everything that can
@@ -142,31 +167,11 @@ object Layout {
         .write.mode("overwrite").parquet(s"${pr.dirPath}/${pr.part}=-1")
   }
 
-  /** Rewrite the survivors of ONLY the `hitDirs` partition directories
-    * of a `part`-partitioned parquet table, dropping every row whose
-    * `idCol` is in `tomb` — the per-directory erasure compaction shared
-    * by the BM25-family postings/sidecar forgets and the vector store's.
-    * One-shot spelling of [[planCompaction]] + [[execDirRewrite]]; callers
-    * running under the pending marker should plan in their PREPARE phase
-    * instead so a failed read never stands a mutation marker.
-    */
-  def compactPartitionedDirs(spark: org.apache.spark.sql.SparkSession,
-                             dirPath: String, part: String, rows: DataFrame,
-                             tomb: DataFrame, idCol: String,
-                             hitDirs: Seq[Int],
-                             sortCols: Seq[String] = Nil): Unit =
-    planCompaction(spark, dirPath, part, rows, tomb, idCol, hitDirs,
-      sortCols).foreach(execDirRewrite(spark, _))
-
   /** The distinct `part` directory values of `hit` (collect is bounded
     * by the table's directory count). */
   def partitionHits(hit: DataFrame, part: String): Seq[Int] =
     hit.select(col(part).cast("int")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def pendingMarkerOf(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_merge_pending")
@@ -185,7 +190,7 @@ object Layout {
     */
   def refuseIfPending(spark: org.apache.spark.sql.SparkSession,
                       path: String): Unit =
-    require(!fsOf(spark, path).exists(pendingMarkerOf(path)),
+    require(!exists(spark, pendingMarkerOf(path).toString),
       pendingRefusal(path))
 
   /** Acquire the pending marker with `create(overwrite = false)`. On HDFS
@@ -226,7 +231,7 @@ object Layout {
   def withPendingMarker[A](spark: org.apache.spark.sql.SparkSession,
                            path: String)(body: => A): A = {
     val marker = pendingMarkerOf(path)
-    val f = fsOf(spark, path)
+    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     acquirePendingMarker(f, marker, path)
     val r = body
     f.delete(marker, false)
@@ -248,7 +253,7 @@ object Layout {
                                     path: String)(prepare: => P)(
                                     mutate: P => A): A = {
     val marker = pendingMarkerOf(path)
-    val f = fsOf(spark, path)
+    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     acquirePendingMarker(f, marker, path)
     val p =
       try prepare

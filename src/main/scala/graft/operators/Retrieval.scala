@@ -180,7 +180,8 @@ object Retrieval {
     // duplicate is a full corpus pass). One checkpoint leaves exactly one
     // tokenize plus the column-pruned n_docs count on the corpus. Same-JVM
     // A/B min-of-5: d_bm25_topk 2.33→2.19 s, d_bm25_prf 4.11→3.21 s,
-    // row-identical hashes at sf0.001 and sf0.1 (probes/ScratchTfAB).
+    // row-identical hashes at sf0.001 and sf0.1
+    // (f5c0667:probes/ScratchTfAB.scala).
     // (Round 15's E1 rejection checkpointed the POSTINGS frame — after the
     // dl join — and routed through the stored-path expressions; the
     // tf-level checkpoint with the unchanged scoring shape measures ahead.)
@@ -279,7 +280,8 @@ object Retrieval {
     // Same-JVM A/B min-of-5: d_bm25f_topk 3.37→3.30 s (and the rep
     // spread tightens 3.4–6.4 → 3.3–4.4), d_bm25f_incremental flat wall
     // locally (duplicates overlapped on idle cores) with the duplicate
-    // CPU gone; row-identical hashes at two SFs (probes/ScratchTfAB).
+    // CPU gone; row-identical hashes at two SFs
+    // (f5c0667:probes/ScratchTfAB.scala).
     val postings = tf.join(dlf, Seq(idCol, "f"))
       .select(col(idCol), col("f"), col("term"), col("tf"), col("dl"))
       .pipe(p => if (forceMaterialize) p.localCheckpoint() else maybeCkpt(p))
@@ -370,7 +372,8 @@ object Retrieval {
     // the distinct (id, term) pair set dfreq counted — a term occurring
     // in both fields makes two hit rows but one tft row — so
     // count-per-term over tft is the same whole-document frequency
-    // integer. Same-JVM A/B min-of-5 (probes/ScratchTftAB): d_bm25f_stored
+    // integer. Same-JVM A/B min-of-5
+    // (f5c0667:probes/ScratchTftAB.scala): d_bm25f_stored
     // shape 2.21→1.76 s, incremental shape 3.73→3.40 s, every B rep under
     // every A rep, row-identical hashes at sf0.001 and sf0.1.
     val tft = part.groupBy(col(idCol), col("term"))
@@ -528,26 +531,20 @@ object Retrieval {
   private def writeLayoutMeta(spark: SparkSession, path: String,
                               buckets: Int): Unit = {
     import spark.implicits._
-    Seq(buckets).toDF("buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_layout")
+    Layout.writeRecord(Seq(buckets).toDF("buckets"), s"$path/_graft_layout")
   }
 
-  private def readLayoutMeta(spark: SparkSession,
-                             path: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_layout")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      None
-    else Some(spark.read.schema(LayoutSchema).parquet(s"$path/_graft_layout")
-      .head().getInt(0))
-  }
+  /** The store's frozen bucket count; None for stores predating it. */
+  private[graft] def readLayoutMeta(spark: SparkSession,
+                                    path: String): Option[Int] =
+    Layout.readRecord(spark, s"$path/_graft_layout", "buckets INT")
+      .map(_.getInt(0))
 
   /** The fixed schemas of the store's small tables. Reading with them
     * skips the footer-sampling job a schema inference launches; the stats
     * schema is also the one a merge writes its driver-built row with,
     * which is the one [[corpusStats]] gives a build (non-null longs).
     */
-  private val LayoutSchema = StructType(Seq(
-    StructField("buckets", IntegerType, nullable = false)))
   private val DfreqSchema = StructType(Seq(
     StructField("term", StringType), StructField("df", LongType)))
   private val StatsSchema = StructType(Seq(
@@ -1058,7 +1055,8 @@ object Retrieval {
     * exactly those keys, so the join plans with zero added exchanges —
     * and the duplicated pass-1 subtree is one AQE-reused shuffle stage,
     * not a recompute. A same-JVM three-arm A/B at sf0.1 ×1/×30
-    * replication (probes/ScratchAB) ranked this spelling first at BOTH
+    * replication (f5c0667:probes/ScratchAB.scala) ranked this spelling
+    * first at BOTH
     * scales over (a) the same plan with an eager localCheckpoint on
     * pass 1 (the checkpoint's extra job + block writes cost more than
     * the stage reuse it replaces) and (b) scoring qt ∪ exp in one
@@ -1217,44 +1215,12 @@ object Retrieval {
     */
   private def requireErasableLayout(spark: SparkSession,
                                     path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/docs")
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
+    require(Layout.exists(spark, s"$path/docs"),
       s"$path predates the erasable store layout (no id sidecar at " +
         s"$path/docs, postings not bucket-partitioned) — rebuild the " +
         "index from source before merging or erasing.")
   }
 
-  private def hitDirsOf(hit: DataFrame, part: String): Seq[Int] =
-    Layout.partitionHits(hit, part)
-
-  /** Right-to-erasure for a written BM25 store, IN PLACE — the
-    * [[graft.operators.Similarity.forgetIvfStoreAt]] discipline applied
-    * to the postings layout: after this call a tombstoned doc is not
-    * retrievable by ANY stored-scoring row, and every statistic the
-    * scorer reads (df, dl mass, n_docs, total tokens) is exactly what a
-    * rebuild on the survivors would hold — forget ≡ rebuild is what the
-    * d_bm25_forget_stored oracle hash-checks.
-    *
-    * Work done per erasure batch: ONE id-column scan of the postings to
-    * locate the hit term-hash bucket directories plus the tombstoned
-    * rows' (term, tf) pairs; survivors of ONLY those directories rewrite
-    * (dynamic partition overwrite; fully-emptied directories removed);
-    * df decrements by the per-term hit-row counts via one outer join on
-    * the |V|-row table, terms whose df reaches zero LEAVE the vocabulary
-    * (a rebuilt store would not carry them); the 1-row stats
-    * integer-subtracts n_docs (counted against the id SIDECAR, so
-    * zero-token docs — postings-invisible but avgdl-relevant — decrement
-    * exactly) and total tokens; the sidecar compacts by the same
-    * per-directory rule. Ids never ingested are ignored; a re-run after
-    * completion finds no members and no-ops (idempotent).
-    *
-    * Crash safety: the whole mutation runs under the atomic
-    * `_graft_merge_pending` marker ([[Layout.withPendingMarker]]) — a
-    * forget that dies between its writes leaves the marker, and every
-    * later mutation or sink ingest refuses with the rebuild instruction
-    * instead of compounding a half-applied erasure. Single-writer like
-    * every store mutation.
-    */
   /** Whether `path` holds the PLAIN layout (it carries a dfreq table;
     * the fielded layout derives df at score time and has none) — the
     * on-disk signal the erasure entry points dispatch on, checked BEFORE
@@ -1262,10 +1228,8 @@ object Retrieval {
     * as a loud no-op, never as a throw inside the marker that bricks an
     * intact store.
     */
-  def isPlainBm25StoreAt(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/dfreq")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def isPlainBm25StoreAt(spark: SparkSession, path: String): Boolean =
+    Layout.exists(spark, s"$path/dfreq")
 
   /** The forget FINDER's hit-row scan, restricted to the tombstoned docs'
     * OWN postings buckets when the id sidecar carries them (`tbuckets`,
@@ -1323,6 +1287,34 @@ object Retrieval {
     (tomb, docs, present)
   }
 
+  /** Right-to-erasure for a written BM25 store, IN PLACE — the
+    * [[graft.operators.Similarity.forgetIvfStoreAt]] discipline applied
+    * to the postings layout: after this call a tombstoned doc is not
+    * retrievable by ANY stored-scoring row, and every statistic the
+    * scorer reads (df, dl mass, n_docs, total tokens) is exactly what a
+    * rebuild on the survivors would hold — forget ≡ rebuild is what the
+    * d_bm25_forget_stored oracle hash-checks.
+    *
+    * Work done per erasure batch: ONE id-column scan of the postings to
+    * locate the hit term-hash bucket directories plus the tombstoned
+    * rows' (term, tf) pairs; survivors of ONLY those directories rewrite
+    * (dynamic partition overwrite; fully-emptied directories removed);
+    * df decrements by the per-term hit-row counts via one outer join on
+    * the |V|-row table, terms whose df reaches zero LEAVE the vocabulary
+    * (a rebuilt store would not carry them); the 1-row stats
+    * integer-subtracts n_docs (counted against the id SIDECAR, so
+    * zero-token docs — postings-invisible but avgdl-relevant — decrement
+    * exactly) and total tokens; the sidecar compacts by the same
+    * per-directory rule. Ids never ingested are ignored; a re-run after
+    * completion finds no members and no-ops (idempotent).
+    *
+    * Crash safety: the whole mutation runs under the atomic
+    * `_graft_merge_pending` marker ([[Layout.withPendingMarker]]) — a
+    * forget that dies between its writes leaves the marker, and every
+    * later mutation or sink ingest refuses with the rebuild instruction
+    * instead of compounding a half-applied erasure. Single-writer like
+    * every store mutation.
+    */
   def forgetBm25StoreAt(spark: SparkSession, path: String,
                         tombstones: DataFrame, idCol: String): Unit = {
     Layout.refuseIfPending(spark, path)
@@ -1353,11 +1345,11 @@ object Retrieval {
         .select((col("n_docs") - nDec).as("n_docs"),
           (col("tot") - totDec).as("tot")).localCheckpoint()
       val postPlan = Layout.planCompaction(spark, s"$path/postings",
-        "bucket", postings, tomb, idCol, hitDirsOf(hitP, "bucket"),
-        sortCols = Seq("term"))
+        "bucket", postings, tomb, idCol,
+        Layout.partitionHits(hitP, "bucket"), sortCols = Seq("term"))
       val docsPlan = Layout.planCompaction(spark, s"$path/docs",
-        "dbucket", docs, tomb, idCol, hitDirsOf(present, "dbucket"),
-        sortCols = Seq(idCol))
+        "dbucket", docs, tomb, idCol,
+        Layout.partitionHits(present, "dbucket"), sortCols = Seq(idCol))
       (postPlan, docsPlan, newDfreq, newStats)
     }) { case (postPlan, docsPlan, newDfreq, newStats) =>
       postPlan.foreach(Layout.execDirRewrite(spark, _))
@@ -1399,11 +1391,11 @@ object Retrieval {
           (col("tot_f") - coalesce(col("__dec"), lit(0L))).as("tot_f"))
         .localCheckpoint()
       val postPlan = Layout.planCompaction(spark, s"$path/postings",
-        "bucket", postings, tomb, idCol, hitDirsOf(hitP, "bucket"),
-        sortCols = Seq("term"))
+        "bucket", postings, tomb, idCol,
+        Layout.partitionHits(hitP, "bucket"), sortCols = Seq("term"))
       val docsPlan = Layout.planCompaction(spark, s"$path/docs",
-        "dbucket", docs, tomb, idCol, hitDirsOf(present, "dbucket"),
-        sortCols = Seq(idCol))
+        "dbucket", docs, tomb, idCol,
+        Layout.partitionHits(present, "dbucket"), sortCols = Seq(idCol))
       (postPlan, docsPlan, newStats)
     }) { case (postPlan, docsPlan, newStats) =>
       postPlan.foreach(Layout.execDirRewrite(spark, _))

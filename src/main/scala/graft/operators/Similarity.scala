@@ -709,9 +709,20 @@ object Similarity {
     // listing, so the store itself reads clean.
     val spark = corpus.sparkSession
     import spark.implicits._
-    Seq(parts).toDF("parts").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_layout")
+    Layout.writeRecord(Seq(parts).toDF("parts"), s"$path/_graft_layout")
   }
+
+  /** The `parts` a [[writeVectorStore]] layout froze; None when `path`
+    * carries no layout record, or one without `parts` (another store's). */
+  private[graft] def vectorStorePartsAt(spark: SparkSession,
+                                        path: String): Option[Int] =
+    Layout.readRecord(spark, s"$path/_graft_layout", "parts INT")
+      .filterNot(_.isNullAt(0)).map(_.getInt(0))
+
+  private def requireVectorParts(spark: SparkSession, path: String): Int =
+    vectorStorePartsAt(spark, path).getOrElse(throw new
+        IllegalArgumentException(s"$path holds no vector-store layout " +
+          s"record ($path/_graft_layout with parts)"))
 
   /** Open a [[writeVectorStore]] layout, returning the store frame AND
     * the `parts` it was written with (read from the persisted layout
@@ -720,7 +731,7 @@ object Similarity {
     * written without layout metadata.
     */
   def readVectorStore(spark: SparkSession, path: String): (DataFrame, Int) = {
-    val parts = spark.read.parquet(s"$path/_graft_layout").head().getInt(0)
+    val parts = requireVectorParts(spark, path)
     (spark.read.parquet(path), parts)
   }
 
@@ -733,8 +744,7 @@ object Similarity {
     */
   def appendVectorStore(batch: DataFrame, idCol: String, vecCol: String,
                         path: String): Unit = {
-    val spark = batch.sparkSession
-    val parts = spark.read.parquet(s"$path/_graft_layout").head().getInt(0)
+    val parts = requireVectorParts(batch.sparkSession, path)
     batch.select(col(idCol), col(vecCol))
       .withColumn("vs_part", pmod(col(idCol), lit(parts)).cast("int"))
       .write.mode("append").partitionBy("vs_part").parquet(path)
@@ -742,10 +752,8 @@ object Similarity {
 
   /** Whether `path` holds a [[writeVectorStore]] layout (its persisted
     * parts config is the commit signal). */
-  def vectorStoreExistsAt(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_layout")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def vectorStoreExistsAt(spark: SparkSession, path: String): Boolean =
+    Layout.exists(spark, s"$path/_graft_layout")
 
   /** Directory-share audit of ANY centroid-partitioned store (raw or
     * codes): per directory its row count and share in ppm, plus the
@@ -786,7 +794,7 @@ object Similarity {
     Layout.refuseIfPending(spark, path)
     val store = spark.read.parquet(path)
     val idType = store.schema(idCol).dataType
-    val parts = spark.read.parquet(s"$path/_graft_layout").head().getInt(0)
+    val parts = requireVectorParts(spark, path)
     val tomb = tombstones
       .select(expr(s"try_cast(`$idCol` AS ${idType.sql})").as(idCol))
       .filter(col(idCol).isNotNull).distinct()
@@ -1165,9 +1173,7 @@ object Similarity {
     * so reading it would throw.
     */
   def codebookKindAt(spark: SparkSession, path: String): String = {
-    val p2 = new org.apache.hadoop.fs.Path(
-      s"$path/_graft_pq2/subs/_graft_codebook")
-    if (p2.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p2))
+    if (Layout.exists(spark, s"$path/_graft_pq2/subs/_graft_codebook"))
       return "two_level_pq"
     val kinds = spark.read.parquet(s"$path/_graft_codebook")
       .select(col("kind")).distinct().collect().map(_.getString(0))
@@ -1185,8 +1191,7 @@ object Similarity {
     * re-spell what the layout already knows.
     */
   def storeIdColumnAt(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_ids")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+    if (Layout.exists(spark, s"$path/_graft_ids"))
       spark.read.parquet(s"$path/_graft_ids").columns
         .filterNot(Set("home", "ibucket")).headOption
     else None
@@ -1334,8 +1339,8 @@ object Similarity {
   def writeRerankLinkAt(spark: SparkSession, path: String,
                         rerank: Option[String]): Unit = {
     import spark.implicits._
-    Layout.replaceDir(Seq(rerank.getOrElse("")).toDF("rerank_path")
-      .coalesce(1), s"$path/_graft_pq2/rerank")
+    Layout.writeRecord(Seq(rerank.getOrElse("")).toDF("rerank_path"),
+      s"$path/_graft_pq2/rerank")
   }
 
   /** Read a codes store's recorded rerank linkage:
@@ -1347,14 +1352,9 @@ object Similarity {
     *  - `Some(Some(p))`  — the store's exact vectors live at `p`
     */
   def rerankLinkAt(spark: SparkSession,
-                   path: String): Option[Option[String]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_pq2/rerank")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return None
-    val stored = spark.read.parquet(s"$path/_graft_pq2/rerank")
-      .head().getString(0)
-    Some(if (stored.isEmpty) None else Some(stored))
-  }
+                   path: String): Option[Option[String]] =
+    Layout.readRecord(spark, s"$path/_graft_pq2/rerank", "rerank_path STRING")
+      .map(r => Some(r.getString(0)).filter(_.nonEmpty))
 
   /** Resolve the EFFECTIVE rerank store for a codes-store operation from
     * the persisted linkage and the caller's explicit key, refusing every
@@ -1766,10 +1766,8 @@ object Similarity {
     Layout.replaceDir(rows, s"$path/_graft_ids", Seq("ibucket"))
   }
 
-  private def sidecarExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_ids")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def sidecarExists(spark: SparkSession, path: String): Boolean =
+    Layout.exists(spark, s"$path/_graft_ids")
 
   /** Append the batch's (id, home) rows — ONLY when the store already
     * carries a sidecar: appending onto a pre-sidecar store would create

@@ -3,7 +3,7 @@ package graft.processors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Layout, TextAnalysis}
 import graft.plugins._
 
 /** Data-plane curation processors: the LLM-training-data operators exposed
@@ -36,10 +36,8 @@ object CurationProcessors {
     * duplicate). The `_SUCCESS` marker is the commit protocol's own
     * completeness signal, so a half-written index never gates.
     */
-  private[graft] def indexExists(spark: SparkSession, path: String): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
-  }
+  private[graft] def indexExists(spark: SparkSession, path: String): Boolean =
+    Layout.exists(spark, s"$path/_SUCCESS")
 
   /** quality-filter: keep rows passing the token-statistics thresholds —
     * the [[TextAnalysis.tokenStats]] fused kernel computes all four
@@ -206,35 +204,6 @@ object CurationProcessors {
     }
   }
 
-  /** neardup-gate: the stored-LSH NEAR-duplicate ingest gate — the fuzzy
-    * sibling of [[DedupGate]], wrapping [[Dedup.lshIngest]] on the recipe
-    * surface. A row is dropped iff ANY of its minhash-LSH band keys
-    * collides with the stored band index at `index_path` (one semi-join
-    * of batch bands against the index, then an anti-join back — no pair
-    * expansion); by default survivors APPEND their bands so the next
-    * batch gates against them too.
-    *
-    * Batch-split invariance is the contract inherited from `lshIngest`:
-    * decisions depend ONLY on the static index, never on other rows of
-    * the same batch — so in-batch near-duplicates all survive (and all
-    * index). Chain `dedup-gate` first for exact in-batch copies; a batch
-    * that must also self-near-dedup is a different operator
-    * ([[Dedup.minhashLsh]]) with a different (non-incremental) contract.
-    *
-    * Scale shape: only the BATCH is shingled/signed; the index side is a
-    * stored parquet band table (bucketable by band_hash — the
-    * [[Dedup.lshIngest]] store contract) consumed by one semi-join. The
-    * corpus is never re-signed. Same single-writer index contract as
-    * [[DedupGate]].
-    *
-    * Coverage floor (inherited from `portableMinhash`): docs with fewer
-    * than 3 tokens produce NO shingles, hence no bands — they always
-    * pass the gate AND are never indexed, so short near-duplicates
-    * bypass it permanently. Chain a min-token `quality-filter` before
-    * this gate (as the sample curation recipe does) if sub-3-token rows
-    * can reach it; exact short copies are still caught by a preceding
-    * `dedup-gate`.
-    */
   /** chunk: explode each surviving doc into overlapping token-window
     * chunk rows ([[TextAnalysis.slidingChunks]]) — the RAG front end on
     * the recipe surface, so `documents → quality-filter → chunk → file`
@@ -369,6 +338,35 @@ object CurationProcessors {
     }
   }
 
+  /** neardup-gate: the stored-LSH NEAR-duplicate ingest gate — the fuzzy
+    * sibling of [[DedupGate]], wrapping [[Dedup.lshIngest]] on the recipe
+    * surface. A row is dropped iff ANY of its minhash-LSH band keys
+    * collides with the stored band index at `index_path` (one semi-join
+    * of batch bands against the index, then an anti-join back — no pair
+    * expansion); by default survivors APPEND their bands so the next
+    * batch gates against them too.
+    *
+    * Batch-split invariance is the contract inherited from `lshIngest`:
+    * decisions depend ONLY on the static index, never on other rows of
+    * the same batch — so in-batch near-duplicates all survive (and all
+    * index). Chain `dedup-gate` first for exact in-batch copies; a batch
+    * that must also self-near-dedup is a different operator
+    * ([[Dedup.minhashLsh]]) with a different (non-incremental) contract.
+    *
+    * Scale shape: only the BATCH is shingled/signed; the index side is a
+    * stored parquet band table (bucketable by band_hash — the
+    * [[Dedup.lshIngest]] store contract) consumed by one semi-join. The
+    * corpus is never re-signed. Same single-writer index contract as
+    * [[DedupGate]].
+    *
+    * Coverage floor (inherited from `portableMinhash`): docs with fewer
+    * than 3 tokens produce NO shingles, hence no bands — they always
+    * pass the gate AND are never indexed, so short near-duplicates
+    * bypass it permanently. Chain a min-token `quality-filter` before
+    * this gate (as the sample curation recipe does) if sub-3-token rows
+    * can reach it; exact short copies are still caught by a preceding
+    * `dedup-gate`.
+    */
   object NearDupGate extends Processor {
     val info: PluginInfo = PluginInfo("neardup-gate",
       "Drop rows near-duplicating the stored LSH band index; append survivors' bands",

@@ -2,21 +2,14 @@ package graft.sinks
 
 import org.apache.spark.sql.types._
 
+import graft.model.JsonText.escape
+
 /** Schema-to-schema conversions for the stencil sink (reference:
   * plugins/sinks/stencil/stencil.go:120-148): a table's column schema →
   * JSON-Schema draft 2020-12, or → an Avro record schema. Pure driver-side
   * metadata transforms (schemas are KB-sized; no Spark job involved).
   */
 object SchemaFormats {
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 
   /** Spark type → JSON-Schema type keyword (stencil.go JSON mapping). */
   def jsonSchemaType(dt: DataType): String = dt match {
@@ -49,10 +42,10 @@ object SchemaFormats {
       val t =
         if (f.nullable) s"""["${jsonSchemaType(f.dataType)}", "null"]"""
         else s""""${jsonSchemaType(f.dataType)}""""
-      s""""${jsonEscape(f.name)}": {"type": $t}"""
+      s""""${escape(f.name)}": {"type": $t}"""
     }.mkString(", ")
     s"""{"$$schema": "https://json-schema.org/draft/2020-12/schema", """ +
-      s""""$$id": "${jsonEscape(id)}", "description": "${jsonEscape(description)}", """ +
+      s""""$$id": "${escape(id)}", "description": "${escape(description)}", """ +
       s""""type": "object", "properties": {$props}}"""
   }
 
@@ -62,9 +55,9 @@ object SchemaFormats {
       val t =
         if (f.nullable) s"""["null", "${avroType(f.dataType)}"]"""
         else s""""${avroType(f.dataType)}""""
-      s"""{"name": "${jsonEscape(f.name)}", "type": $t}"""
+      s"""{"name": "${escape(f.name)}", "type": $t}"""
     }.mkString(", ")
-    s"""{"type": "record", "name": "${jsonEscape(name)}", "fields": [$fields]}"""
+    s"""{"type": "record", "name": "${escape(name)}", "fields": [$fields]}"""
   }
 
   // --- column-facet variants: asset schemas carry source-native type NAMES
@@ -109,13 +102,13 @@ object SchemaFormats {
       val jt =
         if (nullable) s"""["${nameToJsonSchemaType(t)}", "null"]"""
         else s""""${nameToJsonSchemaType(t)}""""
-      s""""${jsonEscape(name)}": {"type": $jt}"""
+      s""""${escape(name)}": {"type": $jt}"""
     }.mkString(", ")
     val titlePart =
-      if (title.nonEmpty) s""""title": "${jsonEscape(title)}", """ else ""
+      if (title.nonEmpty) s""""title": "${escape(title)}", """ else ""
     s"""{"$$schema": "https://json-schema.org/draft/2020-12/schema", """ +
-      s""""$$id": "${jsonEscape(id)}", $titlePart""" +
-      s""""description": "${jsonEscape(description)}", """ +
+      s""""$$id": "${escape(id)}", $titlePart""" +
+      s""""description": "${escape(description)}", """ +
       s""""type": "object", "properties": {$props}}"""
   }
 
@@ -128,10 +121,10 @@ object SchemaFormats {
       val at =
         if (nullable) s"""["null", "${nameToAvroType(t)}"]"""
         else s""""${nameToAvroType(t)}""""
-      s"""{"name": "${jsonEscape(n)}", "type": $at}"""
+      s"""{"name": "${escape(n)}", "type": $at}"""
     }.mkString(", ")
     val nsPart =
-      if (namespace.nonEmpty) s""""namespace": "${jsonEscape(namespace)}", """ else ""
-    s"""{"type": "record", $nsPart"name": "${jsonEscape(name)}", "fields": [$fields]}"""
+      if (namespace.nonEmpty) s""""namespace": "${escape(namespace)}", """ else ""
+    s"""{"type": "record", $nsPart"name": "${escape(name)}", "fields": [$fields]}"""
   }
 }

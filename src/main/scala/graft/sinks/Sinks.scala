@@ -517,7 +517,7 @@ object Bm25IndexSink extends SinkPlugin {
     // a marked store refuses BEFORE the dispatch: a crash mid-merge may
     // have destroyed the stats _SUCCESS this dispatch keys on, and the
     // build branch would then static-overwrite away all history
-    IndexProtocol.refuseIfMergePending(spark, path)
+    graft.operators.Layout.refuseIfPending(spark, path)
     // the stats table is written last on both paths, so its _SUCCESS
     // marker is the store's commit signal (the indexExists discipline)
     val exists =
@@ -565,10 +565,12 @@ object Bm25IndexSink extends SinkPlugin {
   *  - A MERGE/APPEND that died between its writes must never be
   *    retried blindly (the postings-append half would run twice and
   *    double every tf it carries, breaking merged ≡ rebuild with no
-  *    error). [[withMergePending]] drops a `_graft_merge_pending`
-  *    marker for the duration of the mutation; a sink invocation that
-  *    finds a stale marker REFUSES with a rebuild instruction instead
-  *    of corrupting the store. Build paths need no marker: they are
+  *    error). [[graft.operators.Layout.withPendingMarker]] drops a
+  *    `_graft_merge_pending` marker for the duration of the mutation;
+  *    a sink invocation that finds a stale marker REFUSES
+  *    ([[graft.operators.Layout.refuseIfPending]], checked BEFORE any
+  *    build-vs-merge dispatch) with a rebuild instruction instead of
+  *    corrupting the store. Build paths need no marker: they are
   *    static overwrites, and their commit signal (stats/codebook
   *    written last) means a half-built store simply rebuilds.
   *
@@ -580,46 +582,19 @@ object Bm25IndexSink extends SinkPlugin {
   *    Stores written before this protocol (no config file) adopt the
   *    current batch's config on their next successful merge.
   */
-private[sinks] object IndexProtocol {
-  private def fs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The stale-marker refusal, checked BEFORE any branch dispatch: a
-    * crash mid-merge can destroy the store's commit signal (the merge
-    * overwrites the very table whose _SUCCESS the build/merge dispatch
-    * keys on), flipping the next run onto the BUILD branch — which
-    * would static-overwrite away all history. Every sink invocation
-    * against a marked store must refuse, whichever branch it was about
-    * to take. Delegates to [[graft.operators.Layout.refuseIfPending]] —
-    * one marker protocol for every store mutation (merge, grow, forget).
-    */
-  def refuseIfMergePending(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Unit =
-    graft.operators.Layout.refuseIfPending(spark, path)
-
-  /** Atomic pending-marker acquire around a merge — see
-    * [[graft.operators.Layout.withPendingMarker]]. */
-  def withMergePending[A](spark: org.apache.spark.sql.SparkSession,
-                          path: String)(body: => A): A =
-    graft.operators.Layout.withPendingMarker(spark, path)(body)
-
+private[graft] object IndexProtocol {
   def writeLayoutConfig(spark: org.apache.spark.sql.SparkSession,
                         path: String, cfg: String): Unit = {
     import spark.implicits._
-    Seq(cfg).toDF("cfg").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_index_config")
+    graft.operators.Layout.writeRecord(Seq(cfg).toDF("cfg"),
+      s"$path/_graft_index_config")
   }
 
-  /** The frozen layout config, None for stores predating the protocol.
-    * Read with its known one-column schema: no inference job. */
+  /** The frozen layout config, None for stores predating the protocol. */
   def storedLayoutConfig(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_index_config")
-    if (!fs(spark, path).exists(p)) None
-    else Some(spark.read.schema("cfg STRING")
-      .parquet(s"$path/_graft_index_config").head().getString(0))
-  }
+                         path: String): Option[String] =
+    graft.operators.Layout.readRecord(spark, s"$path/_graft_index_config",
+      "cfg STRING").map(_.getString(0))
 
   /** Reject a merge whose batch is configured with a different layout
     * than the store was built with. Returns true when the store
@@ -844,7 +819,7 @@ object IvfIndexSink extends SinkPlugin {
     // marked store ⇒ refuse before the dispatch (the Bm25IndexSink
     // rationale: a crashed merge can have destroyed the codebook commit
     // signal this dispatch keys on)
-    IndexProtocol.refuseIfMergePending(spark, path)
+    graft.operators.Layout.refuseIfPending(spark, path)
     // quantize: pq — the billion-vector layout on the YAML surface: PQ
     // codes routed by the two-level hierarchy. First batch trains the m
     // subquantizers on a bounded deterministic sample and auto-sizes the
@@ -915,7 +890,7 @@ object IvfIndexSink extends SinkPlugin {
               "silently miss the historical vectors. Rebuild the index " +
               "with rerank_store_path set from the first batch.")
         }
-        IndexProtocol.withMergePending(spark, path) {
+        graft.operators.Layout.withPendingMarker(spark, path) {
           // vectors BEFORE codes (the build-path rationale: a crash
           // between the two must strand harmless orphan vectors, never
           // committed codes whose exact vectors the re-rank cannot fetch)
@@ -944,7 +919,7 @@ object IvfIndexSink extends SinkPlugin {
         Similarity.writeCodebookAt(spark, path, cb)
       case (true, true) =>
         val cb = Similarity.readTwoLevelCodebookAt(spark, path)
-        IndexProtocol.withMergePending(spark, path) {
+        graft.operators.Layout.withPendingMarker(spark, path) {
           Similarity.appendIvfStoreTwoLevel(batch, idc, vc, cb, path,
             metaCols = metaEff)
           // persistTo writes the grown codebook BEFORE the directory
@@ -960,7 +935,7 @@ object IvfIndexSink extends SinkPlugin {
         Similarity.writeCodebookAt(spark, path, coarse)
       case (false, true) =>
         val coarse = Similarity.readCoarseCodebookAt(spark, path)
-        IndexProtocol.withMergePending(spark, path) {
+        graft.operators.Layout.withPendingMarker(spark, path) {
           Similarity.appendIvfStore(batch, idc, vc, coarse, path,
             metaCols = metaEff)
         }

@@ -91,12 +91,8 @@ object Bm25SearchExtractor extends Extractor {
     // score time) — the same on-disk signal readBm25Store/readBm25fStore
     // key on. id_column still configures the OUTPUT key name (doc_id for
     // doc stores, cid for chunk stores).
-    val dfreqPath = new org.apache.hadoop.fs.Path(s"$path/dfreq")
-    val plain = dfreqPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(dfreqPath)
     val fielded = config.get("fielded").map(_.toString.toBoolean)
-      .getOrElse(!plain)
+      .getOrElse(!Retrieval.isPlainBm25StoreAt(spark, path))
     // prf on a fielded store must fail HERE too, not only when the
     // fielded flag was spelled out — auto-detection silently dropping
     // the expansion config would hand back non-expanded rankings

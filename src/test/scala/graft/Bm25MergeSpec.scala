@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -66,6 +67,35 @@ object FaultyFs {
   def armed[A](r: Rule)(body: => A): A = {
     rule = Some(r)
     try body finally rule = None
+  }
+}
+
+/** The Spark jobs a piece of driver code starts. */
+object SparkJobs {
+  /** The properties of every Spark job started in a fresh job group while
+    * `body` ran (pool threads included: they carry the caller's group). */
+  def startedBy[A](sc: SparkContext)(
+      body: => A): (A, Seq[java.util.Properties]) = {
+    val group = s"sparkjobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      java.util.Properties]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(e.properties)
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count", interruptOnCancel = true)
+    try {
+      val r = body
+      org.apache.spark.graft.ListenerDrain.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (r, seen.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
   }
 }
 
@@ -133,27 +163,9 @@ class Bm25MergeSpec extends SparkSpec {
     assert(bad.isEmpty, bad.mkString("; "))
   }
 
-  /** Spark jobs started in `group` while `body` ran (pool threads
-    * included: they carry the caller's group). */
   private def jobsIn[A](body: => A): (A, Int) = {
-    val group = s"bm25merge-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "bm25 merge job count", interruptOnCancel = true)
-    try {
-      val r = body
-      org.apache.spark.graft.ListenerDrain.drain(sc)
-      (r, seen.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    val (r, jobs) = SparkJobs.startedBy(sc)(body)
+    (r, jobs.size)
   }
 
   test("a sink merge runs a pinned number of Spark jobs on both paths of " +
