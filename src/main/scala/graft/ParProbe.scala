@@ -29,30 +29,13 @@ object ParProbe {
     val cpus = LocalSession.cpus("32")
     val spark = LocalSession(logLevel = "ERROR")
 
-    val base = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"))
-    val n = base.count()
-    val shift = ((n + 249) / 250) * 250
-    def corpus(f: Int): DataFrame =
-      (0 until f).map(k => base.select(
-          (col("doc_id") + lit(k * shift)).as("doc_id"), col("text"),
-          col("lang")))
-        .reduce(_ union _).localCheckpoint()
-
-    val emb = Tables(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val dim = emb.select(size(col("embedding"))).head.getInt(0)
-    val en = emb.count()
-    def rot(vec: org.apache.spark.sql.Column, k: Int) = {
-      val s = k % dim
-      if (s == 0) vec
-      else concat(slice(vec, s + 1, dim - s), slice(vec, 1, s))
-    }
-    def embOf(f: Int): DataFrame =
-      (0 until f).map(k => emb.select(
-          (col("vec_id") + lit(k * en)).as("vec_id"),
-          rot(col("embedding"), k).as("embedding")))
-        .reduce(_ unionAll _).localCheckpoint()
+    // the ScaleProbe replication rules, so both probes measure one corpus
+    val docReplicas = ScaleProbe.docReplicator(Tables(spark, sfDir,
+      "documents").select(col("doc_id"), col("text"), col("lang")))
+    def corpus(f: Int): DataFrame = docReplicas.corpus(f)
+    val emb = ScaleProbe.embReplicator(spark, sfDir)
+    val en = emb.n
+    def embOf(f: Int): DataFrame = emb.corpus(f)
 
     def time(name: String, f: Int)(df: => DataFrame): Unit = {
       val t0 = System.nanoTime()

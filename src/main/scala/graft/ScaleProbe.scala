@@ -16,17 +16,38 @@ import org.apache.spark.sql.functions._
   * Usage: `sbt "runMain graft.ScaleProbe [sfDir] [factor]"`.
   */
 object ScaleProbe {
-  /** The ONE definition of the replicated embedding corpus every probe
-    * arm measures against: replica k shifts ids by k·N and rotates each
-    * vector by k positions (distinct geometry per replica — no
-    * artificial exact duplicates), deterministic. Previously inlined at
-    * three sites, which risked the arms silently diverging on the
-    * corpus-construction rule and invalidating cross-arm comparisons.
+  /** The ONE definition of the replicated documents corpus every probe
+    * arm measures against, [[ParProbe]]'s included: replica k shifts
+    * `doc_id` by k·`shift`, where `shift` is the base row count rounded
+    * up to a multiple of 250 — preserving the planted `id % 250` base
+    * structure, so near-dup cliques genuinely grow with the corpus. The
+    * base's other columns ride along unchanged; deterministic.
     */
-  private case class EmbReplicator(base: DataFrame, dim: Int,
-                                   corpus: Int => DataFrame)
-  private def embReplicator(spark: SparkSession,
-                            sfDir: String): EmbReplicator = {
+  private[graft] final case class DocReplicator(base: DataFrame,
+                                                shift: Long) {
+    /** Replica `k` alone; replica f is the batch arriving after an f×
+      * corpus. */
+    def replica(k: Int): DataFrame =
+      base.withColumn("doc_id", col("doc_id") + lit(k * shift))
+    def corpus(f: Int): DataFrame =
+      (0 until f).map(replica).reduce(_ union _).localCheckpoint()
+  }
+  private[graft] def docReplicator(base: DataFrame): DocReplicator = {
+    val n = base.count()
+    DocReplicator(base, ((n + 249) / 250) * 250)
+  }
+
+  /** The ONE definition of the replicated embedding corpus every probe
+    * arm measures against, [[ParProbe]]'s included: replica k shifts
+    * ids by k·N and rotates each vector by k positions (distinct
+    * geometry per replica — no artificial exact duplicates),
+    * deterministic. One rule, so the arms cannot silently diverge on
+    * the corpus construction and invalidate cross-arm comparisons.
+    */
+  private[graft] case class EmbReplicator(base: DataFrame, dim: Int,
+                                          n: Long, corpus: Int => DataFrame)
+  private[graft] def embReplicator(spark: SparkSession,
+                                   sfDir: String): EmbReplicator = {
     val base = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
@@ -37,7 +58,7 @@ object ScaleProbe {
       if (s == 0) vec
       else concat(slice(vec, s + 1, dim - s), slice(vec, 1, s))
     }
-    EmbReplicator(base, dim, f =>
+    EmbReplicator(base, dim, n, f =>
       (0 until f).map(k => base.select(
           (col("vec_id") + lit(k * n)).as("vec_id"),
           rot(col("embedding"), k).as("embedding")))
@@ -50,13 +71,8 @@ object ScaleProbe {
     val spark = LocalSession()
 
     val base = Tables(spark, sfDir, "documents").select(col("doc_id"), col("text"))
-    val n = base.count()
-    val shift = ((n + 249) / 250) * 250 // keep id % 250 base structure
-
-    def corpus(f: Int): DataFrame =
-      (0 until f).map(k => base.select(
-          (col("doc_id") + lit(k * shift)).as("doc_id"), col("text")))
-        .reduce(_ union _).localCheckpoint()
+    val replicas = docReplicator(base)
+    def corpus(f: Int): DataFrame = replicas.corpus(f)
 
     def run(name: String, f: Int, cap: Int)(pairs: Observation => DataFrame): Unit = {
       val obs = new Observation(s"$name-$f-$cap")
@@ -73,14 +89,9 @@ object ScaleProbe {
     // selection (scan + 512-row broadcast + per-lang window), snapshot
     // diff (map-side fingerprints + one full-outer join) — both should
     // scale linearly with no funnel
-    def corpusFull(f: Int): DataFrame = {
-      val b = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      (0 until f).map(k => b.select(
-          (col("doc_id") + lit(k * shift)).as("doc_id"),
-          col("text"), col("lang"), col("source")))
-        .reduce(_ union _).localCheckpoint()
-    }
+    val fullReplicas = docReplicator(Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"), col("lang"), col("source")))
+    def corpusFull(f: Int): DataFrame = fullReplicas.corpus(f)
     for (f <- Seq(1, factor)) {
       val docs = corpusFull(f)
       def time(name: String)(df: => DataFrame): Unit = {
@@ -112,8 +123,7 @@ object ScaleProbe {
     // constant overhead.
     for (f <- Seq(1, factor, 3 * factor)) {
       val history = corpus(f)
-      val batch = base.select((col("doc_id") + lit(f * shift)).as("doc_id"),
-        col("text")).localCheckpoint()
+      val batch = replicas.replica(f).localCheckpoint()
       def gate(name: String)(mk: => DataFrame): Unit = {
         val t0 = System.nanoTime()
         val survivors = operators.Dedup.lshIngest(batch, mk, "doc_id", "text").count()
@@ -185,8 +195,7 @@ object ScaleProbe {
     }
     for (f <- Seq(1, factor, 3 * factor)) {
       val history = corpus(f)
-      val batch = base.select((col("doc_id") + lit(f * shift)).as("doc_id"),
-        col("text")).localCheckpoint()
+      val batch = replicas.replica(f).localCheckpoint()
       def wgate(name: String)(mk: => DataFrame): Unit = {
         val t0 = System.nanoTime()
         val survivors = operators.Dedup.winnowIngest(batch, mk,
@@ -364,8 +373,7 @@ object ScaleProbe {
     // history size — the winnow/LSH gate claim at chunk granularity.
     for (f <- Seq(1, factor, 3 * factor)) {
       val history = corpus(f)
-      val batch = base.select((col("doc_id") + lit(f * shift)).as("doc_id"),
-        col("text")).localCheckpoint()
+      val batch = replicas.replica(f).localCheckpoint()
       def time(name: String)(df: => DataFrame): Unit = {
         val t0 = System.nanoTime()
         val n = df.count()
@@ -556,13 +564,10 @@ object ScaleProbe {
     // rounds; LPA is 3 fixed rounds of join+2 groupBys — all linear in
     // edges, nothing quadratic to guard
     locally {
-      val base = Tables(spark, sfDir, "documents").select(col("doc_id"))
-      val n0 = base.count()
-      val shiftG = ((n0 + 249) / 250) * 250
+      val ids = docReplicator(
+        Tables(spark, sfDir, "documents").select(col("doc_id")))
       for (f <- Seq(1, factor)) {
-        val docs = (0 until f).map(k => base.select(
-            (col("doc_id") + lit(k * shiftG)).as("doc_id")))
-          .reduce(_ union _).localCheckpoint()
+        val docs = ids.corpus(f)
         val cnt = docs.agg(count(lit(1)).as("n"))
         val edges = docs.crossJoin(broadcast(cnt))
           .select(col("doc_id").as("src"), explode(array(
@@ -598,18 +603,13 @@ object ScaleProbe {
     // window is |distinct token counts|, not corpus-sized), and golden
     // record survivorship (broadcast registry, entity-key windows)
     locally {
-      val docsBase = Tables(spark, sfDir, "documents")
+      val docsBase = docReplicator(Tables(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-      val n0 = docsBase.count()
-      val shiftD = ((n0 + 249) / 250) * 250
+          col("n_chars")))
       val custBase = Tables(spark, sfDir, "customer")
       val nc = custBase.count()
       for (f <- Seq(1, factor, 3 * factor)) {
-        val docs = (0 until f).map(k => docsBase.select(
-            (col("doc_id") + lit(k * shiftD)).as("doc_id"), col("text"),
-            col("lang"), col("source"), col("n_chars")))
-          .reduce(_ union _).localCheckpoint()
+        val docs = docsBase.corpus(f)
         val cust = (0 until f).map(k => custBase.select(
             (col("c_custkey") + lit(k * nc)).as("c_custkey"), col("c_name"),
             col("c_nationkey"), col("c_acctbal")))
@@ -994,12 +994,8 @@ object ScaleProbe {
           split(lower(trim(col("text"))), "\\s+"),
           t => concat(t, lit("x"),
             pmod(col("doc_id"), lit(211)).cast("string")))).as("text"))
-      val n = base.count()
-      val shift = ((n + 249) / 250) * 250
-      def corpus(f: Int): DataFrame =
-        (0 until f).map(k => base.select(
-            (col("doc_id") + lit(k * shift)).as("doc_id"), col("text")))
-          .reduce(_ union _).localCheckpoint()
+      val replicas = docReplicator(base)
+      def corpus(f: Int): DataFrame = replicas.corpus(f)
       for (f <- Seq(1, factor, 3 * factor)) {
         val docs = corpus(f)
         val buckets = 64 * f
@@ -1066,12 +1062,8 @@ object ScaleProbe {
           split(lower(trim(col("text"))), "\\s+"),
           t => concat(t, lit("x"),
             pmod(col("doc_id"), lit(211)).cast("string")))).as("text"))
-      val n = base.count()
-      val shift = ((n + 249) / 250) * 250
-      def corpus(f: Int): DataFrame =
-        (0 until f).map(k => base.select(
-            (col("doc_id") + lit(k * shift)).as("doc_id"), col("text")))
-          .reduce(_ union _).localCheckpoint()
+      val replicas = docReplicator(base)
+      def corpus(f: Int): DataFrame = replicas.corpus(f)
       for (f <- Seq(1, factor, 3 * factor)) {
         val docs = corpus(f)
         val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -1115,15 +1107,9 @@ object ScaleProbe {
     // regardless of corpus size — so the bytes the forget can touch fall
     // as a fraction of the store while the sidecar grows ∝ corpus.
     locally {
-      val base = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), col("lang"))
-      val n = base.count()
-      val shift = ((n + 249) / 250) * 250
-      def corpus(f: Int): DataFrame =
-        (0 until f).map(k => base.select(
-            (col("doc_id") + lit(k * shift)).as("doc_id"),
-            col("text"), col("lang")))
-          .reduce(_ union _).localCheckpoint()
+      val replicas = docReplicator(Tables(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"), col("lang")))
+      def corpus(f: Int): DataFrame = replicas.corpus(f)
       for (f <- Seq(1, factor, 3 * factor)) {
         val docs = corpus(f)
         val path = new java.io.File(System.getProperty("java.io.tmpdir"),

@@ -3097,7 +3097,7 @@ object SparkEntry {
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 
   /** `_SUCCESS` probe through the Hadoop FileSystem API — the
-    * [[graft.processors.CurationProcessors.indexExists]] discipline
+    * [[graft.operators.Layout.indexExists]] discipline
     * applied to the graded-query layout caches: a `java.io.File` probe
     * on an HDFS/S3 layout root would miss forever and silently rebuild
     * every layout on every query (correct results, cluster-sized waste).
@@ -5726,7 +5726,7 @@ object SparkEntry {
     if (!layoutReady(s"$path/stats"))
       Retrieval.writeBm25fStore(docs, "doc_id", "text", path,
         titleTokens = 8)
-    Retrieval.forgetBm25fStoreAt(s, path,
+    Retrieval.forgetBm25StoreAt(s, path,
       docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")), "doc_id")
     Retrieval.bm25fTopKStored(Retrieval.readBm25fStore(s, path),
         docs.filter(col("doc_id") < 5 && col("doc_id") % 7 =!= 3),

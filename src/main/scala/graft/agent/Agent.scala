@@ -1,6 +1,6 @@
 package graft.agent
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.plugins._
@@ -58,18 +58,53 @@ class Agent(
   Registries.populate()
 
   /** Pure config validation, no execution (reference: agent/agent.go:60-91). */
-  def validate(recipe: Recipe): Seq[InvalidConfigError] = {
-    def check(kind: String, spec: PluginSpec, lookup: String => Plugin): Seq[InvalidConfigError] =
-      try lookup(spec.name).validate(spec.config).map(e =>
-        e.copy(key = s"$kind/${spec.name}/${e.key}"))
-      catch {
-        case _: NoSuchElementException =>
-          Seq(InvalidConfigError(s"$kind/${spec.name}", s"could not find $kind plugin"))
-      }
+  def validate(recipe: Recipe): Seq[InvalidConfigError] =
     check("source", recipe.source, Registries.extractors.get) ++
-      recipe.processors.flatMap(p => check("processor", p, Registries.processors.get)) ++
-      recipe.sinks.flatMap(s => check("sink", s, Registries.sinks.get))
-  }
+      validateChain(recipe.processors, recipe.sinks)
+
+  private def check(kind: String, spec: PluginSpec,
+                    lookup: String => Plugin): Seq[InvalidConfigError] =
+    try lookup(spec.name).validate(spec.config).map(e =>
+      e.copy(key = s"$kind/${spec.name}/${e.key}"))
+    catch {
+      case _: NoSuchElementException =>
+        Seq(InvalidConfigError(s"$kind/${spec.name}", s"could not find $kind plugin"))
+    }
+
+  private def validateChain(processors: Seq[PluginSpec],
+                            sinks: Seq[PluginSpec]): Seq[InvalidConfigError] =
+    processors.flatMap(p => check("processor", p, Registries.processors.get)) ++
+      sinks.flatMap(s => check("sink", s, Registries.sinks.get))
+
+  /** Write one materialized frame to every sink (agent/stream.go fan-out):
+    * each write inside the retrier, the per-plugin metric recorded on
+    * success and on failure, every sink closed. A failing sink throws
+    * under `stopOnSinkError`; otherwise it is logged and counted -1.
+    * Returns "name[i]" -> records written.
+    */
+  private def fanOut(recipeName: String, df: DataFrame,
+                     sinks: Seq[PluginSpec]): Map[String, Long] =
+    sinks.zipWithIndex.map { case (spec, i) =>
+      val sinkPlugin = Registries.sinks.get(spec.name)
+      val entry =
+        try {
+          val n = Retrier.retry(maxRetries, retryInitialMs) {
+            sinkPlugin.sink(df, spec.config)
+          }
+          s"${spec.name}[$i]" -> n
+        } catch {
+          case e: Exception =>
+            // per-plugin failure metric fires even when the error
+            // propagates (agent.go:268 records unconditionally)
+            monitor.recordPlugin(recipeName, spec.name, "sink", success = false)
+            if (stopOnSinkError) throw e
+            System.err.println(s"[agent] sink ${spec.name} failed: ${e.getMessage}")
+            s"${spec.name}[$i]" -> -1L
+        } finally sinkPlugin.close()
+      if (entry._2 >= 0L)
+        monitor.recordPlugin(recipeName, spec.name, "sink", success = true)
+      entry
+    }.toMap
 
   /** Job-group id for a recipe's runs — the cancellation handle. */
   private def jobGroup(recipeName: String): String = s"graft-run-$recipeName"
@@ -105,27 +140,7 @@ class Agent(
         processed.persist(StorageLevel.MEMORY_AND_DISK)
         try {
           val recordCount = processed.count()
-          val sinkCounts = recipe.sinks.zipWithIndex.map { case (spec, i) =>
-            val sinkPlugin = Registries.sinks.get(spec.name)
-            val entry =
-              try {
-                val n = Retrier.retry(maxRetries, retryInitialMs) {
-                  sinkPlugin.sink(processed, spec.config)
-                }
-                s"${spec.name}[$i]" -> n
-              } catch {
-                case e: Exception =>
-                  // per-plugin failure metric fires even when the error
-                  // propagates (agent.go:268 records unconditionally)
-                  monitor.recordPlugin(recipe.name, spec.name, "sink", success = false)
-                  if (stopOnSinkError) throw e
-                  System.err.println(s"[agent] sink ${spec.name} failed: ${e.getMessage}")
-                  s"${spec.name}[$i]" -> -1L
-              } finally sinkPlugin.close()
-            if (entry._2 >= 0L)
-              monitor.recordPlugin(recipe.name, spec.name, "sink", success = true)
-            entry
-          }.toMap
+          val sinkCounts = fanOut(recipe.name, processed, recipe.sinks)
           RunResult(recipe, success = true, None,
             (System.nanoTime() - t0) / 1000000L, recordCount, sinkCounts)
         } finally processed.unpersist()
@@ -141,16 +156,21 @@ class Agent(
 
   /** Continuous recipe run over a STREAMING frame: processors apply to
     * the unbounded frame; each micro-batch fans out to every sink via
-    * foreachBatch (persist + N writes, same shape as the batch path).
-    * The reference has no event-time engine — this is the Spark-native
-    * "continuous recipe" extension (SURVEY.md §2.5): same plugins, one
-    * more execution mode. Returns the handle; caller owns lifecycle.
+    * foreachBatch (persist + the batch path's [[fanOut]], with
+    * `queryName` as the recipe name of its metrics). The processor and
+    * sink configs are validated before the query starts, so a bad spec
+    * fails here instead of on every micro-batch. The reference has no
+    * event-time engine — this is the Spark-native "continuous recipe"
+    * extension (SURVEY.md §2.5): same plugins, one more execution mode.
+    * Returns the handle; caller owns lifecycle.
     */
-  def runStreaming(stream: org.apache.spark.sql.DataFrame,
+  def runStreaming(stream: DataFrame,
                    processorSpecs: Seq[PluginSpec],
                    sinkSpecs: Seq[PluginSpec],
                    queryName: String = "graft-recipe"):
       org.apache.spark.sql.streaming.StreamingQuery = {
+    val errors = validateChain(processorSpecs, sinkSpecs)
+    if (errors.nonEmpty) throw new ConfigException(errors)
     val processed = processorSpecs.foldLeft(stream) { (df, spec) =>
       Registries.processors.get(spec.name).process(df, spec.config)
     }
@@ -158,15 +178,8 @@ class Agent(
       .queryName(queryName)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try sinkSpecs.foreach { spec =>
-          val sinkPlugin = Registries.sinks.get(spec.name)
-          try Retrier.retry(maxRetries, retryInitialMs) {
-            sinkPlugin.sink(batch, spec.config)
-          } catch {
-            case e: Exception if !stopOnSinkError =>
-              System.err.println(s"[agent] sink ${spec.name} failed: ${e.getMessage}")
-          }
-        } finally { batch.unpersist(); () }
+        try { fanOut(queryName, batch, sinkSpecs); () }
+        finally { batch.unpersist(); () }
       }
       .start()
   }

@@ -255,55 +255,43 @@ object Classify {
   def forgetNbStoreAt(spark: SparkSession, path: String,
                       tombDocs: DataFrame, idCol: String, textCol: String,
                       labelCol: String): Unit = {
-    Layout.refuseIfPending(spark, path)
-    val side = spark.read.parquet(s"$path/docs")
-    val idType = side.schema(idCol).dataType
-    val tombIds = tombDocs
-      .select(expr(s"try_cast(`$idCol` AS ${idType.sql})").as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
-    val tombBuckets = tombIds
-      .select(pmod(xxhash64(col(idCol)),
-          lit(nbLayoutAt(spark, path))).cast("int")
-        .as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val present = side.filter(col("dbucket").isInCollection(tombBuckets))
-      .join(broadcast(tombIds), Seq(idCol), "left_semi")
-      .localCheckpoint()
-    if (present.isEmpty) return
-    // the erased docs WITH their content, restricted to actual members;
-    // id-deduped so a twice-delivered tombstone cannot double-subtract
-    val erased = tombDocs
-      .join(broadcast(present.select(col(idCol))), Seq(idCol), "left_semi")
-      .dropDuplicates(idCol)
-      .localCheckpoint()
-    Layout.withPendingMarkerStaged(spark, path)({
-      val model = spark.read.parquet(s"$path/model")
-      val tDec = termCounts(erased, textCol, labelCol)
-        .withColumnRenamed("cnt", "__dec")
-      val newCnt = model.select(col("label"), col("term"), col("cnt"))
-        .join(tDec, Seq("label", "term"), "left_outer")
-        .select(col("label"), col("term"),
-          (col("cnt") - coalesce(col("__dec"), lit(0L))).as("cnt"))
-        .filter(col("cnt") > 0).localCheckpoint()
-      val ndDec = erased.groupBy(col(labelCol).as("label"))
-        .agg(count(lit(1)).as("__nddec"))
-      val newNd = spark.read.parquet(s"$path/base")
-        .select(col("label"), col("nd"))
-        .join(broadcast(ndDec), Seq("label"), "left_outer")
-        .select(col("label"),
-          (col("nd") - coalesce(col("__nddec"), lit(0L))).as("nd"))
-        .filter(col("nd") > 0)
-      val newModel = modelFromCounts(newCnt).localCheckpoint()
-      val newBase = baseFromCounts(newCnt, newNd).localCheckpoint()
-      val docsPlan = Layout.planCompaction(spark, s"$path/docs", "dbucket",
-        side, tombIds, idCol, Layout.partitionHits(present, "dbucket"),
-        sortCols = Seq(idCol))
-      (newModel, newBase, docsPlan)
-    }) { case (newModel, newBase, docsPlan) =>
-      Layout.replaceDir(newModel.coalesce(4), s"$path/model")
-      docsPlan.foreach(Layout.execDirRewrite(spark, _))
-      // base is the commit signal — replaced LAST
-      Layout.replaceDir(newBase.coalesce(1), s"$path/base")
+    Layout.findTombstones(spark, path, s"$path/docs", tombDocs, idCol,
+        "dbucket", Some(nbLayoutAt(spark, path))).foreach { t =>
+      // the erased docs WITH their content, restricted to actual members;
+      // id-deduped so a twice-delivered tombstone cannot double-subtract
+      val erased = tombDocs
+        .join(broadcast(t.present.select(col(idCol))), Seq(idCol), "left_semi")
+        .dropDuplicates(idCol)
+        .localCheckpoint()
+      Layout.withPendingMarkerStaged(spark, path)({
+        val model = spark.read.parquet(s"$path/model")
+        val tDec = termCounts(erased, textCol, labelCol)
+          .withColumnRenamed("cnt", "__dec")
+        val newCnt = model.select(col("label"), col("term"), col("cnt"))
+          .join(tDec, Seq("label", "term"), "left_outer")
+          .select(col("label"), col("term"),
+            (col("cnt") - coalesce(col("__dec"), lit(0L))).as("cnt"))
+          .filter(col("cnt") > 0).localCheckpoint()
+        val ndDec = erased.groupBy(col(labelCol).as("label"))
+          .agg(count(lit(1)).as("__nddec"))
+        val newNd = spark.read.parquet(s"$path/base")
+          .select(col("label"), col("nd"))
+          .join(broadcast(ndDec), Seq("label"), "left_outer")
+          .select(col("label"),
+            (col("nd") - coalesce(col("__nddec"), lit(0L))).as("nd"))
+          .filter(col("nd") > 0)
+        val newModel = modelFromCounts(newCnt).localCheckpoint()
+        val newBase = baseFromCounts(newCnt, newNd).localCheckpoint()
+        val docsPlan = Layout.planCompaction(spark, s"$path/docs", "dbucket",
+          t.sidecar, t.ids, idCol, Layout.partitionHits(t.present, "dbucket"),
+          sortCols = Seq(idCol))
+        (newModel, newBase, docsPlan)
+      }) { case (newModel, newBase, docsPlan) =>
+        Layout.replaceDir(newModel.coalesce(4), s"$path/model")
+        docsPlan.foreach(Layout.execDirRewrite(spark, _))
+        // base is the commit signal — replaced LAST
+        Layout.replaceDir(newBase.coalesce(1), s"$path/base")
+      }
     }
   }
 

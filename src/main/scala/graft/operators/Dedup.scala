@@ -1237,51 +1237,41 @@ object Dedup {
     * by the standard per-directory rule. Forget ≡ rebuild-on-survivors
     * is what the d_winnow_forget_stored oracle hash-checks; idempotent
     * (a second run finds no attribution rows and no-ops); staged pending
-    * marker like every store mutation. Tombstone ids cast to the
-    * sidecar's id type before hashing (the [[Similarity.forgetIvfStoreAt]]
-    * type-sensitivity rule).
+    * marker like every store mutation; the tombstones are located by
+    * the shared finder ([[Layout.findTombstones]]).
     */
   def forgetWinnowStoreAt(spark: org.apache.spark.sql.SparkSession,
                           path: String, tombstones: DataFrame,
                           idCol: String): Unit = {
-    Layout.refuseIfPending(spark, path)
-    // bucket moduli from the store's frozen record (the merge rationale)
-    val (_, _, fpB, docB) = winnowLayoutAt(spark, path)
-    val side = spark.read.parquet(s"$path/docs")
-    val idType = side.schema(idCol).dataType
-    val tomb = tombstones
-      .select(expr(s"try_cast(`$idCol` AS ${idType.sql})").as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
-    val tombBuckets = tomb
-      .select(pmod(xxhash64(col(idCol)), lit(docB)).cast("int")
-        .as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val hits = side.filter(col("dbucket").isInCollection(tombBuckets))
-      .join(broadcast(tomb), Seq(idCol), "left_semi")
-      .localCheckpoint()
-    if (hits.isEmpty) return
-    Layout.withPendingMarkerStaged(spark, path)({
-      val dec = hits.groupBy(col("fp")).agg(count(lit(1)).as("__dec"))
-      // hit fp directories recomputed from the fp STRING — md5 hex, so
-      // the hash is type-stable (no numeric-type drift possible)
-      val hitFpDirs = dec.select(winnowFpBucket(fpB).as("b")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val fpsRaw = spark.read.parquet(s"$path/fps")
-      val newRows = fpsRaw.filter(col("fbucket").isInCollection(hitFpDirs))
-        .join(dec, Seq("fp"), "left_outer")
-        .select(col("fp"),
-          (col("refs") - coalesce(col("__dec"), lit(0L))).as("refs"),
-          col("fbucket"))
-        .filter(col("refs") > 0)
-      val fpsPlan = Layout.planDirRewrite(spark, s"$path/fps", "fbucket",
-        newRows, hitFpDirs, fpsRaw, sortCols = Seq("fp"))
-      val docsPlan = Layout.planCompaction(spark, s"$path/docs", "dbucket",
-        side, tomb, idCol, Layout.partitionHits(hits, "dbucket"),
-        sortCols = Seq(idCol))
-      (fpsPlan, docsPlan)
-    }) { case (fpsPlan, docsPlan) =>
-      Layout.execDirRewrite(spark, fpsPlan)
-      docsPlan.foreach(Layout.execDirRewrite(spark, _))
+    // bucket moduli from the store's frozen record (the merge rationale),
+    // read after the finder's marker refusal
+    lazy val layout = winnowLayoutAt(spark, path)
+    Layout.findTombstones(spark, path, s"$path/docs", tombstones, idCol,
+        "dbucket", Some(layout._4)).foreach { t =>
+      val fpB = layout._3
+      Layout.withPendingMarkerStaged(spark, path)({
+        val dec = t.present.groupBy(col("fp")).agg(count(lit(1)).as("__dec"))
+        // hit fp directories recomputed from the fp STRING — md5 hex, so
+        // the hash is type-stable (no numeric-type drift possible)
+        val hitFpDirs = dec.select(winnowFpBucket(fpB).as("b")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        val fpsRaw = spark.read.parquet(s"$path/fps")
+        val newRows = fpsRaw.filter(col("fbucket").isInCollection(hitFpDirs))
+          .join(dec, Seq("fp"), "left_outer")
+          .select(col("fp"),
+            (col("refs") - coalesce(col("__dec"), lit(0L))).as("refs"),
+            col("fbucket"))
+          .filter(col("refs") > 0)
+        val fpsPlan = Layout.planDirRewrite(spark, s"$path/fps", "fbucket",
+          newRows, hitFpDirs, fpsRaw, sortCols = Seq("fp"))
+        val docsPlan = Layout.planCompaction(spark, s"$path/docs", "dbucket",
+          t.sidecar, t.ids, idCol, Layout.partitionHits(t.present, "dbucket"),
+          sortCols = Seq(idCol))
+        (fpsPlan, docsPlan)
+      }) { case (fpsPlan, docsPlan) =>
+        Layout.execDirRewrite(spark, fpsPlan)
+        docsPlan.foreach(Layout.execDirRewrite(spark, _))
+      }
     }
   }
 

@@ -260,7 +260,7 @@ object Fsck {
     if (!Layout.exists(spark, s"$path/_graft_ids"))
       return Seq(Finding(layout, "erasure_sidecar", ok = false,
         "no _graft_ids sidecar — erasure would need a full-store scan"))
-    val side = spark.read.parquet(s"$path/_graft_ids")
+    val side = Layout.readTable(spark, s"$path/_graft_ids")
     // the sidecar mirrors the store's (id, home directory) pairs exactly:
     // a missing row hides a vector from erasure, a stale home compacts
     // the wrong directory

@@ -80,6 +80,14 @@ object Layout {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Whether a committed table exists at `path`: its `_SUCCESS` marker
+    * is the commit protocol's own completeness signal, so a half-written
+    * index never gates or reads as a store to merge into (an ingest that
+    * took it for one would merge instead of rebuilding).
+    */
+  def indexExists(spark: SparkSession, path: String): Boolean =
+    exists(spark, s"$path/_SUCCESS")
+
   /** Read the one-row record a store freezes at `dir` (its layout knobs,
     * its build config, its rerank linkage) with the record's known `ddl`
     * schema: one Spark job, never a schema-inference job. None when the
@@ -88,7 +96,31 @@ object Layout {
     */
   def readRecord(spark: SparkSession, dir: String, ddl: String): Option[Row] =
     if (!exists(spark, dir)) None
-    else spark.read.schema(ddl).parquet(dir).collect().headOption
+    else readTable(spark, dir, Some(ddl)).collect().headOption
+
+  /** Read the parquet table at `dir` (partition columns included), with
+    * the known `ddl` schema when given. Spark's file source checks the
+    * paths it is handed by NAME and warns "All paths were ignored" when
+    * every one starts with `_` or `.` — the filter meant for `_SUCCESS`
+    * and checksum files, which every store-internal directory
+    * (`_graft_layout`, `_graft_codebook`, `_graft_ids`, ...) trips on
+    * each read. Such a directory is read through its own data entries
+    * (files, or partition directories) with itself as the base path:
+    * the same rows and columns, the same jobs, and no warning.
+    */
+  def readTable(spark: SparkSession, dir: String,
+                ddl: Option[String] = None): DataFrame = {
+    val reader = ddl.fold(spark.read)(spark.read.schema)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    val entries =
+      if (!hidden(p.getName)) Array.empty[String]
+      else p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).map(_.getPath).filterNot(e => hidden(e.getName))
+        .map(_.toString)
+    if (entries.isEmpty) reader.parquet(dir)
+    else reader.option("basePath", dir).parquet(entries.toIndexedSeq: _*)
+  }
 
   /** Write a store's one-row record to `dir` through [[replaceDir]], so a
     * write that dies before its rename leaves the previous record
@@ -172,6 +204,60 @@ object Layout {
   def partitionHits(hit: DataFrame, part: String): Seq[Int] =
     hit.select(col(part).cast("int")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
+
+  /** The intake of every erasure: refuse a store carrying the pending
+    * marker, then read the rows at `dir` (the store itself or its id
+    * sidecar) and cast the tombstone ids to THEIR id type. xxhash64 and
+    * pmod are type-sensitive (an int and a long with the same value hash
+    * differently), so a batch delivered as another numeric type (csv
+    * inferSchema int vs parquet long) would derive the wrong directories
+    * and silently erase nothing. try_cast: an id outside the type's range
+    * cannot be a member, and under ANSI a plain cast would abort the
+    * whole batch over it. Returns (rows at `dir`, typed distinct ids).
+    */
+  def typedTombstones(spark: SparkSession, path: String, dir: String,
+                      tombstones: DataFrame,
+                      idCol: String): (DataFrame, DataFrame) = {
+    refuseIfPending(spark, path)
+    val rows = readTable(spark, dir)
+    val idType = rows.schema(idCol).dataType
+    (rows, tombstones
+      .select(expr(s"try_cast(`$idCol` AS ${idType.sql})").as(idCol))
+      .filter(col(idCol).isNotNull).distinct())
+  }
+
+  /** A tombstone batch located in a store's id sidecar: the typed ids,
+    * the whole sidecar frame, the sidecar rows of the ids actually
+    * present (checkpointed) and how many there are. */
+  final case class Tombstones(ids: DataFrame, sidecar: DataFrame,
+                              present: DataFrame, count: Long)
+
+  /** The tombstone FINDER every sidecar-carrying store shares: the
+    * [[typedTombstones]] intake against the sidecar at `sidecarDir`, the
+    * sidecar read pruned to the ≤ |tombstones| `bucketCol` directories
+    * (`pmod(xxhash64(id), buckets)`) the ids can live in, then one
+    * broadcast semi-join whose result is checkpointed, so the mutation
+    * that follows reads it without re-scanning a sidecar it is about to
+    * rewrite. `buckets` is read only after the marker refusal; None (a
+    * store that recorded no modulus) scans the whole sidecar. None when
+    * no tombstone is present: ids never ingested are ignored, and a
+    * re-run after a completed erasure is a no-op.
+    */
+  def findTombstones(spark: SparkSession, path: String, sidecarDir: String,
+                     tombstones: DataFrame, idCol: String, bucketCol: String,
+                     buckets: => Option[Int]): Option[Tombstones] = {
+    val (side, ids) =
+      typedTombstones(spark, path, sidecarDir, tombstones, idCol)
+    val pruned = buckets.fold(side) { n =>
+      val dirs = ids.select(pmod(xxhash64(col(idCol)), lit(n)).cast("int"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      side.filter(col(bucketCol).isInCollection(dirs))
+    }
+    val present = pruned.join(broadcast(ids), Seq(idCol), "left_semi")
+      .localCheckpoint()
+    val n = present.count()
+    if (n == 0L) None else Some(Tombstones(ids, side, present, n))
+  }
 
   private def pendingMarkerOf(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_merge_pending")

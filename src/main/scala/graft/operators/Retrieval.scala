@@ -1223,10 +1223,8 @@ object Retrieval {
 
   /** Whether `path` holds the PLAIN layout (it carries a dfreq table;
     * the fielded layout derives df at score time and has none) — the
-    * on-disk signal the erasure entry points dispatch on, checked BEFORE
-    * the pending marker is acquired: mis-dispatching a forget must fail
-    * as a loud no-op, never as a throw inside the marker that bricks an
-    * intact store.
+    * fact the store records about its layout, from which the forget
+    * picks its statistics step and the search source its scorer.
     */
   def isPlainBm25StoreAt(spark: SparkSession, path: String): Boolean =
     Layout.exists(spark, s"$path/dfreq")
@@ -1258,149 +1256,100 @@ object Retrieval {
       postings.filter(col("bucket").isInCollection(tb))
     } else postings
 
-  /** The tombstone MEMBERSHIP probe shared by the BM25-family forgets:
-    * tombstone ids cast to the sidecar's id type (xxhash64 is
-    * type-sensitive — a csv-int batch against a parquet-long store would
-    * otherwise derive the wrong buckets), then the sidecar read pruned
-    * to the ≤ |tombstones| id-hash directories they can live in before
-    * the semi-join. Returns (typed tomb, full sidecar frame, present
-    * rows — checkpointed).
-    */
-  private def tombPresence(spark: SparkSession, path: String,
-                           tombstones: DataFrame, idCol: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val docs = spark.read.parquet(s"$path/docs")
-    val idType = docs.schema(idCol).dataType
-    val tomb = tombstones
-      .select(expr(s"try_cast(`$idCol` AS ${idType.sql})").as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
-    val b = readLayoutMeta(spark, path)
-    val pruned = b match {
-      case Some(nb) =>
-        val tombBuckets = tomb.select(idBucket(idCol, nb).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        docs.filter(col("dbucket").isInCollection(tombBuckets))
-      case None => docs
-    }
-    val present = pruned.join(broadcast(tomb), Seq(idCol), "left_semi")
-      .localCheckpoint()
-    (tomb, docs, present)
-  }
-
-  /** Right-to-erasure for a written BM25 store, IN PLACE — the
-    * [[graft.operators.Similarity.forgetIvfStoreAt]] discipline applied
-    * to the postings layout: after this call a tombstoned doc is not
-    * retrievable by ANY stored-scoring row, and every statistic the
-    * scorer reads (df, dl mass, n_docs, total tokens) is exactly what a
-    * rebuild on the survivors would hold — forget ≡ rebuild is what the
-    * d_bm25_forget_stored oracle hash-checks.
+  /** Right-to-erasure for a written BM25 store, plain or fielded, IN
+    * PLACE — the [[graft.operators.Similarity.forgetIvfStoreAt]]
+    * discipline applied to the postings layout: after this call a
+    * tombstoned doc is not retrievable by ANY stored-scoring row, and
+    * every statistic the scorer reads is exactly what a rebuild on the
+    * survivors would hold — forget ≡ rebuild is what the
+    * d_bm25_forget_stored and d_bm25f_forget_stored oracles hash-check.
     *
-    * Work done per erasure batch: ONE id-column scan of the postings to
-    * locate the hit term-hash bucket directories plus the tombstoned
-    * rows' (term, tf) pairs; survivors of ONLY those directories rewrite
-    * (dynamic partition overwrite; fully-emptied directories removed);
-    * df decrements by the per-term hit-row counts via one outer join on
-    * the |V|-row table, terms whose df reaches zero LEAVE the vocabulary
-    * (a rebuilt store would not carry them); the 1-row stats
-    * integer-subtracts n_docs (counted against the id SIDECAR, so
-    * zero-token docs — postings-invisible but avgdl-relevant — decrement
-    * exactly) and total tokens; the sidecar compacts by the same
-    * per-directory rule. Ids never ingested are ignored; a re-run after
-    * completion finds no members and no-ops (idempotent).
+    * Work done per erasure batch: the shared finder
+    * ([[Layout.findTombstones]]) locates the tombstoned docs in the id
+    * sidecar; ONE id-column scan of their own postings buckets
+    * ([[prunedHitScan]]) yields the hit term-hash directories plus the
+    * tombstoned rows' (term, tf) pairs; survivors of ONLY those
+    * directories rewrite (dynamic partition overwrite; fully-emptied
+    * directories removed), and the sidecar compacts by the same
+    * per-directory rule. The statistics step follows the layout the
+    * store records ([[isPlainBm25StoreAt]]):
+    *  - plain: df decrements by the per-term hit-row counts via one
+    *    outer join on the |V|-row table, terms whose df reaches zero
+    *    LEAVE the vocabulary (a rebuilt store would not carry them), and
+    *    the 1-row stats integer-subtracts n_docs and total tokens;
+    *  - fielded: per-field tot_f decrements (Σ tf of the hit rows per
+    *    field) and ONE corpus-level n_docs decrement; there is no df
+    *    table — the fielded layout derives whole-doc df from
+    *    query-restricted postings at score time, so erased rows simply
+    *    stop being counted.
+    * n_docs is counted against the id SIDECAR, so zero-token docs —
+    * postings-invisible but avgdl-relevant — decrement exactly. Ids
+    * never ingested are ignored; a re-run after completion finds no
+    * members and no-ops (idempotent).
     *
-    * Crash safety: the whole mutation runs under the atomic
-    * `_graft_merge_pending` marker ([[Layout.withPendingMarker]]) — a
-    * forget that dies between its writes leaves the marker, and every
+    * Crash safety: the mutation runs under the staged
+    * `_graft_merge_pending` marker ([[Layout.withPendingMarkerStaged]]) —
+    * a forget that dies between its writes leaves the marker, and every
     * later mutation or sink ingest refuses with the rebuild instruction
     * instead of compounding a half-applied erasure. Single-writer like
     * every store mutation.
     */
   def forgetBm25StoreAt(spark: SparkSession, path: String,
                         tombstones: DataFrame, idCol: String): Unit = {
-    Layout.refuseIfPending(spark, path)
     requireErasableLayout(spark, path)
-    require(isPlainBm25StoreAt(spark, path),
-      s"$path holds a FIELDED store (no dfreq table) — erase it with " +
-        "forgetBm25fStoreAt")
-    val (tomb, docs, present) = tombPresence(spark, path, tombstones, idCol)
-    val nDec = present.count()
-    if (nDec == 0L) return
-    // staged: every read and survivor plan materializes BEFORE the first
-    // write — a failure in that phase releases the marker (nothing was
-    // mutated); a failure between the writes leaves it, loudly
-    Layout.withPendingMarkerStaged(spark, path)({
-      val postings = spark.read.parquet(s"$path/postings")
-      val hitP = prunedHitScan(postings, present)
-        .join(broadcast(tomb), Seq(idCol), "left_semi")
-        .localCheckpoint()
-      val totDec = hitP.agg(coalesce(sum(col("tf")), lit(0L)).as("t"))
-        .head().getLong(0)
-      val dfDec = hitP.groupBy(col("term")).agg(count(lit(1)).as("__dec"))
-      val newDfreq = spark.read.parquet(s"$path/dfreq")
-        .join(dfDec, Seq("term"), "left_outer")
-        .select(col("term"),
-          (col("df") - coalesce(col("__dec"), lit(0L))).as("df"))
-        .filter(col("df") > 0).localCheckpoint()
-      val newStats = spark.read.parquet(s"$path/stats")
-        .select((col("n_docs") - nDec).as("n_docs"),
-          (col("tot") - totDec).as("tot")).localCheckpoint()
-      val postPlan = Layout.planCompaction(spark, s"$path/postings",
-        "bucket", postings, tomb, idCol,
-        Layout.partitionHits(hitP, "bucket"), sortCols = Seq("term"))
-      val docsPlan = Layout.planCompaction(spark, s"$path/docs",
-        "dbucket", docs, tomb, idCol,
-        Layout.partitionHits(present, "dbucket"), sortCols = Seq(idCol))
-      (postPlan, docsPlan, newDfreq, newStats)
-    }) { case (postPlan, docsPlan, newDfreq, newStats) =>
-      postPlan.foreach(Layout.execDirRewrite(spark, _))
-      docsPlan.foreach(Layout.execDirRewrite(spark, _))
-      Layout.replaceDir(newDfreq.repartition(4, col("term")),
-        s"$path/dfreq")
-      Layout.replaceDir(newStats.coalesce(1), s"$path/stats")
-    }
-  }
-
-  /** [[forgetBm25StoreAt]] for the FIELDED layout: same postings/sidecar
-    * compaction, per-field tot_f decrements (Σ tf of the hit rows per
-    * field) and ONE corpus-level n_docs decrement from the sidecar; no
-    * df table to touch — the fielded layout derives whole-doc df from
-    * query-restricted postings at score time, so erased rows simply stop
-    * being counted. Forget ≡ rebuild pinned by the
-    * d_bm25f_forget_stored oracle.
-    */
-  def forgetBm25fStoreAt(spark: SparkSession, path: String,
-                         tombstones: DataFrame, idCol: String): Unit = {
-    Layout.refuseIfPending(spark, path)
-    requireErasableLayout(spark, path)
-    require(!isPlainBm25StoreAt(spark, path),
-      s"$path holds a PLAIN store (it carries a dfreq table the fielded " +
-        "path would leave stale) — erase it with forgetBm25StoreAt")
-    val (tomb, docs, present) = tombPresence(spark, path, tombstones, idCol)
-    val nDec = present.count()
-    if (nDec == 0L) return
-    // staged like [[forgetBm25StoreAt]]; hit scan tbuckets-pruned the same
-    Layout.withPendingMarkerStaged(spark, path)({
-      val postings = spark.read.parquet(s"$path/postings")
-      val hitP = prunedHitScan(postings, present)
-        .join(broadcast(tomb), Seq(idCol), "left_semi")
-        .localCheckpoint()
-      val fDec = hitP.groupBy(col("f")).agg(sum(col("tf")).as("__dec"))
-      val newStats = spark.read.parquet(s"$path/stats")
-        .join(broadcast(fDec), Seq("f"), "left_outer")
-        .select(col("f"), (col("n_docs") - nDec).as("n_docs"),
-          (col("tot_f") - coalesce(col("__dec"), lit(0L))).as("tot_f"))
-        .localCheckpoint()
-      val postPlan = Layout.planCompaction(spark, s"$path/postings",
-        "bucket", postings, tomb, idCol,
-        Layout.partitionHits(hitP, "bucket"), sortCols = Seq("term"))
-      val docsPlan = Layout.planCompaction(spark, s"$path/docs",
-        "dbucket", docs, tomb, idCol,
-        Layout.partitionHits(present, "dbucket"), sortCols = Seq(idCol))
-      (postPlan, docsPlan, newStats)
-    }) { case (postPlan, docsPlan, newStats) =>
-      postPlan.foreach(Layout.execDirRewrite(spark, _))
-      docsPlan.foreach(Layout.execDirRewrite(spark, _))
-      Layout.replaceDir(newStats.coalesce(1), s"$path/stats")
+    Layout.findTombstones(spark, path, s"$path/docs", tombstones, idCol,
+        "dbucket", readLayoutMeta(spark, path)).foreach { t =>
+      // read after the finder's marker refusal: a crash inside a dfreq
+      // replace would otherwise read as the fielded layout
+      val plain = isPlainBm25StoreAt(spark, path)
+      // staged: every read and survivor plan materializes BEFORE the
+      // first write — a failure in that phase releases the marker
+      // (nothing was mutated); a failure between the writes leaves it
+      Layout.withPendingMarkerStaged(spark, path)({
+        val postings = spark.read.parquet(s"$path/postings")
+        val hitP = prunedHitScan(postings, t.present)
+          .join(broadcast(t.ids), Seq(idCol), "left_semi")
+          .localCheckpoint()
+        val stats = spark.read.parquet(s"$path/stats")
+        // (replacement, table) pairs, replaced in order after the
+        // compactions — stats last, the store's commit signal
+        val tables =
+          if (plain) {
+            val totDec = hitP.agg(coalesce(sum(col("tf")), lit(0L)).as("t"))
+              .head().getLong(0)
+            val dfDec = hitP.groupBy(col("term"))
+              .agg(count(lit(1)).as("__dec"))
+            val newDfreq = spark.read.parquet(s"$path/dfreq")
+              .join(dfDec, Seq("term"), "left_outer")
+              .select(col("term"),
+                (col("df") - coalesce(col("__dec"), lit(0L))).as("df"))
+              .filter(col("df") > 0).localCheckpoint()
+            val newStats = stats
+              .select((col("n_docs") - t.count).as("n_docs"),
+                (col("tot") - totDec).as("tot")).localCheckpoint()
+            Seq(newDfreq.repartition(4, col("term")) -> s"$path/dfreq",
+              newStats.coalesce(1) -> s"$path/stats")
+          } else {
+            val fDec = hitP.groupBy(col("f")).agg(sum(col("tf")).as("__dec"))
+            val newStats = stats
+              .join(broadcast(fDec), Seq("f"), "left_outer")
+              .select(col("f"), (col("n_docs") - t.count).as("n_docs"),
+                (col("tot_f") - coalesce(col("__dec"), lit(0L))).as("tot_f"))
+              .localCheckpoint()
+            Seq(newStats.coalesce(1) -> s"$path/stats")
+          }
+        val postPlan = Layout.planCompaction(spark, s"$path/postings",
+          "bucket", postings, t.ids, idCol,
+          Layout.partitionHits(hitP, "bucket"), sortCols = Seq("term"))
+        val docsPlan = Layout.planCompaction(spark, s"$path/docs",
+          "dbucket", t.sidecar, t.ids, idCol,
+          Layout.partitionHits(t.present, "dbucket"), sortCols = Seq(idCol))
+        (postPlan, docsPlan, tables)
+      }) { case (postPlan, docsPlan, tables) =>
+        postPlan.foreach(Layout.execDirRewrite(spark, _))
+        docsPlan.foreach(Layout.execDirRewrite(spark, _))
+        tables.foreach { case (df, dir) => Layout.replaceDir(df, dir) }
+      }
     }
   }
 

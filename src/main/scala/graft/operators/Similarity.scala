@@ -785,19 +785,15 @@ object Similarity {
     * derive from the tombstones directly — no sidecar needed, and the
     * compaction reads only ≤ |tombstones| of the `parts` directories.
     * Same staged pending-marker protocol as every store mutation;
-    * tombstone ids cast to the store's id type first (the
-    * [[forgetIvfStoreAt]] type-sensitivity rule — here a wrongly-typed id
-    * would derive the wrong directory).
+    * tombstone ids cast to the store's id type first
+    * ([[Layout.typedTombstones]] — here a wrongly-typed id would derive
+    * the wrong directory).
     */
   def forgetVectorStoreAt(spark: SparkSession, path: String,
                           tombstones: DataFrame, idCol: String): Unit = {
-    Layout.refuseIfPending(spark, path)
-    val store = spark.read.parquet(path)
-    val idType = store.schema(idCol).dataType
+    val (store, tomb) =
+      Layout.typedTombstones(spark, path, path, tombstones, idCol)
     val parts = requireVectorParts(spark, path)
-    val tomb = tombstones
-      .select(expr(s"try_cast(`$idCol` AS ${idType.sql})").as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
     val hit = tomb.select(pmod(col(idCol), lit(parts)).cast("int").as("p"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
     if (hit.isEmpty) return
@@ -1175,7 +1171,7 @@ object Similarity {
   def codebookKindAt(spark: SparkSession, path: String): String = {
     if (Layout.exists(spark, s"$path/_graft_pq2/subs/_graft_codebook"))
       return "two_level_pq"
-    val kinds = spark.read.parquet(s"$path/_graft_codebook")
+    val kinds = Layout.readTable(spark, s"$path/_graft_codebook")
       .select(col("kind")).distinct().collect().map(_.getString(0))
     require(kinds.length == 1, s"ambiguous codebook kinds: ${kinds.toSeq}")
     kinds.head
@@ -1192,14 +1188,14 @@ object Similarity {
     */
   def storeIdColumnAt(spark: SparkSession, path: String): Option[String] = {
     if (Layout.exists(spark, s"$path/_graft_ids"))
-      spark.read.parquet(s"$path/_graft_ids").columns
+      Layout.readTable(spark, s"$path/_graft_ids").columns
         .filterNot(Set("home", "ibucket")).headOption
     else None
   }
 
   private def codebookRowsAt(spark: SparkSession,
       path: String): Array[org.apache.spark.sql.Row] = {
-    val rows = spark.read.parquet(s"$path/_graft_codebook")
+    val rows = Layout.readTable(spark, s"$path/_graft_codebook")
       .select(col("kind"), col("t"), col("k"), col("gid"), col("vec"))
       .collect()
     require(rows.nonEmpty, s"$path/_graft_codebook is empty")
@@ -1287,7 +1283,7 @@ object Similarity {
   /** Reload a [[writePqCodebooksAt]] pair: (coarse, subquantizers). */
   def readPqCodebooksAt(spark: SparkSession,
                         path: String): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
-    val rows = spark.read.parquet(s"$path/_graft_codebook")
+    val rows = Layout.readTable(spark, s"$path/_graft_codebook")
       .select(col("kind"), col("t"), col("k"), col("vec")).collect()
     require(rows.nonEmpty && rows.forall(_.getString(0) == "pq"),
       s"$path/_graft_codebook is not a PQ codebook pair")
@@ -1536,7 +1532,7 @@ object Similarity {
       if (maintainSidecar) {
         val remap = reassigned
           .select(col(idCol), col("centroid_id").cast("int").as("__new"))
-        val sc = spark.read.parquet(s"$path/_graft_ids")
+        val sc = Layout.readTable(spark, s"$path/_graft_ids")
         val updated = sc.join(remap, Seq(idCol), "left_outer")
           .select(col(idCol),
             coalesce(col("__new"), col("home")).as("home"), col("ibucket"))
@@ -1551,88 +1547,88 @@ object Similarity {
 
   /** Right-to-erasure compaction of a centroid-partitioned vector store
     * (flat [[writeIvfStore]] or two-level [[writeIvfStoreTwoLevel]] —
-    * the layout is the same on disk), IN PLACE: only the directories
-    * that actually hold a tombstoned row are rewritten. The FINDER reads
-    * the `_graft_ids` sidecar — only the <= |tombstones| id-hash
-    * partitions the tombstones can live in, 12 B/row — so locating the
-    * hit directories never opens the store's own files (pre-sidecar
-    * stores fall back to one (id, centroid_id) columnar semi-join);
-    * survivors of ONLY the hit directories rewrite via dynamic partition
-    * overwrite, and directories a deletion fully empties are removed
-    * explicitly (dynamic overwrite only replaces partitions present in
-    * the written data — zero surviving rows would silently leave the old
-    * files in place, the one hole in the overwrite protocol, closed here
-    * with a FileSystem delete). At 100 TB a deletion request therefore
+    * the layout is the same on disk — raw or PQ codes), IN PLACE: only
+    * the directories that actually hold a tombstoned row are rewritten.
+    * The FINDER ([[Layout.findTombstones]]) reads the `_graft_ids`
+    * sidecar — only the <= |tombstones| id-hash partitions the
+    * tombstones can live in, 12 B/row — so locating the hit directories
+    * never opens the store's own files (pre-sidecar stores fall back to
+    * one (id, centroid_id) columnar semi-join); survivors of ONLY the hit
+    * directories rewrite via dynamic partition overwrite, and directories
+    * a deletion fully empties are removed explicitly
+    * ([[Layout.execDirRewrite]]). At 100 TB a deletion request therefore
     * reads a sidecar sliver plus ~|hit directories|/C of the store and
     * none of the rest. Removal ≡ rebuild on the surviving corpus (each
     * store row derives from exactly one source vector — the
     * [[graft.operators.Dedup.forgetDocs]] compaction theorem);
     * `s_ann_forget_stored` hash-checks exactly that against a
     * rebuild-semantics oracle, and the spec pins the fully-emptied-
-    * directory case. Runs under the atomic pending marker
-    * ([[Layout.withPendingMarker]]); same single-writer contract as
-    * every stored index.
+    * directory case.
+    *
+    * A codes store's exact-vector rerank sidecar forgets the same ids —
+    * erasure that leaves the raw vector fetchable by every re-rank is no
+    * erasure at all. The store's recorded linkage drives the cascade
+    * ([[resolveRerankLink]]): a caller that passes no `rerankStorePath`
+    * still erases the recorded sidecar, a path contradicting the record
+    * refuses, and a recorded-but-unreachable sidecar refuses, all BEFORE
+    * the codes mutate. Only stores predating the linkage record fall back
+    * to `rerankStorePath`. Codes first, then vectors: a crash between
+    * the two leaves orphan vectors (never shortlisted, and the re-run
+    * erases them) rather than codes whose re-rank silently drops.
+    * Each store mutates under its own staged pending marker; same
+    * single-writer contract as every stored index.
     */
   def forgetIvfStoreAt(spark: SparkSession, path: String,
-                       tombstones: DataFrame, idCol: String): Unit = {
-    Layout.refuseIfPending(spark, path)
-    val store = spark.read.parquet(path)
-    // cast tombstone ids to the STORE's id type before anything hashes
-    // them: xxhash64 is type-sensitive (an int and a long with the same
-    // value hash differently), so a tombstone batch delivered as a
-    // different numeric type (csv inferSchema int vs parquet long) would
-    // compute the wrong sidecar buckets, prune the wrong directories, and
-    // silently no-op the erasure — a GDPR miss with no error. try_cast:
-    // an id outside the store type's range cannot be a member, and under
-    // ANSI a plain cast would abort the whole batch over it.
-    val idType = store.schema(idCol).dataType
-    val tomb = tombstones
-      .select(expr(s"try_cast(`$idCol` AS ${idType.sql})").as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
-    // locate the hit directories via the erasure sidecar when the store
-    // carries one: tombstones can only live in their id-hash sidecar
-    // directories (<= |tombstones| of the 64, partition-pruned), so the
-    // finder reads a sliver of a 12 B/row table instead of opening every
-    // file of the store for its (id, centroid_id) columns. Pre-sidecar
-    // stores keep the legacy full columnar-scan finder.
-    val hasSidecar = sidecarExists(spark, path)
-    val hitSidecar =
-      if (hasSidecar) {
-        val tombBuckets = tomb.select(idSidecarBucket(idCol).as("ibucket"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        Some(spark.read.parquet(s"$path/_graft_ids")
-          .filter(col("ibucket").isInCollection(tombBuckets))
-          .join(broadcast(tomb), Seq(idCol), "left_semi")
-          .localCheckpoint())
-      } else None
-    val hit = hitSidecar match {
-      case Some(sc) => sc.select(col("home").cast("int")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      case None => store.join(broadcast(tomb), Seq(idCol), "left_semi")
-        .select(col("centroid_id").cast("int")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-    }
-    if (hit.isEmpty) return
-    // staged: survivors for the store AND the sidecar materialize before
-    // the first write — a failure there releases the marker (nothing
-    // mutated); a failure between the writes leaves it, loudly. The
-    // store-side sentinel handling (erasure may empty EVERY directory,
-    // leaving a path parquet cannot infer a schema from) lives in
-    // [[Layout.execDirRewrite]].
-    Layout.withPendingMarkerStaged(spark, path)({
-      val storePlan = Layout.planCompaction(spark, path, "centroid_id",
-        store, tomb, idCol, hit)
-      // the sidecar forgets its own rows by the same per-directory rule,
-      // sorted back to its (ibucket, id) write order
-      val sidePlan = hitSidecar.flatMap { sc =>
-        Layout.planCompaction(spark, s"$path/_graft_ids", "ibucket",
-          spark.read.parquet(s"$path/_graft_ids"), tomb, idCol,
-          Layout.partitionHits(sc, "ibucket"), sortCols = Seq(idCol))
+                       tombstones: DataFrame, idCol: String,
+                       rerankStorePath: Option[String] = None): Unit = {
+    val rerank = resolveRerankLink(spark, path, rerankStorePath)
+    // both stores erase the SAME ids, even when the caller's frame is
+    // derived from a store the first erasure rewrites
+    val tomb =
+      if (rerank.isEmpty) tombstones
+      else tombstones.select(col(idCol)).localCheckpoint()
+    forgetCentroidRowsAt(spark, path, tomb, idCol)
+    rerank.foreach(forgetVectorStoreAt(spark, _, tomb, idCol))
+  }
+
+  /** [[forgetIvfStoreAt]] on the centroid-partitioned store itself: its
+    * rows and its id sidecar. */
+  private def forgetCentroidRowsAt(spark: SparkSession, path: String,
+                                   tombstones: DataFrame,
+                                   idCol: String): Unit = {
+    // (typed tombstones, hit directories, sidecar hit rows when present)
+    val found =
+      if (sidecarExists(spark, path))
+        Layout.findTombstones(spark, path, s"$path/_graft_ids", tombstones,
+            idCol, "ibucket", Some(IdSidecarBuckets))
+          .map(t => (t.ids, Layout.partitionHits(t.present, "home"),
+            Some(t)))
+      else {
+        val (store, tomb) =
+          Layout.typedTombstones(spark, path, path, tombstones, idCol)
+        Some((tomb, Layout.partitionHits(
+          store.join(broadcast(tomb), Seq(idCol), "left_semi"),
+          "centroid_id"), None))
       }
-      (storePlan, sidePlan)
-    }) { case (storePlan, sidePlan) =>
-      storePlan.foreach(Layout.execDirRewrite(spark, _))
-      sidePlan.foreach(Layout.execDirRewrite(spark, _))
+    found.filter(_._2.nonEmpty).foreach { case (tomb, hit, side) =>
+      // staged: survivors for the store AND the sidecar materialize
+      // before the first write — a failure there releases the marker
+      // (nothing mutated); a failure between the writes leaves it
+      Layout.withPendingMarkerStaged(spark, path)({
+        val storePlan = Layout.planCompaction(spark, path, "centroid_id",
+          spark.read.parquet(path), tomb, idCol, hit)
+        // the sidecar forgets its own rows by the same per-directory
+        // rule, sorted back to its (ibucket, id) write order
+        val sidePlan = side.flatMap { t =>
+          Layout.planCompaction(spark, s"$path/_graft_ids", "ibucket",
+            t.sidecar, tomb, idCol, Layout.partitionHits(t.present, "ibucket"),
+            sortCols = Seq(idCol))
+        }
+        (storePlan, sidePlan)
+      }) { case (storePlan, sidePlan) =>
+        storePlan.foreach(Layout.execDirRewrite(spark, _))
+        sidePlan.foreach(Layout.execDirRewrite(spark, _))
+      }
     }
   }
 

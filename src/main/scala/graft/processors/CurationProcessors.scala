@@ -29,16 +29,6 @@ object CurationProcessors {
   private def dbl(config: Map[String, Any], key: String, default: Double): Double =
     config.get(key).map(_.toString.toDouble).getOrElse(default)
 
-  /** Does a committed index exist at `path`? Resolved through the Hadoop
-    * FileSystem API — a recipe processor's `index_path` may be an HDFS/S3
-    * URI at deployment, where a `java.io.File` probe would silently miss
-    * forever (skipping the gate and re-admitting every historical
-    * duplicate). The `_SUCCESS` marker is the commit protocol's own
-    * completeness signal, so a half-written index never gates.
-    */
-  private[graft] def indexExists(spark: SparkSession, path: String): Boolean =
-    Layout.exists(spark, s"$path/_SUCCESS")
-
   /** quality-filter: keep rows passing the token-statistics thresholds —
     * the [[TextAnalysis.tokenStats]] fused kernel computes all four
     * quality columns in one pass; helper columns are dropped so the
@@ -186,7 +176,7 @@ object CurationProcessors {
       val update = config.getOrElse("update_index", true).toString.toBoolean
       val withFp = df.withColumn("__fp", TextAnalysis.fingerprint(col(tc)))
       val gated =
-        if (indexExists(spark, path))
+        if (Layout.indexExists(spark, path))
           withFp.join(spark.read.schema("fp STRING").parquet(path)
             .select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
         else withFp
@@ -309,7 +299,7 @@ object CurationProcessors {
       val threshold = config.getOrElse("threshold", 0.99).toString.toDouble
       val nprobe = config.getOrElse("nprobe", 3).toString.toInt
       val nprobeTop = config.getOrElse("nprobe_top", 2).toString.toInt
-      if (!indexExists(spark, s"$path/_graft_codebook")) return df
+      if (!Layout.indexExists(spark, s"$path/_graft_codebook")) return df
       val store = spark.read.parquet(path)
       // nearest STORED neighbor per batch row (k=1 — the max cosine is
       // what the threshold tests), probed with the persisted geometry
@@ -391,7 +381,7 @@ object CurationProcessors {
       val nBands = config.getOrElse("bands", 4).toString.toInt
       val update = config.getOrElse("update_index", true).toString.toBoolean
       val survivorIds =
-        if (indexExists(spark, path))
+        if (Layout.indexExists(spark, path))
           // the two join columns with their known types (band_id is
           // posexplode's int, band_hash an md5 string): no inference job
           Dedup.lshIngest(df,
@@ -443,7 +433,7 @@ object CurationProcessors {
       val tc = textCol(config)
       val idc = config.getOrElse("id_column", "doc_id").toString
       val allowed = LangFilter.allowedSet(config)
-      require(indexExists(spark, s"$path/base"),
+      require(Layout.indexExists(spark, s"$path/base"),
         s"$path holds no trained NB model (no base/_SUCCESS) — a " +
           "classifier filter cannot pass rows unscored; train one first " +
           "(nb-index sink) or point index_path at an existing model.")

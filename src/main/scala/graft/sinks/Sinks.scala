@@ -389,6 +389,33 @@ class StencilSink(poster: HttpPoster = JdkHttpPoster) extends SinkPlugin {
   }
 }
 
+/** What the index sinks share: `index_path` is required, `mode` is
+  * `ingest` (the default) or `forget` (the rows are tombstones), and
+  * every batch goes through one intake.
+  */
+private[graft] trait IndexSink extends SinkPlugin {
+  override def validate(config: Map[String, Any]): Seq[InvalidConfigError] =
+    requireKeys(config, "index_path") ++
+      config.get("mode").map(_.toString)
+        .filter(m => m != "ingest" && m != "forget")
+        .map(m => InvalidConfigError("mode", s"unsupported mode: $m"))
+
+  protected def forgets(config: Map[String, Any]): Boolean =
+    config.getOrElse("mode", "ingest").toString == "forget"
+
+  /** The batch intake: the sink's `cols` materialized once and counted;
+    * `write` runs only on a non-empty batch (streaming recipes deliver
+    * empty micro-batches routinely). Returns the row count.
+    */
+  protected def intake(df: DataFrame, cols: String*)(
+      write: DataFrame => Unit): Long = {
+    val batch = df.select(cols.map(col): _*).localCheckpoint()
+    val n = batch.count()
+    if (n > 0) write(batch)
+    n
+  }
+}
+
 /** bm25-index: terminal write of the incoming rows into the engine's
   * stored BM25 postings layout ([[graft.operators.Retrieval.Bm25Store]])
   * — the retrieval-index sibling of the fingerprint/LSH indexes the
@@ -416,7 +443,7 @@ class StencilSink(poster: HttpPoster = JdkHttpPoster) extends SinkPlugin {
   * arriving-batch contract every incremental gate shares); chain a
   * `dedup-gate` upstream when re-deliveries are possible.
   */
-object Bm25IndexSink extends SinkPlugin {
+object Bm25IndexSink extends IndexSink {
   val info: PluginInfo = PluginInfo("bm25-index",
     "Build or incrementally extend a stored BM25 postings index from the incoming rows (mode: forget erases them instead)",
     sampleConfig =
@@ -429,33 +456,21 @@ object Bm25IndexSink extends SinkPlugin {
         |# mode: forget   # rows are TOMBSTONES: erase their ids in place""".stripMargin,
     tags = Seq("sink", "curation", "retrieval"))
 
-  override def validate(config: Map[String, Any]): Seq[InvalidConfigError] = {
-    val badMode = config.get("mode").map(_.toString)
-      .filter(m => m != "ingest" && m != "forget")
-      .map(m => InvalidConfigError("mode", s"unsupported mode: $m"))
-    requireKeys(config, "index_path") ++ badMode
-  }
-
   /** mode: forget — the incoming rows are TOMBSTONES (only `id_column`
     * is read): erase them from the store in place, right-to-erasure on
     * the recipe surface (`tombstones.parquet → bm25-index(mode:
-    * forget)`). Layout dispatch mirrors the ingest side: fielded via the
-    * config flag, chunk grain erases by PARENT doc id through the cid
-    * sidecar. Returns the tombstone count processed.
+    * forget)`). One forget serves plain and fielded stores (it reads the
+    * layout off the store); chunk grain erases by PARENT doc id through
+    * the cid sidecar. Returns the tombstone count processed.
     */
   private def forget(df: DataFrame, config: Map[String, Any]): Long = {
     val spark = df.sparkSession
     val path = config("index_path").toString
     val idc = config.getOrElse("id_column", "doc_id").toString
-    // layout from the STORE, never the forget recipe's config: the
-    // ingest froze fielded/chunk grain in _graft_index_config precisely
-    // so a later batch cannot mis-specify them, and a GDPR recipe is
-    // exactly such a later batch — trusting its flags would dispatch
-    // the wrong forget (loud since the layout sniff in Retrieval, but
-    // needlessly so). Fielded ⟺ no dfreq table; chunk grain and bits
-    // come from the frozen config, falling back to the recipe keys for
-    // library-built stores that carry no config file.
-    val fielded = !graft.operators.Retrieval.isPlainBm25StoreAt(spark, path)
+    // chunk grain and bits from the STORE's frozen config, never the
+    // forget recipe's: a GDPR recipe is exactly the later batch that
+    // _graft_index_config exists to keep from mis-specifying them. Only
+    // library-built stores that carry no config fall back to the keys
     val frozen = IndexProtocol.storedLayoutConfig(spark, path)
     val chunked = frozen.map(_.contains("chunk_grain=true")).getOrElse(
       config.contains("chunk_id_column") ||
@@ -464,23 +479,17 @@ object Bm25IndexSink extends SinkPlugin {
         _.split(",").find(_.startsWith("chunk_bits="))
           .map(_.stripPrefix("chunk_bits=").toInt))
       .getOrElse(config.getOrElse("chunk_id_bits", 20).toString.toInt)
-    val tomb = df.select(org.apache.spark.sql.functions.col(idc))
-      .localCheckpoint()
-    val n = tomb.count()
-    if (n == 0) return 0L
-    if (chunked)
-      graft.operators.Retrieval.forgetBm25ChunkStoreAt(spark, path, tomb,
-        idc, chunkIdBits = bits)
-    else if (fielded)
-      graft.operators.Retrieval.forgetBm25fStoreAt(spark, path, tomb, idc)
-    else
-      graft.operators.Retrieval.forgetBm25StoreAt(spark, path, tomb, idc)
-    n
+    intake(df, idc) { tomb =>
+      if (chunked)
+        graft.operators.Retrieval.forgetBm25ChunkStoreAt(spark, path, tomb,
+          idc, chunkIdBits = bits)
+      else
+        graft.operators.Retrieval.forgetBm25StoreAt(spark, path, tomb, idc)
+    }
   }
 
   def sink(df: DataFrame, config: Map[String, Any]): Long = {
-    if (config.getOrElse("mode", "ingest").toString == "forget")
-      return forget(df, config)
+    if (forgets(config)) return forget(df, config)
     val spark = df.sparkSession
     val path = config("index_path").toString
     val idc = config.getOrElse("id_column", "doc_id").toString
@@ -520,8 +529,7 @@ object Bm25IndexSink extends SinkPlugin {
     graft.operators.Layout.refuseIfPending(spark, path)
     // the stats table is written last on both paths, so its _SUCCESS
     // marker is the store's commit signal (the indexExists discipline)
-    val exists =
-      graft.processors.CurationProcessors.indexExists(spark, s"$path/stats")
+    val exists = graft.operators.Layout.indexExists(spark, s"$path/stats")
     val layoutCfg = s"fielded=$fielded,title_tokens=$titleTokens," +
       s"buckets=$buckets,chunk_grain=${chunkCol.isDefined},chunk_bits=$bits"
     if (!fielded && exists) {
@@ -650,7 +658,7 @@ private[graft] object IndexProtocol {
   * written LAST on the build path, so its _SUCCESS marker is the
   * store's commit signal (the indexExists discipline).
   */
-object IvfIndexSink extends SinkPlugin {
+object IvfIndexSink extends IndexSink {
   val info: PluginInfo = PluginInfo("ivf-index",
     "Build or incrementally extend a centroid-partitioned ANN vector index from the incoming rows",
     sampleConfig =
@@ -689,9 +697,6 @@ object IvfIndexSink extends SinkPlugin {
           "grow: true requires two_level: true (the flat layout has no " +
             "split path — drop grow or switch to the two-level layout)"))
       else Nil
-    val badMode = config.get("mode").map(_.toString)
-      .filter(m => m != "ingest" && m != "forget")
-      .map(m => InvalidConfigError("mode", s"unsupported mode: $m"))
     val badQuant = config.get("quantize").map(_.toString)
       .filter(q => q != "none" && q != "pq")
       .map(q => InvalidConfigError("quantize", s"unsupported quantize: $q"))
@@ -725,8 +730,8 @@ object IvfIndexSink extends SinkPlugin {
           "rerank_store_path pairs with quantize: pq (raw-vector stores " +
             "re-rank against their own exact vectors)"))
       else Nil
-    requireKeys(config, "index_path") ++ growFlat ++ badMode ++ badQuant ++
-      pqConflicts ++ rerankRaw
+    super.validate(config) ++ growFlat ++ badQuant ++ pqConflicts ++
+      rerankRaw
   }
 
   def sink(df: DataFrame, config: Map[String, Any]): Long = {
@@ -735,38 +740,15 @@ object IvfIndexSink extends SinkPlugin {
     val path = config("index_path").toString
     val idc = config.getOrElse("id_column", "vec_id").toString
     // mode: forget — rows are TOMBSTONES (only id_column read): erase
-    // them from the vector store in place via the sidecar-located
-    // per-directory compaction. Right-to-erasure on the recipe surface.
-    if (config.getOrElse("mode", "ingest").toString == "forget") {
-      val tomb = df.select(org.apache.spark.sql.functions.col(idc))
-        .localCheckpoint()
-      val n = tomb.count()
-      if (n > 0) {
-        // a codes store's exact-vector sidecar must forget the same ids —
-        // erasure that leaves the raw vector fetchable by every re-rank
-        // is no erasure at all. The store's own recorded linkage drives
-        // the cascade (resolveRerankLink): a forget recipe that omits the
-        // key still erases the sidecar, a key contradicting the record
-        // refuses, and a recorded-but-unreachable sidecar refuses BEFORE
-        // the codes mutate (all-or-nothing posture — "codes erased,
-        // vectors kept" must never read as success). Only stores
-        // predating the linkage record fall back to the explicit key.
-        val isPq2 = graft.processors.CurationProcessors.indexExists(spark,
-          s"$path/_graft_pq2/subs/_graft_codebook")
-        val explicit = config.get("rerank_store_path").map(_.toString)
-        val rerank =
-          if (isPq2) Similarity.resolveRerankLink(spark, path, explicit)
-          else explicit
-        // codes first, then vectors: the crash window leaves orphan
-        // vectors (never shortlisted — harmless until the re-run
-        // completes them) rather than codes whose re-rank silently drops
-        Similarity.forgetIvfStoreAt(spark, path, tomb, idc)
-        rerank.foreach { rp =>
-          Similarity.forgetVectorStoreAt(spark, rp, tomb, idc)
-        }
+    // them from the vector store in place, and from a codes store's
+    // exact-vector sidecar with it (forgetIvfStoreAt's cascade, which
+    // the store's recorded linkage drives). Right-to-erasure on the
+    // recipe surface.
+    if (forgets(config))
+      return intake(df, idc) { tomb =>
+        Similarity.forgetIvfStoreAt(spark, path, tomb, idc,
+          config.get("rerank_store_path").map(_.toString))
       }
-      return n
-    }
     val vc = config.getOrElse("vector_column", "embedding").toString
     val twoLevel = config.getOrElse("two_level", true).toString.toBoolean
     val maxShare = config.getOrElse("max_share_pct", 5.0).toString.toDouble
@@ -795,7 +777,7 @@ object IvfIndexSink extends SinkPlugin {
         "codes rows carry no filterable attributes)")
     val metaEff: Seq[String] =
       if (quantizePq) Nil
-      else if (graft.processors.CurationProcessors.indexExists(spark,
+      else if (graft.operators.Layout.indexExists(spark,
           s"$path/_graft_codebook")) {
         val stored = Similarity.storeMetaCols(spark, path, idc, vc)
         require(metaCfg.isEmpty || metaCfg.toSet == stored.toSet,
@@ -832,9 +814,9 @@ object IvfIndexSink extends SinkPlugin {
     // against an existing store would sail into the BUILD branch and
     // static-overwrite away the history — cross-check the OTHER
     // layout's signal before any dispatch and refuse loudly instead
-    val rawExists = graft.processors.CurationProcessors.indexExists(spark,
+    val rawExists = graft.operators.Layout.indexExists(spark,
       s"$path/_graft_codebook")
-    val pq2Exists = graft.processors.CurationProcessors.indexExists(spark,
+    val pq2Exists = graft.operators.Layout.indexExists(spark,
       s"$path/_graft_pq2/subs/_graft_codebook")
     if (config.getOrElse("quantize", "none").toString == "pq") {
       require(!rawExists,
@@ -958,7 +940,7 @@ object IvfIndexSink extends SinkPlugin {
   * single-writer contract as [[Bm25IndexSink]]; mutations run under the
   * staged pending marker.
   */
-object WinnowIndexSink extends SinkPlugin {
+object WinnowIndexSink extends IndexSink {
   val info: PluginInfo = PluginInfo("winnow-index",
     "Build or incrementally extend the refcounted span-fingerprint (plagiarism) index from the incoming rows (mode: forget erases them instead)",
     sampleConfig =
@@ -970,33 +952,18 @@ object WinnowIndexSink extends SinkPlugin {
         |# mode: forget   # rows are TOMBSTONES: decrement their fps in place""".stripMargin,
     tags = Seq("sink", "curation", "dedup"))
 
-  override def validate(config: Map[String, Any]): Seq[InvalidConfigError] = {
-    val badMode = config.get("mode").map(_.toString)
-      .filter(m => m != "ingest" && m != "forget")
-      .map(m => InvalidConfigError("mode", s"unsupported mode: $m"))
-    requireKeys(config, "index_path") ++ badMode
-  }
-
   def sink(df: DataFrame, config: Map[String, Any]): Long = {
     import graft.operators.Dedup
-    import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     val path = config("index_path").toString
     val idc = config.getOrElse("id_column", "doc_id").toString
-    if (config.getOrElse("mode", "ingest").toString == "forget") {
-      val tomb = df.select(col(idc)).localCheckpoint()
-      val n = tomb.count()
-      if (n > 0) Dedup.forgetWinnowStoreAt(spark, path, tomb, idc)
-      return n
-    }
+    if (forgets(config))
+      return intake(df, idc)(Dedup.forgetWinnowStoreAt(spark, path, _, idc))
     val tc = config.getOrElse("text_column", "text").toString
     val k = config.getOrElse("k", 4).toString.toInt
     val w = config.getOrElse("w", 4).toString.toInt
-    val batch = df.select(col(idc), col(tc)).localCheckpoint()
-    val n = batch.count()
-    if (n == 0) return 0L
-    Dedup.mergeWinnowStoreAt(spark, path, batch, idc, tc, k, w)
-    n
+    intake(df, idc, tc)(
+      Dedup.mergeWinnowStoreAt(spark, path, _, idc, tc, k, w))
   }
 }
 
@@ -1011,7 +978,7 @@ object WinnowIndexSink extends SinkPlugin {
   * doc from the corpus. Same arriving-batch + single-writer contract as
   * every index sink; staged pending marker; base written LAST (commit).
   */
-object NbIndexSink extends SinkPlugin {
+object NbIndexSink extends IndexSink {
   val info: PluginInfo = PluginInfo("nb-index",
     "Train or incrementally extend the stored NB classifier from the incoming labeled rows (mode: forget unlearns them instead)",
     sampleConfig =
@@ -1023,29 +990,19 @@ object NbIndexSink extends SinkPlugin {
         |#                # subtract them from the model exactly""".stripMargin,
     tags = Seq("sink", "curation", "classify"))
 
-  override def validate(config: Map[String, Any]): Seq[InvalidConfigError] = {
-    val badMode = config.get("mode").map(_.toString)
-      .filter(m => m != "ingest" && m != "forget")
-      .map(m => InvalidConfigError("mode", s"unsupported mode: $m"))
-    requireKeys(config, "index_path") ++ badMode
-  }
-
   def sink(df: DataFrame, config: Map[String, Any]): Long = {
     import graft.operators.Classify
-    import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     val path = config("index_path").toString
     val idc = config.getOrElse("id_column", "doc_id").toString
     val tc = config.getOrElse("text_column", "text").toString
     val lc = config.getOrElse("label_column", "lang").toString
-    val batch = df.select(col(idc), col(tc), col(lc)).localCheckpoint()
-    val n = batch.count()
-    if (n == 0) return 0L
-    if (config.getOrElse("mode", "ingest").toString == "forget")
-      Classify.forgetNbStoreAt(spark, path, batch, idc, tc, lc)
-    else
-      Classify.mergeNbStoreAt(spark, path, batch, idc, tc, lc)
-    n
+    intake(df, idc, tc, lc) { batch =>
+      if (forgets(config))
+        Classify.forgetNbStoreAt(spark, path, batch, idc, tc, lc)
+      else
+        Classify.mergeNbStoreAt(spark, path, batch, idc, tc, lc)
+    }
   }
 }
 

@@ -270,15 +270,16 @@ object EventStream {
     }
 
   /** Streamed right-to-erasure for a centroid-partitioned vector store
-    * (flat or two-level layout): each tombstone micro-batch compacts the
-    * layout IN PLACE via
+    * (flat or two-level layout, raw or PQ codes): each tombstone
+    * micro-batch compacts the layout IN PLACE via
     * [[graft.operators.Similarity.forgetIvfStoreAt]] — only directories
-    * holding a tombstoned row rewrite, emptied directories are removed.
-    * Removal is idempotent and commutative (an anti-join on ids), so the
-    * final layout equals ONE compaction with all tombstones under any
-    * micro-batching — pinned in StreamingSpec. Single-writer like every
-    * store-maintenance path; pair with [[streamingIvfAppend]] on
-    * separate stores, never interleaved on one.
+    * holding a tombstoned row rewrite, emptied directories are removed,
+    * and a codes store's recorded exact-vector rerank sidecar forgets the
+    * same ids. Removal is idempotent and commutative (an anti-join on
+    * ids), so the final layout equals ONE compaction with all tombstones
+    * under any micro-batching — pinned in StreamingSpec. Single-writer
+    * like every store-maintenance path; pair with [[streamingIvfAppend]]
+    * on separate stores, never interleaved on one.
     */
   def streamingIvfForget(tombstones: DataFrame, idCol: String,
                          path: String) =
@@ -292,27 +293,27 @@ object EventStream {
     * tombstone feed is naturally a stream, and erasure is an anti-join
     * (idempotent, commutative), so per-micro-batch compaction lands the
     * same store as one batch call with every tombstone (parity pinned
-    * in StreamingSpec). `grain` selects the layout: "doc" (plain),
-    * "fielded", or "chunk" (tombstones are PARENT doc ids). Single
-    * writer per store, like every mutation path.
+    * in StreamingSpec). `grain` is "doc" (a plain or fielded store —
+    * the forget reads the layout off the store) or "chunk" (tombstones
+    * are PARENT doc ids). Single writer per store, like every mutation
+    * path.
     */
   def streamingBm25Forget(tombstones: DataFrame, idCol: String,
                           path: String, grain: String = "doc",
-                          chunkIdBits: Int = 20) =
+                          chunkIdBits: Int = 20) = {
+    require(grain == "doc" || grain == "chunk",
+      s"unknown forget grain: $grain (doc|chunk)")
     tombstones.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.toDF()
-        grain match {
-          case "doc" => graft.operators.Retrieval.forgetBm25StoreAt(
-            b.sparkSession, path, b, idCol)
-          case "fielded" => graft.operators.Retrieval.forgetBm25fStoreAt(
-            b.sparkSession, path, b, idCol)
-          case "chunk" => graft.operators.Retrieval.forgetBm25ChunkStoreAt(
+        if (grain == "chunk")
+          graft.operators.Retrieval.forgetBm25ChunkStoreAt(
             b.sparkSession, path, b, idCol, chunkIdBits = chunkIdBits)
-          case other => throw new IllegalArgumentException(
-            s"unknown forget grain: $other (doc|fielded|chunk)")
-        }
+        else
+          graft.operators.Retrieval.forgetBm25StoreAt(
+            b.sparkSession, path, b, idCol)
     }
+  }
 
   /** [[streamingBm25Forget]] for the refcounted winnow store: refcount
     * decrements are integer subtractions keyed by the attribution

@@ -1086,6 +1086,67 @@ class StreamingAgentSpec extends SparkSpec {
       assert(lines.forall(_.contains("""\"env\":\"test\"""")))
     } finally q.stop()
   }
+
+  test("streaming recipe: an invalid sink spec fails before the query " +
+      "starts") {
+    implicit val sqlCtx = spark.sqlContext
+    graft.plugins.Registries.populate()
+    val mem = MemoryStream[(Long, String)]
+    val before = spark.streams.active.length
+    val err = intercept[graft.plugins.ConfigException] {
+      new graft.agent.Agent(spark).runStreaming(mem.toDF(),
+        processorSpecs = Nil,
+        sinkSpecs = Seq(graft.recipe.PluginSpec("bm25-index", Map.empty)))
+    }
+    assert(err.errors.exists(_.key == "sink/bm25-index/index_path"),
+      err.getMessage)
+    assert(spark.streams.active.length == before)
+  }
+
+  test("streaming recipe: a failing sink records a failure metric and is " +
+      "closed, and the next sink still runs") {
+    implicit val sqlCtx = spark.sqlContext
+    graft.plugins.Registries.populate()
+    if (!graft.plugins.Registries.sinks.contains(FailingSink.info.name))
+      graft.plugins.Registries.sinks.register(FailingSink)
+    val out = java.nio.file.Files.createTempDirectory("stream-fail")
+      .resolve("out.ndjson").toString
+    val metrics = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val monitor = new graft.agent.Monitor {
+      def recordRun(run: graft.agent.RunResult): Unit = ()
+      def recordPlugin(recipeName: String, pluginName: String,
+                       pluginType: String, success: Boolean): Unit =
+        metrics.add(s"$recipeName/$pluginName/$pluginType/$success")
+    }
+    val closedBefore = FailingSink.closed.get()
+    val mem = MemoryStream[(Long, String)]
+    val q = new graft.agent.Agent(spark, monitor = monitor).runStreaming(
+      mem.toDF().toDF("id", "name"), processorSpecs = Nil,
+      sinkSpecs = Seq(graft.recipe.PluginSpec(FailingSink.info.name, Map.empty),
+        graft.recipe.PluginSpec("file",
+          Map("path" -> out, "format" -> "ndjson", "overwrite" -> "false"))),
+      queryName = "failing-stream")
+    try {
+      mem.addData((1L, "a"), (2L, "b"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(metrics.contains(
+      s"failing-stream/${FailingSink.info.name}/sink/false"), metrics)
+    assert(metrics.contains("failing-stream/file/sink/true"), metrics)
+    assert(FailingSink.closed.get() == closedBefore + 1)
+    assert(scala.io.Source.fromFile(out).getLines().length == 2)
+  }
+}
+
+/** A sink that always fails and counts its closes. */
+object FailingSink extends graft.plugins.SinkPlugin {
+  val info: graft.plugins.PluginInfo =
+    graft.plugins.PluginInfo("failing-test-sink", "always fails")
+  val closed = new java.util.concurrent.atomic.AtomicInteger()
+  def sink(df: org.apache.spark.sql.DataFrame,
+           config: Map[String, Any]): Long =
+    throw new IllegalStateException("failing-test-sink always fails")
+  override def close(): Unit = { closed.incrementAndGet(); () }
 }
 
 class IvfLayoutSpec extends SparkSpec {
@@ -1991,6 +2052,41 @@ class StreamingSpec extends SparkSpec {
     val a = rows(streamed)
     assert(a.nonEmpty && a == rows(oneShot))
     assert(a.size == emb.count() - tombs.length)
+  }
+
+  test("streaming IVF forget on a PQ codes store erases the erased ids' " +
+      "exact vectors from the recorded rerank sidecar too") {
+    // the codes store records its rerank sidecar; a tombstone stream that
+    // names no sidecar must still leave no erased doc's exact vector
+    // fetchable from it
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val emb = (0 until 120).map { i =>
+      (i.toLong, (0 until 8).map(j => ((i * 7 + j * 3) % 11 + j).toFloat))
+    }.toDF("vec_id", "embedding")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pq2_sforget")
+    val path = tmp.resolve("codes").toString
+    val rrk = tmp.resolve("vectors").toString
+    graft.sinks.IvfIndexSink.sink(emb, Map("index_path" -> path,
+      "quantize" -> "pq", "rerank_store_path" -> rrk, "pq_m" -> 4,
+      "pq_k" -> 8))
+    assert(Similarity.rerankLinkAt(spark, path).contains(Some(rrk)))
+    val tombs = emb.filter(col("vec_id") % 7 === 3)
+      .select(col("vec_id")).collect().map(_.getLong(0))
+    val mem = MemoryStream[Long]
+    val q = EventStream.streamingIvfForget(
+      mem.toDF().toDF("vec_id"), "vec_id", path).start()
+    try {
+      tombs.grouped(13).foreach { c => mem.addData(c.toIndexedSeq: _*); q.processAllAvailable() }
+    } finally q.stop()
+    def ids(p: String) = spark.read.parquet(p).select(col("vec_id"))
+      .collect().map(_.getLong(0)).toSet
+    val all = emb.select(col("vec_id")).collect().map(_.getLong(0)).toSet
+    assert(ids(path) == all -- tombs)
+    val fetchable = ids(rrk) intersect tombs.toSet
+    assert(fetchable.isEmpty, "erased ids left fetchable from the rerank " +
+      s"sidecar: ${fetchable.toSeq.sorted.take(5)}")
+    assert(ids(rrk) == all -- tombs)
   }
 
   test("streaming BM25 forget: micro-batched tombstones equal one-shot " +

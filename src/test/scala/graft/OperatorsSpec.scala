@@ -2577,15 +2577,14 @@ class RetrievalSpec extends SparkSpec {
       .collect()(0).getLong(0) == 3L)
   }
 
-  test("forgetBm25fStoreAt compacts the fielded store to the rebuild on " +
-      "survivors") {
+  test("forgetBm25StoreAt on a fielded store equals the fielded rebuild") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val path = java.nio.file.Files
       .createTempDirectory("bm25fforget").toString
     Retrieval.writeBm25fStore(docs, "doc_id", "text", path,
       titleTokens = 8, buckets = 4)
-    Retrieval.forgetBm25fStoreAt(spark, path,
+    Retrieval.forgetBm25StoreAt(spark, path,
       docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")), "doc_id")
     val rbPath = java.nio.file.Files
       .createTempDirectory("bm25fforget_rb").toString
@@ -2640,34 +2639,6 @@ class RetrievalSpec extends SparkSpec {
       .collect()
     assert(got.length == 1 && got(0).getLong(2) == 3L,
       s"merged doc unretrievable: ${got.mkString(",")}")
-  }
-
-  test("mis-dispatched forgets fail loudly BEFORE acquiring the marker — " +
-      "an intact store is never bricked by a config mistake") {
-    val docs = Seq((1L, "spark shuffles"), (2L, "ducks swim"))
-      .toDF("doc_id", "text")
-    val plainPath = java.nio.file.Files
-      .createTempDirectory("bm25plaind").toString
-    val fieldedPath = java.nio.file.Files
-      .createTempDirectory("bm25fieldd").toString
-    Retrieval.writeBm25Store(docs, "doc_id", "text", plainPath, buckets = 2)
-    Retrieval.writeBm25fStore(docs, "doc_id", "text", fieldedPath,
-      buckets = 2)
-    intercept[IllegalArgumentException] {
-      Retrieval.forgetBm25fStoreAt(spark, plainPath,
-        Seq(1L).toDF("doc_id"), "doc_id")
-    }
-    intercept[IllegalArgumentException] {
-      Retrieval.forgetBm25StoreAt(spark, fieldedPath,
-        Seq(1L).toDF("doc_id"), "doc_id")
-    }
-    // neither mis-dispatch left a marker: the RIGHT forget still runs
-    Retrieval.forgetBm25StoreAt(spark, plainPath,
-      Seq(1L).toDF("doc_id"), "doc_id")
-    Retrieval.forgetBm25fStoreAt(spark, fieldedPath,
-      Seq(1L).toDF("doc_id"), "doc_id")
-    assert(Retrieval.readBm25Store(spark, plainPath).stats
-      .collect()(0).getLong(0) == 1L)
   }
 
   test("a stale pending marker refuses forget and merge loudly") {
@@ -4670,6 +4641,46 @@ class AutoCodebookSpec extends SparkSpec {
     Similarity.forgetIvfStoreAt(spark, path, tombWide, "vec_id")
     assert(!spark.read.parquet(path).select(col("vec_id")).collect()
       .map(_.getLong(0)).toSet.contains(5L))
+    // the BM25, winnow and NB stores share the one typed intake: int
+    // tombstones erase their long-id rows exactly (forget ≡ rebuild)
+    val words = Seq("spark", "duck", "pond", "river", "stone", "cloud")
+    val texts = (1L to 12L).map { i =>
+      (i, (0 until 9).map(j => words(((i + j * j) % 6).toInt))
+        .mkString(" "), if (i % 2 == 0) "en" else "de")
+    }.toDF("doc_id", "text", "lang")
+    // 4 and 9 hash to other directories as ints than as longs (at 4 and
+    // at 16 buckets), so an uncast batch would prune them away
+    val erased = Seq(4, 9).toDF("doc_id")
+      .select(col("doc_id").cast("int").as("doc_id"))
+    val survivors = texts.filter(!col("doc_id").isin(4L, 9L))
+    def store(prefix: String) =
+      java.nio.file.Files.createTempDirectory(prefix).toString
+    def tables(p: String, names: String*) = names.map(t =>
+      spark.read.parquet(s"$p/$t").collect().map(_.toSeq).toSet)
+    val bm25 = store("bm25tomtype")
+    val bm25Rb = store("bm25tomtype_rb")
+    Retrieval.writeBm25Store(texts, "doc_id", "text", bm25, buckets = 4)
+    Retrieval.forgetBm25StoreAt(spark, bm25, erased, "doc_id")
+    Retrieval.writeBm25Store(survivors, "doc_id", "text", bm25Rb,
+      buckets = 4)
+    assert(tables(bm25, "postings", "dfreq", "stats", "docs") ==
+      tables(bm25Rb, "postings", "dfreq", "stats", "docs"))
+    val winnow = store("winnowtomtype")
+    val winnowRb = store("winnowtomtype_rb")
+    Dedup.writeWinnowStoreAt(spark, winnow, texts, "doc_id", "text")
+    Dedup.forgetWinnowStoreAt(spark, winnow, erased, "doc_id")
+    Dedup.writeWinnowStoreAt(spark, winnowRb, survivors, "doc_id", "text")
+    assert(tables(winnow, "fps", "docs").head.nonEmpty)
+    assert(tables(winnow, "fps", "docs") == tables(winnowRb, "fps", "docs"))
+    val nb = store("nbtomtype")
+    val nbRb = store("nbtomtype_rb")
+    Classify.writeNbStore(texts, "doc_id", "text", "lang", nb)
+    Classify.forgetNbStoreAt(spark, nb, texts.filter(col("doc_id").isin(4L, 9L))
+      .select(col("doc_id").cast("int").as("doc_id"), col("text"),
+        col("lang")), "doc_id", "text", "lang")
+    Classify.writeNbStore(survivors, "doc_id", "text", "lang", nbRb)
+    assert(tables(nb, "model", "base", "docs") ==
+      tables(nbRb, "model", "base", "docs"))
   }
 
   test("ann-search dispatches the FLAT-routed PQ codes kind too: extractor " +

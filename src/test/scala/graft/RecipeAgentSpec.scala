@@ -1530,9 +1530,9 @@ class AgentSpec extends SparkSpec {
     // treat "file:/..." as a relative path and always miss
     val dir = Files.createTempDirectory("fsprobe")
     val uri = "file:" + dir.resolve("fp").toString
-    assert(!graft.processors.CurationProcessors.indexExists(spark, uri))
+    assert(!graft.operators.Layout.indexExists(spark, uri))
     Seq("k1", "k2").toDF("fp").write.parquet(uri)
-    assert(graft.processors.CurationProcessors.indexExists(spark, uri))
+    assert(graft.operators.Layout.indexExists(spark, uri))
     // and the gate itself accepts the URI spelling end to end
     val batch = Seq((1L, "text one"), (2L, "text two")).toDF("doc_id", "text")
     val kept = graft.processors.CurationProcessors.DedupGate

@@ -105,6 +105,62 @@ class StoreRecordSpec extends SparkSpec {
     assert(oneQueryJob("nb layout")(Classify.nbLayoutAt(spark, nb)) == 4)
   }
 
+  /** The WARN messages Spark's file-source resolution logs while `body`
+    * runs. */
+  private def dataSourceWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-datasource-capture", null,
+        null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) {
+          seen.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    capture.start()
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    try body
+    finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("record, codebook and id-sidecar reads log no 'All paths were " +
+      "ignored' warning") {
+    val bm25 = storePath("rec_warn_bm25")
+    Bm25IndexSink.sink(docs(1, 21), bm25Config(bm25))
+    val ivf = storePath("rec_warn_ivf")
+    graft.sinks.IvfIndexSink.sink((1 to 40).map(i =>
+        (i.toLong, Seq(i % 5 + 1.0, 1.0 / i, (i % 3).toDouble, 1.0)))
+      .toDF("vec_id", "embedding"), Map("index_path" -> ivf))
+    // the control: a plain read of an underscore-prefixed table warns
+    assert(dataSourceWarnings(
+      spark.read.parquet(s"$bm25/_graft_layout").collect())
+      .exists(_.contains("All paths were ignored")))
+    val warned = dataSourceWarnings {
+      assert(Retrieval.readLayoutMeta(spark, bm25) == Some(4))
+      assert(IndexProtocol.storedLayoutConfig(spark, bm25) ==
+        Some(bm25Cfg(4)))
+      Similarity.readTwoLevelCodebookAt(spark, ivf)
+      Similarity.forgetIvfStoreAt(spark, ivf, Seq(3L, 7L).toDF("vec_id"),
+        "vec_id")
+    }
+    assert(warned.isEmpty, warned.mkString("; "))
+    assert(spark.read.parquet(ivf).filter($"vec_id".isin(3L, 7L)).isEmpty)
+  }
+
   test("a winnow store with the 2-column (k, w) record reads as " +
       "(k, w, 32, 16) and fscks clean") {
     val path = storePath("rec_winnow_v1")
