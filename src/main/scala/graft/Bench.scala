@@ -24,18 +24,6 @@ object Bench {
   private final case class QResult(
       sec: Double, rows: Long, hash: Long, failed: Boolean, error: String)
 
-  /** Drop blocks left behind by operators that materialize intermediates
-    * (`localCheckpoint` in CC rounds, LSH candidate sets, …): once a
-    * query's action has run, its checkpoints are garbage — left alone they
-    * accumulate across the full query run, squeeze the unified memory
-    * pool, and tax every later query's timing with eviction + GC pressure.
-    */
-  private def dropLeftoverBlocks(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    spark.catalog.clearCache()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional comma-separated filter for isolating queries while profiling
@@ -65,7 +53,7 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] warmup FAILED for $name: ${e.getClass.getName}: ${e.getMessage}")
       }
-      dropLeftoverBlocks(spark)
+      org.apache.spark.graft.PersistedBlocks.dropAll(spark)
     }
     // Per-query time = MIN over `reps` runs: the box is a VM whose clock
     // sporadically stalls for tens of seconds (observed: the same query
@@ -89,7 +77,7 @@ object Bench {
                 failed = true, error = s"${e.getClass.getName}: ${e.getMessage}".take(200))
           }
         // between timings, so no rep pays for its predecessor's litter
-        dropLeftoverBlocks(spark)
+        org.apache.spark.graft.PersistedBlocks.dropAll(spark)
         r
       }
       // out-of-band GC between queries (never inside a timed rep): the
@@ -162,7 +150,7 @@ object Bench {
         val s =
           try { checksum(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => Double.NaN }
-        dropLeftoverBlocks(spark)
+        org.apache.spark.graft.PersistedBlocks.dropAll(spark)
         s
       }.filterNot(_.isNaN)
       val iso = if (secs.isEmpty) -1.0 else secs.min

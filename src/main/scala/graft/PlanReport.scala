@@ -67,8 +67,7 @@ object PlanReport {
           case e: Throwable => s"| $name | — | — | — | — | — | — | ERROR ${e.getClass.getSimpleName} |"
         }
       // eager operators (localCheckpoint) leave blocks behind — drop them
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      org.apache.spark.graft.PersistedBlocks.dropAll(spark)
       line
     }
 

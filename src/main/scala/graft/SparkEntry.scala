@@ -600,7 +600,7 @@ object SparkEntry {
                build: DataFrame): DataFrame = {
       val path = layoutPath(dir, kind, "buckets=8", srcTable = src)
       val table = path.split('/').last // graft_<kind>_<digest>
-      if (!layoutReady(path)) {
+      if (!Layout.indexExists(s, path)) {
         s.sql(s"DROP TABLE IF EXISTS $table")
         // coalesce(1) -> exactly one file per bucket, so the read side
         // honors the within-bucket sort and plans SMJ with no Sort; a
@@ -636,7 +636,7 @@ object SparkEntry {
     */
   private def partitionedEventsStore(s: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(dir, "evday", "part=day,v1", srcTable = "events.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       t(s, dir, "events")
         .withColumn("day", to_date(col("ts")))
         .repartition(col("day"))
@@ -957,7 +957,7 @@ object SparkEntry {
     val ms = Seq("v_ppm")
     val path = layoutPath(dir, "rollupstore",
       "dims=day,event_type|m=v_ppm|cut=mod5", "events.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Rollup.aggregate(ev.filter(pmod(col("event_id"), lit(5)) =!= 0),
         dims, ms).write.mode("overwrite").parquet(path)
     val stored = s.read.parquet(path)
@@ -1840,7 +1840,7 @@ object SparkEntry {
     */
   private def zorderEventsStore(s: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(dir, "evz", "zorder=u8xm8,v1", srcTable = "events.parquet")
-    if (!layoutReady(path)) {
+    if (!Layout.indexExists(s, path)) {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"),
           (col("user_id") % 256).cast("int").as("xb"),
@@ -2513,7 +2513,7 @@ object SparkEntry {
   private def fpStore(s: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(dir, "fpindex", "cut=250,fpv=nfc",
       srcTable = "documents.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       t(s, dir, "documents").filter(col("doc_id") < 250)
         .select(TextAnalysis.fingerprint(col("text")).as("fp"))
         .coalesce(8)
@@ -2817,6 +2817,19 @@ object SparkEntry {
       .orderBy(col("a"), col("b"))
   }
 
+  /** The unit-normalized embeddings of the first `n` vec_ids, in id order
+    * — the portable seed rule every hash-checked ANN row shares (DuckDB
+    * reproduces it verbatim). The collect is `n` rows, bounded at any
+    * corpus size. */
+  private def firstUnitSeeds(emb: DataFrame, n: Int): Seq[Seq[Double]] =
+    emb.filter(col("vec_id") < n).orderBy(col("vec_id"))
+      .select(col("embedding").cast("array<double>"))
+      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+      .map { v =>
+        val norm = math.sqrt(v.map(x => x * x).sum)
+        if (norm == 0.0) v else v.map(_ / norm)
+      }
+
   /** The shared first-8-unit-seed IVF layout (the s_ann_ivf_stored
     * store): ensures the physical centroid-partitioned store exists under
     * the layout cache and returns (path, unit coarse seeds). One
@@ -2826,15 +2839,9 @@ object SparkEntry {
   private def first8UnitIvfStore(s: SparkSession,
                                  dir: String): (String, Seq[Seq[Double]]) = {
     val emb = t(s, dir, "embeddings")
-    val seeds = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val unitSeeds = seeds.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
+    val unitSeeds = firstUnitSeeds(emb, 8)
     val path = layoutPath(dir, "ivfstore", "coarse=first8unit")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Similarity.writeIvfStore(emb, "vec_id", "embedding", unitSeeds, path)
     (path, unitSeeds)
   }
@@ -2904,7 +2911,7 @@ object SparkEntry {
     // 8-bit codes (a quarter of the float bytes), queries quantize
     // inline — row-identical to the inline spelling, same oracle
     val path = layoutPath(dir, "int8store", "scale=l2x127,parts=8")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Similarity.writeInt8Store(t(s, dir, "embeddings"), "vec_id",
         "embedding", path)
     Similarity.int8TopKStored(s.read.parquet(path),
@@ -3052,7 +3059,7 @@ object SparkEntry {
     val flat = Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10),
       "vec_id", "embedding", k = 5, centroids, nprobe = 3)
     val path = layoutPath(dir, "ivftrained", "coarse=kmeans8x5,probe=3")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Similarity.writeIvfStore(emb, "vec_id", "embedding", centroids, path)
     val stored = Similarity.ivfTopKStored(s.read.parquet(path),
       emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -3087,30 +3094,17 @@ object SparkEntry {
     * test harness), or `SPARK_GRAFT_LAYOUT_DIR` — point it at a cluster
     * filesystem (`hdfs://...`, `s3a://...`) in a real deployment. Every
     * path built here is resolved through the Hadoop FileSystem API
-    * ([[layoutReady]]), so URI schemes work unchanged.
+    * ([[Layout.indexExists]]), so URI schemes work unchanged.
     */
   private lazy val layoutRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_LAYOUT_DIR",
       System.getProperty("java.io.tmpdir")).stripSuffix("/")
 
-  private def activeHadoopConf =
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-
-  /** `_SUCCESS` probe through the Hadoop FileSystem API — the
-    * [[graft.operators.Layout.indexExists]] discipline
-    * applied to the graded-query layout caches: a `java.io.File` probe
-    * on an HDFS/S3 layout root would miss forever and silently rebuild
-    * every layout on every query (correct results, cluster-sized waste).
-    */
-  private def layoutReady(path: String): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    marker.getFileSystem(activeHadoopConf).exists(marker)
-  }
-
   private def layoutPath(dir: String, kind: String, config: String,
                          srcTable: String = "embeddings.parquet"): String = {
     val src = new org.apache.hadoop.fs.Path(dir, srcTable)
-    val fs = src.getFileSystem(activeHadoopConf)
+    val fs = src.getFileSystem(
+      SparkSession.active.sparkContext.hadoopConfiguration)
     val mtime =
       if (fs.exists(src)) fs.getFileStatus(src).getModificationTime.toString
       else "missing"
@@ -3123,7 +3117,7 @@ object SparkEntry {
   private def vectorStore(s: SparkSession, dir: String): (DataFrame, Int) = {
     val parts = 16
     val path = layoutPath(dir, "vecstore", s"parts=$parts")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Similarity.writeVectorStore(t(s, dir, "embeddings"), "vec_id", "embedding",
         path, parts)
     // parts comes back from the persisted layout config, not the literal
@@ -3142,16 +3136,7 @@ object SparkEntry {
     // everything downstream of the codebook is the same code. The seed
     // collect is 16 rows — bounded at any corpus size.
     val emb = t(s, dir, "embeddings")
-    val seeds = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val unitSeeds = seeds.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
-    val sub = unitSeeds.head.size / 8
-    val codebooks = (0 until 8).map(s0 =>
-      unitSeeds.map(_.slice(s0 * sub, (s0 + 1) * sub)))
+    val (_, codebooks) = pqPortableCodebooks(emb)
     Similarity.pqTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5, codebooks, shortlist = 50,
         vectorStore = Some(vectorStore(s, dir)))
@@ -3166,18 +3151,9 @@ object SparkEntry {
     // → exact re-rank is hash-checked end to end. The trained path
     // (kmeansLocal coarse + pqTrain codes) is gated by RecallSpec.
     val emb = t(s, dir, "embeddings")
-    val seeds = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val unitSeeds = seeds.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
-    val sub = unitSeeds.head.size / 8
-    val codebooks = (0 until 8).map(s0 =>
-      unitSeeds.map(_.slice(s0 * sub, (s0 + 1) * sub)))
+    val (coarse, codebooks) = pqPortableCodebooks(emb)
     Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = 5, coarse = unitSeeds.take(8), codebooks,
+        "vec_id", "embedding", k = 5, coarse = coarse, codebooks,
         nprobe = 3, shortlist = 50, vectorStore = Some(vectorStore(s, dir)))
       .withColumnRenamed("rank", "rnk")
       .orderBy(col("q_id"), col("rnk"))
@@ -3244,7 +3220,7 @@ object SparkEntry {
     val emb = t(s, dir, "embeddings")
     val cb = ivf2PortableCodebook(emb)
     val path = layoutPath(dir, "ivf2store", "tops=first3unit,kids=min3id,v1")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Similarity.writeIvfStoreTwoLevel(emb, "vec_id", "embedding", cb, path)
     Similarity.ivfTopKStoredTwoLevel(s.read.parquet(path),
         emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -3266,7 +3242,7 @@ object SparkEntry {
     // s_ann_ivf2_stored oracle grades this row unchanged.
     val emb = t(s, dir, "embeddings")
     val path = layoutPath(dir, "ivf2persist", "tops=first3unit,kids=min3id,cbv1")
-    if (!layoutReady(s"$path/_graft_codebook")) {
+    if (!Layout.indexExists(s, s"$path/_graft_codebook")) {
       val cb = ivf2PortableCodebook(emb)
       Similarity.writeIvfStoreTwoLevel(emb, "vec_id", "embedding", cb, path)
       Similarity.writeCodebookAt(s, path, cb)
@@ -3291,15 +3267,9 @@ object SparkEntry {
     // applied to the ANN layout). Idempotent across runs: a compacted
     // store hits no tombstones and skips.
     val emb = t(s, dir, "embeddings")
-    val seeds = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val unitSeeds = seeds.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
+    val unitSeeds = firstUnitSeeds(emb, 8)
     val path = layoutPath(dir, "ivfforget", "coarse=first8unit,tomb=mod7eq3,v1")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Similarity.writeIvfStore(emb, "vec_id", "embedding", unitSeeds, path)
     Similarity.forgetIvfStoreAt(s, path,
       emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), "vec_id")
@@ -3323,17 +3293,11 @@ object SparkEntry {
     // Same portable first-8-unit-vector codebook as s_ann_ivf_stored, so
     // the DuckDB twin recomputes assignment, probes, and scores exactly.
     val emb = t(s, dir, "embeddings")
-    val seeds = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val unitSeeds = seeds.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
+    val unitSeeds = firstUnitSeeds(emb, 8)
     val path = layoutPath(dir, "ivfmetastore", "coarse=first8unit,meta=label")
-    if (!layoutReady(path))
-      Similarity.writeIvfMetaStore(emb, "vec_id", "embedding",
-        Seq("label"), unitSeeds, path)
+    if (!Layout.indexExists(s, path))
+      Similarity.writeIvfStore(emb, "vec_id", "embedding", unitSeeds, path,
+        metaCols = Seq("label"))
     Similarity.ivfTopKStoredFiltered(s.read.parquet(path),
         emb.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 5, coarse = unitSeeds, candFilter = col("label") <= 3,
@@ -3350,13 +3314,7 @@ object SparkEntry {
     // eps matches the family's 0.35 near-dup threshold. Cap off to
     // mirror the uncapped oracle; the production cap is SemDedupSpec's.
     val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-    val seeds = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val unitSeeds = seeds.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
+    val unitSeeds = firstUnitSeeds(emb, 8)
     Similarity.semDedup(emb, "vec_id", "embedding", unitSeeds, eps = 0.35)
       .withColumnRenamed("id", "vec_id")
       .orderBy(col("vec_id"))
@@ -3369,13 +3327,7 @@ object SparkEntry {
     */
   private def pqPortableCodebooks(
       emb: DataFrame): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
-    val seeds = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val unitSeeds = seeds.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
+    val unitSeeds = firstUnitSeeds(emb, 16)
     val sub = unitSeeds.head.size / 8
     val codebooks = (0 until 8).map(s0 =>
       unitSeeds.map(_.slice(s0 * sub, (s0 + 1) * sub)))
@@ -3394,7 +3346,7 @@ object SparkEntry {
     val emb = t(s, dir, "embeddings")
     val (coarse, codebooks) = pqPortableCodebooks(emb)
     val path = layoutPath(dir, "pqstore", "m=8,k=16,coarse=first8unit")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Similarity.writePqStore(emb, "vec_id", "embedding",
         coarse, codebooks, path)
     Similarity.ivfPqTopKStored(s.read.parquet(path),
@@ -3415,7 +3367,7 @@ object SparkEntry {
     // re-rank, so the shared ivfPqTwinSql oracle grades it unchanged.
     val emb = t(s, dir, "embeddings")
     val path = layoutPath(dir, "pqpersist", "m=8,k=16,coarse=first8unit,cbv1")
-    if (!layoutReady(s"$path/_graft_codebook")) {
+    if (!Layout.indexExists(s, s"$path/_graft_codebook")) {
       val (coarse, codebooks) = pqPortableCodebooks(emb)
       Similarity.writePqStore(emb, "vec_id", "embedding", coarse,
         codebooks, path)
@@ -3462,7 +3414,7 @@ object SparkEntry {
         Seq[Seq[Seq[Double]]])] = None): String = {
     val path = layoutPath(dir, "pq2store",
       "m=8,k=16,tops=first3unit,kids=min3id,v1")
-    if (!layoutReady(path)) {
+    if (!Layout.indexExists(s, path)) {
       val emb = t(s, dir, "embeddings")
       val (cb, books) = geom.getOrElse(
         (ivf2PortableCodebook(emb), pqPortableCodebooks(emb)._2))
@@ -3494,7 +3446,7 @@ object SparkEntry {
     val emb = t(s, dir, "embeddings")
     val path = layoutPath(dir, "pq2persist",
       "m=8,k=16,tops=first3unit,kids=min3id,cbv1")
-    if (!layoutReady(s"$path/_graft_pq2/subs/_graft_codebook")) {
+    if (!Layout.indexExists(s, s"$path/_graft_pq2/subs/_graft_codebook")) {
       val cb0 = ivf2PortableCodebook(emb)
       val (_, cbs0) = pqPortableCodebooks(emb)
       Similarity.writePqStoreTwoLevel(emb, "vec_id", "embedding",
@@ -3532,7 +3484,7 @@ object SparkEntry {
     val path = layoutPath(dir, "pq2forget",
       "m=8,k=16,tops=first3unit,kids=min3id,tomb=mod7eq3,v1")
     val rrk = s"$path.rerank"
-    if (!layoutReady(s"$path/_graft_pq2/subs/_graft_codebook")) {
+    if (!Layout.indexExists(s, s"$path/_graft_pq2/subs/_graft_codebook")) {
       // the IvfIndexSink build order: vectors, codes, linkage record,
       // codebook commit signal
       Similarity.writeVectorStore(emb, "vec_id", "embedding", rrk)
@@ -3541,7 +3493,7 @@ object SparkEntry {
       Similarity.writeRerankLinkAt(s, path, Some(rrk))
       Similarity.writePq2CodebooksAt(s, path, cb, codebooks)
     }
-    if (!layoutReady(s"$path/_graft_zz_forgot")) {
+    if (!Layout.indexExists(s, s"$path/_graft_zz_forgot")) {
       graft.sinks.IvfIndexSink.sink(
         emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")),
         Map("index_path" -> path, "mode" -> "forget"))
@@ -3844,7 +3796,7 @@ object SparkEntry {
   private def dhashStore(s: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(dir, "dhashindex", "cut=250",
       srcTable = "documents.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       graft.multimodal.Multimodal.dHashes(
           imagePayloads(s, dir).filter(col("media_id") < 250))
         .coalesce(8)
@@ -4496,7 +4448,7 @@ object SparkEntry {
   private def lshStore(s: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(dir, "lshindex", "k=8,b=4,cut=250",
       srcTable = "documents.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       Dedup.portableBands(
           Dedup.portableMinhash(
             t(s, dir, "documents").filter(col("doc_id") < 250),
@@ -4529,7 +4481,7 @@ object SparkEntry {
   private def winnowStore(s: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(dir, "winnowindex", "k=4,w=4,cut=250,refs,v3",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/fps"))
+    if (!Layout.indexExists(s, s"$path/fps"))
       Dedup.writeWinnowStoreAt(s, path,
         t(s, dir, "documents").filter(col("doc_id") < 250),
         "doc_id", "text")
@@ -4559,7 +4511,7 @@ object SparkEntry {
     val docs = t(s, dir, "documents")
     val path = layoutPath(dir, "winnowforget",
       "k=4,w=4,cut=250,tomb=mod7eq3,v2", srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/fps"))
+    if (!Layout.indexExists(s, s"$path/fps"))
       Dedup.writeWinnowStoreAt(s, path, docs.filter(col("doc_id") < 250),
         "doc_id", "text")
     Dedup.forgetWinnowStoreAt(s, path,
@@ -4582,7 +4534,7 @@ object SparkEntry {
       .withColumn("text", when(col("doc_id") % 31 === 0,
         concat(col("text"), lit(" rev2"))).otherwise(col("text")))
     val path = layoutPath(dir, "cardindex", "v1=%23,fpv=nfc", srcTable = "documents.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       DataCard.cardIndex(v1, "lang", "source", "text")
         .write.mode("overwrite").parquet(path)
     val idx1 = s.read.parquet(path)
@@ -4629,7 +4581,7 @@ object SparkEntry {
     val src = t(s, dir, "lineitem")
     val path = layoutPath(dir, s"${fmt}rt", "src=lineitem,v=1",
       srcTable = "lineitem.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       src.write.format(fmt).mode("overwrite").save(path)
     val back = s.read.format(fmt).schema(src.schema).load(path)
     back.groupBy(col("l_returnflag"))
@@ -5235,7 +5187,7 @@ object SparkEntry {
   private def nbStore(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val path = layoutPath(dir, "nbmodel", "split=even,tok=ws,v3",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/base")) {
+    if (!Layout.indexExists(s, s"$path/base")) {
       val (tr, _) = nbSplit(s, dir)
       Classify.writeNbStore(tr, "doc_id", "text", "lang", path)
     }
@@ -5255,7 +5207,7 @@ object SparkEntry {
     val (tr, te) = nbSplit(s, dir)
     val path = layoutPath(dir, "nbmerge", "split=even,cut=300,tok=ws,v2",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/zz_done")) {
+    if (!Layout.indexExists(s, s"$path/zz_done")) {
       import s.implicits._
       Classify.writeNbStore(tr.filter(col("doc_id") < 300),
         "doc_id", "text", "lang", path)
@@ -5285,7 +5237,7 @@ object SparkEntry {
     val (tr, te) = nbSplit(s, dir)
     val path = layoutPath(dir, "nbforget",
       "split=even,tok=ws,tomb=mod10eq0,v2", srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/base"))
+    if (!Layout.indexExists(s, s"$path/base"))
       Classify.writeNbStore(tr, "doc_id", "text", "lang", path)
     Classify.forgetNbStoreAt(s, path, tr.filter(col("doc_id") % 10 === 0),
       "doc_id", "text", "lang")
@@ -5381,7 +5333,7 @@ object SparkEntry {
   private def cdcStore(s: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(dir, "cdcindex", "k=8,mod=64,cut=250",
       srcTable = "documents.parquet")
-    if (!layoutReady(path))
+    if (!Layout.indexExists(s, path))
       TextAnalysis.cdcChunks(
           t(s, dir, "documents").filter(col("doc_id") < 250),
           "doc_id", "text")
@@ -5464,7 +5416,7 @@ object SparkEntry {
     val path = layoutPath(dir, "bm25chunks",
       "tok=ws,buckets=16,chunk=16x8,cid=shl20,v4",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/stats"))
+    if (!Layout.indexExists(s, s"$path/stats"))
       Retrieval.writeBm25Store(chunkCidCorpus(t(s, dir, "documents")),
         "cid", "chunk_text", path)
     Retrieval.readBm25Store(s, path)
@@ -5564,7 +5516,7 @@ object SparkEntry {
     val cfg = if (cut == Long.MaxValue) "all" else cut.toString
     val path = layoutPath(dir, "bm25f", s"tok=ws,title=8,buckets=16,v4,cut=$cfg",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/stats"))
+    if (!Layout.indexExists(s, s"$path/stats"))
       Retrieval.writeBm25fStore(
         t(s, dir, "documents").filter(col("doc_id") < cut), "doc_id", "text",
         path, titleTokens = 8)
@@ -5646,7 +5598,7 @@ object SparkEntry {
     val cfg = if (cut == Long.MaxValue) "all" else cut.toString
     val path = layoutPath(dir, "bm25", s"tok=ws,buckets=16,v5,cut=$cfg",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/stats"))
+    if (!Layout.indexExists(s, s"$path/stats"))
       Retrieval.writeBm25Store(
         t(s, dir, "documents").filter(col("doc_id") < cut),
         "doc_id", "text", path)
@@ -5703,7 +5655,7 @@ object SparkEntry {
     val docs = t(s, dir, "documents")
     val path = layoutPath(dir, "bm25forget",
       "tok=ws,buckets=16,tomb=mod7eq3,v3", srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/stats"))
+    if (!Layout.indexExists(s, s"$path/stats"))
       Retrieval.writeBm25Store(docs, "doc_id", "text", path)
     Retrieval.forgetBm25StoreAt(s, path,
       docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")), "doc_id")
@@ -5723,7 +5675,7 @@ object SparkEntry {
     val path = layoutPath(dir, "bm25fforget",
       "tok=ws,title=8,buckets=16,tomb=mod7eq3,v3",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/stats"))
+    if (!Layout.indexExists(s, s"$path/stats"))
       Retrieval.writeBm25fStore(docs, "doc_id", "text", path,
         titleTokens = 8)
     Retrieval.forgetBm25StoreAt(s, path,
@@ -5745,7 +5697,7 @@ object SparkEntry {
     val path = layoutPath(dir, "bm25chunkforget",
       "tok=ws,buckets=16,chunk=16x8,cid=shl20,tomb=mod7eq3,v3",
       srcTable = "documents.parquet")
-    if (!layoutReady(s"$path/stats"))
+    if (!Layout.indexExists(s, s"$path/stats"))
       Retrieval.writeBm25Store(chunkCidCorpus(d), "cid", "chunk_text", path)
     Retrieval.forgetBm25ChunkStoreAt(s, path,
       d.filter(col("doc_id") % 7 === 3).select(col("doc_id")), "doc_id",

@@ -22,10 +22,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // drop blocks operators checkpointed (CC rounds, LSH candidates):
-      // they are per-query garbage and would accumulate across all 57
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      // they are per-query garbage and would accumulate across the run
+      org.apache.spark.graft.PersistedBlocks.dropAll(spark)
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString("{", ",", "}")

@@ -305,35 +305,19 @@ object Layout {
         else throw e
     }
 
-  /** Run a multi-write store mutation under the `_graft_merge_pending`
-    * marker (see [[acquirePendingMarker]] for the acquisition contract).
-    * The marker is deliberately NOT removed when `body` throws: a failed
-    * mutation may have landed some of its writes, and the marker is what
-    * makes retrying it loud instead of silently double-applying. Callers
-    * whose mutation has a read/compute phase before the first write
-    * should use [[withPendingMarkerStaged]] so a plan-time failure does
-    * not strand the marker on an untouched store.
-    */
-  def withPendingMarker[A](spark: org.apache.spark.sql.SparkSession,
-                           path: String)(body: => A): A = {
-    val marker = pendingMarkerOf(path)
-    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    acquirePendingMarker(f, marker, path)
-    val r = body
-    f.delete(marker, false)
-    r
-  }
-
-  /** [[withPendingMarker]] split into PREPARE (reads, joins,
-    * localCheckpoints — everything that can fail for data reasons) and
-    * MUTATE (writes only). Both run under the marker, so the mutual
+  /** Run a store mutation under the `_graft_merge_pending` marker (see
+    * [[acquirePendingMarker]] for the acquisition contract), split into
+    * PREPARE (reads, joins, localCheckpoints — everything that can fail
+    * for data reasons) and MUTATE (writes only) — the one fence every
+    * store mutation takes. Both run under the marker, so the mutual
     * exclusion covers the whole read-compute-write span — but a failure
     * inside `prepare` DELETES the marker before rethrowing, because
     * nothing has been written yet and leaving it would permanently brick
     * an untouched store (a cancelled job or an OOM-killed stage during
     * planning would otherwise force a manual rebuild for no reason). A
     * failure inside `mutate` leaves the marker: some writes may have
-    * landed, and the loud refusal on the next mutation is the point.
+    * landed, and the marker is what makes retrying the mutation loud
+    * instead of silently double-applying it.
     */
   def withPendingMarkerStaged[P, A](spark: org.apache.spark.sql.SparkSession,
                                     path: String)(prepare: => P)(

@@ -47,7 +47,7 @@ object Retrieval {
     * checkpoint otherwise truncates to a LogicalRDD leaf; results are
     * identical either way, off is strictly slower, and store MUTATIONS
     * ignore it (their staged-write protocol requires materialization
-    * before the first write — see [[mergeBm25fStoreAt]]). Whitelisted
+    * before the first write — see [[mergeBm25StoreAt]]). Whitelisted
     * like spark.graft.scan.spread: a typo fails loudly.
     */
   private def maybeCkpt(df: DataFrame): DataFrame = {
@@ -290,7 +290,7 @@ object Retrieval {
     // tot_f off the materialized postings: Σ_(id,term) tf per field ==
     // Σ_id dl_f per field (dl is Σ tf by construction) — the same
     // integers the dlf spelling produced, and the identity the persisted
-    // merge path (mergeBm25fStoreAt's addStats) already relies on.
+    // fielded merge (mergeBm25StoreAt's addStats) already relies on.
     val nDocs = corpus.agg(count(lit(1)).as("n_docs"))
     val stats = postings.groupBy(col("f")).agg(sum(col("tf")).as("tot_f"))
       .crossJoin(broadcast(nDocs))
@@ -463,50 +463,6 @@ object Retrieval {
       .select(col("q_id"), col("term"))
     val qt2 = qt.unionByName(expansion).distinct()
     topKOf(scoreOf(qt2), idCol, topK)
-  }
-
-  /** Persist [[bm25fApplyDelta]] INTO a written FIELDED store — the
-    * [[mergeBm25StoreAt]] discipline for [[writeBm25fStore]] layouts:
-    * the batch's fielded postings append as new term-hashed files
-    * (historical files never read or rewritten), the 2-row stats are
-    * integer-add-replaced (tot_f per field, ONE corpus-level n_docs
-    * add), and there is no df table to touch (the fielded layout derives
-    * whole-doc df from query-restricted postings at score time). Same
-    * arriving-batch + single-writer contract; merged-on-disk ≡ rebuild
-    * pinned in RetrievalSpec.
-    */
-  def mergeBm25fStoreAt(spark: SparkSession, path: String, batch: DataFrame,
-                        idCol: String, textCol: String,
-                        titleTokens: Int = 8, buckets: Int = 16): Unit = {
-    requireErasableLayout(spark, path)
-    // marker acquired internally + staged, like [[mergeBm25StoreAt]]
-    Layout.withPendingMarkerStaged(spark, path)({
-      val store = readBm25fStore(spark, path)
-      // the batch's fielded postings are checkpointed INSIDE
-      // bm25fComponents (round 16) — the stats adds derive from those
-      // materialized postings (tot_f = Σ tf per field, same integers),
-      // so the batch is tokenized and field-split exactly once per merge
-      // the frozen bucket modulus wins over the parameter (the
-      // mergeBm25StoreAt rationale: mismatched moduli make merged rows
-      // invisible to the pruned query join)
-      val b = store.buckets.getOrElse(buckets)
-      val addP = bm25fComponents(batch, idCol, textCol, titleTokens,
-        forceMaterialize = true).postings
-      val addStats = addP.groupBy(col("f")).agg(sum(col("tf")).as("tot_f"))
-      val newStats = mergedFieldedStats(store.stats, batch, addStats)
-        .localCheckpoint()
-      (b, addP, newStats)
-    }) { case (b, addP, newStats) =>
-      addP.withColumn("bucket", termBucket(b))
-        .repartition(b, col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("term"))
-        .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
-      writeDocsSidecar(batch, idCol, s"$path/docs", b, "append", addP)
-      // stats is the store's COMMIT SIGNAL (its _SUCCESS keys the sink's
-      // build-vs-merge dispatch): replace via temp-write + rename so the
-      // unprotected window is one delete + rename, not a whole write job
-      Layout.replaceDir(newStats.coalesce(1), s"$path/stats")
-    }
   }
 
   /** The three mergeable components of a written BM25 index. A store
@@ -707,56 +663,76 @@ object Retrieval {
         (col("tot") + col("__at")).as("tot"))
   }
 
-  /** Persist [[bm25ApplyDelta]] INTO a written store — the steady-state
-    * ingest path behind the `bm25-index` recipe sink: the batch's
-    * postings APPEND as new term-hashed files (historical postings files
-    * are never read or rewritten — a term's list may span one extra file
-    * per merged batch, the price of append-only ingest), while the two
-    * SMALL components whose values change for existing keys — the
-    * |V|-row df table and the 1-row stats — are recomputed by integer
-    * adds and replaced. Returns the batch's document count, taken from
-    * the merge's own stats aggregate: the caller needs no count job.
+  /** Fold a batch INTO a written store, or build the store when `path`
+    * holds none — the one ingest of the stored BM25 family (behind the
+    * `bm25-index` sink), plain or fielded. A store carrying the pending
+    * marker refuses first: a crashed mutation may have destroyed the
+    * `stats/_SUCCESS` commit signal the dispatch keys on, and the build
+    * branch would then static-overwrite away all history. No commit
+    * signal builds ([[writeBm25Store]], or [[writeBm25fStore]] when
+    * `fielded`; static overwrites, no marker). An existing store merges
+    * under the staged pending marker with the statistics step its
+    * recorded layout calls for ([[isPlainBm25StoreAt]], as
+    * [[forgetBm25StoreAt]] chooses), refusing a batch whose `fielded`
+    * flag contradicts it. Returns the batch's document count.
     *
-    * The batch is read twice (tokenize, sidecar ids): pass a materialized
-    * frame, as the `bm25-index` sink does. The stored postings are never
-    * read.
+    * Both merges APPEND the batch's postings as new term-hashed files
+    * (historical postings are never read or rewritten) and the id
+    * sidecar rows, then replace the small tables whose values change for
+    * existing keys by integer adds — the plain |V|-row df table and 1-row
+    * stats, or the fielded 2-row stats (tot_f per field, ONE corpus-level
+    * n_docs add; the fielded layout derives whole-doc df at score time)
+    * — `stats` LAST, by temp-write + rename, as the commit signal. The
+    * frozen bucket modulus wins over `buckets`: rows appended under
+    * another modulus would be invisible to the pruned query join.
     *
-    * Work runs in two phases under the staged pending marker
-    * ([[Layout.withPendingMarkerStaged]]). PREPARE materializes
-    * everything: the `_graft_layout` and `stats` reads (known schemas, no
-    * inference job) run beside the batch tokenize; then the merged df
-    * table runs beside the sidecar rows and the one aggregate that gives
-    * the batch's (n_docs, tot), from which the new stats row is built on
-    * the driver. MUTATE only writes: the postings append, the sidecar
-    * append and the df replacement run at the same time, and `stats` is
-    * replaced LAST, after all three succeeded — it stays the store's
-    * commit signal. Parallel steps share the caller's job group
-    * ([[Layout.concurrently]]) and all finish before a phase ends, so a
-    * failed phase never leaves a write running behind the marker.
+    * The plain merge reads the batch twice (tokenize, sidecar ids): pass
+    * a materialized frame, as the sink does. Its PREPARE runs the
+    * `_graft_layout`/`stats` reads (known schemas, no inference job)
+    * beside the batch tokenize, then the merged df table beside the
+    * sidecar rows and the one aggregate that gives the batch's (n_docs,
+    * tot) — so the count needs no job; MUTATE runs the postings append,
+    * sidecar append and df replacement at the same time
+    * ([[Layout.concurrently]], the caller's job group, all finished
+    * before the phase ends), then `stats`.
     *
-    * Same arriving-batch contract (ids disjoint from the store) and
-    * SINGLE-WRITER contract as every stored index gate
-    * ([[graft.processors.CurationProcessors.DedupGate]]): parquet has no
-    * atomic read-merge-replace, so run one ingest per index; readers are
-    * safe at any point except mid-overwrite of the two small tables.
-    * Merged-on-disk ≡ rebuild-from-scratch is pinned in RetrievalSpec,
-    * and its Spark job count and failure behaviour in Bm25MergeSpec.
+    * Same arriving-batch (ids disjoint from the store) and SINGLE-WRITER
+    * contract as every stored index gate. Merged-on-disk ≡ rebuild is
+    * pinned in RetrievalSpec, the plain merge's job count and failure
+    * behaviour in Bm25MergeSpec.
     */
   def mergeBm25StoreAt(spark: SparkSession, path: String, batch: DataFrame,
-                       idCol: String, textCol: String,
-                       buckets: Int = 16): Long = {
+                       idCol: String, textCol: String, buckets: Int = 16,
+                       fielded: Boolean = false,
+                       titleTokens: Int = 8): Long = {
+    Layout.refuseIfPending(spark, path)
+    if (!Layout.indexExists(spark, s"$path/stats")) {
+      val n = batch.count()
+      if (fielded)
+        writeBm25fStore(batch, idCol, textCol, path, titleTokens, buckets)
+      else writeBm25Store(batch, idCol, textCol, path, buckets)
+      return n
+    }
     requireErasableLayout(spark, path)
-    // the pending marker is acquired HERE, not by callers: a direct
-    // library merge into a store left marked by a crashed mutation must
-    // refuse exactly like the sink path does, and a crashed library merge
-    // must leave a marker for the next writer to find. Staged: a failure
-    // before the first write deletes the marker and leaves the store
-    // mutable.
+    // read after the marker refusal: a crash inside a dfreq replace would
+    // otherwise read as the fielded layout
+    val plain = isPlainBm25StoreAt(spark, path)
+    def kind(p: Boolean) = if (p) "plain" else "fielded"
+    require(plain != fielded,
+      s"$path holds a ${kind(plain)} BM25 store but this batch is " +
+        s"${kind(!fielded)} — merging one layout's statistics into the " +
+        "other silently corrupts every score. Match the store's layout " +
+        "or point the batch at a fresh path.")
+    if (plain) mergePlainAt(spark, path, batch, idCol, textCol, buckets)
+    else mergeFieldedAt(spark, path, batch, idCol, textCol, titleTokens,
+      buckets)
+  }
+
+  /** The plain merge of [[mergeBm25StoreAt]]. */
+  private def mergePlainAt(spark: SparkSession, path: String,
+                           batch: DataFrame, idCol: String, textCol: String,
+                           buckets: Int): Long =
     Layout.withPendingMarkerStaged(spark, path)({
-      // the bucket modulus is FROZEN in the store (the pruned query join
-      // recomputes it per term) — appending under a different caller
-      // modulus would land rows the pruned scan can never match, so the
-      // persisted layout wins over the parameter whenever it exists
       val (b, stored, addP) = Layout.concurrently3(spark)(
         readLayoutMeta(spark, path).getOrElse(buckets),
         spark.read.schema(StatsSchema).parquet(s"$path/stats").head(),
@@ -775,21 +751,49 @@ object Retrieval {
       (b, addP, newDfreq, side, newStats, n)
     }) { case (b, addP, newDfreq, side, newStats, n) =>
       Layout.concurrently3(spark)(
-        addP.withColumn("bucket", termBucket(b))
-          .repartition(b, col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("term"))
-          .write.mode("append").partitionBy("bucket")
-          .parquet(s"$path/postings"),
+        appendPostings(addP, b, path),
         writeSidecarRows(side, s"$path/docs", "append"),
         Layout.replaceDir(newDfreq, s"$path/dfreq"))
       // both replaced tables ride temp-write + rename ([[Layout.replaceDir]]):
-      // stats is the store's COMMIT SIGNAL (its _SUCCESS keys the sink's
-      // build-vs-merge dispatch), so a crash inside a plain overwrite would
-      // silently flip the next ingest onto the build branch
+      // stats is the store's COMMIT SIGNAL, so a crash inside a plain
+      // overwrite would silently flip the next ingest onto the build branch
       Layout.replaceDir(newStats.coalesce(1), s"$path/stats")
       n
     }
-  }
+
+  /** The fielded merge of [[mergeBm25StoreAt]]: the batch is tokenized
+    * and field-split once ([[bm25fComponents]] checkpoints its postings,
+    * and the stats adds derive from them). */
+  private def mergeFieldedAt(spark: SparkSession, path: String,
+                             batch: DataFrame, idCol: String,
+                             textCol: String, titleTokens: Int,
+                             buckets: Int): Long =
+    Layout.withPendingMarkerStaged(spark, path)({
+      val store = readBm25fStore(spark, path)
+      val b = store.buckets.getOrElse(buckets)
+      val n = batch.count()
+      val addP = bm25fComponents(batch, idCol, textCol, titleTokens,
+        forceMaterialize = true).postings
+      val addStats = addP.groupBy(col("f")).agg(sum(col("tf")).as("tot_f"))
+      val newStats = mergedFieldedStats(store.stats, batch, addStats)
+        .localCheckpoint()
+      (b, addP, newStats, n)
+    }) { case (b, addP, newStats, n) =>
+      appendPostings(addP, b, path)
+      writeDocsSidecar(batch, idCol, s"$path/docs", b, "append", addP)
+      // stats last, by temp-write + rename: the store's commit signal
+      Layout.replaceDir(newStats.coalesce(1), s"$path/stats")
+      n
+    }
+
+  /** Append a batch's postings into their term-hash bucket directories,
+    * term-sorted within each file like the build. */
+  private def appendPostings(addP: DataFrame, buckets: Int,
+                             path: String): Unit =
+    addP.withColumn("bucket", termBucket(buckets))
+      .repartition(buckets, col("bucket"))
+      .sortWithinPartitions(col("bucket"), col("term"))
+      .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
 
   /** A batch's (n_docs, tot) — the [[corpusStats]] pair — in one
     * aggregate over two materialized frames: one row per batch doc from
@@ -807,14 +811,6 @@ object Retrieval {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** [[bm25TopK]] against a store: identical scoring expressions over the
-    * stored integers, so results are row-identical to the inline build
-    * (pinned in RetrievalSpec) — but the query plan scans only the store,
-    * never corpus text. Only the QUERY TERMS' dfreq rows participate: the
-    * df table is semi-joined down to the broadcast term set first, so at
-    * corpus scale the |V|-row table contributes a handful of rows, not a
-    * shuffle.
-    */
   /** Reciprocal-rank fusion — hybrid retrieval's standard combiner: each
     * input ranking ((q_id, rnk, idCol) rows) contributes
     * round(10⁶/(k₀+rnk)) to its candidates, contributions integer-sum
@@ -979,6 +975,14 @@ object Retrieval {
         col("df_t"), col("score_ppm"))
   }
 
+  /** [[bm25TopK]] against a store: identical scoring expressions over the
+    * stored integers, so results are row-identical to the inline build
+    * (pinned in RetrievalSpec) — but the query plan scans only the store,
+    * never corpus text. Only the QUERY TERMS' dfreq rows participate: the
+    * df table is semi-joined down to the broadcast term set first, so at
+    * corpus scale the |V|-row table contributes a handful of rows, not a
+    * shuffle.
+    */
   def bm25TopKStored(store: Bm25Store, queries: DataFrame, idCol: String,
                      qIdCol: String, qTextCol: String,
                      k1: Double = 1.2, b: Double = 0.75,
@@ -1191,7 +1195,7 @@ object Retrieval {
     * per-field: a batch with no tokens in some field (or none at all)
     * contributes no stats row for it, but its docs still count. Shared
     * by the logical merge ([[bm25fApplyDelta]]) and the persisted one
-    * ([[mergeBm25fStoreAt]]).
+    * ([[mergeBm25StoreAt]]).
     */
   private def mergedFieldedStats(storeStats: DataFrame, added: DataFrame,
                                  addStats: DataFrame): DataFrame = {

@@ -736,14 +736,14 @@ object Similarity {
   }
 
   /** Append a batch into an EXISTING [[writeVectorStore]] layout — the
-    * steady-state ingest sibling the codes-store append needs alongside
-    * it (every appended code must have its exact vector reachable by the
-    * re-rank): `vs_part` derives from the PERSISTED parts (never
-    * caller-supplied), so appended rows land exactly where the probe-side
-    * pmod derivation will look for them.
+    * exact-vector half of a codes-store append ([[ingestIvfStoreAt]] runs
+    * it under the codes store's marker; every appended code must have its
+    * exact vector reachable by the re-rank): `vs_part` derives from the
+    * PERSISTED parts (never caller-supplied), so appended rows land
+    * exactly where the probe-side pmod derivation will look for them.
     */
-  def appendVectorStore(batch: DataFrame, idCol: String, vecCol: String,
-                        path: String): Unit = {
+  private def appendVectorStore(batch: DataFrame, idCol: String,
+                                vecCol: String, path: String): Unit = {
     val parts = requireVectorParts(batch.sparkSession, path)
     batch.select(col(idCol), col(vecCol))
       .withColumn("vs_part", pmod(col(idCol), lit(parts)).cast("int"))
@@ -1122,10 +1122,11 @@ object Similarity {
     * `_graft_codebook` (underscore-prefixed like `_graft_layout`, so the
     * store's own parquet listing never sees it); doubles round-trip
     * bit-exact through parquet's IEEE-754 DOUBLE, so a reloaded codebook
-    * assigns IDENTICALLY (pinned in spec). Written LAST by the ingest
-    * sink, so its _SUCCESS marker doubles as the store's commit signal —
-    * a crash between vector write and codebook write leaves no marker
-    * and the next build's static-overwrite rewrites the store clean.
+    * assigns IDENTICALLY (pinned in spec). Written LAST by
+    * [[ingestIvfStoreAt]], so its _SUCCESS marker doubles as the store's
+    * commit signal — a crash between vector write and codebook write
+    * leaves no marker and the next build's static-overwrite rewrites the
+    * store clean.
     */
   def writeCodebookAt(spark: SparkSession, path: String,
                       coarse: Seq[Seq[Double]]): Unit = {
@@ -1304,9 +1305,9 @@ object Similarity {
     * format with an empty coarse slot): codes are indexes INTO the
     * subquantizer centroids and directories are named BY the router's
     * global child ids, so re-attach must reload exactly what encoded
-    * the store. Deliberately NOT at `$path/_graft_codebook`: the
-    * ivf-index sink dispatches on that file, and a pq2 codes store must
-    * never look appendable-as-vectors to it.
+    * the store. Deliberately NOT at `$path/_graft_codebook`:
+    * [[ingestIvfStoreAt]] dispatches on that file, and a pq2 codes store
+    * must never look appendable-as-vectors to it.
     */
   def writePq2CodebooksAt(spark: SparkSession, path: String,
                           cb: TwoLevelCodebook,
@@ -1331,12 +1332,35 @@ object Similarity {
     * silently leave every erased doc's full-precision vector fetchable
     * by any future re-rank — erasure that is no erasure. The `_graft_
     * index_config` discipline applied to the erasure cascade.
+    *
+    * A sidecar under the codes store's parent directory is recorded
+    * RELATIVE to the store (`../<rest>`), so a store pair copied or
+    * restored together to another root keeps its pairing; any other
+    * sidecar is recorded as given.
     */
   def writeRerankLinkAt(spark: SparkSession, path: String,
                         rerank: Option[String]): Unit = {
     import spark.implicits._
-    Layout.writeRecord(Seq(rerank.getOrElse("")).toDF("rerank_path"),
+    val record = rerank.fold("") { rp =>
+      val parent = qualified(spark, path).getParent
+      val under = Option(parent).map(_.toString.stripSuffix("/") + "/")
+      val side = qualified(spark, rp).toString
+      under.filter(side.startsWith)
+        .fold(rp)(u => RelativeLink + side.stripPrefix(u))
+    }
+    Layout.writeRecord(Seq(record).toDF("rerank_path"),
       s"$path/_graft_pq2/rerank")
+  }
+
+  /** Prefix of a rerank record kept relative to its codes store; older
+    * stores hold absolute records, which read unchanged. */
+  private val RelativeLink = "../"
+
+  private def qualified(spark: SparkSession,
+                        p: String): org.apache.hadoop.fs.Path = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(path)
   }
 
   /** Read a codes store's recorded rerank linkage:
@@ -1350,7 +1374,15 @@ object Similarity {
   def rerankLinkAt(spark: SparkSession,
                    path: String): Option[Option[String]] =
     Layout.readRecord(spark, s"$path/_graft_pq2/rerank", "rerank_path STRING")
-      .map(r => Some(r.getString(0)).filter(_.nonEmpty))
+      .map(r => Some(r.getString(0)).filter(_.nonEmpty).map { rec =>
+        if (!rec.startsWith(RelativeLink)) rec
+        else {
+          // resolved against the store path as the caller spells it
+          val store = path.stripSuffix("/")
+          store.substring(0, store.lastIndexOf('/') + 1) +
+            rec.stripPrefix(RelativeLink)
+        }
+      })
 
   /** Resolve the EFFECTIVE rerank store for a codes-store operation from
     * the persisted linkage and the caller's explicit key, refusing every
@@ -1359,14 +1391,15 @@ object Similarity {
     * sidecar-less) corrupts the pairing; a recorded sidecar that is
     * unreachable must stop an erasure rather than let it "succeed" with
     * the raw vectors still fetchable. Legacy stores (no record) pass the
-    * explicit key through unchanged — their weaker contract is the
-    * caller's documented fallback.
+    * explicit key through once it names a readable vector store — their
+    * weaker contract is the caller's documented fallback.
     */
   def resolveRerankLink(spark: SparkSession, path: String,
                         explicit: Option[String]): Option[String] =
     rerankLinkAt(spark, path) match {
       case Some(Some(linked)) =>
-        explicit.filter(_ != linked).foreach { rp =>
+        explicit.filter(rp =>
+            qualified(spark, rp) != qualified(spark, linked)).foreach { rp =>
           throw new IllegalArgumentException(
             s"$path records its exact-vector rerank sidecar at $linked " +
               s"but this operation names $rp — a divergent pairing would " +
@@ -1391,9 +1424,134 @@ object Similarity {
               "first batch.")
         }
         None
-      case None => explicit
+      // a legacy store's sidecar must exist from its first batch: one
+      // started mid-stream silently misses every historical vector
+      case None =>
+        explicit.foreach(rp => require(vectorStoreExistsAt(spark, rp),
+          s"$rp is not an initialized vector store but $path predates the " +
+            "linkage record — a rerank store started after history landed " +
+            "silently misses the historical vectors. Rebuild the index " +
+            "with rerank_store_path set from the first batch."))
+        explicit
     }
 
+  /** How a batch enters a centroid-partitioned vector store — the one
+    * ingest behind the `ivf-index` sink. A marked store refuses first (a
+    * crashed mutation may have destroyed the commit signal the dispatch
+    * keys on). The raw and PQ layouts carry DISJOINT commit signals, so a
+    * batch whose `quantize` contradicts an existing store refuses instead
+    * of static-overwriting its history. A raw append takes its meta
+    * columns from the store's own schema, refusing a contradicting set.
+    * No commit signal BUILDS with an auto-sized codebook written last as
+    * the commit signal: raw two-level or flat, or (`quantize = Some((m,
+    * k))`) PQ codes routed by the two-level hierarchy, writing the exact
+    * vectors to `rerankStorePath` and recording the linkage. An existing
+    * store APPENDS under ONE staged marker: the prepare phase reads the
+    * codebook, resolves the rerank link ([[resolveRerankLink]]) and
+    * materializes the assignment; the mutate phase appends exact vectors
+    * BEFORE codes (orphan vectors are harmless, codes without vectors
+    * vanish at re-rank), adopts the link onto a pre-record store, and
+    * with `grow` runs one [[splitHotChildrenAt]] round. An empty batch is
+    * a no-op. Returns the row count; single writer, disjoint ids.
+    */
+  def ingestIvfStoreAt(spark: SparkSession, path: String, vectors: DataFrame,
+                       idCol: String, vecCol: String,
+                       twoLevel: Boolean = true, maxSharePct: Double = 5.0,
+                       grow: Boolean = false, metaCols: Seq[String] = Nil,
+                       quantize: Option[(Int, Int)] = None,
+                       rerankStorePath: Option[String] = None): Long = {
+    require(!(grow && !twoLevel),
+      "ivf-index: grow: true requires two_level: true")
+    require(quantize.isEmpty || metaCols.isEmpty,
+      "ivf-index: meta_columns pairs with raw-vector stores only (PQ " +
+        "codes rows carry no filterable attributes)")
+    Layout.refuseIfPending(spark, path)
+    val rawExists = Layout.indexExists(spark, s"$path/_graft_codebook")
+    val pq2Exists =
+      Layout.indexExists(spark, s"$path/_graft_pq2/subs/_graft_codebook")
+    val meta =
+      if (!rawExists) metaCols
+      else {
+        val stored = storeMetaCols(spark, path, idCol, vecCol)
+        require(metaCols.isEmpty || metaCols.toSet == stored.toSet,
+          s"$path carries metadata columns [${stored.mkString(",")}] but " +
+            s"this batch is configured [${metaCols.mkString(",")}] — " +
+            "ragged appends silently break filtered search. Align " +
+            "meta_columns with the store or drop the key (appends adopt " +
+            "the store's own set).")
+        stored
+      }
+    if (quantize.isDefined)
+      require(!rawExists,
+        s"$path holds a RAW vector store — a quantize: pq batch cannot " +
+          "merge into it (codes and vectors are different layouts). " +
+          "Drop quantize or point the recipe at a fresh index_path.")
+    else
+      require(!pq2Exists,
+        s"$path holds a PQ-CODES store — a raw-vector batch cannot merge " +
+          "into it. Set quantize: pq (matching the store) or point the " +
+          "recipe at a fresh index_path.")
+    // one materialization serves the count, sizing and assignment
+    val batch = vectors.select((Seq(idCol, vecCol) ++ meta).map(col): _*)
+      .localCheckpoint()
+    val n = batch.count()
+    if (n == 0) return 0L
+    quantize match {
+      case Some((m, k)) if !pq2Exists =>
+        val sample = normalized(batch.select(col(idCol),
+            col(vecCol).cast("array<double>").as("__u")), "__u")
+          .orderBy(xxhash64(col(idCol)), col(idCol))
+          .limit(4096).select(col("__u"))
+          .collect().map(_.getSeq[Double](0).toSeq).toSeq
+        val codebooks = pqTrain(sample, m, k)
+        val cb = autoTwoLevelCodebook(batch, idCol, vecCol,
+          maxSharePct = maxSharePct)
+        // vectors BEFORE codes, linkage record BEFORE the commit signal:
+        // a committed store always knows whether a sidecar pairs with it
+        rerankStorePath.foreach(writeVectorStore(batch, idCol, vecCol, _))
+        writePqStoreTwoLevel(batch, idCol, vecCol, cb, codebooks, path)
+        writeRerankLinkAt(spark, path, rerankStorePath)
+        writePq2CodebooksAt(spark, path, cb, codebooks)
+      case Some(_) =>
+        Layout.withPendingMarkerStaged(spark, path)({
+          val (cb, codebooks) = readPq2CodebooksAt(spark, path)
+          val link = rerankLinkAt(spark, path)
+          val rerank = resolveRerankLink(spark, path, rerankStorePath)
+          (link, rerank, prepareAppend(
+            pqEncodedTwoLevel(batch, idCol, vecCol, cb, codebooks), path))
+        }) { case (link, rerank, codes) =>
+          rerank.foreach(appendVectorStore(batch, idCol, vecCol, _))
+          writeAppend(codes, idCol, path)
+          // POSITIVE knowledge only: an append omitting the key must not
+          // freeze "no sidecar" onto a store that may have one
+          if (link.isEmpty && rerankStorePath.isDefined)
+            writeRerankLinkAt(spark, path, rerankStorePath)
+        }
+      case None if !rawExists =>
+        if (twoLevel)
+          writeCodebookAt(spark, path, writeIvfStoreTwoLevelAuto(batch,
+            idCol, vecCol, path, maxSharePct = maxSharePct, metaCols = meta))
+        else
+          writeCodebookAt(spark, path, writeIvfStoreAuto(batch, idCol,
+            vecCol, path, maxSharePct = maxSharePct, metaCols = meta))
+      case None if twoLevel =>
+        Layout.withPendingMarkerStaged(spark, path)({
+          val cb = readTwoLevelCodebookAt(spark, path)
+          (cb, prepareAppend(
+            twoLevelAssigned(batch, idCol, vecCol, cb, meta), path))
+        }) { case (cb, rows) =>
+          writeAppend(rows, idCol, path)
+          if (grow)
+            planSplit(spark, path, idCol, vecCol, cb, maxSharePct)
+              .foreach(execSplit(spark, path, idCol, _, Some(path)))
+        }
+      case None =>
+        Layout.withPendingMarkerStaged(spark, path)(prepareAppend(
+          ivfAssigned(batch, idCol, vecCol, readCoarseCodebookAt(spark, path),
+            meta), path))(writeAppend(_, idCol, path))
+    }
+    n
+  }
 
   /** [[appendIvfStore]] for a two-level layout — steady-state ingest:
     * arrivals are kernel-assigned against the SAME frozen codebook the
@@ -1406,7 +1564,7 @@ object Similarity {
   def appendIvfStoreTwoLevel(batch: DataFrame, idCol: String, vecCol: String,
                              cb: TwoLevelCodebook, path: String,
                              metaCols: Seq[String] = Nil): Unit =
-    appendAssigned(twoLevelAssigned(batch, idCol, vecCol, cb, metaCols),
+    fencedAppend(twoLevelAssigned(batch, idCol, vecCol, cb, metaCols),
       idCol, path)
 
   /** GROW a two-level layout in place — the missing half of "the
@@ -1428,13 +1586,34 @@ object Similarity {
     * answers queries correctly for rows it can reach, but only the
     * grown one sees the new directories). Grown-store ≡
     * rebuild-with-grown-codebook is pinned in spec; idempotent once no
-    * child exceeds the share bar. Single-writer like every store
+    * child exceeds the share bar. Runs under the store's staged pending
+    * marker: the audit, the split choice and the re-assignment prepare
+    * (checkpointed), then only writes run. Single-writer like every store
     * maintenance path.
     */
   def splitHotChildrenAt(spark: SparkSession, path: String, idCol: String,
                          vecCol: String, cb: TwoLevelCodebook,
                          maxSharePct: Double = 5.0,
-                         persistTo: Option[String] = None): TwoLevelCodebook = {
+                         persistTo: Option[String] = None): TwoLevelCodebook =
+    Layout.withPendingMarkerStaged(spark, path)(
+      planSplit(spark, path, idCol, vecCol, cb, maxSharePct)) { plan =>
+      plan.foreach(execSplit(spark, path, idCol, _, persistTo))
+      plan.fold(cb)(_.grown)
+    }
+
+  /** A prepared [[splitHotChildrenAt]] round: the grown codebook and, when
+    * some top gained a child, the re-assigned rows of the affected tops
+    * (materialized), their old directories and the directories they land
+    * in. */
+  private final case class SplitPlan(grown: TwoLevelCodebook,
+                                     reassigned: Option[DataFrame],
+                                     oldGids: Seq[Int], keptDirs: Set[Int])
+
+  /** The PREPARE phase of a split round: every read, audit and
+    * re-assignment; None when no child exceeds the share bar. */
+  private def planSplit(spark: SparkSession, path: String, idCol: String,
+                        vecCol: String, cb: TwoLevelCodebook,
+                        maxSharePct: Double): Option[SplitPlan] = {
     import graft.functions.VectorFunctions.l2_squared
     val store = spark.read.parquet(path)
     val n = store.count()
@@ -1446,7 +1625,7 @@ object Similarity {
     val flagged = counts.filter { case (gid, m) =>
       m > 1 && 100.0 * m / math.max(n, 1L) > maxSharePct &&
         gidToTk.contains(gid) }.keys.toSeq.sorted
-    if (flagged.isEmpty) return cb
+    if (flagged.isEmpty) return None
     // farthest member per flagged child (unit-vector distance to the
     // child seed — the autoCoarseCodebook split rule, one level down)
     import spark.implicits._
@@ -1483,6 +1662,27 @@ object Similarity {
       cb.gids(t) ++ fresh
     }
     val grown = TwoLevelCodebook(cb.tops, grownChildren, grownIds)
+    // re-assign ONLY the affected tops' rows under the grown codebook;
+    // every other top's assignment is untouched by definition
+    val affectedTops = byTop.keys.toSeq.sorted
+    if (affectedTops.isEmpty)
+      return Some(SplitPlan(grown, None, Nil, Set.empty))
+    val oldGids = affectedTops.flatMap(t => cb.gids(t))
+    val rows = store.filter(col("centroid_id").isInCollection(oldGids))
+      .drop("centroid_id")
+    val unit = normalized(rows.withColumn("__u",
+      col(vecCol).cast("array<double>")), "__u")
+    val reassigned = unit
+      .withColumn("centroid_id", twoLevelAssignExpr(col("__u"), grown))
+      .drop("__u").localCheckpoint()
+    val keptDirs = reassigned.select(col("centroid_id").cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    Some(SplitPlan(grown, Some(reassigned), oldGids, keptDirs))
+  }
+
+  /** The MUTATE phase of a split round: writes only. */
+  private def execSplit(spark: SparkSession, path: String, idCol: String,
+                        plan: SplitPlan, persistTo: Option[String]): Unit = {
     // persist the grown codebook BEFORE any directory rewrite: splits
     // only ADD children (old centroids stay valid probes), so a crash
     // after this write but before the rewrite leaves every row still
@@ -1491,19 +1691,8 @@ object Similarity {
     // reverse order (rewrite first) has an unrecoverable window: rows
     // moved to fresh-gid directories that no persisted codebook names
     // are invisible to every later reader.
-    persistTo.foreach(p => writeCodebookAt(spark, p, grown))
-    // rewrite ONLY the affected tops' directories under the grown
-    // codebook; every other top's assignment is untouched by definition
-    val affectedTops = byTop.keys.toSeq.sorted
-    if (affectedTops.nonEmpty) {
-      val oldGids = affectedTops.flatMap(t => cb.gids(t))
-      val rows = store.filter(col("centroid_id").isInCollection(oldGids))
-        .drop("centroid_id")
-      val unit = normalized(rows.withColumn("__u",
-        col(vecCol).cast("array<double>")), "__u")
-      val reassigned = unit
-        .withColumn("centroid_id", twoLevelAssignExpr(col("__u"), grown))
-        .drop("__u").localCheckpoint()
+    persistTo.foreach(p => writeCodebookAt(spark, p, plan.grown))
+    plan.reassigned.foreach { reassigned =>
       // erasure-sidecar maintenance, crash-ordered for safety-by-
       // superset: APPEND the re-homed rows' new (id, home) entries
       // BEFORE the directory rewrite. A forget treats the sidecar as a
@@ -1513,23 +1702,21 @@ object Similarity {
       // rewrite a crash lands on, every row's REAL directory is listed:
       // before ⇒ {old, new} covers the not-yet-moved row; after ⇒ it
       // covers the moved one.
-      val maintainSidecar = sidecarExists(spark, path)
-      if (maintainSidecar)
+      val sidecar = sidecarExists(spark, path)
+      if (sidecar)
         appendIdSidecar(reassigned, idCol, path)
-      val keptDirs = reassigned.select(col("centroid_id").cast("int"))
-        .distinct().collect().map(_.getInt(0)).toSet
       reassigned.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("centroid_id").parquet(path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      oldGids.filterNot(keptDirs).foreach { g =>
+      plan.oldGids.filterNot(plan.keptDirs).foreach { g =>
         fs.delete(new org.apache.hadoop.fs.Path(path, s"centroid_id=$g"), true)
       }
       // tidy pass once the rewrite is down: collapse each re-homed id
       // back to its single (id, new home) row via temp + rename — a
       // crash here merely leaves the safe superset in place
-      if (maintainSidecar) {
+      if (sidecar) {
         val remap = reassigned
           .select(col(idCol), col("centroid_id").cast("int").as("__new"))
         val sc = Layout.readTable(spark, s"$path/_graft_ids")
@@ -1542,7 +1729,6 @@ object Similarity {
         Layout.replaceDir(updated, s"$path/_graft_ids", Seq("ibucket"))
       }
     }
-    grown
   }
 
   /** Right-to-erasure compaction of a centroid-partitioned vector store
@@ -1721,15 +1907,6 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("rank"), round(col("sim"), 4).as("sim"))
   }
 
-  /** Physical IVF layout: the corpus written ONCE partitioned by coarse
-    * centroid id (assignment on unit vectors — L2-nearest among unit
-    * vectors is cosine-nearest, seeds must be unit too). With this
-    * layout, [[ivfTopKStored]]'s probe pruning is DIRECTORY pruning: a
-    * probe touches only its centroid's partition on disk, so at 100 TB a
-    * query reads ~nprobe/C of the bytes instead of filtering them after a
-    * full scan — the "assignment doubles as the physical partitioning
-    * key" claim made physical. Write at ingest, reuse across queries.
-    */
   /** Fixed id-hash directory count of the erasure sidecar — a constant,
     * not a knob, so appends to any store compute the same bucket with no
     * layout metadata to look up. */
@@ -1752,7 +1929,7 @@ object Similarity {
     * build pays no second assignment pass); appends add the batch's
     * rows; [[splitHotChildrenAt]] re-points re-homed rows.
     */
-  def writeIdSidecarAt(spark: SparkSession, path: String,
+  private def writeIdSidecarAt(spark: SparkSession, path: String,
                        idCol: String): Unit = {
     val rows = spark.read.parquet(path)
       .select(col(idCol), col("centroid_id").cast("int").as("home"))
@@ -1771,7 +1948,7 @@ object Similarity {
     * erasure, the exact failure the sidecar exists to prevent. Written
     * BEFORE the store append (a crash between the two leaves a sidecar
     * row whose store row never landed — a harmless extra directory
-    * probe — never a store row erasure can't find; the sink's pending
+    * probe — never a store row erasure can't find; the append's pending
     * marker makes the half-applied append loud regardless).
     */
   private def appendIdSidecar(assigned: DataFrame, idCol: String,
@@ -1783,34 +1960,60 @@ object Similarity {
       .write.mode("append").partitionBy("ibucket")
       .parquet(s"$path/_graft_ids")
 
-  /** Shared append tail of every assigned/encoded batch: when the store
-    * carries a sidecar, ONE materialization feeds both writes (the
-    * assignment kernel runs once per batch); pre-sidecar stores skip the
-    * checkpoint entirely — its extra job + block writes exist only to
-    * share work between two consumers, and there is only one.
+  /** An assigned (or encoded) batch ready to append: its rows, and
+    * whether the store carries an id sidecar they also feed. */
+  private final case class PreparedAppend(rows: DataFrame, sidecar: Boolean)
+
+  /** The PREPARE phase every append shares (sink, library, streaming):
+    * the rectangularity guard, then ONE materialization of the assignment
+    * when the store carries a sidecar (the assignment kernel runs once per
+    * batch and feeds both writes); pre-sidecar stores skip the checkpoint
+    * — its extra job + block writes exist only to share work between two
+    * consumers, and there is only one.
     */
-  private def appendAssigned(assigned: DataFrame, idCol: String,
-                             path: String): Unit = {
-    // rectangularity guard at the SHARED tail, so EVERY append caller —
-    // sink, library, streaming — keeps the store's column set: an append
-    // missing a meta column writes files where that column reads as
-    // NULL, and every later filtered search silently excludes (or
-    // breaks on) exactly the appended rows. Cost: one footer read.
-    val storeCols = assigned.sparkSession.read.parquet(path).columns.toSet
+  private def prepareAppend(assigned: DataFrame,
+                            path: String): PreparedAppend = {
+    val spark = assigned.sparkSession
+    // an append missing a meta column writes files where that column
+    // reads as NULL, and every later filtered search silently excludes
+    // (or breaks on) exactly the appended rows. Cost: one footer read.
+    val storeCols = spark.read.parquet(path).columns.toSet
     require(assigned.columns.toSet == storeCols,
       s"$path holds columns [${storeCols.toSeq.sorted.mkString(",")}] but " +
         s"this append carries [${assigned.columns.sorted.mkString(",")}] — " +
         "ragged appends silently break filtered search. Supply the " +
         "store's own metaCols (ivf-index derives them automatically).")
-    if (sidecarExists(assigned.sparkSession, path)) {
-      val a = assigned.localCheckpoint()
-      appendIdSidecar(a, idCol, path)
-      a.write.mode("append").partitionBy("centroid_id").parquet(path)
-    } else
-      assigned.write.mode("append").partitionBy("centroid_id").parquet(path)
+    if (sidecarExists(spark, path))
+      PreparedAppend(assigned.localCheckpoint(), sidecar = true)
+    else PreparedAppend(assigned, sidecar = false)
   }
 
-  /** `metaCols` (here and on every write/append below) carries metadata
+  /** The MUTATE phase every append shares: sidecar rows first, then the
+    * store rows into their centroid directories. */
+  private def writeAppend(p: PreparedAppend, idCol: String,
+                          path: String): Unit = {
+    if (p.sidecar) appendIdSidecar(p.rows, idCol, path)
+    p.rows.write.mode("append").partitionBy("centroid_id").parquet(path)
+  }
+
+  /** One public append: [[prepareAppend]] and [[writeAppend]] under the
+    * store's staged pending marker, so a library or streaming append into
+    * a marked store refuses, and one that dies between its writes leaves
+    * the marker for the next writer to find. */
+  private def fencedAppend(assigned: DataFrame, idCol: String,
+                           path: String): Unit =
+    Layout.withPendingMarkerStaged(assigned.sparkSession, path)(
+      prepareAppend(assigned, path))(writeAppend(_, idCol, path))
+
+  /** Physical IVF layout: the corpus written ONCE partitioned by coarse
+    * centroid id (assignment on unit vectors — L2-nearest among unit
+    * vectors is cosine-nearest, seeds must be unit too). With this
+    * layout, [[ivfTopKStored]]'s probe pruning is DIRECTORY pruning: a
+    * probe touches only its centroid's partition on disk, so at 100 TB a
+    * query reads ~nprobe/C of the bytes instead of filtering them after a
+    * full scan — the "assignment doubles as the physical partitioning
+    * key" claim made physical. Write at ingest, reuse across queries.    *
+    * `metaCols` (here and on every write/append below) carries metadata
     * columns alongside each vector — the layout filtered vector search
     * reads: attribute predicates land in the STORE SCAN (parquet-pushed,
     * under the same centroid-directory DPP pruning), so candidates are
@@ -1824,24 +2027,18 @@ object Similarity {
     writeIdSidecarAt(corpus.sparkSession, path, idCol)
   }
 
-  /** [[writeIvfStore]] with metadata columns — the original filtered-ANN
-    * spelling, kept as the named entry point. */
-  def writeIvfMetaStore(corpus: DataFrame, idCol: String, vecCol: String,
-                        metaCols: Seq[String], coarse: Seq[Seq[Double]],
-                        path: String): Unit =
-    writeIvfStore(corpus, idCol, vecCol, coarse, path, metaCols)
-
   /** The metadata columns a written IVF store carries beyond
     * (id, vector, centroid_id) — what an APPEND must supply so the
     * layout stays rectangular, derived from the STORE's own schema
     * (the frozen-geometry discipline: the store, not the recipe, is the
     * authority on its columns). */
-  def storeMetaCols(spark: SparkSession, path: String, idCol: String,
+  private def storeMetaCols(spark: SparkSession, path: String, idCol: String,
                     vecCol: String): Seq[String] =
     spark.read.parquet(path).columns
       .filterNot(Set(idCol, vecCol, "centroid_id")).toSeq
 
-  /** Filtered ANN over a [[writeIvfMetaStore]] layout: PRE-filtering —
+  /** Filtered ANN over a [[writeIvfStore]] layout written with
+    * `metaCols`: PRE-filtering —
     * `candFilter` applies to store rows before scoring, so the top-k is
     * taken over valid candidates only and every query fills its k slots
     * whenever the probed directories hold k matching rows. The
@@ -1894,12 +2091,16 @@ object Similarity {
     * pruning; because assignment depends only on the frozen codebook,
     * any micro-batching of an ingest stream produces the same stored
     * rows (the streaming parity pin in
-    * [[graft.streaming.EventStream.streamingIvfAppend]]).
+    * [[graft.streaming.EventStream.streamingIvfAppend]]). Runs under the
+    * store's staged pending marker, the assignment materialized in the
+    * prepare phase: an append into a marked store refuses, and one that
+    * dies between its writes leaves the marker (the same fence as every
+    * public append below and [[splitHotChildrenAt]]).
     */
   def appendIvfStore(batch: DataFrame, idCol: String, vecCol: String,
                      coarse: Seq[Seq[Double]], path: String,
                      metaCols: Seq[String] = Nil): Unit =
-    appendAssigned(ivfAssigned(batch, idCol, vecCol, coarse, metaCols),
+    fencedAppend(ivfAssigned(batch, idCol, vecCol, coarse, metaCols),
       idCol, path)
 
   private def ivfAssigned(corpus: DataFrame, idCol: String, vecCol: String,
@@ -1949,7 +2150,7 @@ object Similarity {
   def appendPqStore(batch: DataFrame, idCol: String, vecCol: String,
                     coarse: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
                     path: String): Unit =
-    appendAssigned(pqEncoded(batch, idCol, vecCol, coarse, codebooks),
+    fencedAppend(pqEncoded(batch, idCol, vecCol, coarse, codebooks),
       idCol, path)
 
   /** PQ codes routed by a TWO-LEVEL coarse quantizer — the
@@ -1986,7 +2187,7 @@ object Similarity {
                             cb: TwoLevelCodebook,
                             codebooks: Seq[Seq[Seq[Double]]],
                             path: String): Unit =
-    appendAssigned(pqEncodedTwoLevel(batch, idCol, vecCol, cb, codebooks),
+    fencedAppend(pqEncodedTwoLevel(batch, idCol, vecCol, cb, codebooks),
       idCol, path)
 
   private def pqEncoded(corpus: DataFrame, idCol: String, vecCol: String,

@@ -421,9 +421,11 @@ private[graft] trait IndexSink extends SinkPlugin {
   * — the retrieval-index sibling of the fingerprint/LSH indexes the
   * curation gates build, so a YAML recipe can displace index building to
   * ingest (`documents → gates → bm25-index`, then every query scores the
-  * frozen store). First batch at an empty `index_path` builds the store;
-  * later batches FOLD IN via [[graft.operators.Retrieval.mergeBm25StoreAt]]
-  * (postings append, df/stats integer adds — historical text is never
+  * frozen store). Past config parsing and the [[IndexProtocol]] geometry
+  * check, every batch is one call to
+  * [[graft.operators.Retrieval.mergeBm25StoreAt]], which refuses a marked
+  * store, builds at an empty `index_path` and otherwise FOLDS the batch
+  * IN (postings append, df/stats integer adds — historical text is never
   * re-read), so the indexed corpus only ever widens.
   *
   * Materialize once: the batch is localCheckpointed once and every read
@@ -523,44 +525,17 @@ object Bm25IndexSink extends IndexSink {
     // window from title_tokens; field weights stay query-time knobs)
     val fielded = config.getOrElse("fielded", false).toString.toBoolean
     val titleTokens = config.getOrElse("title_tokens", 8).toString.toInt
-    // a marked store refuses BEFORE the dispatch: a crash mid-merge may
-    // have destroyed the stats _SUCCESS this dispatch keys on, and the
-    // build branch would then static-overwrite away all history
-    graft.operators.Layout.refuseIfPending(spark, path)
-    // the stats table is written last on both paths, so its _SUCCESS
-    // marker is the store's commit signal (the indexExists discipline)
-    val exists = graft.operators.Layout.indexExists(spark, s"$path/stats")
     val layoutCfg = s"fielded=$fielded,title_tokens=$titleTokens," +
       s"buckets=$buckets,chunk_grain=${chunkCol.isDefined},chunk_bits=$bits"
-    if (!fielded && exists) {
-      val adopt = IndexProtocol.checkLayoutConfig(spark, path, layoutCfg)
-      // the merge acquires the pending marker INTERNALLY (staged — a
-      // plan-time failure releases it), so direct library merges get the
-      // same protection as the sink path. Its stats aggregate also gives
-      // the batch count, so this path runs no count job
-      val n = graft.operators.Retrieval.mergeBm25StoreAt(spark, path, batch,
-        keyCol, tc, buckets)
-      // pre-protocol stores adopt the batch's config only once a merge
-      // under it actually succeeded
-      if (adopt) IndexProtocol.writeLayoutConfig(spark, path, layoutCfg)
-      return n
-    }
-    val n = batch.count()
-    (fielded, exists) match {
-      case (false, _) => // (false, true) merged above
-        graft.operators.Retrieval.writeBm25Store(batch, keyCol, tc, path,
-          buckets)
-        IndexProtocol.writeLayoutConfig(spark, path, layoutCfg)
-      case (true, false) =>
-        graft.operators.Retrieval.writeBm25fStore(batch, keyCol, tc, path,
-          titleTokens, buckets)
-        IndexProtocol.writeLayoutConfig(spark, path, layoutCfg)
-      case (true, true) =>
-        val adopt = IndexProtocol.checkLayoutConfig(spark, path, layoutCfg)
-        graft.operators.Retrieval.mergeBm25fStoreAt(spark, path, batch,
-          keyCol, tc, titleTokens, buckets)
-        if (adopt) IndexProtocol.writeLayoutConfig(spark, path, layoutCfg)
-    }
+    val adopt = IndexProtocol.checkLayoutConfig(spark, path, layoutCfg)
+    // the merge refuses a marked store, builds or merges, and on the
+    // plain merge takes the batch count from its stats aggregate (no
+    // count job)
+    val n = graft.operators.Retrieval.mergeBm25StoreAt(spark, path, batch,
+      keyCol, tc, buckets, fielded, titleTokens)
+    // fresh stores, and pre-protocol stores, record the batch's config
+    // only once an ingest under it actually succeeded
+    if (adopt) IndexProtocol.writeLayoutConfig(spark, path, layoutCfg)
     n
   }
 }
@@ -573,14 +548,15 @@ object Bm25IndexSink extends IndexSink {
   *  - A MERGE/APPEND that died between its writes must never be
   *    retried blindly (the postings-append half would run twice and
   *    double every tf it carries, breaking merged ≡ rebuild with no
-  *    error). [[graft.operators.Layout.withPendingMarker]] drops a
-  *    `_graft_merge_pending` marker for the duration of the mutation;
-  *    a sink invocation that finds a stale marker REFUSES
-  *    ([[graft.operators.Layout.refuseIfPending]], checked BEFORE any
-  *    build-vs-merge dispatch) with a rebuild instruction instead of
-  *    corrupting the store. Build paths need no marker: they are
-  *    static overwrites, and their commit signal (stats/codebook
-  *    written last) means a half-built store simply rebuilds.
+  *    error). The operator that owns each store fences its own ingest:
+  *    it refuses a store carrying a stale `_graft_merge_pending` marker
+  *    BEFORE its build-vs-merge dispatch, and mutates an existing store
+  *    under the staged marker
+  *    ([[graft.operators.Layout.withPendingMarkerStaged]]) — so a sink,
+  *    a streaming append and a library call all refuse alike. Build
+  *    paths need no marker: they are static overwrites, and their commit
+  *    signal (stats/codebook written last) means a half-built store
+  *    simply rebuilds.
   *
   *  - A later batch run with DIFFERENT layout parameters (fielded flag,
   *    title window, chunk grain/bits, buckets) would merge components
@@ -651,12 +627,18 @@ private[graft] object IndexProtocol {
   * codebook is persisted back, so the index keeps the share audit's
   * balance as the corpus widens without ever re-laying-out.
   *
+  * Past config parsing, every batch is one call to
+  * [[graft.operators.Similarity.ingestIvfStoreAt]], which owns the
+  * marker refusal, the raw/PQ and flat/two-level dispatch, the
+  * cross-layout refusals, the meta columns, the rerank linkage and
+  * `grow`, and runs every append under one staged pending marker.
+  *
   * Concurrency contract: SINGLE-WRITER per index, like [[Bm25IndexSink]]
   * (append + codebook replace have no atomic check-and-swap); batches
   * must carry ids DISJOINT from the store — chain a `dedup-gate`
   * upstream when re-deliveries are possible. The codebook parquet is
   * written LAST on the build path, so its _SUCCESS marker is the
-  * store's commit signal (the indexExists discipline).
+  * store's commit signal.
   */
 object IvfIndexSink extends IndexSink {
   val info: PluginInfo = PluginInfo("ivf-index",
@@ -749,19 +731,7 @@ object IvfIndexSink extends IndexSink {
         Similarity.forgetIvfStoreAt(spark, path, tomb, idc,
           config.get("rerank_store_path").map(_.toString))
       }
-    val vc = config.getOrElse("vector_column", "embedding").toString
-    val twoLevel = config.getOrElse("two_level", true).toString.toBoolean
-    val maxShare = config.getOrElse("max_share_pct", 5.0).toString.toDouble
-    val grow = config.getOrElse("grow", false).toString.toBoolean
-    val quantizePq = config.getOrElse("quantize", "none").toString == "pq"
-    require(!(grow && !twoLevel),
-      "ivf-index: grow: true requires two_level: true")
-    // meta_columns: raw stores may carry filterable attribute columns so
-    // ann-search can PRE-filter candidates (`filter:`). Builds freeze the
-    // configured set into the layout; appends derive the set from the
-    // STORE's own schema (the frozen-geometry authority — a recipe must
-    // not be able to append ragged rows) and refuse a contradicting key.
-    val metaCfg: Seq[String] = config.get("meta_columns").map {
+    val metaCols: Seq[String] = config.get("meta_columns").map {
       case l: java.util.List[_] =>
         scala.jdk.CollectionConverters.ListHasAsScala(l).asScala
           .map(_.toString.trim).filter(_.nonEmpty).toSeq
@@ -770,159 +740,17 @@ object IvfIndexSink extends IndexSink {
       case l: Iterable[_] => l.map(_.toString.trim).filter(_.nonEmpty).toSeq
       case s => s.toString.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     }.getOrElse(Nil)
-    // validate() covers recipes; direct sink() calls must refuse too —
-    // silently ignoring the meta request would be worse than the error
-    require(!(quantizePq && metaCfg.nonEmpty),
-      "ivf-index: meta_columns pairs with raw-vector stores only (PQ " +
-        "codes rows carry no filterable attributes)")
-    val metaEff: Seq[String] =
-      if (quantizePq) Nil
-      else if (graft.operators.Layout.indexExists(spark,
-          s"$path/_graft_codebook")) {
-        val stored = Similarity.storeMetaCols(spark, path, idc, vc)
-        require(metaCfg.isEmpty || metaCfg.toSet == stored.toSet,
-          s"$path carries metadata columns [${stored.mkString(",")}] but " +
-            s"this batch is configured [${metaCfg.mkString(",")}] — " +
-            "ragged appends silently break filtered search. Align " +
-            "meta_columns with the store or drop the key (appends adopt " +
-            "the store's own set).")
-        stored
-      } else metaCfg
-    // one materialization serves the count, the codebook sizing scans,
-    // and the assignment pass — meta columns ride IN it, so the meta
-    // path pays no second checkpoint of the vector payload
-    val batch = df.select((Seq(idc, vc) ++ metaEff)
-      .map(org.apache.spark.sql.functions.col): _*).localCheckpoint()
-    val n = batch.count()
-    // an empty batch is a no-op, not a degenerate build: auto-sizing a
-    // codebook from zero rows has no geometry to freeze (and streaming
-    // recipes deliver empty micro-batches routinely)
-    if (n == 0) return 0L
-    // marked store ⇒ refuse before the dispatch (the Bm25IndexSink
-    // rationale: a crashed merge can have destroyed the codebook commit
-    // signal this dispatch keys on)
-    graft.operators.Layout.refuseIfPending(spark, path)
-    // quantize: pq — the billion-vector layout on the YAML surface: PQ
-    // codes routed by the two-level hierarchy. First batch trains the m
-    // subquantizers on a bounded deterministic sample and auto-sizes the
-    // router, persisting BOTH geometries inside the store
-    // (writePq2CodebooksAt — the commit signal); later batches reload
-    // the frozen pair and append codes. Erasure (mode: forget above)
-    // composes unchanged through the id sidecar.
-    // the raw and pq2 layouts carry DISJOINT commit signals
-    // (_graft_codebook vs _graft_pq2/...), so a quantize flag flipped
-    // against an existing store would sail into the BUILD branch and
-    // static-overwrite away the history — cross-check the OTHER
-    // layout's signal before any dispatch and refuse loudly instead
-    val rawExists = graft.operators.Layout.indexExists(spark,
-      s"$path/_graft_codebook")
-    val pq2Exists = graft.operators.Layout.indexExists(spark,
-      s"$path/_graft_pq2/subs/_graft_codebook")
-    if (config.getOrElse("quantize", "none").toString == "pq") {
-      require(!rawExists,
-        s"$path holds a RAW vector store — a quantize: pq batch cannot " +
-          "merge into it (codes and vectors are different layouts). " +
-          "Drop quantize or point the recipe at a fresh index_path.")
-      val m = config.getOrElse("pq_m", 8).toString.toInt
-      val kk = config.getOrElse("pq_k", 16).toString.toInt
-      // rerank_store_path: write the batch's EXACT vectors into the
-      // id-partitioned re-rank layout alongside the codes — what makes
-      // the codes store queryable from ann-search (ADC shortlists must
-      // re-rank against full-precision vectors the codes no longer carry)
-      val rerank = config.get("rerank_store_path").map(_.toString)
-      if (!pq2Exists) {
-        val sample = Similarity.normalized(
-            batch.select(org.apache.spark.sql.functions.col(idc),
-              org.apache.spark.sql.functions.col(vc).cast("array<double>")
-                .as("__u")), "__u")
-          .orderBy(org.apache.spark.sql.functions.xxhash64(
-            org.apache.spark.sql.functions.col(idc)),
-            org.apache.spark.sql.functions.col(idc))
-          .limit(4096).select(org.apache.spark.sql.functions.col("__u"))
-          .collect().map(_.getSeq[Double](0).toSeq).toSeq
-        val codebooks = Similarity.pqTrain(sample, m, kk)
-        val cb = Similarity.autoTwoLevelCodebook(batch, idc, vc,
-          maxSharePct = maxShare)
-        // vectors BEFORE codes (orphan vectors are never shortlisted —
-        // harmless; codes whose vectors are missing silently vanish at
-        // re-rank), linkage record BEFORE the codebook commit signal —
-        // a committed store always knows whether a sidecar pairs with it
-        rerank.foreach(rp =>
-          Similarity.writeVectorStore(batch, idc, vc, rp))
-        Similarity.writePqStoreTwoLevel(batch, idc, vc, cb, codebooks, path)
-        Similarity.writeRerankLinkAt(spark, path, rerank)
-        Similarity.writePq2CodebooksAt(spark, path, cb, codebooks)
-      } else {
-        val (cb, codebooks) = Similarity.readPq2CodebooksAt(spark, path)
-        // the store's recorded linkage drives the pairing: a key that
-        // contradicts the record refuses, a linked-but-unreachable
-        // sidecar refuses, and on a linked store an append may OMIT the
-        // key (the record wins) — appended vectors still land in the
-        // sidecar, so history never silently diverges from it
-        val link = Similarity.rerankLinkAt(spark, path)
-        val effRerank = Similarity.resolveRerankLink(spark, path, rerank)
-        // stores predating the linkage record keep the original guard:
-        // a rerank store bolted on AFTER history landed would silently
-        // miss every historical vector at re-rank time — refuse; it must
-        // ride along from the first batch (or the index rebuilds)
-        if (link.isEmpty) rerank.foreach { rp =>
-          require(Similarity.vectorStoreExistsAt(spark, rp),
-            s"$rp is not an initialized vector store but $path already " +
-              "holds history — a rerank store started mid-stream would " +
-              "silently miss the historical vectors. Rebuild the index " +
-              "with rerank_store_path set from the first batch.")
-        }
-        graft.operators.Layout.withPendingMarker(spark, path) {
-          // vectors BEFORE codes (the build-path rationale: a crash
-          // between the two must strand harmless orphan vectors, never
-          // committed codes whose exact vectors the re-rank cannot fetch)
-          effRerank.foreach(rp =>
-            Similarity.appendVectorStore(batch, idc, vc, rp))
-          Similarity.appendPqStoreTwoLevel(batch, idc, vc, cb, codebooks,
-            path)
-          // adopt the linkage onto a pre-record store once a batch names
-          // the sidecar and the guard above proved it initialized —
-          // POSITIVE knowledge only (an append that merely omits the key
-          // must not freeze "no sidecar" for a store that may have one)
-          if (link.isEmpty && rerank.isDefined)
-            Similarity.writeRerankLinkAt(spark, path, rerank)
-        }
-      }
-      return n
-    }
-    require(!pq2Exists,
-      s"$path holds a PQ-CODES store — a raw-vector batch cannot merge " +
-        "into it. Set quantize: pq (matching the store) or point the " +
-        "recipe at a fresh index_path.")
-    (twoLevel, rawExists) match {
-      case (true, false) =>
-        val cb = Similarity.writeIvfStoreTwoLevelAuto(batch, idc, vc, path,
-          maxSharePct = maxShare, metaCols = metaEff)
-        Similarity.writeCodebookAt(spark, path, cb)
-      case (true, true) =>
-        val cb = Similarity.readTwoLevelCodebookAt(spark, path)
-        graft.operators.Layout.withPendingMarker(spark, path) {
-          Similarity.appendIvfStoreTwoLevel(batch, idc, vc, cb, path,
-            metaCols = metaEff)
-          // persistTo writes the grown codebook BEFORE the directory
-          // rewrite (inside the split op), so a crash mid-grow never
-          // leaves rows in directories no persisted codebook names
-          if (grow)
-            Similarity.splitHotChildrenAt(spark, path, idc, vc, cb,
-              maxShare, persistTo = Some(path))
-        }
-      case (false, false) =>
-        val coarse = Similarity.writeIvfStoreAuto(batch, idc, vc, path,
-          maxSharePct = maxShare, metaCols = metaEff)
-        Similarity.writeCodebookAt(spark, path, coarse)
-      case (false, true) =>
-        val coarse = Similarity.readCoarseCodebookAt(spark, path)
-        graft.operators.Layout.withPendingMarker(spark, path) {
-          Similarity.appendIvfStore(batch, idc, vc, coarse, path,
-            metaCols = metaEff)
-        }
-    }
-    n
+    val quantize =
+      if (config.getOrElse("quantize", "none").toString != "pq") None
+      else Some((config.getOrElse("pq_m", 8).toString.toInt,
+        config.getOrElse("pq_k", 16).toString.toInt))
+    Similarity.ingestIvfStoreAt(spark, path, df, idc,
+      config.getOrElse("vector_column", "embedding").toString,
+      twoLevel = config.getOrElse("two_level", true).toString.toBoolean,
+      maxSharePct = config.getOrElse("max_share_pct", 5.0).toString.toDouble,
+      grow = config.getOrElse("grow", false).toString.toBoolean,
+      metaCols = metaCols, quantize = quantize,
+      rerankStorePath = config.get("rerank_store_path").map(_.toString))
   }
 }
 

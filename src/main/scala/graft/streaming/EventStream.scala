@@ -258,7 +258,10 @@ object EventStream {
     * Batch-split invariant by construction — assignment depends only on
     * the frozen codebook, never on other stream rows — so any
     * micro-batching yields the same stored rows and therefore identical
-    * query answers, pinned by the StreamingSpec parity test.
+    * query answers, pinned by the StreamingSpec parity test. Each
+    * micro-batch appends under the store's staged pending marker, so a
+    * store left marked by a crashed mutation fails the micro-batch, and
+    * an append that dies part-way leaves the marker behind.
     */
   def streamingIvfAppend(vectors: DataFrame, idCol: String, vecCol: String,
                          coarse: Seq[Seq[Double]], path: String,
@@ -349,9 +352,9 @@ object EventStream {
     }
 
   /** [[streamingIvfAppend]] for a TWO-LEVEL layout: identical contract
-    * (frozen codebook, per-micro-batch append, batch-split invariant),
-    * assignment through the two-level kernel so ingest stays O(2√C·d)
-    * per row at any codebook size.
+    * (frozen codebook, per-micro-batch fenced append, batch-split
+    * invariant), assignment through the two-level kernel so ingest stays
+    * O(2√C·d) per row at any codebook size.
     */
   def streamingIvfAppendTwoLevel(vectors: DataFrame, idCol: String,
       vecCol: String, cb: graft.operators.Similarity.TwoLevelCodebook,

@@ -1048,10 +1048,13 @@ class LayoutSpec extends SparkSpec {
     val started = new java.util.concurrent.CountDownLatch(1)
     val tried = new java.util.concurrent.CountDownLatch(4)
     val losers = new java.util.concurrent.atomic.AtomicInteger(0)
-    Layout.withPendingMarker(spark, path) {
+    // a mutation with nothing to prepare: `body` is its mutate phase
+    def fenced(body: => Unit): Unit =
+      Layout.withPendingMarkerStaged(spark, path)(())(_ => body)
+    fenced {
       val ts = (1 to 4).map(_ => new Thread(() => {
         started.await()
-        try Layout.withPendingMarker(spark, path)(())
+        try fenced(())
         catch { case _: IllegalArgumentException => losers.incrementAndGet() }
         tried.countDown()
       }))
@@ -1062,13 +1065,13 @@ class LayoutSpec extends SparkSpec {
     // raced the holder was refused, none slipped through
     assert(losers.get() == 4)
     // after the holder released, the next writer acquires cleanly
-    Layout.withPendingMarker(spark, path)(())
+    fenced(())
     // a body that THROWS leaves the marker for loud refusal on retry
     intercept[RuntimeException] {
-      Layout.withPendingMarker(spark, path)(throw new RuntimeException("die"))
+      fenced(throw new RuntimeException("die"))
     }
     intercept[IllegalArgumentException] {
-      Layout.withPendingMarker(spark, path)(())
+      fenced(())
     }
   }
 
@@ -1076,6 +1079,8 @@ class LayoutSpec extends SparkSpec {
       "(nothing written — the store stays mutable) and keeps it on a " +
       "MUTATE failure") {
     val path = java.nio.file.Files.createTempDirectory("staged").toString
+    def fenced(body: => Unit): Unit =
+      Layout.withPendingMarkerStaged(spark, path)(())(_ => body)
     // plan-time failure (cancelled job, OOM-killed stage): nothing was
     // written, so the marker must come back off — the store is untouched
     // and must not demand a manual rebuild
@@ -1084,7 +1089,7 @@ class LayoutSpec extends SparkSpec {
         { throw new RuntimeException("plan-time failure") })(identity)
     }
     Layout.refuseIfPending(spark, path) // no throw: store stays mutable
-    Layout.withPendingMarker(spark, path)(()) // and acquirable
+    fenced(()) // and acquirable
     // write-phase failure: some writes may have landed — marker stays
     intercept[RuntimeException] {
       Layout.withPendingMarkerStaged(spark, path)(42) { _ =>
@@ -1092,7 +1097,7 @@ class LayoutSpec extends SparkSpec {
       }
     }
     intercept[IllegalArgumentException] {
-      Layout.withPendingMarker(spark, path)(())
+      fenced(())
     }
     // prepare still runs UNDER the marker: a concurrent writer racing the
     // prepare phase is excluded, not interleaved
@@ -1102,7 +1107,7 @@ class LayoutSpec extends SparkSpec {
       false)
     Layout.withPendingMarkerStaged(spark, path)({
       intercept[IllegalArgumentException] {
-        Layout.withPendingMarker(spark, path)(())
+        fenced(())
       }
     })(_ => ())
   }
@@ -2550,7 +2555,7 @@ class RetrievalSpec extends SparkSpec {
     val marker = new org.apache.hadoop.fs.Path(path, "_graft_merge_pending")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.create(marker, false).close()
-    // both merge entry points refuse WITHOUT the sink wrapper — a crashed
+    // plain and fielded merges refuse WITHOUT the sink wrapper — a crashed
     // forget's marker must stop direct library merges too
     intercept[IllegalArgumentException] {
       Retrieval.mergeBm25StoreAt(spark, path,
@@ -2563,9 +2568,9 @@ class RetrievalSpec extends SparkSpec {
     val fmarker = new org.apache.hadoop.fs.Path(fpath, "_graft_merge_pending")
     fs.create(fmarker, false).close()
     intercept[IllegalArgumentException] {
-      Retrieval.mergeBm25fStoreAt(spark, fpath,
+      Retrieval.mergeBm25StoreAt(spark, fpath,
         Seq((3L, "more ducks")).toDF("doc_id", "text"), "doc_id", "text",
-        buckets = 2)
+        buckets = 2, fielded = true)
     }
     // cleared marker: the merge runs and releases its own marker after
     fs.delete(marker, false)
@@ -5144,8 +5149,8 @@ class Bm25FieldedSpec extends SparkSpec {
     assert(viaMerged.nonEmpty && viaMerged == viaInline)
   }
 
-  test("mergeBm25fStoreAt persists a fielded merge identical to a rebuild") {
-    // the fielded sibling of mergeBm25StoreAt's pin: postings append +
+  test("fielded mergeBm25StoreAt persists a merge identical to a rebuild") {
+    // the fielded sibling of the plain merge's pin: postings append +
     // stats replacement in place, re-read equals a from-scratch fielded
     // build — components AND the stored ranking
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
@@ -5154,9 +5159,10 @@ class Bm25FieldedSpec extends SparkSpec {
       .createTempDirectory("bm25fmergeat").toString
     Retrieval.writeBm25fStore(docs.filter(col("doc_id") < 250),
       "doc_id", "text", path, titleTokens = 8, buckets = 4)
-    Retrieval.mergeBm25fStoreAt(spark, path,
-      docs.filter(col("doc_id") >= 250), "doc_id", "text",
-      titleTokens = 8, buckets = 4)
+    assert(Retrieval.mergeBm25StoreAt(spark, path,
+      docs.filter(col("doc_id") >= 250), "doc_id", "text", buckets = 4,
+      fielded = true, titleTokens = 8) ==
+      docs.filter(col("doc_id") >= 250).count())
     val merged = Retrieval.readBm25fStore(spark, path)
     val rbPath = java.nio.file.Files
       .createTempDirectory("bm25fmerge_rb").toString
