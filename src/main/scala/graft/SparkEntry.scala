@@ -1317,16 +1317,13 @@ object SparkEntry {
 
   private def tfidfTopTerms(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // classic tf-idf keyword extraction: top-3 terms per doc. One token
-    // explode feeds both tf and df; N arrives as a broadcast 1-row frame;
+    // classic tf-idf keyword extraction: top-3 terms per doc. One map-side
+    // term count feeds both tf and df; N arrives as a broadcast 1-row frame;
     // ranking is on the ROUNDED score so both engines rank identical values
     val docs = t(s, dir, "documents")
-    val toks = docs.select(col("doc_id"),
-      explode(TextAnalysis.tokens(lower(col("text")))).as("term"))
-    val tf = toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+    val tf = TextAnalysis.termFrequencies(docs, "doc_id", lower(col("text")))
     // df = docs containing the term = tf's row count per term: derived from
-    // tf instead of a second explode+distinct, so the (doc_id, term)
-    // exchange is computed once and reused (ReusedExchange) by both branches
+    // tf instead of a second explode+distinct
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
     val scored = tf.join(dfreq, "term").crossJoin(broadcast(n))

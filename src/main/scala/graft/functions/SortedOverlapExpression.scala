@@ -25,7 +25,9 @@ import org.apache.spark.sql.types._
   * `sort_array` produces for strings), elements distinct and non-null
   * (the `array_distinct` the verify paths already apply). Unsorted input
   * would under-count — callers own the sort, which is why this is not a
-  * general `array_intersect` replacement.
+  * general `array_intersect` replacement. An array type that admits null
+  * elements is refused at analysis time ([[StringArrays]]): the merge
+  * would throw on the first null it met, on an executor.
   */
 object SortedOverlapKernel {
   def overlap(a: ArrayData, b: ArrayData): Long = {
@@ -46,11 +48,12 @@ case class SortedOverlapCount(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
+      case (StringArrays.NonNull, StringArrays.NonNull) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<string>, array<string>), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
+        s"$prettyName expects (array<string>, array<string>) with non-null " +
+          s"elements, got (${StringArrays.describe(l)}, " +
+          s"${StringArrays.describe(r)})")
     }
 
   override def dataType: DataType = LongType

@@ -211,7 +211,7 @@ object Classify {
         .agg(count(lit(1)).as("__ndadd"))
       val newNd = spark.read.parquet(s"$path/base")
         .select(col("label"), col("nd"))
-        .join(broadcast(ndAdd), Seq("label"), "full_outer")
+        .join(ndAdd, Seq("label"), "full_outer")
         .select(col("label"),
           (coalesce(col("nd"), lit(0L)) + coalesce(col("__ndadd"), lit(0L)))
             .as("nd"))
@@ -302,9 +302,8 @@ object Classify {
     */
   def nbPredict(test: DataFrame, model: DataFrame, base: DataFrame,
                 idCol: String, textCol: String): DataFrame = {
-    val tf = test.select(col(idCol),
-        explode(TextAnalysis.tokens(lower(trim(col(textCol))))).as("term"))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
+    val tf = TextAnalysis.termFrequencies(test, idCol,
+      lower(trim(col(textCol))))
     val lift = tf.join(broadcast(model.select(col("label"), col("term"), col("w"))),
         Seq("term"))
       .groupBy(col(idCol), col("label"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -725,12 +726,13 @@ object Dedup {
   def portableShingleWindows(tk: Column): Column =
     // guard: Spark's sequence(1, n) runs DESCENDING for n < 1, so a short
     // doc must yield an empty set explicitly (DuckDB's range(1, n) is
-    // simply empty there)
+    // simply empty there). The empty branch keeps the windows' non-null
+    // element type: the compiled set kernels refuse arrays that admit nulls
     when(size(tk) >= 3,
         transform(sequence(lit(1), size(tk) - 2), i =>
           concat_ws(" ", element_at(tk, i), element_at(tk, i + 1),
             element_at(tk, i + 2))))
-      .otherwise(array().cast("array<string>"))
+      .otherwise(array().cast(ArrayType(StringType, containsNull = false)))
 
   /** Portable tokenization: lowercase, `\s+` split, empties dropped —
     * matches `regexp_split_to_array(lower(trim(x)), '\s+')` + filter in
@@ -796,14 +798,40 @@ object Dedup {
     * plain decimal in every engine). Emits `(id, band_id, band_hash)`
     * ready for [[candidatePairs]]. */
   def portableBands(sigs: DataFrame, idCol: String, k: Int,
-                    bands: Int): DataFrame = {
+                    bands: Int): DataFrame =
+    sigs.select(col(idCol).as("id"),
+      posexplode(bandKeysOf(p => col(s"sig$p"), k, bands))
+        .as(Seq("band_id", "band_hash")))
+
+  /** The [[portableBands]] keys of one signature (`sig(p)` its p-th
+    * value), as an array indexed by band. */
+  private def bandKeysOf(sig: Int => Column, k: Int, bands: Int): Column = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val r = k / bands
-    val keys = array((0 until bands).map { b =>
-      md5(concat_ws(":", (0 until r).map(i => col(s"sig${b * r + i}")): _*))
+    array((0 until bands).map { b =>
+      md5(concat_ws(":", (0 until r).map(i => sig(b * r + i)): _*))
     }: _*)
-    sigs.select(col(idCol).as("id"),
-      posexplode(keys).as(Seq("band_id", "band_hash")))
+  }
+
+  /** Every row and column of `df`, plus `keysCol`: the row's
+    * [[portableBands]] keys — those of its [[portableMinhash]] signature —
+    * as one array, EMPTY for a doc with fewer than 3 tokens (no shingles,
+    * so no bands). Exploding the column with its position gives the doc's
+    * (band_id, band_hash) rows, so a caller that gates a batch against a
+    * band index and then indexes the survivors signs the batch once.
+    * Staged like [[portableMinhash]]: the tokens get their own projection,
+    * so the window lambda never re-runs the tokenizer.
+    */
+  def withPortableBandKeys(df: DataFrame, textCol: String, k: Int,
+                           bands: Int, keysCol: String): DataFrame = {
+    val keep = df.columns.toSeq.map(c => col(s"`$c`"))
+    df.select(keep :+ portableTokens(col(textCol)).as("__tk"): _*)
+      .select(keep :+ col("__tk") :+ graft.functions.PortableMinHash(
+        portableShingleWindows(col("__tk")), k).as("__mh"): _*)
+      .select(keep :+ when(size(col("__tk")) >= 3,
+          bandKeysOf(p => element_at(col("__mh"), p + 1), k, bands))
+        .otherwise(array().cast(ArrayType(StringType, containsNull = false)))
+        .as(keysCol): _*)
   }
 
   /** Incremental perceptual-hash ingest gate — [[lshIngest]] for 64-bit
@@ -876,13 +904,22 @@ object Dedup {
     * in [[graft.streaming.EventStream.streamingLshIngest]]).
     */
   def lshIngest(batch: DataFrame, indexBands: DataFrame, idCol: String,
-                textCol: String, k: Int = 8, nBands: Int = 4): DataFrame = {
-    val hits = portableBands(portableMinhash(batch, idCol, textCol, k),
-        idCol, k, nBands)
+                textCol: String, k: Int = 8, nBands: Int = 4): DataFrame =
+    lshSurvivors(batch.select(col(idCol)), portableBands(
+      portableMinhash(batch, idCol, textCol, k), idCol, k, nBands),
+      indexBands, idCol)
+
+  /** The [[lshIngest]] gate over band rows the caller already has
+    * (`batchBands`: (id, band_id, band_hash) of the batch's docs): the
+    * rows of `batch`, every column kept, whose id has no band key in the
+    * index — for a caller that also appends those bands, so the batch is
+    * signed once. */
+  def lshSurvivors(batch: DataFrame, batchBands: DataFrame,
+                   indexBands: DataFrame, idCol: String): DataFrame = {
+    val hits = batchBands
       .join(indexBands, Seq("band_id", "band_hash"), "left_semi")
       .select(col("id")).distinct()
-    batch.select(col(idCol))
-      .join(hits, col(idCol) === hits("id"), "left_anti")
+    batch.join(hits, col(idCol) === hits("id"), "left_anti")
   }
 
   /** MinHash calibration audit: for every LSH candidate pair, the sketch

@@ -20,9 +20,9 @@ import org.apache.spark.sql.types._
   * from the SAME integer statistics through the SAME expressions, inline
   * and stored spellings are row-identical by construction.
   *
-  * Scale: corpus statistics are one explode + partially-aggregated groupBys
-  * (tf reused for dl and df via ReusedExchange, the tf-idf shape); the
-  * query term set is broadcast, so only (doc, term) rows matching some
+  * Scale: tf and dl are counted per document map-side (one projection,
+  * no shuffle — [[postingsRaw]]), df is one partially-aggregated groupBy
+  * over those postings; the query term set is broadcast, so only (doc, term) rows matching some
   * query term ever reach the scoring join, and the final top-k is a
   * row_number window that plans as WindowGroupLimit — the corpus text is
   * read once and never re-shuffled. With a WRITTEN store
@@ -58,22 +58,41 @@ object Retrieval {
   }
 
   /** Raw postings: one row per (doc, term) with term frequency `tf` and
-    * document length `dl` (the doc-length join paid once here, not per
-    * query). Exact integers only; no floats are frozen anywhere in the
-    * store, so k1/b stay query-time knobs. Document frequency
-    * deliberately lives in its OWN table ([[dfreqOf]]): denormalizing df
-    * onto postings would make every old row stale the moment a new doc
-    * mentions its term — this split is what makes the store mergeable.
+    * document length `dl`, both bigint. One projection over the corpus:
+    * the [[docTerms]] frame inlined, so neither tf nor dl costs a shuffle
+    * (each is a value of one document). Exact integers only; no floats
+    * are frozen anywhere in the store, so k1/b stay query-time knobs.
+    * Document frequency deliberately lives in its OWN table
+    * ([[dfreqOf]]): denormalizing df onto postings would make every old
+    * row stale the moment a new doc mentions its term — this split is
+    * what makes the store mergeable.
     */
   def postingsRaw(corpus: DataFrame, idCol: String,
-                  textCol: String): DataFrame = {
-    val tf = corpus.select(col(idCol),
-        explode(TextAnalysis.tokens(lower(trim(col(textCol))))).as("term"))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, Seq(idCol))
-      .select(col(idCol), col("term"), col("tf"), col("dl"))
-  }
+                  textCol: String): DataFrame =
+    postingsOf(docTerms(corpus, idCol, textCol), idCol)
+
+  /** A document's tokens; a null text tokenizes to the empty array, so
+    * every per-document count below reads 0 for it. */
+  private def docTokens(textCol: String): Column =
+    coalesce(TextAnalysis.tokens(lower(trim(col(textCol)))),
+      array().cast(ArrayType(StringType, containsNull = false)))
+
+  /** One row per document, map-side: `terms` its (term, tf) list
+    * ([[graft.functions.TermCounts]]) and `dl` its token count (bigint).
+    * Each corpus row is one document — ids are unique, as every corpus,
+    * chunk-cid frame and arriving batch here is keyed. A zero-token or
+    * null-text doc keeps its row with an empty list and dl 0: it still
+    * counts in n_docs and in the id sidecar, and yields no postings.
+    */
+  private def docTerms(corpus: DataFrame, idCol: String,
+                       textCol: String): DataFrame =
+    corpus.select(col(idCol), docTokens(textCol).as("__tk"))
+      .select(col(idCol), graft.functions.TermCounts(col("__tk")).as("terms"),
+        size(col("__tk")).cast("bigint").as("dl"))
+
+  /** The postings rows (id, term, tf, dl) of a [[docTerms]] frame. */
+  private def postingsOf(docs: DataFrame, idCol: String): DataFrame =
+    docs.select(col(idCol), inline(col("terms")), col("dl"))
 
   /** (term, df) document frequencies from a raw postings stream. */
   def dfreqOf(postings: DataFrame): DataFrame =
@@ -166,13 +185,14 @@ object Retrieval {
     scoredOf(contribOf(corpus, queries, idCol, textCol, qIdCol, qTextCol,
       k1, b), idCol)
 
-  /** The inline contribution stream: tf/dl/df/stats aggregates over the
-    * corpus, query-term broadcast semi-restriction, fixed-point math. */
+  /** The inline contribution stream: the corpus postings (tf and dl per
+    * document, map-side), df/stats aggregates over them, query-term
+    * broadcast semi-restriction, fixed-point math. */
   private def contribOf(corpus: DataFrame, queries: DataFrame,
                         idCol: String, textCol: String,
                         qIdCol: String, qTextCol: String,
                         k1: Double, b: Double): DataFrame = {
-    // the tokenize→tf aggregate MATERIALIZES once (optimization round 16):
+    // the corpus postings MATERIALIZE once (optimization round 16):
     // dfreq and stats sit inside broadcast builds below, and Spark does no
     // stage reuse across broadcast-subtree boundaries, so the un-checkpointed
     // plan recomputed this subtree — a full corpus tokenize — once per
@@ -181,29 +201,22 @@ object Retrieval {
     // tokenize plus the column-pruned n_docs count on the corpus. Same-JVM
     // A/B min-of-5: d_bm25_topk 2.33→2.19 s, d_bm25_prf 4.11→3.21 s,
     // row-identical hashes at sf0.001 and sf0.1
-    // (f5c0667:probes/ScratchTfAB.scala).
-    // (Round 15's E1 rejection checkpointed the POSTINGS frame — after the
-    // dl join — and routed through the stored-path expressions; the
-    // tf-level checkpoint with the unchanged scoring shape measures ahead.)
-    val tf = corpus.select(col(idCol),
-        explode(TextAnalysis.tokens(lower(trim(col(textCol))))).as("term"))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .pipe(maybeCkpt)
-    val dl = tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
+    // (f5c0667:probes/ScratchTfAB.scala). The postings count tf and dl per
+    // document map-side ([[postingsRaw]]), so neither an (id, term)
+    // aggregate nor a dl aggregate and its join run here.
+    val tf = postingsRaw(corpus, idCol, textCol).pipe(maybeCkpt)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = corpus.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(dl.agg(sum(col("dl")).as("tot")))
+      .crossJoin(tf.agg(sum(col("tf")).as("tot")))
     // ONE fused broadcast (the scoresStoredOf move): query terms, their
     // df rows, and the 1-row stats collapse into a |query-terms|-row
-    // broadcast, so the corpus-sized tf stream pays one term join + the
-    // dl join instead of four joins. Inner semantics unchanged: a hit
-    // term always has a dfreq row. Only (doc, term) rows matching some
-    // query term reach the float math, as before.
+    // broadcast, so the corpus-sized postings stream pays one term join.
+    // Inner semantics unchanged: a hit term always has a dfreq row. Only
+    // (doc, term) rows matching some query term reach the float math.
     val qmeta = queryTerms(queries, qIdCol, qTextCol)
       .join(dfreq, Seq("term"))
       .crossJoin(broadcast(stats))
     tf.join(broadcast(qmeta), Seq("term"))
-      .join(dl, Seq(idCol))
       .withColumn("c", contribExpr(k1, b))
   }
 
@@ -220,10 +233,10 @@ object Retrieval {
     * rounds ONCE to 1e6 fixed point — the same exactness discipline as
     * [[bm25TopK]], so the oracle replays it bit-for-bit.
     *
-    * Scale shape identical to [[bm25TopK]]: the field tag rides the one
-    * token explode (two slices of the same materialized array), the
-    * per-(doc, field) aggregates partial-combine, avgdl is a 2-row
-    * broadcast, and only query-term rows reach the float math.
+    * Scale shape identical to [[bm25TopK]]: the two fields are two slices
+    * of the one token array, each counted per document map-side
+    * ([[fieldTerms]]), avgdl is a 2-row broadcast, and only query-term
+    * rows reach the float math.
     */
   def bm25fTopK(corpus: DataFrame, queries: DataFrame,
                 idCol: String, textCol: String,
@@ -246,53 +259,58 @@ object Retrieval {
                               bucketed: Option[DataFrame] = None,
                               buckets: Option[Int] = None)
 
-  /** Build the fielded components inline (the [[bm25fTopK]] body).
-    *
-    * Field split in ONE tokenize pass (optimization round 15): a token's
-    * field IS its position — posexplode the token array once and tag
-    * `pos < titleTokens` as title instead of unioning two slices of two
-    * separate tokenize branches. The union spelling scanned and
-    * tokenized the corpus twice per plan instance (and the inline query
-    * plan carries this subtree in several broadcast subtrees, each
-    * paying both); the positional tag produces the identical (id, f,
-    * term) multiset — first `titleTokens` tokens title, rest body —
-    * from half the scans. Same-JVM A/B on d_bm25f_topk: 4.53 s → 3.42 s
-    * min-of-4, row-identical hashes at sf0.001 and sf0.1.
+  /** Build the fielded components inline (the [[bm25fTopK]] and
+    * [[bm25fApplyDelta]] body): the corpus's [[fieldTerms]] frame,
+    * materialized once through the query-path gate ([[maybeCkpt]]) —
+    * every consumer (the hit stream, the whole-doc df inside the qmeta
+    * broadcast build, the stats build) otherwise re-runs the tokenize per
+    * broadcast subtree — then [[bm25fComponentsOf]].
     */
   private def bm25fComponents(corpus: DataFrame, idCol: String,
-                              textCol: String, titleTokens: Int,
-                              forceMaterialize: Boolean = false): Bm25fStore = {
-    val tf = corpus.select(col(idCol),
-        posexplode(TextAnalysis.tokens(lower(trim(col(textCol)))))
-          .as(Seq("__p", "term")))
-      .select(col(idCol),
-        when(col("__p") < titleTokens, lit("t")).otherwise(lit("b")).as("f"),
-        col("term"))
-      .groupBy(col(idCol), col("f"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dlf = tf.groupBy(col(idCol), col("f")).agg(sum(col("tf")).as("dl"))
-    // the fielded postings MATERIALIZE once (optimization round 16, the
-    // contribOf move): every consumer — the hits stream, the whole-doc
-    // dfreq inside the qmeta broadcast build, the stats build, a store
-    // write's postings/sidecar/stats actions — otherwise re-runs the
-    // tokenize + two aggregates per broadcast subtree / per action
-    // (d_bm25f_topk planned 22 parquet scans, d_bm25f_incremental 42).
-    // Same-JVM A/B min-of-5: d_bm25f_topk 3.37→3.30 s (and the rep
-    // spread tightens 3.4–6.4 → 3.3–4.4), d_bm25f_incremental flat wall
-    // locally (duplicates overlapped on idle cores) with the duplicate
-    // CPU gone; row-identical hashes at two SFs
-    // (f5c0667:probes/ScratchTfAB.scala).
-    val postings = tf.join(dlf, Seq(idCol, "f"))
-      .select(col(idCol), col("f"), col("term"), col("tf"), col("dl"))
-      .pipe(p => if (forceMaterialize) p.localCheckpoint() else maybeCkpt(p))
-    // avgdl_f denominator counts ALL docs (zero-token docs too, the
-    // corpusStats convention) — so stats carries n_docs alongside tot_f.
-    // tot_f off the materialized postings: Σ_(id,term) tf per field ==
-    // Σ_id dl_f per field (dl is Σ tf by construction) — the same
-    // integers the dlf spelling produced, and the identity the persisted
-    // fielded merge (mergeBm25StoreAt's addStats) already relies on.
-    val nDocs = corpus.agg(count(lit(1)).as("n_docs"))
-    val stats = postings.groupBy(col("f")).agg(sum(col("tf")).as("tot_f"))
+                              textCol: String, titleTokens: Int): Bm25fStore =
+    bm25fComponentsOf(
+      maybeCkpt(fieldTerms(corpus, idCol, textCol, titleTokens)), idCol)
+
+  /** One row per document, map-side: `fields` holds the title slice (the
+    * first `titleTokens` tokens) and the body slice (the rest) of the ONE
+    * token array, each as (f, its (term, tf) list, dl = the slice's size).
+    * A token's field is its position, so this is the same (id, f, term)
+    * multiset the positional tag gave, without the (id, f, term) and
+    * (id, f) shuffles or the dl join.
+    */
+  private def fieldTerms(corpus: DataFrame, idCol: String, textCol: String,
+                         titleTokens: Int): DataFrame = {
+    val tk = col("__tk")
+    def field(f: String, slice: Column): Column =
+      struct(lit(f).as("f"), graft.functions.TermCounts(slice).as("terms"),
+        size(slice).cast("bigint").as("dl"))
+    corpus.select(col(idCol), docTokens(textCol).as("__tk"))
+      .select(col(idCol), array(
+        field("t", slice(tk, lit(1), lit(titleTokens))),
+        field("b", slice(tk, lit(titleTokens + 1),
+          greatest(size(tk) - titleTokens, lit(0))))).as("fields"))
+  }
+
+  /** A document's distinct terms across both fields of a [[fieldTerms]]
+    * frame. */
+  private val fieldedTermsCol: Column =
+    flatten(col("fields.terms")).getField("term")
+
+  /** The fielded components of a [[fieldTerms]] frame: postings
+    * (id, f, term, tf, dl) — a field with no tokens yields no rows — and
+    * stats (f, n_docs, tot_f). tot_f is Σ dl_f over the docs with tokens
+    * in f (== Σ tf of f's postings, the identity the persisted fielded
+    * merge relies on), so a field no doc has tokens in gets no stats row;
+    * n_docs counts EVERY doc (zero-token docs too, the corpusStats
+    * convention: avgdl_f's denominator).
+    */
+  private def bm25fComponentsOf(docs: DataFrame, idCol: String): Bm25fStore = {
+    val fields = docs.select(col(idCol), explode(col("fields")).as("__fd"))
+    val postings = fields.select(col(idCol), col("__fd.f").as("f"),
+      inline(col("__fd.terms")), col("__fd.dl").as("dl"))
+    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+    val stats = fields.filter(col("__fd.dl") > 0)
+      .groupBy(col("__fd.f").as("f")).agg(sum(col("__fd.dl")).as("tot_f"))
       .crossJoin(broadcast(nDocs))
       .select(col("f"), col("n_docs"), col("tot_f"))
     Bm25fStore(postings, stats)
@@ -302,18 +320,22 @@ object Retrieval {
     * rows, term-hashed files) and `path/stats` (2 rows). The same
     * displacement [[writeBm25Store]] gives plain BM25: every query after
     * ingest reads only the store — no re-tokenize, no field re-split.
+    * The batch is tokenized once into its checkpointed [[fieldTerms]]
+    * frame, which the postings, the id sidecar and the stats all read.
     */
   def writeBm25fStore(corpus: DataFrame, idCol: String, textCol: String,
                       path: String, titleTokens: Int = 8,
                       buckets: Int = 16): Unit = {
-    val c = bm25fComponents(corpus, idCol, textCol, titleTokens)
+    val docs = fieldTerms(corpus, idCol, textCol, titleTokens)
+      .localCheckpoint()
+    val c = bm25fComponentsOf(docs, idCol)
     c.postings.withColumn("bucket", termBucket(buckets))
       .repartition(buckets, col("bucket"))
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/postings")
-    writeDocsSidecar(corpus, idCol, s"$path/docs", buckets, "overwrite",
-      c.postings)
+    writeSidecarRows(docsSidecarRows(docs, idCol, buckets, fieldedTermsCol),
+      s"$path/docs", "overwrite")
     writeLayoutMeta(corpus.sparkSession, path, buckets)
     c.stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
   }
@@ -407,8 +429,8 @@ object Retrieval {
     * |Q|·fbDocs rows against the tf stream (broadcast); term mining is
     * one WindowGroupLimit over the per-query candidate terms; pass 2 is
     * the same restricted scoring with a slightly larger broadcast term
-    * set. The corpus aggregates (tf/dl/df/stats) are IDENTICAL subplans
-    * in both passes, so the exchanges are built once and reused.
+    * set. The postings (tf and dl per document, map-side) materialize
+    * once and feed both passes, the mining, df and stats.
     */
   def bm25PrfTopK(corpus: DataFrame, queries: DataFrame,
                   idCol: String, textCol: String,
@@ -422,23 +444,18 @@ object Retrieval {
     // without the checkpoint the plan recomputed the corpus tokenize once
     // per broadcast subtree (32 parquet scans in the r15 plan). Same-JVM
     // A/B min-of-5: 4.11 s → 3.21 s, row-identical hashes at two SFs.
-    val tf = corpus.select(col(idCol),
-        explode(TextAnalysis.tokens(lower(trim(col(textCol))))).as("term"))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .pipe(maybeCkpt)
-    val dl = tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
+    // The frame is the postings, dl included ([[postingsRaw]]).
+    val tf = postingsRaw(corpus, idCol, textCol).pipe(maybeCkpt)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // corpusStats carries the coalesce(sum,0) guard: a corpus whose docs
     // all tokenize empty must yield empty results, not NULL-total scores
     val stats = corpusStats(corpus, tf)
     val qt = queryTerms(queries, qIdCol, qTextCol)
     // fused broadcast per pass (the scoresStoredOf move): term set ⋈ df
-    // ⋈× stats ride ONE broadcast onto the tf stream — both ranking
-    // passes keep their identical tf/dl subplans (exchange reuse intact)
+    // ⋈× stats ride ONE broadcast onto the postings stream
     def scoreOf(terms: DataFrame): DataFrame =
       tf.join(broadcast(terms.join(dfreq, Seq("term"))
           .crossJoin(broadcast(stats))), Seq("term"))
-        .join(dl, Seq(idCol))
         .withColumn("c", contribExpr(k1, b))
         .groupBy(col("q_id"), col(idCol)).agg(sum(col("c")).as("score"))
     // pass 1: feedback set
@@ -532,35 +549,25 @@ object Retrieval {
     * makes forget idempotent and exact for ids never ingested.
     *
     * Each row additionally carries `tbuckets`: the doc's DISTINCT
-    * postings-bucket list, recorded at ingest off the same batch postings
-    * being written. This is what lets the forget FINDER restrict its
-    * hit-row scan to exactly the tombstoned docs' term-hash directories
-    * instead of every postings bucket — the `_graft_ids` sidecar
-    * discipline, applied to the lexical layout (the round-13 IVF fix's
-    * missing postings half). Zero-token docs carry an empty list. Rows
-    * sort by id within files so the tombstone semi-join row-group-prunes.
+    * postings-bucket list, ascending, recorded at ingest from the doc's
+    * own terms (`terms`, an array<string> column of the per-document
+    * frame `docs`: [[docTerms]] or [[fieldTerms]]) — the buckets its
+    * postings rows land in. This is what lets the forget FINDER restrict
+    * its hit-row scan to exactly the tombstoned docs' term-hash
+    * directories instead of every postings bucket — the `_graft_ids`
+    * sidecar discipline, applied to the lexical layout (the round-13 IVF
+    * fix's missing postings half). Zero-token docs carry an empty list.
+    * Rows sort by id within files so the tombstone semi-join
+    * row-group-prunes.
     */
-  private def docsSidecarRows(ids: DataFrame, idCol: String, buckets: Int,
-                              postings: DataFrame): DataFrame = {
-    val tb = postings
-      .select(col(idCol), termBucket(buckets).as("__tb"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(col("__tb"))).as("tbuckets"))
-    ids.select(col(idCol))
-      .join(tb, Seq(idCol), "left_outer")
-      .select(col(idCol),
-        coalesce(col("tbuckets"),
-          array().cast("array<int>")).as("tbuckets"))
+  private def docsSidecarRows(docs: DataFrame, idCol: String, buckets: Int,
+                              terms: Column): DataFrame =
+    docs.select(col(idCol),
+        sort_array(array_distinct(transform(terms,
+          t => pmod(xxhash64(t), lit(buckets)).cast("int")))).as("tbuckets"))
       .withColumn("dbucket", idBucket(idCol, buckets))
       .repartition(math.min(buckets, 4), col("dbucket"))
       .sortWithinPartitions(col("dbucket"), col(idCol))
-  }
-
-  private def writeDocsSidecar(ids: DataFrame, idCol: String, path: String,
-                               buckets: Int, mode: String,
-                               postings: DataFrame): Unit =
-    writeSidecarRows(docsSidecarRows(ids, idCol, buckets, postings), path,
-      mode)
 
   private def writeSidecarRows(rows: DataFrame, path: String,
                                mode: String): Unit =
@@ -571,13 +578,16 @@ object Retrieval {
     * directory and mutations stay per-directory), `path/dfreq`
     * ((term, df)), `path/docs` (the erasure id sidecar), `path/stats`
     * (one row, written LAST — its _SUCCESS is the commit signal).
-    * Building costs the same three aggregates as an inline query; every
-    * query after reads ONLY this store, and new corpus drops merge in
-    * via [[bm25ApplyDelta]] without touching historical text.
+    * The corpus is tokenized once, into its checkpointed [[docTerms]]
+    * frame; the postings, sidecar and stats read that frame, df the
+    * written postings.
+    * Every query after reads ONLY this store, and new corpus drops merge
+    * in via [[bm25ApplyDelta]] without touching historical text.
     */
   def writeBm25Store(corpus: DataFrame, idCol: String, textCol: String,
                      path: String, buckets: Int = 16): Unit = {
-    val post = postingsRaw(corpus, idCol, textCol)
+    val docs = docTerms(corpus, idCol, textCol).localCheckpoint()
+    val post = postingsOf(docs, idCol)
     // term-sorted within each bucket file: parquet row-group min/max on
     // term then lets a term-restricted read skip row groups INSIDE the
     // hit bucket too — directory pruning picks the bucket, statistics
@@ -587,20 +597,23 @@ object Retrieval {
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/postings")
-    val stored = post.sparkSession.read.parquet(s"$path/postings")
-      .drop("bucket")
-    dfreqOf(stored).repartition(math.min(buckets, 4), col("term"))
+    // df off the WRITTEN postings, which arrive term-sorted per bucket, so
+    // the df files come out in the same row order whatever order the
+    // batch's docs arrived in
+    dfreqOf(corpus.sparkSession.read.parquet(s"$path/postings"))
+      .repartition(math.min(buckets, 4), col("term"))
       .write.mode("overwrite").parquet(s"$path/dfreq")
-    // sidecar off the READ-BACK postings like dfreq/stats (optimization
-    // round 16): the un-written `post` frame re-ran the whole tokenize +
-    // aggregates per consuming action — same rows either way, one corpus
-    // tokenize per store build instead of two
-    writeDocsSidecar(corpus, idCol, s"$path/docs", buckets, "overwrite",
-      stored)
+    writeSidecarRows(docsSidecarRows(docs, idCol, buckets,
+      col("terms.term")), s"$path/docs", "overwrite")
     writeLayoutMeta(corpus.sparkSession, path, buckets)
-    corpusStats(corpus, stored)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+    docCounts(docs).write.mode("overwrite").parquet(s"$path/stats")
   }
+
+  /** The [[corpusStats]] pair of a [[docTerms]] frame in one aggregate:
+    * n_docs its row count (zero-token docs included), tot Σ dl. */
+  private def docCounts(docs: DataFrame): DataFrame =
+    docs.agg(count(lit(1)).as("n_docs"),
+      coalesce(sum(col("dl")), lit(0L)).as("tot"))
 
   /** Handles onto a written store. The physical bucket partition column
     * is dropped on read: it is derivable from term, and keeping the
@@ -621,8 +634,10 @@ object Retrieval {
 
   /** Fold a batch of NEW documents (ids disjoint from the store — the
     * arriving-batch contract every incremental gate in this engine
-    * shares) into a BM25 store: postings union, df integer adds via one
-    * full-outer merge on term, stats adds. Pure multiset arithmetic, so
+    * shares) into a BM25 store: postings union (the batch's
+    * [[postingsRaw]], tf and dl counted per document map-side), df
+    * integer adds via one full-outer merge on term, stats adds. Pure
+    * multiset arithmetic, so
     * the merge is associative and batch-split invariant, and the merged
     * store is ROW-IDENTICAL to rebuilding from scratch on the combined
     * corpus — which is exactly what the d_bm25_incremental oracle
@@ -633,9 +648,9 @@ object Retrieval {
     // the batch postings MATERIALIZE once (optimization round 16, the
     // contribOf move): the un-checkpointed frame was recomputed — a full
     // batch tokenize each — in the scoring stream, inside mergedDfreq's
-    // broadcast build and inside mergedStats' broadcast build
-    // (d_bm25_incremental planned 22 parquet scans). Row-identical by
-    // construction: same frame, same downstream expressions.
+    // broadcast build and inside mergedStats' broadcast build.
+    // Row-identical by construction: same frame, same downstream
+    // expressions.
     val addP = maybeCkpt(postingsRaw(added, idCol, textCol))
     Bm25Store(store.postings.unionByName(addP),
       mergedDfreq(store.dfreq, addP),
@@ -686,15 +701,20 @@ object Retrieval {
     * frozen bucket modulus wins over `buckets`: rows appended under
     * another modulus would be invisible to the pruned query join.
     *
-    * The plain merge reads the batch twice (tokenize, sidecar ids): pass
-    * a materialized frame, as the sink does. Its PREPARE runs the
-    * `_graft_layout`/`stats` reads (known schemas, no inference job)
-    * beside the batch tokenize, then the merged df table beside the
-    * sidecar rows and the one aggregate that gives the batch's (n_docs,
-    * tot) — so the count needs no job; MUTATE runs the postings append,
+    * Both merges read the batch ONCE: it is tokenized into one
+    * checkpointed per-document frame ([[docTerms]], or [[fieldTerms]]
+    * when fielded) — a single job with no exchange — and the postings
+    * append, the sidecar rows (each doc's term buckets from its own
+    * terms) and the batch counts all read that frame. The plain PREPARE
+    * runs the `_graft_layout`/`stats` reads (known schemas, no inference
+    * job) beside that tokenize, then the merged df table beside the one
+    * aggregate over the frame that gives the batch's (n_docs, tot) — so
+    * the count needs no job of its own; MUTATE runs the postings append,
     * sidecar append and df replacement at the same time
     * ([[Layout.concurrently]], the caller's job group, all finished
-    * before the phase ends), then `stats`.
+    * before the phase ends), then `stats`. Everything that can fail for
+    * data reasons (the tokenize, the df merge) runs in PREPARE; the
+    * mutation phase only projects the materialized frame.
     *
     * Same arriving-batch (ids disjoint from the store) and SINGLE-WRITER
     * contract as every stored index gate. Merged-on-disk ≡ rebuild is
@@ -733,26 +753,26 @@ object Retrieval {
                            batch: DataFrame, idCol: String, textCol: String,
                            buckets: Int): Long =
     Layout.withPendingMarkerStaged(spark, path)({
-      val (b, stored, addP) = Layout.concurrently3(spark)(
+      val (b, stored, docs) = Layout.concurrently3(spark)(
         readLayoutMeta(spark, path).getOrElse(buckets),
         spark.read.schema(StatsSchema).parquet(s"$path/stats").head(),
-        postingsRaw(batch, idCol, textCol).localCheckpoint())
-      val (newDfreq, (side, (n, tot))) = Layout.concurrently2(spark)(
+        docTerms(batch, idCol, textCol).localCheckpoint())
+      val addP = postingsOf(docs, idCol)
+      val (newDfreq, (n, tot)) = Layout.concurrently2(spark)(
         mergedDfreq(spark.read.schema(DfreqSchema).parquet(s"$path/dfreq"),
           addP).repartition(math.min(buckets, 4), col("term"))
-          .localCheckpoint(), {
-          val side = docsSidecarRows(batch, idCol, b, addP).localCheckpoint()
-          (side, batchCounts(side, addP))
-        })
+          .localCheckpoint(),
+        batchCounts(docs))
       val newStats = spark.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(
           stored.getLong(0) + n, stored.getLong(1) + tot)),
         StatsSchema)
-      (b, addP, newDfreq, side, newStats, n)
-    }) { case (b, addP, newDfreq, side, newStats, n) =>
+      (b, docs, newDfreq, newStats, n)
+    }) { case (b, docs, newDfreq, newStats, n) =>
       Layout.concurrently3(spark)(
-        appendPostings(addP, b, path),
-        writeSidecarRows(side, s"$path/docs", "append"),
+        appendPostings(postingsOf(docs, idCol), b, path),
+        writeSidecarRows(docsSidecarRows(docs, idCol, b, col("terms.term")),
+          s"$path/docs", "append"),
         Layout.replaceDir(newDfreq, s"$path/dfreq"))
       // both replaced tables ride temp-write + rename ([[Layout.replaceDir]]):
       // stats is the store's COMMIT SIGNAL, so a crash inside a plain
@@ -762,8 +782,9 @@ object Retrieval {
     }
 
   /** The fielded merge of [[mergeBm25StoreAt]]: the batch is tokenized
-    * and field-split once ([[bm25fComponents]] checkpoints its postings,
-    * and the stats adds derive from them). */
+    * and field-split once, into its checkpointed [[fieldTerms]] frame;
+    * the postings, the sidecar rows, the batch count and the stats adds
+    * all read it. */
   private def mergeFieldedAt(spark: SparkSession, path: String,
                              batch: DataFrame, idCol: String,
                              textCol: String, titleTokens: Int,
@@ -771,16 +792,17 @@ object Retrieval {
     Layout.withPendingMarkerStaged(spark, path)({
       val store = readBm25fStore(spark, path)
       val b = store.buckets.getOrElse(buckets)
-      val n = batch.count()
-      val addP = bm25fComponents(batch, idCol, textCol, titleTokens,
-        forceMaterialize = true).postings
-      val addStats = addP.groupBy(col("f")).agg(sum(col("tf")).as("tot_f"))
-      val newStats = mergedFieldedStats(store.stats, batch, addStats)
+      val docs = fieldTerms(batch, idCol, textCol, titleTokens)
         .localCheckpoint()
-      (b, addP, newStats, n)
-    }) { case (b, addP, newStats, n) =>
+      val n = docs.count()
+      val add = bm25fComponentsOf(docs, idCol)
+      val newStats = mergedFieldedStats(store.stats, docs, add.stats)
+        .localCheckpoint()
+      (b, docs, add.postings, newStats, n)
+    }) { case (b, docs, addP, newStats, n) =>
       appendPostings(addP, b, path)
-      writeDocsSidecar(batch, idCol, s"$path/docs", b, "append", addP)
+      writeSidecarRows(docsSidecarRows(docs, idCol, b, fieldedTermsCol),
+        s"$path/docs", "append")
       // stats last, by temp-write + rename: the store's commit signal
       Layout.replaceDir(newStats.coalesce(1), s"$path/stats")
       n
@@ -795,19 +817,11 @@ object Retrieval {
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
 
-  /** A batch's (n_docs, tot) — the [[corpusStats]] pair — in one
-    * aggregate over two materialized frames: one row per batch doc from
-    * its sidecar rows (zero-token docs included), the token count from
-    * its postings. Coalesced to one task, so the aggregate needs no
-    * exchange and runs as a single job; it only adds two longs per row.
-    */
-  private def batchCounts(side: DataFrame, addP: DataFrame): (Long, Long) = {
-    val r = side.select(lit(1L).as("doc"), lit(0L).as("tf"))
-      .unionByName(addP.select(lit(0L).as("doc"), col("tf")))
-      .coalesce(1)
-      .agg(coalesce(sum(col("doc")), lit(0L)),
-        coalesce(sum(col("tf")), lit(0L)))
-      .head()
+  /** A batch's (n_docs, tot) — the [[corpusStats]] pair — off its
+    * materialized [[docTerms]] frame ([[docCounts]]), coalesced to one
+    * task so the aggregate needs no exchange and runs as a single job. */
+  private def batchCounts(docs: DataFrame): (Long, Long) = {
+    val r = docCounts(docs.coalesce(1)).head()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -1204,7 +1218,7 @@ object Retrieval {
         .crossJoin(added.agg(count(lit(1)).as("__an"))))
     val addTot = addStats.select(col("f"), col("tot_f").as("__at"))
     storeStats.select(col("f"), col("tot_f"))
-      .join(broadcast(addTot), Seq("f"), "full_outer")
+      .join(addTot, Seq("f"), "full_outer")
       .select(col("f"),
         (coalesce(col("tot_f"), lit(0L)) + coalesce(col("__at"), lit(0L)))
           .as("tot_f"))

@@ -24,6 +24,16 @@ object TextAnalysis {
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
+  /** `(id, term, tf)`: one row per distinct token of each document with
+    * its bigint count, counted map-side by the
+    * [[graft.functions.TermCounts]] kernel — no (id, term) shuffle. Each
+    * row of `docs` is one document (ids unique); a null or token-free text
+    * yields no rows, as exploding its tokens would.
+    */
+  def termFrequencies(docs: DataFrame, idCol: String,
+                      text: Column): DataFrame =
+    docs.select(col(idCol), inline(graft.functions.TermCounts(tokens(text))))
+
   /** A BPE-ish subword proxy count: each word contributes ceil(len/4)
     * subword pieces, approximating byte-pair token inflation without a
     * vocab. Pure expression, stays in codegen.

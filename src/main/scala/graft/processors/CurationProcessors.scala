@@ -343,7 +343,10 @@ object CurationProcessors {
     * that must also self-near-dedup is a different operator
     * ([[Dedup.minhashLsh]]) with a different (non-incremental) contract.
     *
-    * Scale shape: only the BATCH is shingled/signed; the index side is a
+    * Scale shape: only the BATCH is shingled/signed, once — its band
+    * keys ride each row of the checkpointed batch
+    * ([[Dedup.withPortableBandKeys]]), gate it, and on the survivors are
+    * what the index appends; the index side is a
     * stored parquet band table (bucketable by band_hash — the
     * [[Dedup.lshIngest]] store contract) consumed by one semi-join. The
     * corpus is never re-signed. Same single-writer index contract as
@@ -380,24 +383,28 @@ object CurationProcessors {
       val k = config.getOrElse("k", 8).toString.toInt
       val nBands = config.getOrElse("bands", 4).toString.toInt
       val update = config.getOrElse("update_index", true).toString.toBoolean
-      val survivorIds =
-        if (Layout.indexExists(spark, path))
+      val indexed = Layout.indexExists(spark, path)
+      if (!indexed && !update) return df
+      // the batch is signed ONCE: each row carries its band keys, which
+      // gate it and, on the survivors, are exactly the rows appended (a
+      // doc's bands depend only on its own text)
+      val signed = Dedup.withPortableBandKeys(df, tc, k, nBands, "__bands")
+        .localCheckpoint()
+      def bandRows(rows: DataFrame): DataFrame =
+        rows.select(col(idc).as("id"),
+          posexplode(col("__bands")).as(Seq("band_id", "band_hash")))
+      // materialize before the append so the returned frame cannot
+      // re-gate against its own newly-written bands
+      val survivors =
+        if (indexed)
           // the two join columns with their known types (band_id is
           // posexplode's int, band_hash an md5 string): no inference job
-          Dedup.lshIngest(df,
+          Dedup.lshSurvivors(signed, bandRows(signed),
             spark.read.schema("band_id INT, band_hash STRING").parquet(path),
-            idc, tc, k, nBands)
-        else df.select(col(idc))
-      // semi-join the id verdicts back so the full row set (all columns)
-      // flows on; materialize before the append so the returned frame
-      // cannot re-gate against its own newly-written bands
-      val survivors = df.join(survivorIds, Seq(idc), "left_semi")
-        .localCheckpoint()
-      if (update)
-        Dedup.portableBands(
-            Dedup.portableMinhash(survivors, idc, tc, k), idc, k, nBands)
-          .write.mode("append").parquet(path)
-      survivors
+            idc).localCheckpoint()
+        else signed
+      if (update) bandRows(survivors).write.mode("append").parquet(path)
+      survivors.drop("__bands")
     }
   }
 

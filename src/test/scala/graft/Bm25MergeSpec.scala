@@ -178,7 +178,7 @@ class Bm25MergeSpec extends SparkSpec {
       assert(in.count() == 10L)
       val (n, jobs) = jobsIn(Bm25IndexSink.sink(in, config(persisted)))
       assert(n == 10L)
-      assert(jobs == 22, s"persisted-input merge ran $jobs jobs")
+      assert(jobs == 16, s"persisted-input merge ran $jobs jobs")
     } finally in.unpersist()
     assertMergedIsRebuild(persisted)
     // the library path: an unpersisted frame, checkpointed the same way
@@ -186,7 +186,7 @@ class Bm25MergeSpec extends SparkSpec {
     val (n, jobs) = jobsIn(Bm25IndexSink.sink(docs(batch._1, batch._2),
       config(plain)))
     assert(n == 10L)
-    assert(jobs == 22, s"unpersisted-input merge ran $jobs jobs")
+    assert(jobs == 16, s"unpersisted-input merge ran $jobs jobs")
     assertMergedIsRebuild(plain)
   }
 

@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{CanonicalizeKernel, MinHashSignature, ShingleKernel}
+import graft.functions.{CanonicalizeKernel, MinHashSignature, ShingleKernel, TermCountsKernel}
 
 /** Model-based properties for the compiled text kernels: each kernel is
   * checked against an independent plain-JVM model over arbitrary inputs
@@ -49,6 +49,30 @@ object KernelProperties extends Properties("kernels") {
       val exp = shingleModel(s, n)
       got.numElements() == exp.length &&
         (0 until got.numElements()).forall(i => got.getUTF8String(i).toString == exp(i))
+    }
+
+  /** plain-JVM model of a document's term counts: its distinct tokens in
+    * first-occurrence order, each with its occurrence count */
+  private def termCountsModel(tokens: Seq[String]): Seq[(String, Long)] =
+    tokens.distinct.map(t => t -> tokens.count(_ == t).toLong)
+
+  /** texts drawn from a small vocabulary, so tokens repeat: ASCII and
+    * non-ASCII words, case variants and whitespace-only runs */
+  private val genRepetitiveText: Gen[String] = Gen.listOf(Gen.frequency(
+    6 -> Gen.oneOf("a", "A", "b", "É", "é", "ßß", "Ω", "naïve", "日本", "x.y"),
+    2 -> Gen.oneOf(wsChars).map(_.toString),
+    1 -> Gen.listOf(Gen.oneOf(wsChars)).map(_.mkString))).map(_.mkString(" "))
+
+  property("term counts == distinct-token count model") =
+    forAll(Gen.oneOf(genText, genRepetitiveText)) { s =>
+      val got = TermCountsKernel.compute(
+        ShingleKernel.compute(UTF8String.fromString(s), 1))
+      val exp = termCountsModel(shingleModel(s, 1))
+      got.numElements() == exp.length && (0 until got.numElements()).forall {
+        i =>
+          val r = got.getStruct(i, 2)
+          r.getUTF8String(0).toString == exp(i)._1 && r.getLong(1) == exp(i)._2
+      }
     }
 
   private def signature(shingles: Seq[String], k: Int): Seq[Long] = {
