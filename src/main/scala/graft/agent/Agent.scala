@@ -43,7 +43,8 @@ object Retrier {
   *
   * Spark-first translation of the reference's push-stream (SURVEY.md §3.1):
   * extractor pulls a DataFrame; processors fold over it; the frame is
-  * persisted ONCE and fanned out to every sink (the reference's
+  * materialized ONCE (persisted, unless the last processor already
+  * checkpointed it) and fanned out to every sink (the reference's
   * single-pass channel broadcast ≙ cache + N actions, agent/stream.go:51-103);
   * sink errors are swallowed unless `stopOnSinkError` (agent/agent.go:270-275);
   * each sink write sits inside the retrier.
@@ -136,14 +137,16 @@ class Agent(
           Registries.processors.get(spec.name).process(df, spec.config)
         }
 
-        // one pass materialized, N sink reads (agent/stream.go fan-out)
-        processed.persist(StorageLevel.MEMORY_AND_DISK)
+        // one pass materialized, N sink reads (agent/stream.go fan-out);
+        // a frame that already is one needs no second copy
+        val cache = !Agent.materialized(processed)
+        if (cache) processed.persist(StorageLevel.MEMORY_AND_DISK)
         try {
           val recordCount = processed.count()
           val sinkCounts = fanOut(recipe.name, processed, recipe.sinks)
           RunResult(recipe, success = true, None,
             (System.nanoTime() - t0) / 1000000L, recordCount, sinkCounts)
-        } finally processed.unpersist()
+        } finally if (cache) processed.unpersist()
       } catch {
         case e: Exception =>
           RunResult(recipe, success = false, Some(e.getMessage),
@@ -192,5 +195,26 @@ class Agent(
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     Await.result(Future.sequence(recipes.map(r => Future(run(r)))), Duration.Inf)
+  }
+}
+
+object Agent {
+  /** Whether `df` already is one materialized pass: a checkpoint (a
+    * `LogicalRDD`) under column selections only. Every read of it then
+    * returns the same stored rows and values without recomputing
+    * anything, so caching it would only copy it. A projection computing
+    * any expression (a rename, a derived or nondeterministic column) is
+    * not one: each sink's read would evaluate it again.
+    */
+  private[agent] def materialized(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    def stored(p: LogicalPlan): Boolean = p match {
+      case _: org.apache.spark.sql.execution.LogicalRDD => true
+      case Project(list, child) =>
+        list.forall(_.isInstanceOf[Attribute]) && stored(child)
+      case _ => false
+    }
+    stored(df.queryExecution.analyzed)
   }
 }

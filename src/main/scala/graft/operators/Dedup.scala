@@ -913,12 +913,14 @@ object Dedup {
     * (`batchBands`: (id, band_id, band_hash) of the batch's docs): the
     * rows of `batch`, every column kept, whose id has no band key in the
     * index — for a caller that also appends those bands, so the batch is
-    * signed once. */
+    * signed once. A doc with several colliding bands is one hit row per
+    * band: the anti-join drops it all the same, so the hits need no
+    * distinct (and no shuffle of their own). */
   def lshSurvivors(batch: DataFrame, batchBands: DataFrame,
                    indexBands: DataFrame, idCol: String): DataFrame = {
     val hits = batchBands
       .join(indexBands, Seq("band_id", "band_hash"), "left_semi")
-      .select(col("id")).distinct()
+      .select(col("id"))
     batch.join(hits, col(idCol) === hits("id"), "left_anti")
   }
 

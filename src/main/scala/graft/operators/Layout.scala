@@ -89,37 +89,90 @@ object Layout {
     exists(spark, s"$path/_SUCCESS")
 
   /** Read the one-row record a store freezes at `dir` (its layout knobs,
-    * its build config, its rerank linkage) with the record's known `ddl`
-    * schema: one Spark job, never a schema-inference job. None when the
-    * store carries no such record; a column that an older store's record
-    * lacks reads as null, for the caller's documented fallback.
+    * its build config, its rerank linkage, the BM25 `stats` row) with the
+    * record's known `ddl` schema, on the driver: the parquet files are
+    * read straight through the Hadoop FileSystem, so a record read runs
+    * no Spark job. None when the store carries no such record (or it
+    * holds no row); a column that an older store's record lacks reads as
+    * null, for the caller's documented fallback. `_SUCCESS`, checksum and
+    * other `_`/`.` entries are skipped, as Spark's reader skips them.
+    * Columns are INT, BIGINT or STRING.
     */
-  def readRecord(spark: SparkSession, dir: String, ddl: String): Option[Row] =
-    if (!exists(spark, dir)) None
-    else readTable(spark, dir, Some(ddl)).collect().headOption
-
-  /** Read the parquet table at `dir` (partition columns included), with
-    * the known `ddl` schema when given. Spark's file source checks the
-    * paths it is handed by NAME and warns "All paths were ignored" when
-    * every one starts with `_` or `.` — the filter meant for `_SUCCESS`
-    * and checksum files, which every store-internal directory
-    * (`_graft_layout`, `_graft_codebook`, `_graft_ids`, ...) trips on
-    * each read. Such a directory is read through its own data entries
-    * (files, or partition directories) with itself as the base path:
-    * the same rows and columns, the same jobs, and no warning.
-    */
-  def readTable(spark: SparkSession, dir: String,
-                ddl: Option[String] = None): DataFrame = {
-    val reader = ddl.fold(spark.read)(spark.read.schema)
+  def readRecord(spark: SparkSession, dir: String, ddl: String): Option[Row] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir)
-    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else {
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+      fs.listStatus(p).filter(s => s.isFile && !hidden(s.getPath.getName))
+        .sortBy(_.getPath.getName).iterator
+        .map(recordRowOf(_, conf, schema)).collectFirst { case Some(r) => r }
+    }
+  }
+
+  /** The first row of one parquet file as a row of `schema`. */
+  private def recordRowOf(file: org.apache.hadoop.fs.FileStatus,
+                          conf: org.apache.hadoop.conf.Configuration,
+                          schema: org.apache.spark.sql.types.StructType)
+      : Option[Row] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+    try {
+      val fileSchema = reader.getFooter.getFileMetaData.getSchema
+      val pages = Iterator.continually(reader.readNextRowGroup())
+        .takeWhile(_ != null).find(_.getRowCount > 0)
+      pages.map { rg =>
+        val g: Group = new org.apache.parquet.io.ColumnIOFactory()
+          .getColumnIO(fileSchema)
+          .getRecordReader(rg, new org.apache.parquet.example.data.simple
+            .convert.GroupRecordConverter(fileSchema)).read()
+        val values = schema.fields.map { f =>
+          if (!fileSchema.containsField(f.name)) null
+          else {
+            val i = fileSchema.getFieldIndex(f.name)
+            if (g.getFieldRepetitionCount(i) == 0) null
+            else f.dataType match {
+              case IntegerType => g.getInteger(i, 0)
+              case LongType => g.getLong(i, 0)
+              case StringType => g.getString(i, 0)
+              case t => throw new IllegalArgumentException(
+                s"record column ${f.name} has unsupported type ${t.sql}")
+            }
+          }
+        }
+        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          values.asInstanceOf[Array[Any]], schema)
+      }
+    } finally reader.close()
+  }
+
+  /** Spark's file source skips entries whose name starts with `_` or `.`
+    * (`_SUCCESS`, checksum files). */
+  private def hidden(name: String) =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** Read the parquet table at `dir` (partition columns included).
+    * Spark's file source checks the paths it is handed by NAME and warns
+    * "All paths were ignored" when every one starts with `_` or `.` — the
+    * filter meant for `_SUCCESS` and checksum files, which every
+    * store-internal directory (`_graft_layout`, `_graft_codebook`,
+    * `_graft_ids`, ...) trips on each read. Such a directory is read
+    * through its own data entries (files, or partition directories) with
+    * itself as the base path: the same rows and columns, the same jobs,
+    * and no warning.
+    */
+  def readTable(spark: SparkSession, dir: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
     val entries =
       if (!hidden(p.getName)) Array.empty[String]
       else p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .listStatus(p).map(_.getPath).filterNot(e => hidden(e.getName))
         .map(_.toString)
-    if (entries.isEmpty) reader.parquet(dir)
-    else reader.option("basePath", dir).parquet(entries.toIndexedSeq: _*)
+    if (entries.isEmpty) spark.read.parquet(dir)
+    else spark.read.option("basePath", dir).parquet(entries.toIndexedSeq: _*)
   }
 
   /** Write a store's one-row record to `dir` through [[replaceDir]], so a
@@ -399,13 +452,6 @@ object Layout {
       while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)) ()
     }
   }
-
-  /** [[concurrently]] for two steps. */
-  def concurrently2[A, B](spark: org.apache.spark.sql.SparkSession)(
-      a: => A, b: => B): (A, B) =
-    concurrently(spark)(() => a, () => b) match {
-      case Seq(x, y) => (x.asInstanceOf[A], y.asInstanceOf[B])
-    }
 
   /** [[concurrently]] for three steps. */
   def concurrently3[A, B, C](spark: org.apache.spark.sql.SparkSession)(

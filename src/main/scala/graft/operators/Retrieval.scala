@@ -322,12 +322,13 @@ object Retrieval {
     * ingest reads only the store — no re-tokenize, no field re-split.
     * The batch is tokenized once into its checkpointed [[fieldTerms]]
     * frame, which the postings, the id sidecar and the stats all read.
+    * Returns the corpus's document count, taken on that checkpoint job.
     */
   def writeBm25fStore(corpus: DataFrame, idCol: String, textCol: String,
                       path: String, titleTokens: Int = 8,
-                      buckets: Int = 16): Unit = {
-    val docs = fieldTerms(corpus, idCol, textCol, titleTokens)
-      .localCheckpoint()
+                      buckets: Int = 16): Long = {
+    val (docs, n, _) =
+      observedDocs(fieldTerms(corpus, idCol, textCol, titleTokens))
     val c = bm25fComponentsOf(docs, idCol)
     c.postings.withColumn("bucket", termBucket(buckets))
       .repartition(buckets, col("bucket"))
@@ -338,6 +339,7 @@ object Retrieval {
       s"$path/docs", "overwrite")
     writeLayoutMeta(corpus.sparkSession, path, buckets)
     c.stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+    n
   }
 
   def readBm25fStore(spark: SparkSession, path: String): Bm25fStore = {
@@ -345,7 +347,7 @@ object Retrieval {
     val b = readLayoutMeta(spark, path)
       .filter(_ => raw.columns.contains("bucket"))
     Bm25fStore(raw.drop("bucket"),
-      spark.read.parquet(s"$path/stats"),
+      spark.read.schema(FieldedStatsSchema).parquet(s"$path/stats"),
       bucketed = b.map(_ => raw), buckets = b)
   }
 
@@ -513,8 +515,9 @@ object Retrieval {
     Layout.readRecord(spark, s"$path/_graft_layout", "buckets INT")
       .map(_.getInt(0))
 
-  /** The fixed schemas of the store's small tables. Reading with them
-    * skips the footer-sampling job a schema inference launches; the stats
+  /** The fixed schemas of the store's small tables (the plain layout's
+    * df and stats, the fielded layout's stats). Reading with them skips
+    * the footer-sampling job a schema inference launches; the plain stats
     * schema is also the one a merge writes its driver-built row with,
     * which is the one [[corpusStats]] gives a build (non-null longs).
     */
@@ -523,6 +526,8 @@ object Retrieval {
   private val StatsSchema = StructType(Seq(
     StructField("n_docs", LongType, nullable = false),
     StructField("tot", LongType, nullable = false)))
+  private val FieldedStatsSchema = StructType(Seq(StructField("f", StringType),
+    StructField("n_docs", LongType), StructField("tot_f", LongType)))
 
   /** Directory key of a term's posting rows: `bucket = pmod(xxhash64(
     * term), buckets)`. Making the term-hash bucket a PARTITION COLUMN
@@ -580,13 +585,14 @@ object Retrieval {
     * (one row, written LAST — its _SUCCESS is the commit signal).
     * The corpus is tokenized once, into its checkpointed [[docTerms]]
     * frame; the postings, sidecar and stats read that frame, df the
-    * written postings.
+    * written postings. Returns the corpus's document count, taken on the
+    * tokenize's checkpoint job.
     * Every query after reads ONLY this store, and new corpus drops merge
     * in via [[bm25ApplyDelta]] without touching historical text.
     */
   def writeBm25Store(corpus: DataFrame, idCol: String, textCol: String,
-                     path: String, buckets: Int = 16): Unit = {
-    val docs = docTerms(corpus, idCol, textCol).localCheckpoint()
+                     path: String, buckets: Int = 16): Long = {
+    val (docs, n, _) = observedDocs(docTerms(corpus, idCol, textCol))
     val post = postingsOf(docs, idCol)
     // term-sorted within each bucket file: parquet row-group min/max on
     // term then lets a term-restricted read skip row groups INSIDE the
@@ -607,6 +613,7 @@ object Retrieval {
       col("terms.term")), s"$path/docs", "overwrite")
     writeLayoutMeta(corpus.sparkSession, path, buckets)
     docCounts(docs).write.mode("overwrite").parquet(s"$path/stats")
+    n
   }
 
   /** The [[corpusStats]] pair of a [[docTerms]] frame in one aggregate:
@@ -657,15 +664,18 @@ object Retrieval {
       mergedStats(store.stats, added, addP))
   }
 
-  /** df integer adds via one full-outer merge on term — shared by the
-    * logical merge ([[bm25ApplyDelta]]) and the persisted one
-    * ([[mergeBm25StoreAt]]). */
-  private def mergedDfreq(storeDfreq: DataFrame, addP: DataFrame): DataFrame = {
-    val addDf = dfreqOf(addP).withColumnRenamed("df", "__adf")
-    storeDfreq.join(addDf, Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("df"), lit(0L)) + coalesce(col("__adf"), lit(0L)))
-          .as("df"))
+  /** df integer adds: the store's (term, df) rows and one (term, 1) row
+    * per `termRows` row (one per (doc, term) of the batch) summed per
+    * term in one aggregate — shared by the logical merge
+    * ([[bm25ApplyDelta]]) and the persisted one ([[mergeBm25StoreAt]]),
+    * which hash-partitions the rows into its `files` output files first,
+    * so the aggregate needs no exchange of its own. */
+  private def mergedDfreq(storeDfreq: DataFrame, termRows: DataFrame,
+                          files: Option[Int] = None): DataFrame = {
+    val rows = storeDfreq.select(col("term"), col("df"))
+      .unionByName(termRows.select(col("term"), lit(1L).as("df")))
+    files.fold(rows)(n => rows.repartition(n, col("term")))
+      .groupBy(col("term")).agg(coalesce(sum(col("df")), lit(0L)).as("df"))
   }
 
   /** Global stats integer adds (1-row × 1-row). */
@@ -703,13 +713,13 @@ object Retrieval {
     *
     * Both merges read the batch ONCE: it is tokenized into one
     * checkpointed per-document frame ([[docTerms]], or [[fieldTerms]]
-    * when fielded) — a single job with no exchange — and the postings
-    * append, the sidecar rows (each doc's term buckets from its own
-    * terms) and the batch counts all read that frame. The plain PREPARE
-    * runs the `_graft_layout`/`stats` reads (known schemas, no inference
-    * job) beside that tokenize, then the merged df table beside the one
-    * aggregate over the frame that gives the batch's (n_docs, tot) — so
-    * the count needs no job of its own; MUTATE runs the postings append,
+    * when fielded) — a single job with no exchange, which also counts
+    * the batch ([[observedDocs]]) — and the postings append, the sidecar
+    * rows (each doc's term buckets from its own terms) and the stats adds
+    * all read that frame. The plain PREPARE reads the `_graft_layout` and
+    * `stats` records on the driver ([[Layout.readRecord]], no job), then
+    * merges the df table in one aggregate over the store's rows and the
+    * frame's terms; MUTATE runs the postings append,
     * sidecar append and df replacement at the same time
     * ([[Layout.concurrently]], the caller's job group, all finished
     * before the phase ends), then `stats`. Everything that can fail for
@@ -726,13 +736,10 @@ object Retrieval {
                        fielded: Boolean = false,
                        titleTokens: Int = 8): Long = {
     Layout.refuseIfPending(spark, path)
-    if (!Layout.indexExists(spark, s"$path/stats")) {
-      val n = batch.count()
-      if (fielded)
+    if (!Layout.indexExists(spark, s"$path/stats"))
+      return if (fielded)
         writeBm25fStore(batch, idCol, textCol, path, titleTokens, buckets)
       else writeBm25Store(batch, idCol, textCol, path, buckets)
-      return n
-    }
     requireErasableLayout(spark, path)
     // read after the marker refusal: a crash inside a dfreq replace would
     // otherwise read as the fielded layout
@@ -753,16 +760,16 @@ object Retrieval {
                            batch: DataFrame, idCol: String, textCol: String,
                            buckets: Int): Long =
     Layout.withPendingMarkerStaged(spark, path)({
-      val (b, stored, docs) = Layout.concurrently3(spark)(
-        readLayoutMeta(spark, path).getOrElse(buckets),
-        spark.read.schema(StatsSchema).parquet(s"$path/stats").head(),
-        docTerms(batch, idCol, textCol).localCheckpoint())
-      val addP = postingsOf(docs, idCol)
-      val (newDfreq, (n, tot)) = Layout.concurrently2(spark)(
-        mergedDfreq(spark.read.schema(DfreqSchema).parquet(s"$path/dfreq"),
-          addP).repartition(math.min(buckets, 4), col("term"))
-          .localCheckpoint(),
-        batchCounts(docs))
+      val b = readLayoutMeta(spark, path).getOrElse(buckets)
+      val stored = Layout.readRecord(spark, s"$path/stats",
+        StatsSchema.toDDL).getOrElse(
+          throw new IllegalStateException(s"$path/stats holds no row"))
+      val (docs, n, tot) = observedDocs(docTerms(batch, idCol, textCol),
+        sum(col("dl")))
+      val newDfreq = mergedDfreq(
+        spark.read.schema(DfreqSchema).parquet(s"$path/dfreq"),
+        docs.select(explode(col("terms.term")).as("term")),
+        Some(math.min(buckets, 4))).localCheckpoint()
       val newStats = spark.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(
           stored.getLong(0) + n, stored.getLong(1) + tot)),
@@ -783,21 +790,20 @@ object Retrieval {
 
   /** The fielded merge of [[mergeBm25StoreAt]]: the batch is tokenized
     * and field-split once, into its checkpointed [[fieldTerms]] frame;
-    * the postings, the sidecar rows, the batch count and the stats adds
-    * all read it. */
+    * the postings, the sidecar rows and the stats adds all read it, and
+    * its checkpoint job counts it. */
   private def mergeFieldedAt(spark: SparkSession, path: String,
                              batch: DataFrame, idCol: String,
                              textCol: String, titleTokens: Int,
                              buckets: Int): Long =
     Layout.withPendingMarkerStaged(spark, path)({
-      val store = readBm25fStore(spark, path)
-      val b = store.buckets.getOrElse(buckets)
-      val docs = fieldTerms(batch, idCol, textCol, titleTokens)
-        .localCheckpoint()
-      val n = docs.count()
+      val b = readLayoutMeta(spark, path).getOrElse(buckets)
+      val (docs, n, _) =
+        observedDocs(fieldTerms(batch, idCol, textCol, titleTokens))
       val add = bm25fComponentsOf(docs, idCol)
-      val newStats = mergedFieldedStats(store.stats, docs, add.stats)
-        .localCheckpoint()
+      val newStats = mergedFieldedStats(
+        spark.read.schema(FieldedStatsSchema).parquet(s"$path/stats"), docs,
+        add.stats).localCheckpoint()
       (b, docs, add.postings, newStats, n)
     }) { case (b, docs, addP, newStats, n) =>
       appendPostings(addP, b, path)
@@ -808,6 +814,18 @@ object Retrieval {
       n
     }
 
+  /** Checkpoint a batch's per-document frame, counting its rows and
+    * taking the aggregate `total` over them on the checkpoint job itself
+    * ([[org.apache.spark.sql.Observation]]): (frame, rows, total). */
+  private def observedDocs(docs: DataFrame,
+                           total: Column = lit(0L)): (DataFrame, Long, Long) = {
+    val counts = org.apache.spark.sql.Observation()
+    val frame = docs.observe(counts, count(lit(1)).as("n"),
+      coalesce(total, lit(0L)).as("t")).localCheckpoint()
+    val r = counts.get
+    (frame, r("n").asInstanceOf[Long], r("t").asInstanceOf[Long])
+  }
+
   /** Append a batch's postings into their term-hash bucket directories,
     * term-sorted within each file like the build. */
   private def appendPostings(addP: DataFrame, buckets: Int,
@@ -816,14 +834,6 @@ object Retrieval {
       .repartition(buckets, col("bucket"))
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
-
-  /** A batch's (n_docs, tot) — the [[corpusStats]] pair — off its
-    * materialized [[docTerms]] frame ([[docCounts]]), coalesced to one
-    * task so the aggregate needs no exchange and runs as a single job. */
-  private def batchCounts(docs: DataFrame): (Long, Long) = {
-    val r = docCounts(docs.coalesce(1)).head()
-    (r.getLong(0), r.getLong(1))
-  }
 
   /** Reciprocal-rank fusion — hybrid retrieval's standard combiner: each
     * input ranking ((q_id, rnk, idCol) rows) contributes

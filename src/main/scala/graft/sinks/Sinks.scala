@@ -63,19 +63,26 @@ object FileSink extends SinkPlugin {
     try {
       if (format == "yaml") {
         val yaml = new org.yaml.snakeyaml.Yaml()
-        df.toJSON.toLocalIterator().forEachRemaining { j =>
+        jsonLines(df).forEachRemaining { j =>
           val obj = yaml.load[Object](j) // JSON is a YAML subset
           out.write("- " + yaml.dump(obj).replace("\n", "\n  ").trim + "\n")
           n += 1
         }
       } else {
-        df.toJSON.toLocalIterator().forEachRemaining { j =>
+        jsonLines(df).forEachRemaining { j =>
           out.write(j); out.write("\n"); n += 1
         }
       }
     } finally out.close()
     n
   }
+
+  /** Each row as one JSON object, byte for byte the text `Dataset.toJSON`
+    * gives, through one `to_json(struct(*))` projection of the frame,
+    * streamed to the driver a partition at a time. */
+  private def jsonLines(df: DataFrame): java.util.Iterator[String] =
+    df.select(to_json(struct(col("*")))).as[String](
+      org.apache.spark.sql.Encoders.STRING).toLocalIterator()
 }
 
 /** HTTP poster indirection so tests (and the offline container) can swap
@@ -428,14 +435,12 @@ private[graft] trait IndexSink extends SinkPlugin {
   * IN (postings append, df/stats integer adds — historical text is never
   * re-read), so the indexed corpus only ever widens.
   *
-  * Materialize once: the batch is localCheckpointed once and every read
-  * after, the merge's included, reads that. A frame the agent persisted
-  * for its sink fan-out is checkpointed as well (reading the cached frame
-  * directly would cost a second tokenize, see `sink`), but it is not
-  * counted again on the plain merge path: the merge's stats aggregate
-  * gives the batch count. Inside the merge, independent reads and writes
-  * run at the same time under the caller's job group, and `stats` is
-  * still replaced last as the commit signal (see the merge's own doc).
+  * Read once: the sink hands the batch to the merge as it arrives, and
+  * the merge (or build) reads it exactly once, into its checkpointed
+  * per-document frame, whose job also counts it. Inside the merge,
+  * independent writes run at the same time under the caller's job
+  * group, and `stats` is still replaced last as the commit signal (see
+  * the merge's own doc).
   *
   * Concurrency contract: the index is SINGLE-WRITER, like
   * [[graft.processors.CurationProcessors.DedupGate]] — the merge is a
@@ -515,12 +520,6 @@ object Bm25IndexSink extends IndexSink {
           org.apache.spark.sql.functions.col(cc))
       case None => df
     }
-    // one materialization serves every read of the batch. A frame the
-    // agent persisted is checkpointed too: each scan of a cached frame is
-    // its own adaptive query stage, so the two scans inside the postings
-    // aggregate would stop sharing one tokenize exchange (measured on the
-    // curate bench: +21 % shuffle bytes, no job saved)
-    val batch = keyed.localCheckpoint()
     // fielded: true builds/extends the BM25F layout instead (title
     // window from title_tokens; field weights stay query-time knobs)
     val fielded = config.getOrElse("fielded", false).toString.toBoolean
@@ -528,10 +527,10 @@ object Bm25IndexSink extends IndexSink {
     val layoutCfg = s"fielded=$fielded,title_tokens=$titleTokens," +
       s"buckets=$buckets,chunk_grain=${chunkCol.isDefined},chunk_bits=$bits"
     val adopt = IndexProtocol.checkLayoutConfig(spark, path, layoutCfg)
-    // the merge refuses a marked store, builds or merges, and on the
-    // plain merge takes the batch count from its stats aggregate (no
-    // count job)
-    val n = graft.operators.Retrieval.mergeBm25StoreAt(spark, path, batch,
+    // the merge refuses a marked store, builds or merges, and reads the
+    // batch once: into its checkpointed per-document frame, whose job
+    // also counts it
+    val n = graft.operators.Retrieval.mergeBm25StoreAt(spark, path, keyed,
       keyCol, tc, buckets, fielded, titleTokens)
     // fresh stores, and pre-protocol stores, record the batch's config
     // only once an ingest under it actually succeeded

@@ -77,6 +77,15 @@ object SparkJobs {
   def startedBy[A](sc: SparkContext)(
       body: => A): (A, Seq[java.util.Properties]) = {
     val group = s"sparkjobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "job count", interruptOnCancel = true)
+    try inGroup(sc, group)(body)
+    finally sc.clearJobGroup()
+  }
+
+  /** The properties of every Spark job of job group `group` started while
+    * `body` ran — for code that sets its own group, as `Agent.run` does. */
+  def inGroup[A](sc: SparkContext, group: String)(
+      body: => A): (A, Seq[java.util.Properties]) = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[
       java.util.Properties]()
     val l = new SparkListener {
@@ -86,16 +95,12 @@ object SparkJobs {
           seen.add(e.properties)
     }
     sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count", interruptOnCancel = true)
     try {
       val r = body
       org.apache.spark.graft.ListenerDrain.drain(sc)
       import scala.jdk.CollectionConverters._
       (r, seen.asScala.toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    } finally sc.removeSparkListener(l)
   }
 }
 
@@ -145,11 +150,17 @@ class Bm25MergeSpec extends SparkSpec {
     path
   }
 
-  private def storeRows(path: String) = {
-    val st = Retrieval.readBm25Store(spark, path)
+  /** The rows of every table of a plain (or fielded) store. */
+  private def storeRows(path: String, fielded: Boolean = false) = {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    (rows(st.postings), rows(st.dfreq), rows(st.stats),
-      rows(spark.read.parquet(s"$path/docs")))
+    val docs = rows(spark.read.parquet(s"$path/docs"))
+    if (fielded) {
+      val st = Retrieval.readBm25fStore(spark, path)
+      (rows(st.postings), Set.empty[Seq[Any]], rows(st.stats), docs)
+    } else {
+      val st = Retrieval.readBm25Store(spark, path)
+      (rows(st.postings), rows(st.dfreq), rows(st.stats), docs)
+    }
   }
 
   /** The merged store equals a from-scratch build of base + batch, and
@@ -171,23 +182,53 @@ class Bm25MergeSpec extends SparkSpec {
   test("a sink merge runs a pinned number of Spark jobs on both paths of " +
       "the materialize-once rule, and merged ≡ rebuild") {
     // the agent path: the frame arrives persisted and already counted;
-    // the sink checkpoints it once and runs no count of its own
+    // the merge reads it once, into its tokenize checkpoint, whose job
+    // also counts it; the store's records are read on the driver
     val persisted = built("bm25jobs_p", faulty = false)
     val in = docs(batch._1, batch._2).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       assert(in.count() == 10L)
       val (n, jobs) = jobsIn(Bm25IndexSink.sink(in, config(persisted)))
       assert(n == 10L)
-      assert(jobs == 16, s"persisted-input merge ran $jobs jobs")
+      assert(jobs == 9, s"persisted-input merge ran $jobs jobs")
     } finally in.unpersist()
     assertMergedIsRebuild(persisted)
-    // the library path: an unpersisted frame, checkpointed the same way
+    // the library path: an unpersisted frame, read the same single time
     val plain = built("bm25jobs_u", faulty = false)
     val (n, jobs) = jobsIn(Bm25IndexSink.sink(docs(batch._1, batch._2),
       config(plain)))
     assert(n == 10L)
-    assert(jobs == 16, s"unpersisted-input merge ran $jobs jobs")
+    assert(jobs == 9, s"unpersisted-input merge ran $jobs jobs")
     assertMergedIsRebuild(plain)
+  }
+
+  test("a fielded sink merge runs a pinned number of Spark jobs, returns " +
+      "the batch count its checkpoint job observed, and merged ≡ rebuild") {
+    val fielded = (path: String) => config(path) + ("fielded" -> true)
+    val path = storePath("bm25fjobs", faulty = false)
+    assert(Bm25IndexSink.sink(docs(base._1, base._2), fielded(path)) == 40L)
+    // the batch holds the zero-token doc 1003: it counts, and has no postings
+    val (n, jobs) = jobsIn(Bm25IndexSink.sink(docs(batch._1, batch._2),
+      fielded(path)))
+    assert(n == 10L)
+    assert(jobs == 15, s"fielded merge ran $jobs jobs")
+    val rb = storePath("bm25fjobs_rb", faulty = false)
+    Bm25IndexSink.sink(docs(base._1, base._2)
+      .unionByName(docs(batch._1, batch._2)), fielded(rb))
+    assert(storeRows(path, fielded = true) == storeRows(rb, fielded = true))
+    val bad = Fsck.audit(spark, path).filterNot(_.ok)
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("an empty batch merges into either layout as a no-op that counts 0") {
+    for (f <- Seq(false, true)) {
+      val path = storePath(s"bm25empty_$f", faulty = false)
+      val cfg = config(path) + ("fielded" -> f)
+      Bm25IndexSink.sink(docs(base._1, base._2), cfg)
+      val before = storeRows(path, f)
+      assert(Bm25IndexSink.sink(docs(0, 0), cfg) == 0L)
+      assert(storeRows(path, f) == before, s"fielded=$f")
+    }
   }
 
   test("the merge writes its driver-built stats row with the build's " +
@@ -267,19 +308,21 @@ class Bm25MergeSpec extends SparkSpec {
     // step's own queries would be filed under that execution
     sc.setLocalProperty("spark.sql.execution.id", "-7")
     try {
-      val (props, n) = graft.operators.Layout.concurrently2(spark)(
+      val (props, n, m) = graft.operators.Layout.concurrently3(spark)(
         Seq("spark.jobGroup.id", "spark.job.interruptOnCancel",
           "spark.sql.execution.id").map(sc.getLocalProperty),
-        spark.range(10).count())
+        spark.range(10).count(), spark.range(7).count())
       assert(props == Seq("bm25pool", "true", null))
-      assert(n == 10L)
+      assert(n == 10L && m == 7L)
       val e = intercept[IllegalStateException] {
-        graft.operators.Layout.concurrently2(spark)(
+        graft.operators.Layout.concurrently3(spark)(
           throw new IllegalStateException("first"),
-          throw new IllegalArgumentException("second"))
+          throw new IllegalArgumentException("second"),
+          throw new IllegalArgumentException("third"))
       }
       assert(e.getMessage == "first")
-      assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+      assert(e.getSuppressed.map(_.getMessage).toSeq ==
+        Seq("second", "third"))
     } finally {
       sc.setLocalProperty("spark.sql.execution.id", null)
       sc.clearJobGroup()

@@ -1560,6 +1560,138 @@ class AgentSpec extends SparkSpec {
     assert(result.sinkCounts("file[1]") == -1L)
   }
 
+  /** What the `cacheprobe` sink saw on each call: whether the frame it was
+    * handed is cached, and its rows. */
+  private val probed = new java.util.concurrent.ConcurrentLinkedQueue[
+    (Boolean, Set[Seq[Any]])]()
+
+  /** `cacheprobe` (sink) records into [[probed]]; `ckpt-derive`
+    * (processor) checkpoints its input and derives one more column from
+    * it, `tick` (a nondeterministic UDF whose every call gives a new
+    * value) or `plus` (deterministic); `none` derives nothing. Registered
+    * once per JVM. */
+  private def registerProbes(): Unit = {
+    Registries.populate()
+    try Registries.sinks.register(new SinkPlugin {
+      val info = PluginInfo("cacheprobe", "records what it was handed")
+      def sink(df: org.apache.spark.sql.DataFrame,
+               config: Map[String, Any]): Long = {
+        val rows = df.collect().map(_.toSeq).toSet
+        probed.add((df.storageLevel !=
+          org.apache.spark.storage.StorageLevel.NONE, rows))
+        rows.size.toLong
+      }
+    }) catch { case _: IllegalArgumentException => () }
+    try Registries.processors.register(new Processor {
+      val info = PluginInfo("ckpt-derive", "checkpoint, then derive a column")
+      def process(df: org.apache.spark.sql.DataFrame,
+                  config: Map[String, Any]): org.apache.spark.sql.DataFrame = {
+        import org.apache.spark.sql.functions._
+        val ckpt = df.localCheckpoint()
+        config("derive").toString match {
+          case "tick" => ckpt.withColumn("v",
+            udf(() => AgentSpec.ticks.incrementAndGet()).asNondeterministic()())
+          case "plus" => ckpt.withColumn("v", col("doc_id") + 1)
+          case _ => ckpt.select(ckpt.columns.reverse.map(col): _*)
+        }
+      }
+    }) catch { case _: IllegalArgumentException => () }
+  }
+
+  test("fan-out caches the processed frame only when it is not already a " +
+      "checkpoint, so every sink sees the same values") {
+    import spark.implicits._
+    registerProbes()
+    val src = Files.createTempDirectory("cacheprobe_src")
+    Seq((1L, "one two three"), (2L, "four five six"), (3L, "one two three"))
+      .toDF("doc_id", "text").write.parquet(s"$src/docs")
+    val documents = s"{name: documents, config: {path: $src/docs}}"
+    def run(source: String,
+            processors: String): Seq[(Boolean, Set[Seq[Any]])] = {
+      probed.clear()
+      val r = new Agent(spark, stopOnSinkError = true, maxRetries = 0).run(
+        RecipeReader.parse(
+          s"""name: cacheprobe
+             |version: v1beta1
+             |source: $source
+             |processors: [$processors]
+             |sinks: [{name: cacheprobe}, {name: cacheprobe}]
+             |""".stripMargin))
+      assert(r.success, r.error)
+      import scala.jdk.CollectionConverters._
+      probed.asScala.toSeq
+    }
+    // a frame ending in a checkpoint under a column selection: the
+    // dedup-gate's survivors, and a checkpoint with its columns reordered
+    for (ps <- Seq(
+        s"{name: dedup-gate, config: {index_path: ${src.resolve("fp")}}}",
+        "{name: ckpt-derive, config: {derive: none}}")) {
+      val seen = run(documents, ps)
+      assert(seen.map(_._1) == Seq(false, false), ps)
+      assert(seen.map(_._2).distinct.size == 1, ps)
+    }
+    // a source frame is cached: each sink would otherwise re-read it
+    val csv = Files.createTempDirectory("cacheprobe_csv")
+    writeCsv(csv)
+    assert(run(s"{name: csv, config: {path: $csv}}", "").map(_._1) ==
+      Seq(true, true))
+    assert(run(documents, "").map(_._1) == Seq(true, true))
+    // a derived column over a checkpoint is computed again by every read
+    // of an uncached frame: such a frame is cached, deterministic or not
+    for (d <- Seq("plus", "tick")) {
+      val seen = run(documents, s"{name: ckpt-derive, config: {derive: $d}}")
+      assert(seen.map(_._1) == Seq(true, true), d)
+      assert(seen.map(_._2).distinct.size == 1, s"$d: ${seen.map(_._2)}")
+    }
+  }
+
+  test("the curate recipe's second ingest runs a pinned number of Spark " +
+      "jobs") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("curatejobs")
+    def text(i: Int) = {
+      val r = new scala.util.Random(i)
+      Seq.fill(12 + i % 9)(s"w${r.nextInt(2000)}").mkString(" ")
+    }
+    // the second batch also carries an exact copy of a first-batch doc,
+    // a short doc and an email: each gate has work to do
+    def batch(ids: Range, extra: (Long, String)*) =
+      (ids.map(i => (i.toLong, text(i))) ++ extra).toDF("doc_id", "text")
+    batch(0 until 40).write.parquet(s"$root/part=0")
+    batch(1000 until 1040, 2000L -> text(3), 2001L -> "too short",
+      2002L -> s"${text(2002)} mail bob@example.com")
+      .write.parquet(s"$root/part=1")
+    def recipe(k: Int) = RecipeReader.parse(
+      s"""name: curate
+         |version: v1beta1
+         |source: {name: documents, config: {path: $root/part=$k}}
+         |processors:
+         |  - name: quality-filter
+         |    config: {min_tokens: 8, max_stopword_ratio: 1.0,
+         |             max_punct_ratio: 1.0, min_mean_token_len: 0,
+         |             max_mean_token_len: 100}
+         |  - name: pii-scrub
+         |    config: {text_column: text}
+         |  - name: dedup-gate
+         |    config: {index_path: $root/fp}
+         |  - name: neardup-gate
+         |    config: {index_path: $root/lsh}
+         |sinks:
+         |  - name: bm25-index
+         |    config: {index_path: $root/bm25, buckets: 8}
+         |  - name: file
+         |    config: {path: $root/out_$k.ndjson, format: ndjson}
+         |""".stripMargin)
+    val agent = new Agent(spark, stopOnSinkError = true, maxRetries = 0)
+    assert(agent.run(recipe(0)).success)
+    val (r, jobs) = SparkJobs.inGroup(spark.sparkContext, "graft-run-curate")(
+      agent.run(recipe(1)))
+    assert(r.success, r.error)
+    assert(r.recordCount == 41L, r)
+    assert(r.sinkCounts.values.forall(_ == r.recordCount), r.sinkCounts)
+    assert(jobs.size <= 22, s"the second ingest ran ${jobs.size} jobs")
+  }
+
   test("cancel interrupts a running recipe (agent/agent.go:160-179 analogue)") {
     // slow extractor: each partition sleeps, so the persisted count() hangs
     // long enough to cancel; registered once per JVM
@@ -1637,6 +1769,11 @@ class AgentSpec extends SparkSpec {
     assert(prev.getAs[String]("rows").contains("ALGERIA") ||
       prev.getAs[String]("rows").length > 2)
   }
+}
+
+object AgentSpec {
+  /** The `tick` UDF's counter: every evaluation takes the next value. */
+  val ticks = new java.util.concurrent.atomic.AtomicLong()
 }
 
 class EnrichSpec extends SparkSpec {
@@ -2093,6 +2230,35 @@ class SinksSpec extends SparkSpec {
       "format" -> "json", "output_format" -> "noop"))
     assert(n == 7L)
     assert(scans.value == 7L) // exactly one pass over the upstream
+  }
+
+  test("the ndjson file sink writes the bytes Dataset.toJSON gives") {
+    import org.apache.spark.sql.functions._
+    val df = Seq(
+        (1L, Some("plain"), 0.1, Seq(Seq(1, 2), Seq()), "2024-03-01 12:34:56.789",
+          "naïve café — 日本語 😀 \"q\" \\ \n\t"),
+        (2L, None, -0.0, Seq(Seq(3)), "1970-01-01 00:00:00",
+          ""),
+        (3L, Some("x"), 1e300, Seq.empty[Seq[Int]], "2038-01-19 03:14:07.5",
+          "\u0001 control"))
+      .toDF("id", "maybe", "d", "nested", "ts", "text")
+      .withColumn("ts", to_timestamp(col("ts")))
+      .withColumn("d2", when(col("id") === 2, lit(Double.NaN))
+        .when(col("id") === 3, lit(Double.PositiveInfinity)).otherwise(1.5))
+      .withColumn("st", struct(col("maybe").as("m"),
+        struct(col("d").as("inner.d"), array(col("maybe")).as("arr")).as("s")))
+      .withColumn("a.b", col("id") * 10)
+      .withColumn("nul", lit(null).cast("string"))
+      .withColumn("day", to_date(col("ts")))
+      .withColumn("dec", (col("id") / 3).cast("decimal(10,4)"))
+      .withColumn("kv", map(col("text"), col("id")))
+    val out = Files.createTempDirectory("ndjsonout").resolve("x.ndjson")
+    assert(graft.sinks.FileSink.sink(df,
+      Map("path" -> out.toString, "format" -> "ndjson")) == 3L)
+    val want = df.toJSON.collect().map(_ + "\n").mkString
+    assert(Files.readString(out, java.nio.charset.StandardCharsets.UTF_8) ==
+      want)
+    assert(want.contains("\"a.b\":10") && want.contains("日本語"), want)
   }
 
   test("yaml file sink writes a parseable list") {

@@ -4,17 +4,19 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Classify, Dedup, Fsck, Retrieval, Similarity}
+import graft.operators.{Classify, Dedup, Fsck, Layout, Retrieval, Similarity}
 import graft.sinks.{Bm25IndexSink, IndexProtocol}
 
 /** The one-row records the persisted stores freeze (`_graft_layout`,
   * `_graft_index_config`, `_graft_pq2/rerank`), read through
   * [[graft.operators.Layout.readRecord]] and written through
   * [[graft.operators.Layout.writeRecord]]: each family's record read runs
-  * one Spark job and no schema inference, stores older than their record
-  * read through the documented fallback, and a record write that dies
-  * before its rename leaves the previous record readable.
+  * no Spark job (the driver reads the parquet file itself) and gives the
+  * row Spark's reader gives, stores older than their record read through
+  * the documented fallback, and a record write that dies before its
+  * rename leaves the previous record readable.
   */
 class StoreRecordSpec extends SparkSpec {
   import spark.implicits._
@@ -52,25 +54,27 @@ class StoreRecordSpec extends SparkSpec {
   private def bm25Cfg(buckets: Int) = s"fielded=false,title_tokens=8," +
     s"buckets=$buckets,chunk_grain=false,chunk_bits=20"
 
-  /** `read` runs exactly one Spark job, inside a SQL query: a schema
-    * inference job runs outside any SQL execution. */
-  private def oneQueryJob[A](what: String)(read: => A): A = {
+  /** The record at `dir` as Spark's parquet reader gives it. */
+  private def sparkRecord(dir: String, ddl: String) =
+    spark.read.schema(ddl).parquet(dir).collect().headOption
+
+  /** `read` runs no Spark job at all. */
+  private def noJob[A](what: String)(read: => A): A = {
     val (r, jobs) = SparkJobs.startedBy(sc)(read)
-    assert(jobs.size == 1, s"$what ran ${jobs.size} jobs")
-    assert(jobs.forall(_.getProperty("spark.sql.execution.id") != null),
-      s"$what ran a job outside a SQL query (schema inference)")
+    assert(jobs.isEmpty, s"$what ran ${jobs.size} jobs")
     r
   }
 
-  test("each store family's record read runs one Spark job and no " +
-      "schema-inference job") {
+  test("each store family's record read runs no Spark job and gives the " +
+      "row Spark's reader gives (INT, BIGINT and STRING columns)") {
     val bm25 = storePath("rec_bm25")
     assert(Bm25IndexSink.sink(docs(1, 41), bm25Config(bm25)) == 40L)
-    assert(oneQueryJob("bm25 layout")(
+    assert(noJob("bm25 layout")(
       Retrieval.readLayoutMeta(spark, bm25)) == Some(4))
-    assert(oneQueryJob("bm25 config")(
+    assert(noJob("bm25 config")(
       IndexProtocol.storedLayoutConfig(spark, bm25)) == Some(bm25Cfg(4)))
-    // the control: an inferring read of the same record is detected
+    // the control: an inferring read of the same record is detected, as
+    // a job outside any SQL query
     val (_, inferring) = SparkJobs.startedBy(sc)(
       spark.read.parquet(s"$bm25/_graft_layout").head())
     assert(inferring.exists(_.getProperty("spark.sql.execution.id") == null))
@@ -79,14 +83,14 @@ class StoreRecordSpec extends SparkSpec {
     Similarity.writeVectorStore((1 to 20).map(i =>
         (i.toLong, Seq(i.toDouble, 1.0 / i))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", vectors, parts = 4)
-    assert(oneQueryJob("vector parts")(
+    assert(noJob("vector parts")(
       Similarity.vectorStorePartsAt(spark, vectors)) == Some(4))
-    assert(oneQueryJob("fsck detect")(Fsck.detect(spark, vectors)) ==
+    assert(noJob("fsck detect")(Fsck.detect(spark, vectors)) ==
       "vector")
 
     val codes = storePath("rec_rerank")
     Similarity.writeRerankLinkAt(spark, codes, Some(vectors))
-    assert(oneQueryJob("rerank link")(
+    assert(noJob("rerank link")(
       Similarity.rerankLinkAt(spark, codes)) == Some(Some(vectors)))
     Similarity.writeRerankLinkAt(spark, codes, None)
     assert(Similarity.rerankLinkAt(spark, codes) == Some(None))
@@ -95,14 +99,31 @@ class StoreRecordSpec extends SparkSpec {
     val winnow = storePath("rec_winnow")
     Dedup.writeWinnowStoreAt(spark, winnow, docs(1, 21), "doc_id", "text",
       k = 2, w = 3, fpBuckets = 8, docBuckets = 4)
-    assert(oneQueryJob("winnow layout")(
+    assert(noJob("winnow layout")(
       Dedup.winnowLayoutAt(spark, winnow)) == ((2, 3, 8, 4)))
-    oneQueryJob("winnow check")(Dedup.requireWinnowLayout(spark, winnow, 2, 3))
+    noJob("winnow check")(Dedup.requireWinnowLayout(spark, winnow, 2, 3))
 
     val nb = storePath("rec_nb")
     Classify.writeNbStore(docs(1, 31), "doc_id", "text", "lang", nb,
       docBuckets = 4)
-    assert(oneQueryJob("nb layout")(Classify.nbLayoutAt(spark, nb)) == 4)
+    assert(noJob("nb layout")(Classify.nbLayoutAt(spark, nb)) == 4)
+
+    val records = Seq(
+      s"$bm25/_graft_layout" -> "buckets INT",
+      s"$bm25/_graft_index_config" -> "cfg STRING",
+      s"$bm25/stats" -> "n_docs BIGINT, tot BIGINT",
+      s"$vectors/_graft_layout" -> "parts INT",
+      s"$codes/_graft_pq2/rerank" -> "rerank_path STRING",
+      s"$winnow/_graft_layout" -> "k INT, w INT, fbuckets INT, dbuckets INT",
+      s"$nb/_graft_layout" -> "dbuckets INT")
+    for ((dir, ddl) <- records) {
+      val r = Layout.readRecord(spark, dir, ddl)
+      assert(r.nonEmpty, dir)
+      assert(r == sparkRecord(dir, ddl), dir)
+      assert(r.get.schema == StructType.fromDDL(ddl), dir)
+    }
+    assert(Layout.readRecord(spark, s"$bm25/stats",
+      "n_docs BIGINT, tot BIGINT").get.getLong(0) == 40L)
   }
 
   /** The WARN messages Spark's file-source resolution logs while `body`
@@ -230,18 +251,59 @@ class StoreRecordSpec extends SparkSpec {
   test("a record write that fails before its rename leaves the previous " +
       "record readable") {
     val path = storePath("rec_torn", faulty = true)
+    val stats = s"$path/stats"
     IndexProtocol.writeLayoutConfig(spark, path, "cfg-a")
     Similarity.writeRerankLinkAt(spark, path, Some("/vectors/a"))
+    Layout.writeRecord(Seq((7L, 70L)).toDF("n_docs", "tot"), stats)
     val writes = Seq[(String, () => Unit)](
       "/_graft_index_config__replacing/" ->
         (() => IndexProtocol.writeLayoutConfig(spark, path, "cfg-b")),
       "/_graft_pq2/rerank__replacing/" ->
-        (() => Similarity.writeRerankLinkAt(spark, path, Some("/vectors/b"))))
+        (() => Similarity.writeRerankLinkAt(spark, path, Some("/vectors/b"))),
+      "/stats__replacing/" ->
+        (() => Layout.writeRecord(Seq((8L, 80L)).toDF("n_docs", "tot"),
+          stats)))
     for ((fragment, write) <- writes)
       intercept[Exception] {
         FaultyFs.armed(FaultyFs.Rule("create", fragment))(write())
       }
     assert(IndexProtocol.storedLayoutConfig(spark, path) == Some("cfg-a"))
     assert(Similarity.rerankLinkAt(spark, path) == Some(Some("/vectors/a")))
+    val ddl = "n_docs BIGINT, tot BIGINT"
+    val r = Layout.readRecord(spark, stats, ddl)
+    assert(r.map(_.toSeq) == Some(Seq(7L, 70L)))
+    assert(r == sparkRecord(stats, ddl))
+    // a record that cannot be opened fails the read, never reads as None
+    intercept[java.io.IOException] {
+      FaultyFs.armed(FaultyFs.Rule("open", "/stats/")) {
+        Layout.readRecord(spark, stats, ddl)
+      }
+    }
+  }
+
+  test("a record missing a column, or holding a null, reads it as null; " +
+      "_SUCCESS, .crc and zero-row files are skipped") {
+    val dir = storePath("rr_old")
+    Layout.writeRecord(Seq((2, 3L, Option.empty[String])).toDF("k", "w", "s"),
+      dir)
+    assert(fs(dir).exists(new Path(dir, "_SUCCESS")))
+    // a checksum file that is no parquet file, named to sort first
+    val crc = fs(dir).create(new Path(dir, ".part-00000.crc"))
+    crc.write("not parquet".getBytes("UTF-8"))
+    crc.close()
+    val ddl = "k INT, w BIGINT, s STRING, label STRING, n INT"
+    val r = Layout.readRecord(spark, dir, ddl)
+    assert(r.map(_.toSeq) == Some(Seq(2, 3L, null, null, null)))
+    assert(r == sparkRecord(dir, ddl))
+    // a zero-row file beside the record's (as an empty task writes one)
+    // is passed over, whatever its name sorts as
+    Seq.empty[(Int, Long)].toDF("k", "w").coalesce(1).write
+      .parquet(s"$dir/../empty")
+    val empty = fs(dir).listStatus(new Path(s"$dir/../empty"))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    assert(fs(dir).rename(empty, new Path(dir, "part-00000-a.parquet")))
+    assert(Layout.readRecord(spark, dir, ddl) == r)
+    // a directory holding only a zero-row file has no record
+    assert(Layout.readRecord(spark, s"$dir/../empty", ddl).isEmpty)
   }
 }
