@@ -65,8 +65,9 @@ class StoreRecordSpec extends SparkSpec {
     r
   }
 
-  test("each store family's record read runs no Spark job and gives the " +
-      "row Spark's reader gives (INT, BIGINT and STRING columns)") {
+  // the records below cover INT, BIGINT and STRING columns
+  test("each store family's record read runs no Spark job and matches " +
+      "Spark's reader") {
     val bm25 = storePath("rec_bm25")
     assert(Bm25IndexSink.sink(docs(1, 41), bm25Config(bm25)) == 40L)
     assert(noJob("bm25 layout")(
