@@ -138,11 +138,16 @@ class Agent(
         }
 
         // one pass materialized, N sink reads (agent/stream.go fan-out);
-        // a frame that already is one needs no second copy
+        // a frame that already is one needs no second copy, and is counted
+        // over its rows in one job: Dataset.count plans an aggregate whose
+        // exchange adds a job. A persisted frame is counted by the job
+        // that fills the cache.
         val cache = !Agent.materialized(processed)
         if (cache) processed.persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val recordCount = processed.count()
+          val recordCount =
+            if (cache) processed.count()
+            else processed.queryExecution.toRdd.count()
           val sinkCounts = fanOut(recipe.name, processed, recipe.sinks)
           RunResult(recipe, success = true, None,
             (System.nanoTime() - t0) / 1000000L, recordCount, sinkCounts)

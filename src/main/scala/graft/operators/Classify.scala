@@ -137,22 +137,21 @@ object Classify {
                    labelCol: String, path: String,
                    docBuckets: Int = NbDocBuckets): Unit = {
     val spark = train.sparkSession
-    nbModel(train, textCol, labelCol)
-      .coalesce(4).write.mode("overwrite").parquet(s"$path/model")
-    train.select(col(idCol))
-      .withColumn("dbucket",
-        pmod(xxhash64(col(idCol)), lit(docBuckets)).cast("int"))
-      .repartition(2, col("dbucket"))
-      .sortWithinPartitions(col("dbucket"), col(idCol))
-      .write.mode("overwrite").partitionBy("dbucket")
-      .parquet(s"$path/docs")
+    Layout.writer(nbModel(train, textCol, labelCol).coalesce(4))
+      .mode("overwrite").parquet(s"$path/model")
+    Layout.writer(train.select(col(idCol))
+        .withColumn("dbucket",
+          pmod(xxhash64(col(idCol)), lit(docBuckets)).cast("int"))
+        .repartition(2, col("dbucket"))
+        .sortWithinPartitions(col("dbucket"), col(idCol)))
+      .mode("overwrite").partitionBy("dbucket").parquet(s"$path/docs")
     // freeze the sidecar modulus INSIDE the store, before the commit
     // signal — mutations read it back instead of trusting the constant
     import spark.implicits._
     Layout.writeRecord(Seq(docBuckets).toDF("dbuckets"),
       s"$path/_graft_layout")
-    nbClassBase(train, idCol, textCol, labelCol)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/base")
+    Layout.writer(nbClassBase(train, idCol, textCol, labelCol).coalesce(1))
+      .mode("overwrite").parquet(s"$path/base")
   }
 
   /** (model, base) handles onto a written store — feed to [[nbPredict]];
@@ -227,7 +226,7 @@ object Classify {
       (newModel, newBase, sideAdd)
     }) { case (newModel, newBase, sideAdd) =>
       Layout.replaceDir(newModel.coalesce(4), s"$path/model")
-      sideAdd.write.mode("append").partitionBy("dbucket")
+      Layout.writer(sideAdd).mode("append").partitionBy("dbucket")
         .parquet(s"$path/docs")
       Layout.replaceDir(newBase.coalesce(1), s"$path/base")
     }

@@ -1150,12 +1150,11 @@ object Dedup {
     // gate's missing-store semantics keep applying, and a later batch
     // with real fingerprints builds normally)
     if (fps.isEmpty) return
-    fps.withColumn("dbucket",
-        pmod(xxhash64(col(idCol)), lit(docBuckets)).cast("int"))
-      .repartition(4, col("dbucket"))
-      .sortWithinPartitions(col("dbucket"), col(idCol))
-      .write.mode("overwrite").partitionBy("dbucket")
-      .parquet(s"$path/docs")
+    Layout.writer(fps.withColumn("dbucket",
+          pmod(xxhash64(col(idCol)), lit(docBuckets)).cast("int"))
+        .repartition(4, col("dbucket"))
+        .sortWithinPartitions(col("dbucket"), col(idCol)))
+      .mode("overwrite").partitionBy("dbucket").parquet(s"$path/docs")
     // freeze the winnowing geometry AND the directory moduli INSIDE the
     // store (the _graft_index_config discipline): a later batch gating
     // or merging under different k/w would fingerprint a different
@@ -1165,12 +1164,11 @@ object Dedup {
     import spark.implicits._
     Layout.writeRecord(Seq((k, w, fpBuckets, docBuckets))
       .toDF("k", "w", "fbuckets", "dbuckets"), s"$path/_graft_layout")
-    fps.groupBy(col("fp")).agg(count(lit(1)).as("refs"))
-      .withColumn("fbucket", winnowFpBucket(fpBuckets))
-      .repartition(4, col("fbucket"))
-      .sortWithinPartitions(col("fbucket"), col("fp"))
-      .write.mode("overwrite").partitionBy("fbucket")
-      .parquet(s"$path/fps")
+    Layout.writer(fps.groupBy(col("fp")).agg(count(lit(1)).as("refs"))
+        .withColumn("fbucket", winnowFpBucket(fpBuckets))
+        .repartition(4, col("fbucket"))
+        .sortWithinPartitions(col("fbucket"), col("fp")))
+      .mode("overwrite").partitionBy("fbucket").parquet(s"$path/fps")
   }
 
   /** Reject a gate/merge whose (k, w) differs from what the store was
@@ -1256,12 +1254,11 @@ object Dedup {
         newRows, hitDirs, fpsRaw, sortCols = Seq("fp"))
       (bfps, fpsPlan)
     }) { case (bfps, fpsPlan) =>
-      bfps.withColumn("dbucket",
-          pmod(xxhash64(col(idCol)), lit(docB)).cast("int"))
-        .repartition(2, col("dbucket"))
-        .sortWithinPartitions(col("dbucket"), col(idCol))
-        .write.mode("append").partitionBy("dbucket")
-        .parquet(s"$path/docs")
+      Layout.writer(bfps.withColumn("dbucket",
+            pmod(xxhash64(col(idCol)), lit(docB)).cast("int"))
+          .repartition(2, col("dbucket"))
+          .sortWithinPartitions(col("dbucket"), col(idCol)))
+        .mode("append").partitionBy("dbucket").parquet(s"$path/docs")
       // fps rewrite LAST — its _SUCCESS is the commit signal
       Layout.execDirRewrite(spark, fpsPlan)
     }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical data layout for 100 TB corpora — the ingest-time decisions that
@@ -21,13 +22,44 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
+  /** The Hadoop settings every store write graft owns carries: `file:`
+    * paths resolve to [[LocalFs]], which creates files and directories
+    * without forking `chmod`. The cache is disabled for the scheme because
+    * `FileSystem.get` caches one instance per scheme, authority and user:
+    * the impl key alone would return the session's cached FileSystem.
+    * Only `file:` is affected; HDFS and object-store paths keep theirs.
+    * Never set on the session, so the embedding application's own I/O
+    * keeps its FileSystem.
+    */
+  private val localFsConf = Map(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** `df.write` for a graft store or layout write. Spark folds data-source
+    * options into the write job's Hadoop conf, so the job's tasks and its
+    * committer create files through [[localFsConf]]'s FileSystem. */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(localFsConf)
+
+  /** The FileSystem of `path` under the session's Hadoop conf plus
+    * [[localFsConf]]: for the files a store mutation creates on the
+    * driver. */
+  private def storeFs(spark: SparkSession,
+                      path: org.apache.hadoop.fs.Path)
+      : org.apache.hadoop.fs.FileSystem = {
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    localFsConf.foreach { case (k, v) => conf.set(k, v) }
+    path.getFileSystem(conf)
+  }
+
   /** Directory-partitioned parquet: one directory per distinct combination
     * of `partitionCols`. Keep cardinality low (≤ a few thousand dirs).
     */
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String],
                        mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
+    writer(df).mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
   /** Hash-bucketed (and per-bucket sorted) table in the session catalog.
     * Joins and aggregations keyed on `bucketCol` across tables with the
@@ -64,7 +96,7 @@ object Layout {
     val fs = destPath.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(dest + "__replacing")
-    val w = df.write.mode("overwrite")
+    val w = writer(df).mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(tmp.toString)
     fs.delete(destPath, true)
@@ -90,45 +122,47 @@ object Layout {
 
   /** Read the one-row record a store freezes at `dir` (its layout knobs,
     * its build config, its rerank linkage, the BM25 `stats` row) with the
-    * record's known `ddl` schema, on the driver: the parquet files are
-    * read straight through the Hadoop FileSystem, so a record read runs
-    * no Spark job. None when the store carries no such record (or it
-    * holds no row); a column that an older store's record lacks reads as
-    * null, for the caller's documented fallback. `_SUCCESS`, checksum and
-    * other `_`/`.` entries are skipped, as Spark's reader skips them.
-    * Columns are INT, BIGINT or STRING.
+    * record's known `ddl` schema, on the driver ([[readRows]]), so a
+    * record read runs no Spark job. None when the store carries no such
+    * record (or it holds no row); a column that an older store's record
+    * lacks reads as null, for the caller's documented fallback.
     */
-  def readRecord(spark: SparkSession, dir: String, ddl: String): Option[Row] = {
+  def readRecord(spark: SparkSession, dir: String, ddl: String): Option[Row] =
+    readRows(spark, dir, ddl).headOption
+
+  /** Every row of the small parquet table at `dir` as rows of the known
+    * `ddl` schema, read on the driver: the parquet files are read straight
+    * through the Hadoop FileSystem, in file-name order, and no Spark job
+    * runs. Empty when `dir` does not exist. A column a file lacks reads as
+    * null. `_SUCCESS`, checksum and other `_`/`.` entries are skipped, as
+    * Spark's reader skips them. Columns are INT, BIGINT or STRING. Meant
+    * for a store's records and its few-row stats tables only.
+    */
+  def readRows(spark: SparkSession, dir: String, ddl: String): Seq[Row] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
+    if (!fs.exists(p)) Nil
     else {
       val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
       fs.listStatus(p).filter(s => s.isFile && !hidden(s.getPath.getName))
-        .sortBy(_.getPath.getName).iterator
-        .map(recordRowOf(_, conf, schema)).collectFirst { case Some(r) => r }
+        .sortBy(_.getPath.getName).toSeq
+        .flatMap(rowsOf(_, conf, schema))
     }
   }
 
-  /** The first row of one parquet file as a row of `schema`. */
-  private def recordRowOf(file: org.apache.hadoop.fs.FileStatus,
-                          conf: org.apache.hadoop.conf.Configuration,
-                          schema: org.apache.spark.sql.types.StructType)
-      : Option[Row] = {
+  /** The rows of one parquet file as rows of `schema`. */
+  private def rowsOf(file: org.apache.hadoop.fs.FileStatus,
+                     conf: org.apache.hadoop.conf.Configuration,
+                     schema: org.apache.spark.sql.types.StructType)
+      : Seq[Row] = {
     import org.apache.parquet.example.data.Group
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
-      val pages = Iterator.continually(reader.readNextRowGroup())
-        .takeWhile(_ != null).find(_.getRowCount > 0)
-      pages.map { rg =>
-        val g: Group = new org.apache.parquet.io.ColumnIOFactory()
-          .getColumnIO(fileSchema)
-          .getRecordReader(rg, new org.apache.parquet.example.data.simple
-            .convert.GroupRecordConverter(fileSchema)).read()
+      def rowOf(g: Group): Row = {
         val values = schema.fields.map { f =>
           if (!fileSchema.containsField(f.name)) null
           else {
@@ -146,6 +180,14 @@ object Layout {
         new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
           values.asInstanceOf[Array[Any]], schema)
       }
+      Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+        .flatMap { rg =>
+          val records = new org.apache.parquet.io.ColumnIOFactory()
+            .getColumnIO(fileSchema)
+            .getRecordReader(rg, new org.apache.parquet.example.data.simple
+              .convert.GroupRecordConverter(fileSchema))
+          Iterator.fill(rg.getRowCount.toInt)(rowOf(records.read()))
+        }.toVector
     } finally reader.close()
   }
 
@@ -235,7 +277,7 @@ object Layout {
     */
   def execDirRewrite(spark: org.apache.spark.sql.SparkSession,
                      pr: PlannedRewrite): Unit = {
-    pr.replacement.write.mode("overwrite")
+    writer(pr.replacement).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(pr.part).parquet(pr.dirPath)
     val fs = new org.apache.hadoop.fs.Path(pr.dirPath)
@@ -248,8 +290,8 @@ object Layout {
       .exists(s => s.isDirectory &&
         s.getPath.getName.startsWith(s"${pr.part}="))
     if (!anyLeft)
-      pr.schemaSrc.limit(0).drop(pr.part).repartition(1)
-        .write.mode("overwrite").parquet(s"${pr.dirPath}/${pr.part}=-1")
+      writer(pr.schemaSrc.limit(0).drop(pr.part).repartition(1))
+        .mode("overwrite").parquet(s"${pr.dirPath}/${pr.part}=-1")
   }
 
   /** The distinct `part` directory values of `hit` (collect is bounded
@@ -376,7 +418,7 @@ object Layout {
                                     path: String)(prepare: => P)(
                                     mutate: P => A): A = {
     val marker = pendingMarkerOf(path)
-    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = storeFs(spark, marker)
     acquirePendingMarker(f, marker, path)
     val p =
       try prepare

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.util.chaining._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -291,6 +291,16 @@ object Retrieval {
           greatest(size(tk) - titleTokens, lit(0))))).as("fields"))
   }
 
+  /** The field tags of a [[fieldTerms]] frame, in `fields` order. */
+  private val FieldTags = Seq("t", "b")
+
+  /** Σ dl of the `i`-th field over a [[fieldTerms]] frame's documents with
+    * tokens in it: the field's tot_f in [[bm25fComponentsOf]]'s stats. */
+  private def fieldTokens(i: Int): Column = {
+    val dl = col("fields")(i)("dl")
+    sum(when(dl > 0, dl))
+  }
+
   /** A document's distinct terms across both fields of a [[fieldTerms]]
     * frame. */
   private val fieldedTermsCol: Column =
@@ -330,15 +340,12 @@ object Retrieval {
     val (docs, n, _) =
       observedDocs(fieldTerms(corpus, idCol, textCol, titleTokens))
     val c = bm25fComponentsOf(docs, idCol)
-    c.postings.withColumn("bucket", termBucket(buckets))
-      .repartition(buckets, col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("term"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings")
+    writePostings(c.postings, buckets, path, "overwrite")
     writeSidecarRows(docsSidecarRows(docs, idCol, buckets, fieldedTermsCol),
       s"$path/docs", "overwrite")
     writeLayoutMeta(corpus.sparkSession, path, buckets)
-    c.stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+    Layout.writer(c.stats.coalesce(1)).mode("overwrite")
+      .parquet(s"$path/stats")
     n
   }
 
@@ -576,7 +583,7 @@ object Retrieval {
 
   private def writeSidecarRows(rows: DataFrame, path: String,
                                mode: String): Unit =
-    rows.write.mode(mode).partitionBy("dbucket").parquet(path)
+    Layout.writer(rows).mode(mode).partitionBy("dbucket").parquet(path)
 
   /** Write-once BM25 index: `path/postings` ((doc, term, tf, dl) rows in
     * term-hash bucket DIRECTORIES so any term's posting list stays in one
@@ -594,25 +601,17 @@ object Retrieval {
                      path: String, buckets: Int = 16): Long = {
     val (docs, n, _) = observedDocs(docTerms(corpus, idCol, textCol))
     val post = postingsOf(docs, idCol)
-    // term-sorted within each bucket file: parquet row-group min/max on
-    // term then lets a term-restricted read skip row groups INSIDE the
-    // hit bucket too — directory pruning picks the bucket, statistics
-    // prune within it
-    post.withColumn("bucket", termBucket(buckets))
-      .repartition(buckets, col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("term"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings")
+    writePostings(post, buckets, path, "overwrite")
     // df off the WRITTEN postings, which arrive term-sorted per bucket, so
     // the df files come out in the same row order whatever order the
     // batch's docs arrived in
-    dfreqOf(corpus.sparkSession.read.parquet(s"$path/postings"))
-      .repartition(math.min(buckets, 4), col("term"))
-      .write.mode("overwrite").parquet(s"$path/dfreq")
+    Layout.writer(dfreqOf(corpus.sparkSession.read.parquet(s"$path/postings"))
+        .repartition(math.min(buckets, 4), col("term")))
+      .mode("overwrite").parquet(s"$path/dfreq")
     writeSidecarRows(docsSidecarRows(docs, idCol, buckets,
       col("terms.term")), s"$path/docs", "overwrite")
     writeLayoutMeta(corpus.sparkSession, path, buckets)
-    docCounts(docs).write.mode("overwrite").parquet(s"$path/stats")
+    Layout.writer(docCounts(docs)).mode("overwrite").parquet(s"$path/stats")
     n
   }
 
@@ -716,10 +715,12 @@ object Retrieval {
     * when fielded) — a single job with no exchange, which also counts
     * the batch ([[observedDocs]]) — and the postings append, the sidecar
     * rows (each doc's term buckets from its own terms) and the stats adds
-    * all read that frame. The plain PREPARE reads the `_graft_layout` and
-    * `stats` records on the driver ([[Layout.readRecord]], no job), then
+    * all read that frame. Both PREPAREs read the `_graft_layout` record
+    * and the `stats` rows on the driver ([[Layout.readRows]], no job) and
+    * build the merged stats there from the checkpoint job's observed
+    * totals. The plain PREPARE then
     * merges the df table in one aggregate over the store's rows and the
-    * frame's terms; MUTATE runs the postings append,
+    * frame's terms; its MUTATE runs the postings append,
     * sidecar append and df replacement at the same time
     * ([[Layout.concurrently]], the caller's job group, all finished
     * before the phase ends), then `stats`. Everything that can fail for
@@ -728,7 +729,7 @@ object Retrieval {
     *
     * Same arriving-batch (ids disjoint from the store) and SINGLE-WRITER
     * contract as every stored index gate. Merged-on-disk ≡ rebuild is
-    * pinned in RetrievalSpec, the plain merge's job count and failure
+    * pinned in RetrievalSpec, both merges' job counts and the failure
     * behaviour in Bm25MergeSpec.
     */
   def mergeBm25StoreAt(spark: SparkSession, path: String, batch: DataFrame,
@@ -764,7 +765,7 @@ object Retrieval {
       val stored = Layout.readRecord(spark, s"$path/stats",
         StatsSchema.toDDL).getOrElse(
           throw new IllegalStateException(s"$path/stats holds no row"))
-      val (docs, n, tot) = observedDocs(docTerms(batch, idCol, textCol),
+      val (docs, n, Seq(tot)) = observedDocs(docTerms(batch, idCol, textCol),
         sum(col("dl")))
       val newDfreq = mergedDfreq(
         spark.read.schema(DfreqSchema).parquet(s"$path/dfreq"),
@@ -777,7 +778,7 @@ object Retrieval {
       (b, docs, newDfreq, newStats, n)
     }) { case (b, docs, newDfreq, newStats, n) =>
       Layout.concurrently3(spark)(
-        appendPostings(postingsOf(docs, idCol), b, path),
+        writePostings(postingsOf(docs, idCol), b, path, "append"),
         writeSidecarRows(docsSidecarRows(docs, idCol, b, col("terms.term")),
           s"$path/docs", "append"),
         Layout.replaceDir(newDfreq, s"$path/dfreq"))
@@ -790,23 +791,28 @@ object Retrieval {
 
   /** The fielded merge of [[mergeBm25StoreAt]]: the batch is tokenized
     * and field-split once, into its checkpointed [[fieldTerms]] frame;
-    * the postings, the sidecar rows and the stats adds all read it, and
-    * its checkpoint job counts it. */
+    * the postings and the sidecar rows read it, and its checkpoint job
+    * counts it and sums each field's tokens. The stored stats rows are
+    * read on the driver and the merged rows built there
+    * ([[mergedFieldedRows]]), so the stats step runs no job before the
+    * write. */
   private def mergeFieldedAt(spark: SparkSession, path: String,
                              batch: DataFrame, idCol: String,
                              textCol: String, titleTokens: Int,
                              buckets: Int): Long =
     Layout.withPendingMarkerStaged(spark, path)({
       val b = readLayoutMeta(spark, path).getOrElse(buckets)
-      val (docs, n, _) =
-        observedDocs(fieldTerms(batch, idCol, textCol, titleTokens))
-      val add = bm25fComponentsOf(docs, idCol)
-      val newStats = mergedFieldedStats(
-        spark.read.schema(FieldedStatsSchema).parquet(s"$path/stats"), docs,
-        add.stats).localCheckpoint()
-      (b, docs, add.postings, newStats, n)
+      val stored = Layout.readRows(spark, s"$path/stats",
+        FieldedStatsSchema.toDDL)
+      val (docs, n, tots) =
+        observedDocs(fieldTerms(batch, idCol, textCol, titleTokens),
+          FieldTags.indices.map(fieldTokens): _*)
+      val newStats = spark.createDataFrame(java.util.List.of(
+        mergedFieldedRows(stored, n, FieldTags.zip(tots)): _*),
+        FieldedStatsSchema)
+      (b, docs, bm25fComponentsOf(docs, idCol).postings, newStats, n)
     }) { case (b, docs, addP, newStats, n) =>
-      appendPostings(addP, b, path)
+      writePostings(addP, b, path, "append")
       writeSidecarRows(docsSidecarRows(docs, idCol, b, fieldedTermsCol),
         s"$path/docs", "append")
       // stats last, by temp-write + rename: the store's commit signal
@@ -815,25 +821,31 @@ object Retrieval {
     }
 
   /** Checkpoint a batch's per-document frame, counting its rows and
-    * taking the aggregate `total` over them on the checkpoint job itself
-    * ([[org.apache.spark.sql.Observation]]): (frame, rows, total). */
+    * taking each aggregate of `totals` over them (0 over no rows) on the
+    * checkpoint job itself ([[org.apache.spark.sql.Observation]]):
+    * (frame, rows, totals). */
   private def observedDocs(docs: DataFrame,
-                           total: Column = lit(0L)): (DataFrame, Long, Long) = {
+                           totals: Column*): (DataFrame, Long, Seq[Long]) = {
     val counts = org.apache.spark.sql.Observation()
     val frame = docs.observe(counts, count(lit(1)).as("n"),
-      coalesce(total, lit(0L)).as("t")).localCheckpoint()
+      totals.zipWithIndex.map { case (t, i) =>
+        coalesce(t, lit(0L)).as(s"t$i") }: _*).localCheckpoint()
     val r = counts.get
-    (frame, r("n").asInstanceOf[Long], r("t").asInstanceOf[Long])
+    (frame, r("n").asInstanceOf[Long],
+      totals.indices.map(i => r(s"t$i").asInstanceOf[Long]))
   }
 
-  /** Append a batch's postings into their term-hash bucket directories,
-    * term-sorted within each file like the build. */
-  private def appendPostings(addP: DataFrame, buckets: Int,
-                             path: String): Unit =
-    addP.withColumn("bucket", termBucket(buckets))
-      .repartition(buckets, col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("term"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
+  /** Write postings into their term-hash bucket directories under
+    * `path/postings` (a build overwrites, a merge appends), term-sorted
+    * within each bucket file: parquet row-group min/max on term then lets
+    * a term-restricted read skip row groups INSIDE the hit bucket too —
+    * directory pruning picks the bucket, statistics prune within it. */
+  private def writePostings(postings: DataFrame, buckets: Int, path: String,
+                            mode: String): Unit =
+    Layout.writer(postings.withColumn("bucket", termBucket(buckets))
+        .repartition(buckets, col("bucket"))
+        .sortWithinPartitions(col("bucket"), col("term")))
+      .mode(mode).partitionBy("bucket").parquet(s"$path/postings")
 
   /** Reciprocal-rank fusion — hybrid retrieval's standard combiner: each
     * input ranking ((q_id, rnk, idCol) rows) contributes
@@ -1217,9 +1229,9 @@ object Retrieval {
     * is a CORPUS-level constant duplicated onto every field row (the
     * avgdl_f denominator counts all docs) — merge it as one, never
     * per-field: a batch with no tokens in some field (or none at all)
-    * contributes no stats row for it, but its docs still count. Shared
-    * by the logical merge ([[bm25fApplyDelta]]) and the persisted one
-    * ([[mergeBm25StoreAt]]).
+    * contributes no stats row for it, but its docs still count. The
+    * logical merge's ([[bm25fApplyDelta]]); the persisted one computes the
+    * same rows on the driver ([[mergedFieldedRows]]).
     */
   private def mergedFieldedStats(storeStats: DataFrame, added: DataFrame,
                                  addStats: DataFrame): DataFrame = {
@@ -1235,6 +1247,22 @@ object Retrieval {
       .crossJoin(mergedN)
       .select(col("f"), (col("__sn") + col("__an")).as("n_docs"),
         col("tot_f"))
+  }
+
+  /** [[mergedFieldedStats]] on the driver, for the persisted merge: the
+    * stored (f, n_docs, tot_f) rows plus a batch of `n` documents whose
+    * fields hold `tots` tokens (a field with none adds no row), with the
+    * one corpus-level n_docs add on every row. */
+  private def mergedFieldedRows(stored: Seq[Row], n: Long,
+                                tots: Seq[(String, Long)]): Seq[Row] = {
+    def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    val nDocs = stored.map(long(_, 1)).maxOption.getOrElse(0L) + n
+    val storedTot = stored.map(r => r.getString(0) -> long(r, 2))
+    val added = tots.filter(_._2 > 0)
+    (storedTot ++ added).map(_._1).distinct.map { f =>
+      Row(f, nDocs, storedTot.toMap.getOrElse(f, 0L) +
+        added.toMap.getOrElse(f, 0L))
+    }
   }
 
   /** Mutating a store that predates the erasable layout (no id sidecar,

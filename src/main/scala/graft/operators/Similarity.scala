@@ -177,9 +177,9 @@ object Similarity {
     */
   def writeInt8Store(corpus: DataFrame, idCol: String, vecCol: String,
                      path: String, parts: Int = 8): Unit =
-    int8Codes(corpus, idCol, vecCol, "c_id", "c_codes")
-      .repartition(parts, col("c_id"))
-      .write.mode("overwrite").parquet(path)
+    Layout.writer(int8Codes(corpus, idCol, vecCol, "c_id", "c_codes")
+        .repartition(parts, col("c_id")))
+      .mode("overwrite").parquet(path)
 
   /** [[int8TopK]] against stored codes (c_id, c_codes): queries quantize
     * inline (tiny), the corpus side reads ONLY the code store — same
@@ -698,9 +698,9 @@ object Similarity {
     */
   def writeVectorStore(corpus: DataFrame, idCol: String, vecCol: String,
                        path: String, parts: Int = 64): Unit = {
-    corpus.select(col(idCol), col(vecCol))
-      .withColumn("vs_part", pmod(col(idCol), lit(parts)).cast("int"))
-      .write.mode("overwrite").partitionBy("vs_part").parquet(path)
+    Layout.writer(corpus.select(col(idCol), col(vecCol))
+        .withColumn("vs_part", pmod(col(idCol), lit(parts)).cast("int")))
+      .mode("overwrite").partitionBy("vs_part").parquet(path)
     // persist the layout config INSIDE the store: the re-rank derives
     // vs_part on the probe side with pmod(id, parts), so a caller pairing
     // the store with a different `parts` would silently match nothing.
@@ -745,9 +745,9 @@ object Similarity {
   private def appendVectorStore(batch: DataFrame, idCol: String,
                                 vecCol: String, path: String): Unit = {
     val parts = requireVectorParts(batch.sparkSession, path)
-    batch.select(col(idCol), col(vecCol))
-      .withColumn("vs_part", pmod(col(idCol), lit(parts)).cast("int"))
-      .write.mode("append").partitionBy("vs_part").parquet(path)
+    Layout.writer(batch.select(col(idCol), col(vecCol))
+        .withColumn("vs_part", pmod(col(idCol), lit(parts)).cast("int")))
+      .mode("append").partitionBy("vs_part").parquet(path)
   }
 
   /** Whether `path` holds a [[writeVectorStore]] layout (its persisted
@@ -1081,8 +1081,8 @@ object Similarity {
   def writeIvfStoreTwoLevel(corpus: DataFrame, idCol: String, vecCol: String,
                             cb: TwoLevelCodebook, path: String,
                             metaCols: Seq[String] = Nil): Unit = {
-    twoLevelAssigned(corpus, idCol, vecCol, cb, metaCols)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    Layout.writer(twoLevelAssigned(corpus, idCol, vecCol, cb, metaCols))
+      .mode("overwrite").partitionBy("centroid_id").parquet(path)
     writeIdSidecarAt(corpus.sparkSession, path, idCol)
   }
 
@@ -1705,7 +1705,7 @@ object Similarity {
       val sidecar = sidecarExists(spark, path)
       if (sidecar)
         appendIdSidecar(reassigned, idCol, path)
-      reassigned.write.mode("overwrite")
+      Layout.writer(reassigned).mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("centroid_id").parquet(path)
       val fs = new org.apache.hadoop.fs.Path(path)
@@ -1953,12 +1953,12 @@ object Similarity {
     */
   private def appendIdSidecar(assigned: DataFrame, idCol: String,
                               path: String): Unit =
-    assigned.select(col(idCol), col("centroid_id").cast("int").as("home"))
-      .withColumn("ibucket", idSidecarBucket(idCol))
-      .repartition(4, col("ibucket"))
-      .sortWithinPartitions(col("ibucket"), col(idCol))
-      .write.mode("append").partitionBy("ibucket")
-      .parquet(s"$path/_graft_ids")
+    Layout.writer(assigned
+        .select(col(idCol), col("centroid_id").cast("int").as("home"))
+        .withColumn("ibucket", idSidecarBucket(idCol))
+        .repartition(4, col("ibucket"))
+        .sortWithinPartitions(col("ibucket"), col(idCol)))
+      .mode("append").partitionBy("ibucket").parquet(s"$path/_graft_ids")
 
   /** An assigned (or encoded) batch ready to append: its rows, and
     * whether the store carries an id sidecar they also feed. */
@@ -1993,7 +1993,8 @@ object Similarity {
   private def writeAppend(p: PreparedAppend, idCol: String,
                           path: String): Unit = {
     if (p.sidecar) appendIdSidecar(p.rows, idCol, path)
-    p.rows.write.mode("append").partitionBy("centroid_id").parquet(path)
+    Layout.writer(p.rows).mode("append").partitionBy("centroid_id")
+      .parquet(path)
   }
 
   /** One public append: [[prepareAppend]] and [[writeAppend]] under the
@@ -2022,8 +2023,8 @@ object Similarity {
   def writeIvfStore(corpus: DataFrame, idCol: String, vecCol: String,
                     coarse: Seq[Seq[Double]], path: String,
                     metaCols: Seq[String] = Nil): Unit = {
-    ivfAssigned(corpus, idCol, vecCol, coarse, metaCols)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    Layout.writer(ivfAssigned(corpus, idCol, vecCol, coarse, metaCols))
+      .mode("overwrite").partitionBy("centroid_id").parquet(path)
     writeIdSidecarAt(corpus.sparkSession, path, idCol)
   }
 
@@ -2131,8 +2132,8 @@ object Similarity {
   def writePqStore(corpus: DataFrame, idCol: String, vecCol: String,
                    coarse: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
                    path: String): Unit = {
-    pqEncoded(corpus, idCol, vecCol, coarse, codebooks)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    Layout.writer(pqEncoded(corpus, idCol, vecCol, coarse, codebooks))
+      .mode("overwrite").partitionBy("centroid_id").parquet(path)
     writeIdSidecarAt(corpus.sparkSession, path, idCol)
   }
 
@@ -2176,8 +2177,8 @@ object Similarity {
                            cb: TwoLevelCodebook,
                            codebooks: Seq[Seq[Seq[Double]]],
                            path: String): Unit = {
-    pqEncodedTwoLevel(corpus, idCol, vecCol, cb, codebooks)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    Layout.writer(pqEncodedTwoLevel(corpus, idCol, vecCol, cb, codebooks))
+      .mode("overwrite").partitionBy("centroid_id").parquet(path)
     writeIdSidecarAt(corpus.sparkSession, path, idCol)
   }
 

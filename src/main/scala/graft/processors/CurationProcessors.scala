@@ -188,8 +188,8 @@ object CurationProcessors {
         .drop("__rn")
         .localCheckpoint()
       if (update)
-        survivors.select(col("__fp").as("fp"))
-          .write.mode("append").parquet(path)
+        Layout.writer(survivors.select(col("__fp").as("fp")))
+          .mode("append").parquet(path)
       survivors.drop("__fp")
     }
   }
@@ -403,7 +403,8 @@ object CurationProcessors {
             spark.read.schema("band_id INT, band_hash STRING").parquet(path),
             idc).localCheckpoint()
         else signed
-      if (update) bandRows(survivors).write.mode("append").parquet(path)
+      if (update)
+        Layout.writer(bandRows(survivors)).mode("append").parquet(path)
       survivors.drop("__bands")
     }
   }

@@ -211,7 +211,7 @@ class Bm25MergeSpec extends SparkSpec {
     val (n, jobs) = jobsIn(Bm25IndexSink.sink(docs(batch._1, batch._2),
       fielded(path)))
     assert(n == 10L)
-    assert(jobs == 15, s"fielded merge ran $jobs jobs")
+    assert(jobs == 6, s"fielded merge ran $jobs jobs")
     val rb = storePath("bm25fjobs_rb", faulty = false)
     Bm25IndexSink.sink(docs(base._1, base._2)
       .unionByName(docs(batch._1, batch._2)), fielded(rb))
