@@ -259,8 +259,8 @@ object Retrieval {
                               bucketed: Option[DataFrame] = None,
                               buckets: Option[Int] = None)
 
-  /** Build the fielded components inline (the [[bm25fTopK]] and
-    * [[bm25fApplyDelta]] body): the corpus's [[fieldTerms]] frame,
+  /** Build the fielded components inline (the [[bm25fTopK]] body): the
+    * corpus's [[fieldTerms]] frame,
     * materialized once through the query-path gate ([[maybeCkpt]]) —
     * every consumer (the hit stream, the whole-doc df inside the qmeta
     * broadcast build, the stats build) otherwise re-runs the tokenize per
@@ -1214,45 +1214,30 @@ object Retrieval {
     */
   def bm25fApplyDelta(store: Bm25fStore, added: DataFrame, idCol: String,
                       textCol: String, titleTokens: Int = 8): Bm25fStore = {
-    val add = bm25fComponents(added, idCol, textCol, titleTokens)
-    // the 2-row merged stats MATERIALIZE (optimization round 16): the
-    // scoring tail consumes stats in two broadcast builds (avgdl_f,
-    // n_docs), and each un-checkpointed build re-ran the batch n_docs
-    // count — a doc_id-column scan of the whole delta — plus the tot_f
-    // aggregate (4 such scans in d_bm25f_incremental's r16 before-plan).
-    // One tiny job replaces them; integers unchanged by construction.
-    Bm25fStore(store.postings.unionByName(add.postings),
-      maybeCkpt(mergedFieldedStats(store.stats, added, add.stats)))
+    val terms = maybeCkpt(fieldTerms(added, idCol, textCol, titleTokens))
+    // the 2-row merged stats are built on the driver ([[mergedFieldedRows]],
+    // the persisted merge's rule too): the scoring tail consumes stats in
+    // two broadcast builds (avgdl_f, n_docs), and a lazy stats plan re-ran
+    // the batch count and the tot_f aggregate in each of them
+    val t = terms.agg(count(lit(1)), FieldTags.indices.map(i =>
+      coalesce(fieldTokens(i), lit(0L))): _*).head()
+    val stored = store.stats.select(col("f"), col("n_docs"), col("tot_f"))
+      .collect().toSeq
+    val stats = added.sparkSession.createDataFrame(java.util.List.of(
+      mergedFieldedRows(stored, t.getLong(0),
+        FieldTags.zipWithIndex.map { case (f, i) => f -> t.getLong(i + 1) }
+      ): _*), FieldedStatsSchema)
+    Bm25fStore(store.postings.unionByName(
+      bm25fComponentsOf(terms, idCol).postings), stats)
   }
 
-  /** Per-field tot_f integer adds + ONE corpus-level n_docs add. n_docs
-    * is a CORPUS-level constant duplicated onto every field row (the
-    * avgdl_f denominator counts all docs) — merge it as one, never
-    * per-field: a batch with no tokens in some field (or none at all)
-    * contributes no stats row for it, but its docs still count. The
-    * logical merge's ([[bm25fApplyDelta]]); the persisted one computes the
-    * same rows on the driver ([[mergedFieldedRows]]).
-    */
-  private def mergedFieldedStats(storeStats: DataFrame, added: DataFrame,
-                                 addStats: DataFrame): DataFrame = {
-    val mergedN = broadcast(
-      storeStats.agg(coalesce(max(col("n_docs")), lit(0L)).as("__sn"))
-        .crossJoin(added.agg(count(lit(1)).as("__an"))))
-    val addTot = addStats.select(col("f"), col("tot_f").as("__at"))
-    storeStats.select(col("f"), col("tot_f"))
-      .join(addTot, Seq("f"), "full_outer")
-      .select(col("f"),
-        (coalesce(col("tot_f"), lit(0L)) + coalesce(col("__at"), lit(0L)))
-          .as("tot_f"))
-      .crossJoin(mergedN)
-      .select(col("f"), (col("__sn") + col("__an")).as("n_docs"),
-        col("tot_f"))
-  }
-
-  /** [[mergedFieldedStats]] on the driver, for the persisted merge: the
-    * stored (f, n_docs, tot_f) rows plus a batch of `n` documents whose
-    * fields hold `tots` tokens (a field with none adds no row), with the
-    * one corpus-level n_docs add on every row. */
+  /** The merged fielded stats rows, on the driver: the stored
+    * (f, n_docs, tot_f) rows plus a batch of `n` documents whose fields
+    * hold `tots` tokens. Per-field tot_f integer adds + ONE corpus-level
+    * n_docs add: n_docs is a CORPUS-level constant duplicated onto every
+    * field row (the avgdl_f denominator counts all docs) — merge it as
+    * one, never per-field: a batch with no tokens in some field (or none
+    * at all) adds no row for it, but its docs still count. */
   private def mergedFieldedRows(stored: Seq[Row], n: Long,
                                 tots: Seq[(String, Long)]): Seq[Row] = {
     def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)

@@ -1684,7 +1684,7 @@ class AgentSpec extends SparkSpec {
          |""".stripMargin)
     val agent = new Agent(spark, stopOnSinkError = true, maxRetries = 0)
     assert(agent.run(recipe(0)).success)
-    val ((r, jobs), started) = ProcessStarts.during(
+    val ((r, jobs), chmods) = Chmods.during(
       SparkJobs.inGroup(spark.sparkContext, "graft-run-curate")(
         agent.run(recipe(1))))
     assert(r.success, r.error)
@@ -1692,9 +1692,9 @@ class AgentSpec extends SparkSpec {
     assert(r.sinkCounts.values.forall(_ == r.recordCount), r.sinkCounts)
     assert(jobs.size <= 21, s"the second ingest ran ${jobs.size} jobs")
     // store writes create their files without forking chmod
-    assert(started.isEmpty,
-      s"the second ingest started ${started.size} processes: " +
-        started.take(3).mkString("; "))
+    assert(chmods.isEmpty,
+      s"the second ingest forked chmod ${chmods.size} times: " +
+        chmods.take(3).mkString("; "))
   }
 
   test("cancel interrupts a running recipe (agent/agent.go:160-179 analogue)") {

@@ -2,21 +2,23 @@
 """Interleaved A/B of the benchmark: a base revision against the working tree.
 
     python3 tools/perf_ab.py BASE_REV --workload curate:10:1201 \\
-        [--workload graded:5:1301] [--seconds 10] [--scratch DIR] \\
-        [--out runs.json]
+        [--workload graded:5:1301] [--scratch DIR] [--out runs.json]
 
 BASE_REV's committed files are exported (git archive) into a scratch
 directory, so the base builds and runs from its own sources, like the
 working tree does. For each workload, pair i runs perfbench/run.py once in
-each tree with the same seed (SEED + i), alternating which side runs first.
+each tree with the same seed (SEED + i) and BENCHMARK.json's run_seconds,
+alternating which side runs first.
 
 For every end-to-end metric and workload the report prints both sides'
 median and quartiles, how many pairs the change won (ties count for
 neither side), and whether a gain holds by the rule of the choosing-metrics
-method: the change wins at least nine tenths of the pairs, and the medians
+method: the change wins at least nine tenths of all pairs run, the medians
 differ, in the better direction, by more than the base's interquartile
-range. Metric directions come from BENCHMARK.json. A run that fails or is
-not correct is reported and its pair is left out of the comparison.
+range, and the change has no more failed runs than the base. Metric
+directions come from BENCHMARK.json. A run that fails or is not correct
+counts as a failure of its side; its pair cannot be a win and its metrics
+are left out of the medians.
 """
 import argparse
 import json
@@ -36,7 +38,6 @@ def parse_args(argv):
     ap.add_argument("base", help="git revision to compare the working tree with")
     ap.add_argument("--workload", action="append", required=True, metavar="NAME:PAIRS:SEED",
                     help="run PAIRS pairs of NAME on seeds SEED, SEED+1, ...")
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--scratch", help="directory for the base's files (default: a temp dir)")
     ap.add_argument("--out", help="write every run's result to this JSON file")
     a = ap.parse_args(argv)
@@ -87,7 +88,10 @@ def quartiles(xs):
 def report(workload, pairs, better):
     """Print one workload's table."""
     ok = [(b, c) for b, c in pairs if b is not None and c is not None]
-    print(f"\n== {workload}: {len(ok)} comparable pairs of {len(pairs)}")
+    failed_b = sum(b is None for b, _ in pairs)
+    failed_c = sum(c is None for _, c in pairs)
+    print(f"\n== {workload}: {len(pairs)} pairs, {len(ok)} comparable;"
+          f" failed or incorrect runs: base {failed_b}, change {failed_c}")
     if not ok:
         return
     print(f"{'metric':<24} {'base median [q1, q3]':>30} {'change median [q1, q3]':>30}"
@@ -100,16 +104,19 @@ def report(workload, pairs, better):
         mb, mc = statistics.median(base), statistics.median(chg)
         qb, qc = quartiles(base), quartiles(chg)
         gain = (mb - mc) if lower else (mc - mb)
-        holds = wins >= 0.9 * len(ok) and gain > qb[1] - qb[0]
+        holds = (wins >= 0.9 * len(pairs) and gain > qb[1] - qb[0]
+                 and failed_c <= failed_b)
         print(f"{m:<24} {f'{mb:.6g} [{qb[0]:.6g}, {qb[1]:.6g}]':>30}"
               f" {f'{mc:.6g} [{qc[0]:.6g}, {qc[1]:.6g}]':>30}"
-              f" {f'{wins}/{len(ok)}':>7}  {'holds' if holds else '-'}")
+              f" {f'{wins}/{len(pairs)}':>7}  {'holds' if holds else 'not met'}")
 
 
 def main(argv):
     a, plans = parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        bench = json.load(fh)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    seconds = bench["run_seconds"]
     scratch = a.scratch or tempfile.mkdtemp(prefix="perf_ab-")
     base_tree = os.path.join(scratch, "base")
     shutil.rmtree(base_tree, ignore_errors=True)
@@ -124,7 +131,7 @@ def main(argv):
                 order = ("base", "change") if i % 2 == 0 else ("change", "base")
                 got = {}
                 for side in order:
-                    metrics, wall, note = run_once(trees[side], workload, seed, a.seconds)
+                    metrics, wall, note = run_once(trees[side], workload, seed, seconds)
                     got[side] = metrics
                     runs.append({"workload": workload, "seed": seed, "side": side,
                                  "first": side == order[0], "wall_s": round(wall, 1),
